@@ -1,95 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints the one-line JSON contract.
   *
   * Queries are materialized through the noop sink — a plain count()
   * would let Catalyst prune the projections and under-measure
-  * expression-heavy queries. One warm session; AQE on (default);
-  * shuffle partitions = cores (local mode has no multi-executor
-  * exchange to amortize, and 32-way is the driver's cluster analog).
+  * expression-heavy queries. One warm session from GraftSession; AQE
+  * on (default); shuffle width from Tuning.shufflePartitions. README
+  * "Settings" lists the SPARK_GRAFT_* variables read here.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     // Phase wall-clock breakdown on stderr: the driver runs this main
     // under a fixed wall-clock window (round 10's 32-cpu run was
     // timeout-killed mid-pass-2), so knowing where the wall goes —
-    // warmup vs measured passes vs adjudication — is part of the
+    // bucketing vs measured passes vs adjudication — is part of the
     // bench's own health. stderr only; the stdout contract line is
     // unchanged.
     val wall0 = System.nanoTime()
     def phase(name: String): Unit =
       System.err.println(f"[bench] phase $name done at ${(System.nanoTime() - wall0) / 1e9}%.1f s wall")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors()))
-    // Shuffle width: two-regime rule measured in round 10 — cores
-    // through sf10 (extra width is pure overhead while tasks fit
-    // execution memory), one partition per ~64 MB of input beyond the
-    // memory crossover (graft.Tuning's scaladoc has the probes).
-    val shuffle = Tuning.shuffleConf(sfDir, cpus.toInt)
-    // optional event-log capture for scale attribution (per-stage
-    // shuffle records + spill, the q363/q368 protocol):
-    // SPARK_GRAFT_EVENTLOG_DIR=/existing/dir enables it
-    val evLog = sys.env.get("SPARK_GRAFT_EVENTLOG_DIR")
-      .map(p => Map("spark.eventLog.enabled" -> "true", "spark.eventLog.dir" -> p,
-        "spark.eventLog.compress" -> "false",
-        "spark.eventLog.rolling.enabled" -> "false"))
-      .getOrElse(Map.empty[String, String])
-    val spark = evLog.foldLeft(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      // let AQE coalesce partitions under cached plans: iterative
-      // operators (label propagation, k-means) persist tiny per-round
-      // frames whose fixed 32-partition stages otherwise dominate
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // hold the whole suite's codegen units between passes — see
-      // Tuning.codegenCacheConf (pass-2 wall 175 s -> 80 s on the
-      // 110-query q2* subset when the warm pass stops recompiling)
-      .config("spark.sql.codegen.cache.maxEntries", Tuning.codegenCacheConf)
-    ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
-    // bucketed-layout planner flags (sort-aware scans, no auto-disable)
-    // — session-build-time opt-in, see Bucketing.sessionConfs
-    graft.sources.Bucketing.sessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, sfDir)
     // Data-contract canary FIRST (see DataContract): a harness data regen
     // with changed physical types shows up as one named FAIL line here,
     // not as a wall of identical per-query failures below.
     graft.sources.DataContract.report(spark, sfDir)
       .foreach(l => System.err.println(s"[contract] $l"))
-    // JIT/codegen/page-cache warmup on the smallest inputs: one silent
-    // pass of every query at sf0.001 (measurement below is sfDir).
-    // DEFAULT OFF since round 11: with best-of-two measured passes the
-    // warmup is redundant — pass 1 pays the one-time codegen/JIT cost
-    // and pass 2 supplies the warm number the min() reports — while the
-    // warmup pass itself measured 596 s of wall (479 queries' fixed
-    // costs at sf0.001, ~25% of the whole invocation) and the driver's
-    // wall-clock window timeout-killed the round-10 bench mid-pass-2.
-    // Artifact equivalence (warmup vs none, same host window) is
-    // recorded in OPTIMIZATION_r11.md §warmup. SPARK_GRAFT_WARMUP=1
-    // re-enables the old behavior; SPARK_GRAFT_WARMUP_FILTER warms a
-    // prefix subset (a perf-bisect knob — a suite regression that
-    // vanishes without warmup is warmup-borne state).
-    val warmDir = "/root/testdata/sf0.001"
-    val warmFilter: String => Boolean = sys.env.get("SPARK_GRAFT_WARMUP_FILTER") match {
-      case Some(pfx) => { val ps = pfx.split(","); n => ps.exists(n.startsWith) }
-      case None => _ => true
-    }
-    if (sys.env.get("SPARK_GRAFT_WARMUP").contains("1") &&
-        new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
-      SparkEntry.queries.foreach { case (name, fn) =>
-        if (warmFilter(name)) {
-          try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-          catch { case _: Throwable => () }
-        }
-      }
-    }
     // bucketed-layout tables are PREBUILT data layout, not query work
     // (the pay-once-amortize-forever contract); build them for the
     // measured sf dir before the clock starts so q152/q166/q170 time
@@ -98,32 +35,25 @@ object Bench {
     // isolated runs that don't touch the bucketed tables — a fresh JVM
     // cannot reuse a prior JVM's in-memory catalog, so the paired-scale
     // protocol would otherwise re-bucket orders+lineitem per query.
-    phase("warmup")
     if (!sys.env.get("SPARK_GRAFT_SKIP_BUCKETING").contains("1")) {
       try graft.sources.Bucketing.ensure(spark, sfDir)
       catch { case e: Throwable => System.err.println(s"[bench] bucketing prewarm: ${e.getMessage}") }
     }
     phase("bucketing")
-    def timeOne(s: SparkSession, name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeOne(name: String, fn: Q): Double = {
       val t0 = System.nanoTime()
       // label the query's jobs (guide §1.5) so event-log stages map back
       // to queries in attribution runs; thread-local, cleared after
-      s.sparkContext.setJobDescription(name)
+      spark.sparkContext.setJobDescription(name)
       // a failed query records -1 and the run continues — one regression
       // must not zero the whole round's bench
-      val ok = try { fn(s, sfDir).write.format("noop").mode("overwrite").save(); true }
+      val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      s.sparkContext.setJobDescription(null)
+      spark.sparkContext.setJobDescription(null)
       if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }
-    // optional comma-separated name-prefix filter (local iteration on a
-    // subset; the driver sets no filter and measures everything)
-    val nameFilter: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_FILTER") match {
-      case Some(pfx) => { val ps = pfx.split(","); n => ps.exists(n.startsWith) }
-      case None => _ => true
-    }
-    val sorted = SparkEntry.queries.toSeq.sortBy(_._1).filter(t => nameFilter(t._1))
+    val sorted = SparkEntry.selected(sys.env.get("SPARK_GRAFT_BENCH_FILTER"))
     // Best-of-two suite passes. The build hosts are oversubscribed VMs
     // with CPU-steal windows (measured: /proc/stat steal exceeding
     // user+sys cumulatively; two same-code suite runs each had a
@@ -133,7 +63,7 @@ object Bench {
     // both runs out of the artifact. SPARK_GRAFT_PASSES overrides.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     val runs = (1 to passes).map { i =>
-      val r = sorted.map { case (name, fn) => name -> timeOne(spark, name, fn) }.toMap
+      val r = sorted.map { case (name, fn) => name -> timeOne(name, fn) }.toMap
       phase(s"pass$i")
       r
     }
@@ -142,36 +72,17 @@ object Bench {
       val ok = ts.filter(_ >= 0)
       name -> (if (ok.isEmpty) -1.0 else ok.min)
     }
-    // Optional extra pass with per-query session isolation: a fresh
-    // session (own temp views, conf, cached plans) and a cleared
-    // context-wide cache before each query — makes suite-order state
-    // bleed (leaked caches, view churn, conf leftovers) attributable.
-    // Off by default since the dual suite pass already bounds noise;
-    // enable with SPARK_GRAFT_ISOLATED=1.
-    val isolated =
-      if (!sys.env.get("SPARK_GRAFT_ISOLATED").contains("1")) Map.empty[String, Double]
-      else sorted.map { case (name, fn) =>
-        spark.catalog.clearCache()
-        val s2 = spark.newSession() // fresh state — re-apply runtime-set confs
-        graft.sources.Bucketing.sessionConfs.foreach { case (k, v) => s2.conf.set(k, v) }
-        name -> timeOne(s2, name, fn)
-      }.toMap
     val fns = sorted.toMap
-    val adjudicated = warnRegressions(results.toMap,
-      (n: String) => fns.get(n).map(fn => timeOne(spark, n, fn)))
+    val hostFactor = warnRegressions(results.toMap, (n: String) => fns.get(n).map(timeOne(n, _)))
     phase("adjudication")
-    printJson(results.toMap, isolated, sfDir, adjudicated)
+    printJson(results.toMap, sfDir, hostFactor)
     spark.stop()
   }
 
-  private def printJson(qs: Map[String, Double], iso: Map[String, Double], sf: String,
-                        hostFactor: Double): Unit = {
+  private def printJson(qs: Map[String, Double], sf: String, hostFactor: Double): Unit = {
     def obj(m: Map[String, Double]) = m.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = qs.values.filter(_ >= 0).sum
-    val isoPart =
-      if (iso.isEmpty) ""
-      else f""","value_isolated":${iso.values.filter(_ >= 0).sum}%.3f,"queries_isolated":${obj(iso)}"""
     // Host identity stamp: build hosts vary ~2x in speed between
     // provisions, so naively dividing raw artifacts across rounds reads
     // host variance as regression. host_factor is this run's median
@@ -180,14 +91,14 @@ object Bench {
     // the provision; -1.0 factor means no anchors were readable.
     val hostName = try java.net.InetAddress.getLocalHost.getHostName catch { case _: Throwable => "unknown" }
     val hostPart =
-      f""","host":{"name":"$hostName","cpus":${Runtime.getRuntime.availableProcessors()},"factor_vs_best":$hostFactor%.3f}"""
+      f""","host":{"name":"$hostName","cpus":${GraftSession.cpus},"factor_vs_best":$hostFactor%.3f}"""
     // Self-contained artifact FIRST: the full per-query map at this
     // query count (>400) overflows the driver's fixed-size stdout
     // capture, so it lives in a file, never on stdout (BENCH_r06–r09
     // all had parsed:null because the full line's head was truncated
     // away). The file is the authoritative per-query record.
     val fullLine =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${obj(qs)}$isoPart$hostPart,"sf":"$sf","see":"BENCH_full.json"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${obj(qs)}$hostPart,"sf":"$sf","see":"BENCH_full.json"}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), fullLine + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] artifact write failed: ${e.getMessage}") }
@@ -197,11 +108,8 @@ object Bench {
     // the line the driver parses into BENCH_rNN.json.
     val qJson = obj(qs)
     val queriesPart = if (qJson.length <= 1200) qJson else "{}"
-    val isoTotalPart =
-      if (iso.isEmpty) ""
-      else f""","value_isolated":${iso.values.filter(_ >= 0).sum}%.3f"""
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${qs.size},"queries":$queriesPart$isoTotalPart$hostPart,"sf":"$sf","see":"BENCH_full.json"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${qs.size},"queries":$queriesPart$hostPart,"sf":"$sf","see":"BENCH_full.json"}"""
     println(line)
   }
 
@@ -237,14 +145,13 @@ object Bench {
     }
     // Bound the adjudication pass: a slow/noisy provision can flag 40+
     // queries (round-11 baseline: 45 flags, 126 s of isolated reruns
-    // inside the driver's wall-clock window). Rerun the largest-absolute
+    // inside the bench's wall-clock window). Rerun the 15 largest-absolute
     // suspects only — they carry the regression signal; the rest are
-    // listed unadjudicated. SPARK_GRAFT_ADJUDICATE_MAX overrides.
-    val adjMax = sys.env.getOrElse("SPARK_GRAFT_ADJUDICATE_MAX", "15").toInt
-    val suspects = allSuspects.sortBy(n => -qs(n)).take(adjMax).sorted
+    // listed unadjudicated.
+    val suspects = allSuspects.sortBy(n => -qs(n)).take(15).sorted
     if (allSuspects.size > suspects.size)
       System.err.println(s"[bench] ${allSuspects.size - suspects.size} further spikes " +
-        s"not adjudicated (smallest-absolute; raise SPARK_GRAFT_ADJUDICATE_MAX to rerun): " +
+        s"not adjudicated (smallest-absolute): " +
         allSuspects.filterNot(suspects.contains).sorted.mkString(","))
     System.err.println(f"[bench] host-speed factor vs best-prior anchors: $hostFactor%.2fx (median ratio)")
     // The relative check absorbs a UNIFORM suite slowdown into the host

@@ -2,36 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.LogitExpr
+import graft.functions.GraftRegistry
 
-/** Injects graft's native functions and optimizer rules into every
-  * session when configured with
-  * `spark.sql.extensions=graft.GraftExtensions` (cluster-wide
-  * installation path; ad-hoc sessions can call GraftRegistry.register).
+/** Injects graft's native SQL functions (every entry of
+  * GraftRegistry.expressions) and optimizer rules into every session
+  * when configured with `spark.sql.extensions=graft.GraftExtensions`
+  * (cluster-wide installation path, and the one GraftSession uses;
+  * ad-hoc sessions can call GraftRegistry.register).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_logit"),
-      new ExpressionInfo(classOf[LogitExpr].getName, "graft_logit"),
-      (exprs: Seq[Expression]) => LogitExpr(
-        org.apache.spark.sql.catalyst.expressions.Cast(
-          exprs.head, org.apache.spark.sql.types.DoubleType))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[graft.functions.DotExpr].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => graft.functions.DotExpr(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hilbert"),
-      new ExpressionInfo(classOf[graft.functions.HilbertExpr].getName, "graft_hilbert"),
-      (exprs: Seq[Expression]) => graft.functions.HilbertExpr(
-        org.apache.spark.sql.catalyst.expressions.Cast(
-          exprs.head, org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.catalyst.expressions.Cast(
-          exprs(1), org.apache.spark.sql.types.LongType),
-        exprs(2).eval().asInstanceOf[Int])))
+    GraftRegistry.expressions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
     // automatic range-join binning, opt-in via
     // spark.graft.rangeJoin.binWidth (see plans.RangeBinJoinRule)
     ext.injectOptimizerRule(graft.plans.RangeBinJoinRule)

@@ -46,6 +46,17 @@ object SparkEntry {
     Map[String, Q]("q00_criteo_pipeline" -> criteoPipeline) ++
       Relational.defs ++ Functions.defs ++ TextAnalysis.defs ++ TextAnalysis2.defs ++ DedupSim.defs ++ TimeWindows.defs ++ Extended.defs ++ Relational2.defs ++ SqlAndSources.defs ++ PipelineOps.defs ++ Curation.defs ++ Curation3.defs ++ Curation4.defs ++ Curation5.defs ++ Curation6.defs ++ Curation7.defs ++ Curation8.defs ++ Curation9.defs ++ Curation10.defs ++ Curation11.defs ++ Curation12.defs ++ Curation13.defs ++ Curation14.defs ++ Curation15.defs ++ Curation16.defs ++ Curation17.defs ++ Curation18.defs ++ Curation19.defs ++ Curation20.defs ++ Curation21.defs ++ Curation22.defs ++ Curation23.defs ++ Curation24.defs ++ Curation25.defs ++ Curation26.defs ++ Curation27.defs ++ Curation28.defs ++ Curation29.defs ++ Curation30.defs ++ Curation31.defs ++ Curation32.defs ++ Curation33.defs ++ Curation34.defs ++ Curation35.defs ++ Curation36.defs ++ Curation37.defs ++ Curation38.defs ++ Curation39.defs ++ Curation40.defs ++ Curation41.defs ++ Curation42.defs ++ Curation43.defs ++ Curation44.defs ++ Curation45.defs ++ Curation46.defs ++ Curation47.defs ++ Curation48.defs ++ Curation49.defs ++ Curation50.defs ++ Curation51.defs ++ Curation52.defs ++ Curation53.defs ++ Curation54.defs ++ Curation55.defs ++ Curation56.defs ++ Curation57.defs ++ Curation58.defs ++ Curation59.defs ++ Curation60.defs ++ Curation61.defs ++ Curation62.defs ++ Curation63.defs ++ Curation64.defs ++ Curation65.defs ++ Curation66.defs ++ Curation67.defs
 
+  /** The queries in name order, keeping only names that start with one
+    * of the comma-separated `prefixes` when given (local iteration on a
+    * subset). Name order is deterministic:
+    * hash-map order shifts when queries are added, which once let an
+    * order-dependent session-state bug hide.
+    */
+  def selected(prefixes: Option[String]): Seq[(String, Q)] = {
+    val keep = prefixes.map(_.split(",").toSeq)
+    queries.toSeq.sortBy(_._1).filter { case (name, _) => keep.forall(_.exists(name.startsWith)) }
+  }
+
   /** For each key in queries, equivalent SQL runnable by DuckDB on the
     * same parquet tables. Omitted keys get a rows-only check.
     */

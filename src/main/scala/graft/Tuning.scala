@@ -26,8 +26,9 @@ package graft
   * automated that width; round 10's probes showed it was premature at
   * sf10 once the heap scaled, but correct a decade later. On a real
   * cluster AQE + coalescePartitions does this from runtime statistics;
-  * a local[N] harness derives it from bytes on disk.
-  * `SPARK_GRAFT_SHUFFLE` always overrides.
+  * a local[N] harness derives it from bytes on disk. The former
+  * environment override of the width is gone; README "Settings" lists
+  * the variables the harness still reads.
   */
 object Tuning {
   /** Recursive on-disk size of a data directory (bytes). */
@@ -53,10 +54,9 @@ object Tuning {
     math.max(cpus, p)
   }
 
-  /** The env-overridable form both harness mains use. */
+  /** [[shufflePartitions]] as the `spark.sql.shuffle.partitions` value. */
   def shuffleConf(sfDir: String, cpus: Int): String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      String.valueOf(shufflePartitions(sfDir, cpus)))
+    String.valueOf(shufflePartitions(sfDir, cpus))
 
   /** Shuffle width for STREAMING micro-batches (state-store count =
     * this width at checkpoint creation). Stateful streaming pays
@@ -69,13 +69,11 @@ object Tuning {
     * AvailableNow run over harness-sized batches keeps per-task state
     * far under the execution-memory slice at width 8 (the q408 rule's
     * no-spill regime), so extra width is pure state-store overhead.
-    * On a cluster, size it from state volume per the same 64 MB rule —
-    * `SPARK_GRAFT_STREAM_SHUFFLE` overrides, and the checkpoint pins
-    * the width across restarts either way.
+    * On a cluster, size it from state volume per the same 64 MB rule;
+    * the checkpoint pins the width across restarts.
     */
   def streamShuffleConf(batchWidth: Int): String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE",
-      String.valueOf(math.min(batchWidth, 8)))
+    String.valueOf(math.min(batchWidth, 8))
 
   /** Driver-side generated-code cache size. Spark's default (100
     * entries) is sized for a handful of long-running queries; a suite
@@ -86,10 +84,8 @@ object Tuning {
     * the whole suite's units; entries are compiled-class references,
     * cheap beside a 16 g driver heap. Same reasoning applies on a real
     * cluster driver running a many-query workload.
-    * SPARK_GRAFT_CODEGEN_CACHE overrides.
     */
-  def codegenCacheConf: String =
-    sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192")
+  def codegenCacheConf: String = "8192"
 
   /** Spread a scan across the session's shuffle width before a CPU-
     * heavy per-row kernel. The harness parquet files are written as a

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
 /** logit(p) = ln(p / (1 − p)) as a native Catalyst expression with
   * whole-stage codegen — the reference's hot scalar op
@@ -529,28 +529,27 @@ object GraftRegistry {
     spark.conf.set(RegisteredKey, "1")
   }
 
+  /** The native expression builders: name, expression class, builder.
+    * The one table behind both install paths — GraftExtensions injects
+    * every entry into each session, register() adds them to a session
+    * built without the extension.
+    */
+  val expressions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_logit", classOf[LogitExpr], e => LogitExpr(Cast(e.head, DoubleType))),
+    ("graft_dot", classOf[DotExpr], e => DotExpr(e.head, e(1))),
+    ("graft_hilbert", classOf[HilbertExpr], e => HilbertExpr(
+      Cast(e.head, LongType), Cast(e(1), LongType), e(2).eval().asInstanceOf[Int])),
+    ("graft_luhn", classOf[LuhnCheckExpr], e => LuhnCheckExpr(e.head)),
+    ("graft_jw", classOf[JaroWinklerExpr], e => JaroWinklerExpr(e.head, e(1))),
+    ("explode_shingles", classOf[ExplodeShingles], e => ExplodeShingles(e.head, e(1))))
+
+  /** Adds the expression table plus the three Aggregator UDAFs, which
+    * need a live session and so cannot ride in the extension.
+    */
   private def registerAlways(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_logit",
-      (exprs: Seq[Expression]) => LogitExpr(Cast(exprs.head, DoubleType)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "explode_shingles",
-      (exprs: Seq[Expression]) => ExplodeShingles(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot",
-      (exprs: Seq[Expression]) => DotExpr(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_luhn",
-      (exprs: Seq[Expression]) => LuhnCheckExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jw",
-      (exprs: Seq[Expression]) => JaroWinklerExpr(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hilbert",
-      (exprs: Seq[Expression]) => HilbertExpr(
-        Cast(exprs.head, org.apache.spark.sql.types.LongType),
-        Cast(exprs(1), org.apache.spark.sql.types.LongType),
-        exprs(2).eval().asInstanceOf[Int]), "built-in")
+    expressions.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
     spark.udf.register("graft_geomean",
       org.apache.spark.sql.functions.udaf(GeoMeanAgg))
     spark.udf.register("graft_cm_sketch",

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Micro-benchmark for BPE merge-round batching: learn `rounds` merges
   * over the documents word-frequency vocabulary with the classic
@@ -15,14 +16,7 @@ object BpeBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val rounds = args.lift(1).map(_.toInt).getOrElse(64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors()))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, sfDir)
     val vocab = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))

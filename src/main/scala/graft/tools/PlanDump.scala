@@ -2,14 +2,12 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.{SparkEntry, Tuning}
+import graft.{GraftSession, SparkEntry}
 
 /** Dump `.explain("formatted")` for named queries to files — the
   * round-10 optimization evidence trail (plans/r10/<q>_before.txt /
-  * _after.txt). Same session configuration as Bench so the captured
-  * plan is the one the bench executes.
+  * _after.txt). Same session bootstrap as Bench (GraftSession) so the
+  * captured plan is the one the bench executes.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>
   * Names match EXACTLY, except a name ending in '_' which is a prefix
@@ -24,19 +22,7 @@ object PlanDump {
       sys.exit(2)
     }
     val (sfDir, outDir, suffix, names) = (args(0), args(1), args(2), args(3).split(","))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors()))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", Tuning.shuffleConf(sfDir, cpus.toInt))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    graft.sources.Bucketing.sessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, sfDir)
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(t => names.exists(n =>

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Deterministic scale-factor multiplier for the harness tables —
   * builds sfN = `factor` × sf0.1 for scale-curve measurement
@@ -36,15 +38,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val (src, dst, factor) = (args(0), args(1), args(2).toInt)
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors()))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus, src)
     new java.io.File(dst).mkdirs()
 
     def replicate(name: String, keyCols: Seq[String],

@@ -21,6 +21,14 @@ class DocsConsistencySpec extends org.scalatest.funsuite.AnyFunSuite {
         "update the doc header (single source of truth is the registry)")
   }
 
+  test("README quotes the live query count as its oracle tally") {
+    val n = SparkEntry.queries.size
+    val m = """(\d+)/(\d+)""".r.findFirstMatchIn(read("README.md"))
+    assert(m.isDefined, "README.md must state the oracle tally as 'NNN/NNN'")
+    assert(m.get.group(1).toInt == n && m.get.group(2).toInt == n,
+      s"README.md says '${m.get.matched}' but SparkEntry.queries has $n — update the README")
+  }
+
   test("every query has an oracle, every oracle has a query") {
     val q = SparkEntry.queries.keySet
     val o = SparkEntry.oracleSql.keySet

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs: one JVM-wide session, 4 shuffle
-  * partitions (small fixtures), UTC.
+/** Shared local session for specs: one JVM-wide session built by the
+  * harness bootstrap (GraftSession) on 4 cores, so specs plan under the
+  * confs Bench and Verify run with.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,20 +15,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // bucketed-layout planner flags — session-build-time opt-in, see
-    // Bucketing.sessionConfs
-    graft.sources.Bucketing.sessionConfs.foreach { case (k, v) => s.conf.set(k, v) }
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // no data dir: specs read small fixtures, so the shuffle width is
+  // the core count (Tuning.shufflePartitions floors at cores)
+  lazy val session: SparkSession = GraftSession.local(cpus = 4, dataDir = "")
 }

@@ -18,7 +18,6 @@ for q in "$@"; do
     echo "[paired] $q @ $tag $(date +%H:%M:%S)"
     SPARK_GRAFT_SF_DIR="$sf" \
     SPARK_GRAFT_BENCH_FILTER="$q" \
-    SPARK_GRAFT_WARMUP_FILTER="$q" \
     SPARK_GRAFT_PASSES=1 \
     SPARK_GRAFT_SKIP_BUCKETING=1 \
     SPARK_GRAFT_BENCH_BEST=/nonexistent \
