@@ -43,51 +43,14 @@ object Curation18 {
     */
   private[queries] def runStream(df: DataFrame, mode: String): DataFrame = {
     val spark = df.sparkSession
-    // Spark 4.1's ChecksumCheckpointFileManager funnels EVERY checkpoint
-    // file write (offsets/commits/state deltas, x stores x partitions)
-    // through a per-manager checksum thread pool that tasks await with
-    // Duration.Inf — thread dumps during q431 showed all 32 join tasks
-    // parked in ChecksumCheckpointFileManager.awaitResult with ~0 CPU.
-    // Corruption-detection metadata, not semantics: disabling restores
-    // the <=4.0 checkpoint write path. A production deployment on
-    // storage with its own integrity layer makes the same call.
-    val checksumKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val checksumPrev = spark.conf.getOption(checksumKey)
-    spark.conf.set(checksumKey, "false")
-    // state width: see Tuning.streamShuffleConf (state-store count per
-    // stateful op = this; fixed by the fresh checkpoint for this run)
-    val batchWidth = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    spark.conf.set("spark.sql.shuffle.partitions",
-      graft.Tuning.streamShuffleConf(batchWidth))
     val tbl = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      val q = df.writeStream.format("memory").queryName(tbl)
+    graft.streaming.StreamRun(spark) {
+      df.writeStream.format("memory").queryName(tbl)
         .outputMode(mode)
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", graft.operators.Materialize.jvmScratch(s"ckpt-$tbl"))
         .start()
-      q.awaitTermination()
-    } finally {
-      // restore the batch width and checksum conf for everything after
-      // the stream — and unload state-store providers even when the
-      // stream FAILED (a failed stream leaves its providers loaded too,
-      // the exact GC bleed this targets; r10 ADVICE).
-      spark.conf.set("spark.sql.shuffle.partitions", batchWidth)
-      checksumPrev match {
-        case Some(v) => spark.conf.set(checksumKey, v)
-        case None => spark.conf.unset(checksumKey)
-      }
-      // Drop the query's state-store provider maps now instead of
-      // waiting for the 60 s maintenance sweep: HDFS-backed providers
-      // keep every partition's full state map on-heap after the query
-      // terminates, and a suite that runs 21 streaming queries
-      // back-to-back measured the leftovers as GC pressure on whatever
-      // runs next (the q5x-q7x bleed cluster in the round-10 baseline).
-      // A restarted query reloads from the checkpoint delta files — the
-      // real recovery path. NOTE: unloadAll is JVM-GLOBAL — it assumes
-      // the harness's serial one-stream-at-a-time execution; a host
-      // running concurrent streaming queries must not call it.
-      org.apache.spark.sql.graft.StateStoreHousekeeping.unloadAll()
+        .awaitTermination()
     }
     spark.table(tbl)
   }

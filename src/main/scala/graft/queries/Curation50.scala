@@ -48,36 +48,7 @@ object Curation50 {
     * from disk.
     */
   private[graft] def runRestartable(agg: DataFrame, ckpt: String, outDir: String,
-      mode: String): String = {
-    // checkpoint-file checksum manager off — see Curation18.runStream
-    // (thread dumps: tasks parked in ChecksumCheckpointFileManager.awaitResult)
-    val checksumKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val checksumPrev = agg.sparkSession.conf.getOption(checksumKey)
-    agg.sparkSession.conf.set(checksumKey, "false")
-    // state width — see Tuning.streamShuffleConf; the checkpoint pins
-    // the width at creation, so every restart of `ckpt` resolves the
-    // same value and this set is a no-op for runs 2+
-    val batchWidth = agg.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    agg.sparkSession.conf.set("spark.sql.shuffle.partitions",
-      graft.Tuning.streamShuffleConf(batchWidth))
-    try runRestartableInner(agg, ckpt, outDir, mode)
-    finally {
-      // restore the batch width + checksum conf for the read-back and
-      // whatever follows, and unload state-store providers even when
-      // the stream FAILED (r10 ADVICE — a failed stream otherwise
-      // leaves its on-heap state maps loaded). unloadAll is JVM-GLOBAL:
-      // serial one-stream-at-a-time harness execution only.
-      agg.sparkSession.conf.set("spark.sql.shuffle.partitions", batchWidth)
-      checksumPrev match {
-        case Some(v) => agg.sparkSession.conf.set(checksumKey, v)
-        case None => agg.sparkSession.conf.unset(checksumKey)
-      }
-      org.apache.spark.sql.graft.StateStoreHousekeeping.unloadAll()
-    }
-  }
-
-  private def runRestartableInner(agg: DataFrame, ckpt: String, outDir: String,
-      mode: String): String = {
+      mode: String): String = graft.streaming.StreamRun(agg.sparkSession) {
     val q = agg.writeStream
       .foreachBatch { (b: DataFrame, batchId: Long) =>
         // EXACTLY-ONCE sink (r9 verdict item 3): each micro-batch lands
@@ -100,9 +71,9 @@ object Curation50 {
       .option("checkpointLocation", ckpt)
       .start()
     q.awaitTermination()
-    // (state-store unload happens in runRestartable's finally — it runs
-    // on success AND failure; the next run of the same checkpoint
-    // reloads from the delta files — the real restart path)
+    // (StreamRun unloads the state stores on success AND failure; the
+    // next run of the same checkpoint reloads from the delta files —
+    // the real restart path)
     // return the run's physical plan (StreamingSpec pins assert the
     // state operators are present and that a restart replans
     // IDENTICALLY — checkpoint compatibility is what makes restarts

@@ -24,8 +24,9 @@ object StreamingOps {
     * streams as a UTC TimestampType column.
     */
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
+    // required to read a TIMESTAMP(NANOS) vintage at all (Tables.events)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.sources.Tables.table(spark, dir, "events").schema
     // the streaming file source wants a directory: stream the table dir,
     // glob-filtered to the events file
     graft.sources.Tables.normalizeEventTs(

@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.streaming.state.StateStore
   * state map on-heap after a query terminates, released only by the
   * 60 s maintenance sweep, and a suite running 21 streaming queries
   * back-to-back measured the leftovers as GC pressure on whatever ran
-  * next. Called by the streaming run helpers right after
-  * `awaitTermination()`; a restarted query reloads its state from the
+  * next. Called by `graft.streaming.StreamRun` once each stream has
+  * ended or failed; a restarted query reloads its state from the
   * checkpoint delta files — the real recovery path.
   */
 object StateStoreHousekeeping {

@@ -571,4 +571,73 @@ class StreamingSpec extends SparkSpec {
         .dropDuplicatesWithinWatermark("u")
     }
   }
+
+  /** A small stateful AvailableNow stream over a fixed parquet input,
+    * built anew on each call, run to completion through [[StreamRun]]. */
+  private def runDedup(root: String)(mode: String): Unit = {
+    val schema = spark.read.parquet(s"$root/input").schema
+    val tbl = "streamrun_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    graft.streaming.StreamRun(spark) {
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(s"$root/input")
+        .withWatermark("ts", "1 hour")
+        .dropDuplicates("u", "ts")
+        .writeStream.format("memory").queryName(tbl).outputMode(mode)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .option("checkpointLocation", s"$root/ckpt-$tbl")
+        .start()
+        .awaitTermination()
+    }
+  }
+
+  private def dedupInput(tag: String): String = {
+    import spark.implicits._
+    val root = graft.operators.Materialize.jvmScratch(
+      s"$tag-" + java.util.UUID.randomUUID().toString.replace("-", ""))
+    Seq((1L, tsh(1)), (2L, tsh(2)), (1L, tsh(1))).toDF("u", "ts")
+      .coalesce(1).write.parquet(s"$root/input/b=1")
+    Seq((3L, tsh(3)), (2L, tsh(2))).toDF("u", "ts")
+      .coalesce(1).write.parquet(s"$root/input/b=2")
+    root
+  }
+
+  test("StreamRun: a second run of the same stream compiles no new code") {
+    // each start() clones the session; with artifact isolation on, the
+    // clone got a fresh executor classloader and every unit recompiled
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val run = runDedup(dedupInput("codegen-reuse")) _
+    run("append")
+    val compiles = METRIC_COMPILATION_TIME.getCount
+    run("append")
+    val again = METRIC_COMPILATION_TIME.getCount - compiles
+    assert(again == 0, s"the second run of an identical stream compiled $again units")
+  }
+
+  test("StreamRun restores every conf it sets, after a stream that succeeds and one that fails") {
+    import graft.streaming.StreamRun
+    assert(StreamRun.keys.toSet == Set(
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled", "spark.sql.shuffle.partitions",
+      "spark.sql.artifact.isolation.enabled", "fs.AbstractFileSystem.file.impl"))
+    // the checksum key holds a value before the run; the file-system
+    // key is unset, so the helper has to unset it again
+    spark.conf.set(StreamRun.ChecksumKey, "true")
+    try {
+      def snapshot = StreamRun.keys.map(k => k -> spark.conf.getOption(k)).toMap
+      val before = snapshot
+      assert(before(StreamRun.LocalFsKey).isEmpty)
+      val root = dedupInput("conf-restore")
+      runDedup(root)("append")
+      assert(snapshot == before, "after a stream that succeeded")
+      // complete mode needs an aggregation: start() throws inside the helper
+      val e = intercept[org.apache.spark.sql.AnalysisException](runDedup(root)("complete"))
+      assert(e.getMessage.toLowerCase.contains("complete"), e.getMessage)
+      assert(snapshot == before, "after a stream that failed")
+      val during = StreamRun(spark)(snapshot)
+      assert(during(StreamRun.ChecksumKey).contains("false"))
+      assert(during(StreamRun.IsolationKey).contains("false"))
+      assert(during(StreamRun.LocalFsKey).contains(classOf[graft.sources.LocalFs].getName))
+      assert(during(StreamRun.ShuffleKey).contains(
+        Tuning.streamShuffleConf(before(StreamRun.ShuffleKey).get.toInt)))
+    } finally spark.conf.unset(StreamRun.ChecksumKey)
+  }
 }
