@@ -42,7 +42,7 @@ object Bpe {
     */
   def learnMerges(spark: SparkSession, vocab: DataFrame, rounds: Int,
       maxBatch: Int = 16): DataFrame =
-    run(spark, vocab, rounds, needRepr = false, maxBatch)._1
+    run(spark, vocab, rounds, maxBatch)._1
 
   /** The encode side: the vocabulary after `rounds` learned merges —
     * (word, freq, tokens array). Applying a FIXED merge list to new
@@ -50,7 +50,7 @@ object Bpe {
     * merges); here the list is learned and applied in one pass.
     */
   def encodeVocab(spark: SparkSession, vocab: DataFrame, rounds: Int): DataFrame =
-    run(spark, vocab, rounds, needRepr = true)._2
+    run(spark, vocab, rounds)._2
       .select(col("word"), col("freq"), split(trim(col("repr")), "  ").as("tokens"))
 
   /** Encode arbitrary text with a FIXED learned merge list — the
@@ -80,7 +80,7 @@ object Bpe {
   }
 
   private def run(spark: SparkSession, vocab: DataFrame, rounds: Int,
-      needRepr: Boolean, maxBatch: Int = 16): (DataFrame, DataFrame) = {
+      maxBatch: Int = 16): (DataFrame, DataFrame) = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(maxBatch >= 1, s"maxBatch must be >= 1, got $maxBatch")
     // "  k  e  y  " — two-space separators (see class doc).
@@ -186,15 +186,15 @@ object Bpe {
         }
       }
     }
-    // flatten any trailing lazy rounds so the returned repr (and the
-    // encode path built on it) is a bare parquet scan
-    if (sinceSpill > 0 && needRepr) repr = Materialize.spillRelease(repr)
+    // the returned repr is at most spillEvery-1 replace projections over
+    // the last spilled table; CollapseProject folds them into one
+    // projection of the encode plan, so spilling them too would only
+    // add a write job and a read-back to every encodeVocab call
     val sq = spark
     import sq.implicits._
     val merges = mergeRows.result()
       .toDF("round", "lhs", "rhs", "merged", "weight")
-    // repr is already spill-backed (a bare parquet scan) — nothing
-    // cached to release on either path
+    // repr is spill-backed — nothing cached to release on either path
     (merges, repr)
   }
 }

@@ -780,15 +780,31 @@ object Dedup {
   }
 
   /** Sorted-merge distinct-intersection Jaccard over two sorted hash
-    * arrays — the shared confirm kernel of both ngramJaccardPairs
-    * paths. Duplicate-skip makes the count identical to
+    * arrays, threshold-aware — the shared confirm kernel of both
+    * ngramJaccardPairs paths, whose callers keep a pair iff the result
+    * is `>= thr`. Duplicate-skip makes the count identical to
     * array_intersect/list_intersect; sizes keep duplicates, matching
     * the oracle's len() semantics.
+    *
+    * Early exit (the length/position filter of set-similarity joins):
+    * the walk stops as soon as `cnt + min(na - i, nb - j)` — an upper
+    * bound on the final distinct count — falls below `cMin`, the least
+    * count whose score reaches `thr` (see [[minQualifyingCount]]), and
+    * returns `Double.NegativeInfinity`. The exit is exact: the score
+    * `c / (na + nb - c)` is evaluated with the same double expression
+    * for every `c`, the real quotient rises strictly with `c` and IEEE
+    * division rounds monotonically, so every count below `cMin` scores
+    * below `thr` — a pair that exits early would have been rejected by
+    * the full walk too. A pair that is not cut off returns the full
+    * walk's value bit for bit. At t = 0.8 most candidate pairs exit
+    * after a handful of mismatches instead of walking both arrays.
     */
-  private def jaccardSorted(ha: Array[Long], hb: Array[Long]): Double = {
+  private[graft] def jaccardSorted(ha: Array[Long], hb: Array[Long], thr: Double): Double = {
     val na = ha.length; val nb = hb.length
+    val cMin = minQualifyingCount(na, nb, thr)
     var i = 0; var j = 0; var cnt = 0
     while (i < na && j < nb) {
+      if (cnt + math.min(na - i, nb - j) < cMin) return Double.NegativeInfinity
       val x = ha(i); val y = hb(j)
       if (x < y) i += 1
       else if (x > y) j += 1
@@ -799,6 +815,26 @@ object Dedup {
       }
     }
     cnt.toDouble / (na.toDouble + nb.toDouble - cnt.toDouble)
+  }
+
+  /** Least `c` in `[0, min(na, nb)]` whose Jaccard score
+    * `c / (na + nb - c)` — the kernel's own double expression — is
+    * `>= thr`; `min(na, nb) + 1` when none is (`thr > 1` or NaN). The
+    * score is non-decreasing in `c`, so a closed-form guess
+    * `⌈thr·(na + nb) / (1 + thr)⌉` corrected by ±1 steps against the
+    * exact expression finds the boundary; the steps absorb the guess's
+    * rounding. Callers only use it when both sides are non-empty.
+    */
+  private def minQualifyingCount(na: Int, nb: Int, thr: Double): Int = {
+    val m = math.min(na, nb)
+    if (!(thr <= 1.0)) return m + 1 // NaN or above every attainable score
+    if (thr <= 0.0 || m == 0) return 0
+    val s = na.toDouble + nb.toDouble
+    def reaches(c: Int): Boolean = c.toDouble / (s - c.toDouble) >= thr
+    var c = math.min(m + 1, math.ceil(thr * s / (1.0 + thr)).toInt)
+    while (c > 0 && reaches(c - 1)) c -= 1
+    while (c <= m && !reaches(c)) c += 1
+    c
   }
 
   /** Brute-force n-gram Jaccard pairs within a blocking key (e.g. lang).
@@ -820,19 +856,27 @@ object Dedup {
     *  - `spark.graft.jaccard.prefixFilter=false` restores the
     *    tile-pair all-pairs scan (the oracle-shaped reference path).
     *  - unset (or `auto`): pick by corpus size. The prefix path pays a
-    *    ~1.6 s constant (three extra linear token-keyed stages:
-    *    document frequencies, prefix ranking, candidate distinct) that
-    *    a tiny corpus never earns back — measured at sf0.1 (5k docs)
-    *    tiled wins by that constant, while at sf1 (50k docs) prefix is
-    *    already 2-3x ahead and the gap widens every decade (SCALE.md).
-    *    The crossover sits between those corpus sizes; both paths
-    *    return bit-identical pairs (OperatorsSpec hash-equality law),
-    *    so the switch can never change results, only the plan. The
-    *    corpus size is read from plan statistics (or the caller's
-    *    `knownCount` hint) — no job runs to make the choice; see
+    *    constant (three extra linear token-keyed stages: document
+    *    frequencies, prefix ranking, candidate distinct) that a small
+    *    corpus never earns back, while the tiled path grows with
+    *    block². q73's pipeline (t = 0.8, medians of alternating runs,
+    *    4-cpu VM): at sf0.1 (5k docs) tiled 0.63 s vs prefix 2.98 s; at
+    *    a ScaleUp sf1 (50k docs) tiled 11.0 s vs prefix 10.7-13.2 s, a
+    *    tie within that VM's run-to-run spread. Before the confirm
+    *    kernel's early exit ([[jaccardSorted]]) the same runs read
+    *    tiled 1.12 s vs prefix 2.89 s at sf0.1 and tiled 50.7 s vs
+    *    prefix 9.4 s at sf1, so the crossover moved from below 16k docs
+    *    to about 50k. The constant sits below that tie, on the prefix
+    *    side: a corpus past the crossover costs the tiled path
+    *    quadratically, one short of it costs the prefix path only its
+    *    constant. Not measured on a many-core host. Both paths return
+    *    bit-identical pairs (OperatorsSpec hash-equality law), so the
+    *    switch can never change results, only the plan. The corpus
+    *    size is read from plan statistics (or the caller's `knownCount`
+    *    hint) — no job runs to make the choice; see
     *    [[estimatedRowCount]].
     */
-  val PrefixCrossoverDocs = 16384L
+  val PrefixCrossoverDocs = 32768L
 
   /** Conservative compressed-bytes-per-document divisor for the
     * stats-based corpus-size estimate (the harness docs measure
@@ -939,7 +983,7 @@ object Dedup {
       .as[(Long, Long, Array[Long], Array[Long])]
     val out = joined.mapPartitions { it =>
         it.flatMap { case (ida, idb, ha, hb) =>
-          val jac = jaccardSorted(ha, hb)
+          val jac = jaccardSorted(ha, hb, thr)
           if (jac >= thr) Some((ida, idb, jac)) else None
         }
       }.toDF("id_a", "id_b", "jac")
@@ -998,7 +1042,7 @@ object Dedup {
             val (idb, hb) = right(k)
             val nb = hb.length
             if (math.min(na, nb).toDouble >= threshold * math.max(na, nb).toDouble) {
-              val jac = jaccardSorted(ha, hb)
+              val jac = jaccardSorted(ha, hb, threshold)
               if (jac >= threshold)
                 out += (if (ida < idb) (ida, idb, jac) else (idb, ida, jac))
             }

@@ -30,7 +30,9 @@ private[graft] object Materialize {
     val path = s"$base/graft-spill-${java.util.UUID.randomUUID()}"
     result.write.mode("overwrite").parquet(path)
     release.foreach(_.unpersist())
-    spark.read.parquet(path)
+    // read back with the schema just written: parquet schema inference
+    // runs a one-task footer-merge job even for a single file
+    spark.read.schema(result.schema).parquet(path)
   }
 
   /** Per-JVM scratch path for query-built fixtures (IVF index, decoded

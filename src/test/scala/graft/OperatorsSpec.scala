@@ -268,6 +268,68 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("early-exit Jaccard kernel is exact against a full walk") {
+    import graft.operators.Dedup.jaccardSorted
+    // the pre-early-exit kernel: walk both arrays to the end
+    def fullWalk(ha: Array[Long], hb: Array[Long]): Double = {
+      var i = 0; var j = 0; var cnt = 0
+      while (i < ha.length && j < hb.length) {
+        val x = ha(i); val y = hb(j)
+        if (x < y) i += 1
+        else if (x > y) j += 1
+        else {
+          cnt += 1
+          while (i < ha.length && ha(i) == x) i += 1
+          while (j < hb.length && hb(j) == x) j += 1
+        }
+      }
+      cnt.toDouble / (ha.length.toDouble + hb.length.toDouble - cnt.toDouble)
+    }
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    var exits = 0
+    // callers keep a pair iff kernel >= thr: a kept pair must carry the
+    // full walk's exact value, a dropped one must be one it drops too
+    def check(ha: Array[Long], hb: Array[Long], thr: Double): Unit = {
+      val ref = fullWalk(ha, hb)
+      val got = jaccardSorted(ha, hb, thr)
+      val ctx = s"thr=$thr a=${ha.mkString(",")} b=${hb.mkString(",")}: ref=$ref got=$got"
+      if (ref >= thr) assert(bits(got) == bits(ref), ctx)
+      else {
+        assert(!(got >= thr), ctx)
+        if (!thr.isNaN && !ref.isNaN) assert(got < thr, ctx)
+      }
+      if (got == Double.NegativeInfinity) exits += 1
+    }
+    val edgeThr = Seq(Double.NaN, Double.NegativeInfinity, -0.5, -0.0, 0.0,
+      Double.MinPositiveValue, 0.5, 0.8, Math.nextDown(1.0), 1.0, Math.nextUp(1.0),
+      1.5, Double.PositiveInfinity)
+    val rng = new scala.util.Random(42)
+    def sortedArr(): Array[Long] =
+      Array.fill(rng.nextInt(24))(rng.nextInt(20).toLong).sorted
+    for (_ <- 1 to 4000) {
+      val ha = sortedArr()
+      val hb = if (rng.nextInt(4) == 0) ha.clone() else sortedArr()
+      val ref = fullWalk(ha, hb)
+      // pairs sitting exactly on (and one ulp around) the threshold
+      val onLine = if (ref.isNaN) Nil else Seq(ref, Math.nextUp(ref), Math.nextDown(ref))
+      (Seq(rng.nextDouble(), edgeThr(rng.nextInt(edgeThr.size))) ++ onLine)
+        .foreach(check(ha, hb, _))
+    }
+    assert(exits > 1000, s"only $exits early exits — the random pairs no longer exercise the cut")
+    // cnt 8 of na = nb = 9: 8 / (18 - 8) is exactly 0.8 and must be kept
+    val nine = (0L to 8L).toArray
+    val eightOfNine = (0L to 7L).toArray :+ 100L
+    assert(jaccardSorted(nine, eightOfNine, 0.8) == 0.8)
+    assert(jaccardSorted(nine, eightOfNine, Math.nextUp(0.8)) < Math.nextUp(0.8))
+    // empty sides: both empty is 0/0 = NaN (rejected at every threshold),
+    // one empty scores 0
+    for (t <- edgeThr) {
+      assert(jaccardSorted(Array.empty, Array.empty, t).isNaN)
+      check(Array.empty, nine, t)
+      check(nine, Array.empty, t)
+    }
+  }
+
   test("jaccard auto mode crossover: tiled below the doc threshold, prefix above") {
     // the conf-documented heuristic (Dedup.PrefixCrossoverDocs): a
     // corpus under the crossover must NOT pay the prefix path's linear
