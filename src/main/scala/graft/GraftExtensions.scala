@@ -6,11 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 import graft.functions.GraftRegistry
 
-/** Injects graft's native SQL functions (every entry of
+/** Injects graft's SQL functions (every entry of
   * GraftRegistry.expressions) and optimizer rules into every session
-  * when configured with `spark.sql.extensions=graft.GraftExtensions`
-  * (cluster-wide installation path, and the one GraftSession uses;
-  * ad-hoc sessions can call GraftRegistry.register).
+  * when configured with `spark.sql.extensions=graft.GraftExtensions`,
+  * as GraftSession does. It is the one install point.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -41,10 +41,42 @@ object SparkEntry {
       |    (1.0 - (1.0 / (coalesce(CASE WHEN l_linenumber <> 3 THEN l_quantity END, 0.0) + 3.0)))), 6) AS dense_logit
       |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin
 
+  /** Every module's query list, q00 first. A new module goes here. */
+  private def modules: Seq[Seq[Query]] = Seq(
+    Seq(Query("q00_criteo_pipeline", criteoPipeline, criteoOracle)),
+    Relational.queries, Functions.queries, TextAnalysis.queries, TextAnalysis2.queries,
+    DedupSim.queries, TimeWindows.queries, Extended.queries, Relational2.queries,
+    SqlAndSources.queries, PipelineOps.queries, Curation.queries, Curation3.queries,
+    Curation4.queries, Curation5.queries, Curation6.queries, Curation7.queries,
+    Curation8.queries, Curation9.queries, Curation10.queries, Curation11.queries,
+    Curation12.queries, Curation13.queries, Curation14.queries, Curation15.queries,
+    Curation16.queries, Curation17.queries, Curation18.queries, Curation19.queries,
+    Curation20.queries, Curation21.queries, Curation22.queries, Curation23.queries,
+    Curation24.queries, Curation25.queries, Curation26.queries, Curation27.queries,
+    Curation28.queries, Curation29.queries, Curation30.queries, Curation31.queries,
+    Curation32.queries, Curation33.queries, Curation34.queries, Curation35.queries,
+    Curation36.queries, Curation37.queries, Curation38.queries, Curation39.queries,
+    Curation40.queries, Curation41.queries, Curation42.queries, Curation43.queries,
+    Curation44.queries, Curation45.queries, Curation46.queries, Curation47.queries,
+    Curation48.queries, Curation49.queries, Curation50.queries, Curation51.queries,
+    Curation52.queries, Curation53.queries, Curation54.queries, Curation55.queries,
+    Curation56.queries, Curation57.queries, Curation58.queries, Curation59.queries,
+    Curation60.queries, Curation61.queries, Curation62.queries, Curation63.queries,
+    Curation64.queries, Curation65.queries, Curation66.queries, Curation67.queries)
+
+  /** The entries by name. A name declared twice fails here, naming it:
+    * a `Map ++ Map` would keep the later entry without a word.
+    */
+  private[graft] def registry(entries: Seq[Query]): Map[String, Query] = {
+    val twice = entries.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(twice.isEmpty, s"query names declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+    entries.map(e => e.name -> e).toMap
+  }
+
+  private lazy val byName: Map[String, Query] = registry(modules.flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, Q] =
-    Map[String, Q]("q00_criteo_pipeline" -> criteoPipeline) ++
-      Relational.defs ++ Functions.defs ++ TextAnalysis.defs ++ TextAnalysis2.defs ++ DedupSim.defs ++ TimeWindows.defs ++ Extended.defs ++ Relational2.defs ++ SqlAndSources.defs ++ PipelineOps.defs ++ Curation.defs ++ Curation3.defs ++ Curation4.defs ++ Curation5.defs ++ Curation6.defs ++ Curation7.defs ++ Curation8.defs ++ Curation9.defs ++ Curation10.defs ++ Curation11.defs ++ Curation12.defs ++ Curation13.defs ++ Curation14.defs ++ Curation15.defs ++ Curation16.defs ++ Curation17.defs ++ Curation18.defs ++ Curation19.defs ++ Curation20.defs ++ Curation21.defs ++ Curation22.defs ++ Curation23.defs ++ Curation24.defs ++ Curation25.defs ++ Curation26.defs ++ Curation27.defs ++ Curation28.defs ++ Curation29.defs ++ Curation30.defs ++ Curation31.defs ++ Curation32.defs ++ Curation33.defs ++ Curation34.defs ++ Curation35.defs ++ Curation36.defs ++ Curation37.defs ++ Curation38.defs ++ Curation39.defs ++ Curation40.defs ++ Curation41.defs ++ Curation42.defs ++ Curation43.defs ++ Curation44.defs ++ Curation45.defs ++ Curation46.defs ++ Curation47.defs ++ Curation48.defs ++ Curation49.defs ++ Curation50.defs ++ Curation51.defs ++ Curation52.defs ++ Curation53.defs ++ Curation54.defs ++ Curation55.defs ++ Curation56.defs ++ Curation57.defs ++ Curation58.defs ++ Curation59.defs ++ Curation60.defs ++ Curation61.defs ++ Curation62.defs ++ Curation63.defs ++ Curation64.defs ++ Curation65.defs ++ Curation66.defs ++ Curation67.defs
+  lazy val queries: Map[String, Q] = byName.map { case (n, e) => n -> e.plan }
 
   /** The queries in name order, keeping only names that start with one
     * of the comma-separated `prefixes` when given (local iteration on a
@@ -58,9 +90,7 @@ object SparkEntry {
   }
 
   /** For each key in queries, equivalent SQL runnable by DuckDB on the
-    * same parquet tables. Omitted keys get a rows-only check.
+    * same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    Map("q00_criteo_pipeline" -> criteoOracle) ++
-      Relational.oracles ++ Functions.oracles ++ TextAnalysis.oracles ++ TextAnalysis2.oracles ++ DedupSim.oracles ++ TimeWindows.oracles ++ Extended.oracles ++ Relational2.oracles ++ SqlAndSources.oracles ++ PipelineOps.oracles ++ Curation.oracles ++ Curation3.oracles ++ Curation4.oracles ++ Curation5.oracles ++ Curation6.oracles ++ Curation7.oracles ++ Curation8.oracles ++ Curation9.oracles ++ Curation10.oracles ++ Curation11.oracles ++ Curation12.oracles ++ Curation13.oracles ++ Curation14.oracles ++ Curation15.oracles ++ Curation16.oracles ++ Curation17.oracles ++ Curation18.oracles ++ Curation19.oracles ++ Curation20.oracles ++ Curation21.oracles ++ Curation22.oracles ++ Curation23.oracles ++ Curation24.oracles ++ Curation25.oracles ++ Curation26.oracles ++ Curation27.oracles ++ Curation28.oracles ++ Curation29.oracles ++ Curation30.oracles ++ Curation31.oracles ++ Curation32.oracles ++ Curation33.oracles ++ Curation34.oracles ++ Curation35.oracles ++ Curation36.oracles ++ Curation37.oracles ++ Curation38.oracles ++ Curation39.oracles ++ Curation40.oracles ++ Curation41.oracles ++ Curation42.oracles ++ Curation43.oracles ++ Curation44.oracles ++ Curation45.oracles ++ Curation46.oracles ++ Curation47.oracles ++ Curation48.oracles ++ Curation49.oracles ++ Curation50.oracles ++ Curation51.oracles ++ Curation52.oracles ++ Curation53.oracles ++ Curation54.oracles ++ Curation55.oracles ++ Curation56.oracles ++ Curation57.oracles ++ Curation58.oracles ++ Curation59.oracles ++ Curation60.oracles ++ Curation61.oracles ++ Curation62.oracles ++ Curation63.oracles ++ Curation64.oracles ++ Curation65.oracles ++ Curation66.oracles ++ Curation67.oracles
+  lazy val oracleSql: Map[String, String] = byName.map { case (n, e) => n -> e.oracle }
 }

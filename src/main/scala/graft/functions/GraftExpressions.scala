@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.catalyst.encoders.encoderFor
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.execution.aggregate.ScalaAggregator
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
 
@@ -509,30 +510,15 @@ case class JaroWinklerExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-level registration of graft's native functions (idempotent).
-  * Also installable via `spark.sql.extensions=graft.GraftExtensions`.
+/** graft's SQL functions, installed into every session by
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 object GraftRegistry {
 
-  /** Session-conf marker making register() a cheap no-op after the first
-    * call on a session: queries call it defensively per invocation, and
-    * the repeated UDAF re-registration (3 × udaf() wrapping per call) +
-    * the "replaced a previously registered function" WARN lines were
-    * measurable noise across a 479-query × 2-pass bench. A new session
-    * starts unmarked, so ad-hoc sessions still self-register.
-    */
-  private val RegisteredKey = "spark.graft.functions.registered"
-
-  def register(spark: SparkSession): Unit = {
-    if (spark.conf.getOption(RegisteredKey).contains("1")) return
-    registerAlways(spark)
-    spark.conf.set(RegisteredKey, "1")
-  }
-
-  /** The native expression builders: name, expression class, builder.
-    * The one table behind both install paths — GraftExtensions injects
-    * every entry into each session, register() adds them to a session
-    * built without the extension.
+  /** Every SQL function: name, implementing class, builder. The six
+    * native expressions and the three Aggregator UDAFs, whose builder is
+    * the `ScalaAggregator` that `spark.udf.register(name, udaf(agg))`
+    * would make.
     */
   val expressions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("graft_logit", classOf[LogitExpr], e => LogitExpr(Cast(e.head, DoubleType))),
@@ -541,20 +527,13 @@ object GraftRegistry {
       Cast(e.head, LongType), Cast(e(1), LongType), e(2).eval().asInstanceOf[Int])),
     ("graft_luhn", classOf[LuhnCheckExpr], e => LuhnCheckExpr(e.head)),
     ("graft_jw", classOf[JaroWinklerExpr], e => JaroWinklerExpr(e.head, e(1))),
-    ("explode_shingles", classOf[ExplodeShingles], e => ExplodeShingles(e.head, e(1))))
+    ("explode_shingles", classOf[ExplodeShingles], e => ExplodeShingles(e.head, e(1))),
+    aggregate("graft_geomean", GeoMeanAgg, Encoders.scalaDouble),
+    aggregate("graft_cm_sketch", CountMinAgg, Encoders.STRING),
+    aggregate("graft_mg", MisraGriesAgg, Encoders.STRING))
 
-  /** Adds the expression table plus the three Aggregator UDAFs, which
-    * need a live session and so cannot ride in the extension.
-    */
-  private def registerAlways(spark: SparkSession): Unit = {
-    expressions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    spark.udf.register("graft_geomean",
-      org.apache.spark.sql.functions.udaf(GeoMeanAgg))
-    spark.udf.register("graft_cm_sketch",
-      org.apache.spark.sql.functions.udaf(CountMinAgg))
-    spark.udf.register("graft_mg",
-      org.apache.spark.sql.functions.udaf(MisraGriesAgg))
-  }
+  private def aggregate[IN, BUF, OUT](name: String, agg: Aggregator[IN, BUF, OUT], in: Encoder[IN])
+      : (String, Class[_], Seq[Expression] => Expression) =
+    (name, agg.getClass, children => ScalaAggregator(children, agg, encoderFor(in),
+      encoderFor(agg.bufferEncoder), aggregatorName = Some(name)))
 }

@@ -27,6 +27,15 @@ object GraftFunctions {
   /** Exact sum of a double column (decimal-cast), returned as double. */
   def dsum(c: Column): Column = sum(dec2(c)).cast(DoubleType)
 
+  /** Wide decimal cast (15 fractional digits) for statistics over
+    * non-money doubles: like [[dec2]], a sum over it is exact and does
+    * not depend on partition order.
+    */
+  def dec(c: Column): Column = c.cast(DecimalType(38, 15))
+
+  /** Decimal type of values already rounded to 9 places. */
+  val D9: DecimalType = DecimalType(24, 9)
+
   /** All ordered 2-combinations of a SORTED array as
     * array<struct<p1,p2>> — the k=2 sibling of [[triples]], same
     * in-row discipline (quadratic only in the array size, no self-join
@@ -106,8 +115,7 @@ object GraftFunctions {
   /** Native codegen'd dot product ([[graft.functions.DotExpr]]): one
     * tight loop over the array data, same element-order accumulation as
     * [[dotUnrolled]] — the hot-path form for pairwise similarity.
-    * Requires graft functions in the session (GraftExtensions or
-    * GraftRegistry.register — callers in `operators` self-register).
+    * Requires graft functions in the session (GraftExtensions).
     */
   def dotNative(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 

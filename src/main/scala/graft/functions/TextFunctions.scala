@@ -26,6 +26,16 @@ object TextFunctions {
   def mdHash(seed: Column, c: Column): Column =
     mdHash(concat(seed.cast("string"), lit("|"), c))
 
+  /** DuckDB twin of [[mdHash]] for oracle SQL: the same 60-bit key of
+    * the VARCHAR expression `x`.
+    */
+  def mdHashSql(x: String): String = s"('0x' || substr(md5($x), 1, 15))::BIGINT"
+
+  /** 2^60, the [[mdHash]] key range: sums of keys taken modulo it stay
+    * in range and read the same in both engines.
+    */
+  val Mod60: Long = 1152921504606846976L
+
   /** Second independent 48-bit hash from the SAME md5 digest (hex chars
     * 16..27) — one digest yields the (h1, h2) pair for the
     * Kirsch-Mitzenmacher double-hashing family h_i = h1 + i·h2, giving

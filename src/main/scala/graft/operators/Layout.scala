@@ -63,7 +63,7 @@ object Layout {
     // native codegen'd loop (graft.functions.HilbertExpr) — the pure
     // column-algebra unroll triples per round (~3^order nodes: q434
     // measured 150 s/run at sf0.1 unrolled vs sub-second native);
-    // callers must have graft functions registered in the session
+    // needs a session with GraftExtensions
     call_function("graft_hilbert", xCol.cast("long"), yCol.cast("long"), lit(order))
   }
 

@@ -32,10 +32,6 @@ object Similarity {
   private def asDouble(vecCol: String, dim: Int) =
     transform(slice(col(vecCol), 1, dim), x => x.cast(DoubleType))
 
-  /** graft_dot must resolve in the session (idempotent, cheap). */
-  private def ensureFunctions(df: DataFrame): Unit =
-    graft.functions.GraftRegistry.register(df.sparkSession)
-
   /** Exact cosine top-k: for each query row, the k nearest corpus rows
     * (excluding itself). Ranking key rounds the similarity to 9 dp with
     * an id tie-break, making the cutoff deterministic across engines and
@@ -151,7 +147,6 @@ object Similarity {
   def bruteForceTopKFiltered(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, filterCol: String, k: Int,
       dim: Int = 64): DataFrame = {
-    ensureFunctions(corpus)
     val c = corpus.select(col(idCol).as("nid"), col(filterCol).as("nf"),
         asDouble(vecCol, dim).as("e_n"))
       .withColumn("nrm_n", normSqNative(col("e_n")))
@@ -169,7 +164,6 @@ object Similarity {
 
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, dim: Int = 64): DataFrame = {
-    ensureFunctions(corpus)
     // NOTE deliberately NOT Kernels.fanOut: the dot-product kernel is
     // cheap codegen'd arithmetic, and the repartition would break the
     // scan -> broadcast-join stage fusion for no kernel win (measured
@@ -222,7 +216,6 @@ object Similarity {
       idCol: String, vecCol: String, k: Int, candidates: Int,
       dim: Int = 64): DataFrame = {
     require(dim == 64, s"signBitTopK packs exactly two 32-bit words, got dim=$dim")
-    ensureFunctions(corpus)
     val c = corpus.select(col(idCol).as("nid"), asDouble(vecCol, dim).as("e_n"))
       .withColumn("lo_n", packSignBits(col("e_n"), 1, 32))
       .withColumn("hi_n", packSignBits(col("e_n"), 33, 64))
@@ -297,7 +290,6 @@ object Similarity {
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int, dim: Int = 64): DataFrame = {
-    ensureFunctions(corpus)
     ivfTopKAssigned(assignToCells(corpus, centroids, idCol, vecCol, dim),
       queries, centroids, idCol, vecCol, k, nprobe, dim)
   }
@@ -311,7 +303,6 @@ object Similarity {
     */
   def assignCells(corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, dim: Int = 64): DataFrame = {
-    ensureFunctions(corpus)
     assignToCells(corpus, centroids, idCol, vecCol, dim)
   }
 
@@ -321,7 +312,6 @@ object Similarity {
     */
   def ivfTopKAssigned(assigned: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int, dim: Int = 64): DataFrame = {
-    ensureFunctions(queries)
     val cent = centroids.select(col(idCol).as("cid"), asDouble(vecCol, dim).as("cv"))
       .withColumn("nrm_c", normSqNative(col("cv")))
     def cos(e: org.apache.spark.sql.Column, n: org.apache.spark.sql.Column) =
@@ -372,7 +362,6 @@ object Similarity {
   def ivfTopKIndexed(spark: SparkSession, indexDir: String,
       queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int, dim: Int = 64): DataFrame = {
-    ensureFunctions(queries)
     val cent = centroids.select(col(idCol).as("cid"), asDouble(vecCol, dim).as("cv"))
       .withColumn("nrm_c", normSqNative(col("cv")))
     val q = queries.select(col(idCol).as("qid"), asDouble(vecCol, dim).as("e_q"))
@@ -416,7 +405,6 @@ object Similarity {
     */
   def kmeansStep(corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, dim: Int = 64): DataFrame = {
-    ensureFunctions(corpus)
     assignToCells(corpus, centroids, idCol, vecCol, dim)
       .select(col("cid"), posexplode(col("e_n")).as(Seq("pos", "x")))
       .groupBy("cid", "pos")
@@ -521,7 +509,6 @@ object Similarity {
     */
   def semanticDedupPairs(corpus: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, threshold: Double, dim: Int = 64): DataFrame = {
-    ensureFunctions(corpus)
     val assigned = assignToCells(corpus, centroids, idCol, vecCol, dim).persist()
     val a = assigned.select(col("cid"), col("nid").as("id_a"),
       col("e_n").as("e_a"), col("nrm_n").as("nrm_a"))
@@ -542,7 +529,6 @@ object Similarity {
     */
   def lshNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, nPlanes: Int, threshold: Double): DataFrame = {
-    ensureFunctions(df)
     val e = df.select(col(idCol).as("id"), asDouble(vecCol, dim).as("e"))
       .withColumn("bucket", hyperplaneBucket(col("e"), dim, nPlanes))
       .withColumn("nrm", normSqNative(col("e")))
@@ -570,7 +556,6 @@ object Similarity {
     */
   def lshHardNegatives(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, nPlanes: Int, maxCos: Double, k: Int): DataFrame = {
-    ensureFunctions(df)
     val e = df.select(col(idCol).as("id"), asDouble(vecCol, dim).as("e"))
       .withColumn("bucket", hyperplaneBucket(col("e"), dim, nPlanes))
       .withColumn("nrm", normSqNative(col("e")))

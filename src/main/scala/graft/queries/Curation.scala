@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Second wave of training-data curation / ML-prep operators: retrieval
@@ -395,25 +395,6 @@ object Curation {
         .as("intercept"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q146_incremental_dedup" -> q146IncrementalDedup,
-    "q147_pq_encode" -> q147PqEncode,
-    "q148_quantile_sketch" -> q148QuantileSketch,
-    "q149_stopword_discovery" -> q149StopwordDiscovery,
-    "q150_next_token_pairs" -> q150NextTokenPairs,
-    "q151_zipf_slope" -> q151ZipfSlope,
-    "q135_chunk_overlap" -> q135ChunkOverlap,
-    "q136_weighted_sample" -> q136WeightedSample,
-    "q137_bigram_lm" -> q137BigramLm,
-    "q138_hll_rollup" -> q138HllRollup,
-    "q139_group_kfold" -> q139GroupKfold,
-    "q140_hashed_classifier" -> q140HashedClassifier,
-    "q141_char_entropy" -> q141CharEntropy,
-    "q142_sql_lateral" -> q142SqlLateral,
-    "q143_unpivot" -> q143Unpivot,
-    "q144_matryoshka" -> q144Matryoshka,
-    "q145_token_budget" -> q145TokenBudget)
-
   /** Shared oracle fragment: the q37/q111 quality-score formula. */
   private[queries] val qScore =
     """least(len(str_split(text, ' '))::DOUBLE / 100.0, 1.0) * 0.4
@@ -422,8 +403,8 @@ object Curation {
       |      + ((length(regexp_replace(text, '[^A-Za-z ]', '', 'g'))::DOUBLE + 1.0)
       |         / (length(text)::DOUBLE + 1.0)) * 0.3""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q146_incremental_dedup" ->
+  val queries: Seq[Query] = Seq(
+    Query("q146_incremental_dedup", q146IncrementalDedup,
       """WITH docs AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
         |sh AS (SELECT doc_id, list_distinct([array_to_string(w[i:i+2], ' ')
         |    for i in range(1, greatest(len(w) - 2, 1) + 1)]) s FROM docs),
@@ -446,8 +427,8 @@ object Curation {
         |        - len(list_intersect(x.hh, y.hh))::DOUBLE) jac
         |  FROM cand JOIN hs x ON x.doc_id = batch_id JOIN hs y ON y.doc_id = corpus_id)
         |SELECT batch_id, corpus_id, round(jac, 6) AS jac FROM pairs
-        |WHERE jac >= 0.7 ORDER BY batch_id, corpus_id""".stripMargin,
-    "q147_pq_encode" ->
+        |WHERE jac >= 0.7 ORDER BY batch_id, corpus_id""".stripMargin),
+    Query("q147_pq_encode", q147PqEncode,
       """WITH v AS (SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) e FROM embeddings),
         |sub AS (SELECT vec_id, s, e[s*8+1 : s*8+8] AS sv
@@ -464,22 +445,22 @@ object Curation {
         |  ('0x' || substr(md5(string_agg(code::VARCHAR, ',' ORDER BY s)), 1, 15))::BIGINT
         |    AS code_hash,
         |  round(CAST(sum(CAST(err AS DECIMAL(25,12))) AS DOUBLE), 6) AS recon_err
-        |FROM best GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-    "q148_quantile_sketch" ->
+        |FROM best GROUP BY vec_id ORDER BY vec_id""".stripMargin),
+    Query("q148_quantile_sketch", q148QuantileSketch,
       """SELECT l_returnflag,
         |  quantile_cont(l_extendedprice, 0.5) AS p50_exact,
         |  quantile_cont(l_extendedprice, 0.9) AS p90_exact,
         |  TRUE AS p50_within_5pct, TRUE AS p90_within_5pct
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q149_stopword_discovery" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q149_stopword_discovery", q149StopwordDiscovery,
       """WITH n AS (SELECT count(*) n_docs FROM documents),
         |t AS (SELECT doc_id, unnest(list_distinct(str_split(text, ' '))) word
         |  FROM documents),
         |d AS (SELECT word, count(*) df FROM t GROUP BY word)
         |SELECT word, df, round(df::DOUBLE / (SELECT n_docs FROM n), 6) AS df_ratio
         |FROM d WHERE df::DOUBLE / (SELECT n_docs FROM n) >= 0.6
-        |ORDER BY df DESC, word""".stripMargin,
-    "q150_next_token_pairs" ->
+        |ORDER BY df DESC, word""".stripMargin),
+    Query("q150_next_token_pairs", q150NextTokenPairs,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') w FROM documents
         |  WHERE len(str_split(text, ' ')) >= 17),
         |s AS (SELECT doc_id, w, unnest(range(1, len(w) - 16 + 1, 16)) st FROM t)
@@ -488,8 +469,8 @@ object Curation {
         |    AS input_hash,
         |  ('0x' || substr(md5(array_to_string(w[st+1 : st+16], ' ')), 1, 15))::BIGINT
         |    AS label_hash
-        |FROM s ORDER BY doc_id, win_idx""".stripMargin,
-    "q151_zipf_slope" ->
+        |FROM s ORDER BY doc_id, win_idx""".stripMargin),
+    Query("q151_zipf_slope", q151ZipfSlope,
       """WITH w AS (SELECT unnest(str_split(text, ' ')) word FROM documents),
         |v AS (SELECT word, count(*) n FROM w GROUP BY word
         |  ORDER BY n DESC, word LIMIT 200),
@@ -505,23 +486,23 @@ object Curation {
         |  round((k * sxy - sx * sy) / (k * sxx - sx * sx), 6) AS slope,
         |  round((sy - ((k * sxy - sx * sy) / (k * sxx - sx * sx)) * sx) / k, 6)
         |    AS intercept
-        |FROM sums""".stripMargin,
-    "q135_chunk_overlap" ->
+        |FROM sums""".stripMargin),
+    Query("q135_chunk_overlap", q135ChunkOverlap,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
         |s AS (SELECT doc_id, w, unnest(range(1, len(w) + 1, 24)) AS st FROM t),
         |c AS (SELECT doc_id, ((st - 1) // 24)::INT AS chunk_idx,
         |    w[st : st + 31] AS chunk FROM s)
         |SELECT doc_id, chunk_idx, len(chunk)::BIGINT AS n_tokens,
         |  ('0x' || substr(md5(array_to_string(chunk, ' ')), 1, 15))::BIGINT AS chunk_hash
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q136_weighted_sample" ->
+        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+    Query("q136_weighted_sample", q136WeightedSample,
       """WITH k AS (SELECT doc_id, n_chars,
         |    ln((('0x' || substr(md5('ws|' || doc_id::VARCHAR), 1, 15))::BIGINT % 1000000
         |        + 0.5) / 1000000.0) / n_chars AS skey
         |  FROM documents)
         |SELECT doc_id, n_chars, round(skey, 9) AS skey
-        |FROM k ORDER BY skey DESC, doc_id LIMIT 200""".stripMargin,
-    "q137_bigram_lm" ->
+        |FROM k ORDER BY skey DESC, doc_id LIMIT 200""".stripMargin),
+    Query("q137_bigram_lm", q137BigramLm,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') w FROM documents
         |  WHERE len(str_split(text, ' ')) >= 2),
         |bg AS (SELECT doc_id,
@@ -538,19 +519,19 @@ object Curation {
         |  FROM bg JOIN cb USING (prev, cur) JOIN cp USING (prev))
         |SELECT doc_id, count(*) AS n_bigrams,
         |  round(CAST(sum(term) AS DOUBLE), 6) AS logprob
-        |FROM terms GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q138_hll_rollup" ->
+        |FROM terms GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q138_hll_rollup", q138HllRollup,
       """SELECT coalesce(source, 'TOTAL') AS source,
         |  count(DISTINCT md5(text)) AS exact_fp, count(*) AS n_docs,
         |  TRUE AS within_15pct
-        |FROM documents GROUP BY ROLLUP (source) ORDER BY source""".stripMargin,
-    "q139_group_kfold" ->
+        |FROM documents GROUP BY ROLLUP (source) ORDER BY source""".stripMargin),
+    Query("q139_group_kfold", q139GroupKfold,
       """SELECT ('0x' || substr(md5('fold|' || source), 1, 15))::BIGINT % 5 AS fold,
         |  count(DISTINCT source) AS n_sources, count(*) AS n_docs,
         |  sum(len(str_split(text, ' ')))::BIGINT AS n_tokens,
         |  sum(doc_id)::BIGINT AS id_sum
-        |FROM documents GROUP BY fold ORDER BY fold""".stripMargin,
-    "q140_hashed_classifier" ->
+        |FROM documents GROUP BY fold ORDER BY fold""".stripMargin),
+    Query("q140_hashed_classifier", q140HashedClassifier,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
         |s AS (SELECT doc_id, len(w) n,
         |    list_sum([('0x' || substr(md5('w|' || x), 1, 15))::BIGINT % 2001 - 1000
@@ -559,8 +540,8 @@ object Curation {
         |SELECT doc_id, w_sum,
         |  round(1.0 / (1.0 + exp(-(w_sum::DOUBLE) / (1000.0 * n))), 6) AS score,
         |  1.0 / (1.0 + exp(-(w_sum::DOUBLE) / (1000.0 * n))) >= 0.5 AS keep
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "q141_char_entropy" ->
+        |FROM s ORDER BY doc_id""".stripMargin),
+    Query("q141_char_entropy", q141CharEntropy,
       """WITH t AS (SELECT doc_id, length(text) len,
         |    unnest(str_split(text, '')) ch FROM documents),
         |c AS (SELECT doc_id, len, ch, count(*) k FROM t GROUP BY doc_id, len, ch),
@@ -569,16 +550,16 @@ object Curation {
         |  FROM c)
         |SELECT doc_id, count(*) AS n_distinct_chars,
         |  round(CAST(sum(term) AS DOUBLE), 6) AS entropy
-        |FROM e GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q142_sql_lateral" ->
+        |FROM e GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q142_sql_lateral", q142SqlLateral,
       """SELECT n.n_name, a.n_cust, a.max_bal, a.sum_bal
         |FROM nation n, LATERAL (
         |  SELECT count(*) AS n_cust,
         |         max(c_acctbal) AS max_bal,
         |         CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
         |  FROM customer WHERE c_nationkey = n.n_nationkey) a
-        |ORDER BY n.n_name""".stripMargin,
-    "q143_unpivot" ->
+        |ORDER BY n.n_name""".stripMargin),
+    Query("q143_unpivot", q143Unpivot,
       """WITH u AS (
         |  SELECT p_partkey, 'p_size' AS metric, p_size::DOUBLE AS value FROM part
         |  UNION ALL
@@ -586,8 +567,8 @@ object Curation {
         |SELECT metric, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total,
         |  min(value) AS min_v, max(value) AS max_v
-        |FROM u GROUP BY metric ORDER BY metric""".stripMargin,
-    "q144_matryoshka" ->
+        |FROM u GROUP BY metric ORDER BY metric""".stripMargin),
+    Query("q144_matryoshka", q144Matryoshka,
       """WITH v AS (SELECT label,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) e FROM embeddings),
         |r AS (SELECT label,
@@ -597,8 +578,8 @@ object Curation {
         |  round(CAST(sum(CAST(r AS DECIMAL(20,9))) AS DOUBLE) / count(*), 6)
         |    AS avg_retained,
         |  round(min(r), 6) AS min_retained
-        |FROM r GROUP BY label ORDER BY label""".stripMargin,
-    "q145_token_budget" ->
+        |FROM r GROUP BY label ORDER BY label""".stripMargin),
+    Query("q145_token_budget", q145TokenBudget,
       s"""WITH t AS (SELECT doc_id, lang,
          |    len(str_split(text, ' '))::BIGINT AS nw,
          |    $qScore AS q
@@ -607,5 +588,5 @@ object Curation {
          |    sum(nw) OVER (PARTITION BY lang ORDER BY q DESC, doc_id) AS cum FROM t)
          |SELECT lang, count(*) AS n_docs, sum(nw)::BIGINT AS n_tokens,
          |  round(min(q), 6) AS min_q
-         |FROM c WHERE cum <= 3000 GROUP BY lang ORDER BY lang""".stripMargin)
+         |FROM c WHERE cum <= 3000 GROUP BY lang ORDER BY lang""".stripMargin))
 }

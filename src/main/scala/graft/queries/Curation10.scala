@@ -4,8 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Q
-import graft.functions.GraftRegistry
+import graft.{Q, Query}
 import graft.functions.TextFunctions.{mdHash, words}
 import graft.operators.Ranking
 import graft.sources.Tables
@@ -75,7 +74,6 @@ object Curation10 {
     * the q174 LSH-bucketed miner.
     */
   private val q211TripletMining: Q = (s, d) => {
-    GraftRegistry.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"),
       transform(col("embedding"), x => x.cast(DoubleType)).as("v"), col("label"))
     val anchors = e.filter(col("vec_id") % 100 === 7 && col("vec_id") < 1000)
@@ -160,15 +158,8 @@ object Curation10 {
       .orderBy("ver")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q209_oov_rate" -> q209OovRate,
-    "q210_epoch_order" -> q210EpochOrder,
-    "q211_triplet_mining" -> q211TripletMining,
-    "q212_chat_lint" -> q212ChatLint,
-    "q213_storage_dedup" -> q213StorageDedup)
-
-  val oracles: Map[String, String] = Map(
-    "q209_oov_rate" ->
+  val queries: Seq[Query] = Seq(
+    Query("q209_oov_rate", q209OovRate,
       """WITH t AS (SELECT source, unnest(str_split(text, ' ')) w FROM documents),
         |t2 AS (SELECT source, w FROM t WHERE w <> ''),
         |v AS (SELECT w FROM (SELECT w, count(*) c FROM t2 GROUP BY w
@@ -177,8 +168,8 @@ object Curation10 {
         |  CAST(sum(CASE WHEN w NOT IN (SELECT w FROM v) THEN 1 ELSE 0 END) AS BIGINT) n_oov,
         |  round(sum(CASE WHEN w NOT IN (SELECT w FROM v) THEN 1 ELSE 0 END)::DOUBLE
         |    / count(*), 6) oov_rate
-        |FROM t2 GROUP BY source ORDER BY source""".stripMargin,
-    "q210_epoch_order" ->
+        |FROM t2 GROUP BY source ORDER BY source""".stripMargin),
+    Query("q210_epoch_order", q210EpochOrder,
       """WITH ep AS (SELECT doc_id, e,
         |    ('0x' || substr(md5('ep' || e || '|' || doc_id), 1, 15))::BIGINT k
         |  FROM documents, unnest([0, 1, 2]) AS t(e)),
@@ -186,8 +177,8 @@ object Curation10 {
         |SELECT CAST(e AS BIGINT) epoch, CAST(count(*) AS BIGINT) n,
         |  CAST(sum(rnk * doc_id) AS BIGINT) perm_checksum,
         |  string_agg(CASE WHEN rnk <= 5 THEN doc_id END, ',' ORDER BY rnk) head5
-        |FROM r GROUP BY e ORDER BY e""".stripMargin,
-    "q211_triplet_mining" ->
+        |FROM r GROUP BY e ORDER BY e""".stripMargin),
+    Query("q211_triplet_mining", q211TripletMining,
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v, label
         |    FROM embeddings),
         |a AS (SELECT vec_id AS aid, v AS va, label AS la FROM e WHERE vec_id % 100 = 7 AND vec_id < 1000),
@@ -204,8 +195,8 @@ object Curation10 {
         |SELECT a.aid, CAST(la AS BIGINT) la, pos.nid pos_id, round(pos.c, 6) pos_cos,
         |  neg.nid hardneg_id, round(neg.c, 6) neg_cos, round(pos.c - neg.c, 6) margin
         |FROM a JOIN pos ON a.aid = pos.aid JOIN neg ON a.aid = neg.aid
-        |ORDER BY a.aid""".stripMargin,
-    "q212_chat_lint" ->
+        |ORDER BY a.aid""".stripMargin),
+    Query("q212_chat_lint", q212ChatLint,
       """WITH ev AS (SELECT user_id, event_id,
         |    CASE WHEN event_type IN ('click', 'view') THEN 'user' ELSE 'assistant' END rl
         |  FROM events),
@@ -224,8 +215,8 @@ object Curation10 {
         |  SELECT user_id, run_id, count(*) len FROM rr GROUP BY 1, 2) GROUP BY user_id)
         |SELECT user_id, n_turns, n_violations, n_runs, max_run,
         |  round(n_user::DOUBLE / n_turns, 6) user_frac
-        |FROM per_user JOIN rl USING (user_id) ORDER BY user_id""".stripMargin,
-    "q213_storage_dedup" ->
+        |FROM per_user JOIN rl USING (user_id) ORDER BY user_id""".stripMargin),
+    Query("q213_storage_dedup", q213StorageDedup,
       """WITH v AS (
         |  SELECT 'v1' ver, doc_id, text FROM documents
         |  UNION ALL
@@ -251,5 +242,5 @@ object Curation10 {
         |  CAST(sum(n_tokens) AS BIGINT) n_tokens,
         |  CAST(count(DISTINCT chunk_hash) AS BIGINT) n_unique,
         |  round(count(*)::DOUBLE / count(DISTINCT chunk_hash), 6) dedup_ratio
-        |FROM chunks GROUP BY ROLLUP (ver) ORDER BY ver""".stripMargin)
+        |FROM chunks GROUP BY ROLLUP (ver) ORDER BY ver""".stripMargin))
 }

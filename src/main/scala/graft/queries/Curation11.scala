@@ -3,9 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
-import graft.functions.GraftRegistry
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.operators.{Dedup, Materialize, TopK}
 import graft.sources.Tables
 
@@ -172,7 +171,6 @@ object Curation11 {
     * neighbor means run in DECIMAL for order independence.
     */
   private val q218KnnLabelNoise: Q = (s, d) => {
-    GraftRegistry.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"),
       transform(col("embedding"), x => x.cast(DoubleType)).as("v"), col("label"))
     val probes = e.filter(col("vec_id") % 20 === 3 && col("vec_id") < 2000)
@@ -202,17 +200,8 @@ object Curation11 {
       .orderBy("aid")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q214_char_entropy" -> q214CharEntropy,
-    "q215_k_anonymity" -> q215KAnonymity,
-    "q216_mixture_resample" -> q216MixtureResample,
-    "q217_cluster_split" -> q217ClusterSplit,
-    "q218_knn_label_noise" -> q218KnnLabelNoise)
-
-  private val h = DedupSim.h
-
-  val oracles: Map[String, String] = Map(
-    "q214_char_entropy" ->
+  val queries: Seq[Query] = Seq(
+    Query("q214_char_entropy", q214CharEntropy,
       """WITH c AS (SELECT source,
         |    list_filter(string_split(text, ''), x -> x <> '') chars FROM documents),
         |e AS (SELECT source, len(chars) n,
@@ -229,8 +218,8 @@ object Curation11 {
         |  round(CAST(sum(CAST(ent AS DECIMAL(12,6))) AS DOUBLE) / count(*), 6)
         |    AS avg_entropy,
         |  CAST(sum(CASE WHEN ent < 3.0 THEN 1 ELSE 0 END) AS BIGINT) n_low
-        |FROM ent GROUP BY source ORDER BY source""".stripMargin,
-    "q215_k_anonymity" ->
+        |FROM ent GROUP BY source ORDER BY source""".stripMargin),
+    Query("q215_k_anonymity", q215KAnonymity,
       """WITH cls AS (SELECT c_nationkey, c_mktsegment,
         |    floor(c_acctbal / 1000.0) bal_bucket, count(*) k
         |  FROM customer GROUP BY 1, 2, 3)
@@ -240,8 +229,8 @@ object Curation11 {
         |  CAST(sum(CASE WHEN k < 5 THEN k ELSE 0 END) AS BIGINT) n_risk_rows,
         |  CAST(min(k) AS BIGINT) min_k,
         |  round(sum(CASE WHEN k < 5 THEN k ELSE 0 END)::DOUBLE / sum(k), 6) risk_frac
-        |FROM cls GROUP BY c_mktsegment ORDER BY segment""".stripMargin,
-    "q216_mixture_resample" ->
+        |FROM cls GROUP BY c_mktsegment ORDER BY segment""".stripMargin),
+    Query("q216_mixture_resample", q216MixtureResample,
       s"""WITH st AS (SELECT source, count(*) ns FROM documents GROUP BY source),
          |tots AS (SELECT CAST(sum(ns) AS BIGINT) tot,
          |    sum(CAST(round(sqrt(ns), 9) AS DECIMAL(20,9))) z FROM st),
@@ -250,7 +239,7 @@ object Curation11 {
          |  FROM st, tots),
          |dd AS (SELECT d.doc_id, d.source, ns, rate,
          |    CAST(floor(rate) AS BIGINT) + CASE WHEN
-         |      ${h.format("'mix|' || doc_id")} % 1000000 < (rate - floor(rate)) * 1000000
+         |      ${mdHashSql("'mix|' || doc_id")} % 1000000 < (rate - floor(rate)) * 1000000
          |    THEN 1 ELSE 0 END copies
          |  FROM documents d JOIN r USING (source)),
          |ex AS (SELECT source, ns, rate, doc_id,
@@ -260,15 +249,15 @@ object Curation11 {
          |  CAST(sum(doc_id * ci) AS BIGINT) checksum,
          |  round(max(rate), 6) target_rate,
          |  round(count(*)::DOUBLE / max(ns), 6) realized_rate
-         |FROM ex GROUP BY source ORDER BY source""".stripMargin,
-    "q217_cluster_split" ->
+         |FROM ex GROUP BY source ORDER BY source""".stripMargin),
+    Query("q217_cluster_split", q217ClusterSplit,
       s"""${DedupSim.lshClusterCtes},
          |assig AS (SELECT d.doc_id, coalesce(c.cluster_id, d.doc_id) cid
          |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id),
          |sp AS (SELECT doc_id, cid,
-         |    CASE WHEN ${h.format("'split|' || cid")} % 10 < 8
+         |    CASE WHEN ${mdHashSql("'split|' || cid")} % 10 < 8
          |      THEN 'train' ELSE 'eval' END split,
-         |    CASE WHEN ${h.format("'split|' || doc_id")} % 10 < 8
+         |    CASE WHEN ${mdHashSql("'split|' || doc_id")} % 10 < 8
          |      THEN 'train' ELSE 'eval' END nsplit
          |  FROM assig),
          |leak AS (SELECT
@@ -279,8 +268,8 @@ object Curation11 {
          |  CAST(count(DISTINCT cid) AS BIGINT) n_groups,
          |  (SELECT cs FROM leak) cross_split_pairs,
          |  (SELECT ns FROM leak) naive_cross_pairs
-         |FROM sp GROUP BY split ORDER BY split""".stripMargin,
-    "q218_knn_label_noise" ->
+         |FROM sp GROUP BY split ORDER BY split""".stripMargin),
+    Query("q218_knn_label_noise", q218KnnLabelNoise,
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v,
         |    label FROM embeddings),
         |a AS (SELECT vec_id AS aid, v AS va, label AS la FROM e
@@ -300,5 +289,5 @@ object Curation11 {
         |    / count(*), 6) mean_cos FROM top5 GROUP BY aid)
         |SELECT maj.aid, CAST(la AS BIGINT) la, CAST(maj_label AS BIGINT) maj_label,
         |  CAST(cnt AS BIGINT) n_votes, mean_cos, maj_label <> la AS noisy
-        |FROM maj JOIN m USING (aid) ORDER BY maj.aid""".stripMargin)
+        |FROM maj JOIN m USING (aid) ORDER BY maj.aid""".stripMargin))
 }

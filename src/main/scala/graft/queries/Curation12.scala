@@ -5,9 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
-import graft.functions.GraftRegistry
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-5 wave 8: power-iteration PCA, positional phrase search,
@@ -27,7 +26,6 @@ object Curation12 {
     * their fp order is fixed too.
     */
   private val q219PcaPower: Q = (s, d) => {
-    GraftRegistry.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
       transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
     // per-dimension mean: one partial-aggregable pass, d rows out
@@ -295,18 +293,8 @@ object Curation12 {
       .orderBy("event_type", "lg")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q219_pca_power" -> q219PcaPower,
-    "q220_phrase_search" -> q220PhraseSearch,
-    "q221_kaplan_meier" -> q221KaplanMeier,
-    "q222_cuped" -> q222Cuped,
-    "q223_bradley_terry" -> q223BradleyTerry,
-    "q224_acf" -> q224Acf)
-
-  private val h = DedupSim.h
-
-  val oracles: Map[String, String] = Map(
-    "q219_pca_power" ->
+  val queries: Seq[Query] = Seq(
+    Query("q219_pca_power", q219PcaPower,
       """WITH e AS (SELECT vec_id, label,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM embeddings),
         |mean AS (SELECT j,
@@ -332,8 +320,8 @@ object Curation12 {
         |SELECT label, CAST(count(*) AS BIGINT) n,
         |  round(CAST(sum(CAST(p AS DECIMAL(30,9))) AS DOUBLE) / count(*), 6) mean_proj,
         |  round(min(p), 6) min_proj, round(max(p), 6) max_proj, max(eig) eig
-        |FROM pr GROUP BY label ORDER BY label""".stripMargin,
-    "q220_phrase_search" ->
+        |FROM pr GROUP BY label ORDER BY label""".stripMargin),
+    Query("q220_phrase_search", q220PhraseSearch,
       """WITH toks AS (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS pos
         |  FROM (SELECT doc_id, string_split(text, ' ') w FROM documents)),
         |t AS (SELECT doc_id, pos, w[pos] AS term FROM toks),
@@ -346,8 +334,8 @@ object Curation12 {
         |SELECT phrase, CAST(count(DISTINCT doc_id) AS BIGINT) n_docs,
         |  CAST(count(*) AS BIGINT) n_hits,
         |  CAST(sum(doc_id * pos) AS BIGINT) checksum
-        |FROM m GROUP BY phrase ORDER BY phrase""".stripMargin,
-    "q221_kaplan_meier" ->
+        |FROM m GROUP BY phrase ORDER BY phrase""".stripMargin),
+    Query("q221_kaplan_meier", q221KaplanMeier,
       """WITH t0 AS (SELECT user_id, min(ts) t0 FROM events
         |  WHERE event_type = 'signup' GROUP BY user_id),
         |fe AS (SELECT t0.user_id, t0.t0, min(e.ts) te FROM t0 LEFT JOIN events e
@@ -371,14 +359,14 @@ object Curation12 {
         |  FROM km)
         |SELECT CAST(t AS BIGINT) t, CAST(d AS BIGINT) n_events, CAST(n AS BIGINT) n_risk,
         |  CASE WHEN z > 0 THEN 0.0 ELSE round(exp(CAST(slnf AS DOUBLE)), 6) END surv
-        |FROM km2 ORDER BY t""".stripMargin,
-    "q222_cuped" ->
+        |FROM km2 ORDER BY t""".stripMargin),
+    Query("q222_cuped", q222Cuped,
       s"""WITH pu AS (SELECT user_id,
          |    sum(CASE WHEN ts < TIMESTAMP '2024-01-16'
          |      THEN round(value, 2)::DECIMAL(18,2) ELSE 0::DECIMAL(18,2) END) x,
          |    sum(CASE WHEN ts >= TIMESTAMP '2024-01-16'
          |      THEN round(value, 2)::DECIMAL(18,2) ELSE 0::DECIMAL(18,2) END) y,
-         |    ${h.format("'exp|' || user_id")} % 2 arm
+         |    ${mdHashSql("'exp|' || user_id")} % 2 arm
          |  FROM events GROUP BY user_id),
          |st AS (SELECT
          |    round((CAST(sum(x * y) AS DOUBLE)
@@ -400,8 +388,8 @@ object Curation12 {
          |    / ((CAST(sum(y * y) AS DOUBLE)
          |      - CAST(sum(y) AS DOUBLE) * CAST(sum(y) AS DOUBLE) / count(*))
          |      / (count(*) - 1)), 6) var_ratio
-         |FROM adj GROUP BY arm ORDER BY arm""".stripMargin,
-    "q223_bradley_terry" ->
+         |FROM adj GROUP BY arm ORDER BY arm""".stripMargin),
+    Query("q223_bradley_terry", q223BradleyTerry,
       """WITH tv AS (SELECT user_id, event_type,
         |    sum(round(value, 2)::DECIMAL(18,2)) tv FROM events GROUP BY 1, 2),
         |duels AS (SELECT a.event_type ta, b.event_type tb,
@@ -428,8 +416,8 @@ object Curation12 {
         |tot AS (SELECT i, CAST(sum(ng) AS BIGINT) n_games,
         |    CAST(sum(w) AS BIGINT) n_wins FROM m GROUP BY i)
         |SELECT tot.i event_type, n_games, n_wins, round(p2.pi, 6) strength
-        |FROM tot JOIN p2 ON tot.i = p2.i ORDER BY event_type""".stripMargin,
-    "q224_acf" ->
+        |FROM tot JOIN p2 ON tot.i = p2.i ORDER BY event_type""".stripMargin),
+    Query("q224_acf", q224Acf,
       """WITH daily AS (SELECT event_type, CAST(ts AS DATE) dy,
         |    sum(round(value, 2)::DECIMAL(18,2)) x FROM events GROUP BY 1, 2),
         |st AS (SELECT event_type,
@@ -445,5 +433,5 @@ object Curation12 {
         |    sum(CAST(round(xc * xc, 9) AS DECIMAL(38,9))) ss FROM dm GROUP BY 1)
         |SELECT pr.event_type, CAST(lg AS BIGINT) lg, CAST(n_pairs AS BIGINT) n_pairs,
         |  round(CAST(sp AS DOUBLE) / CAST(ss AS DOUBLE), 6) acf
-        |FROM pr JOIN den USING (event_type) ORDER BY event_type, lg""".stripMargin)
+        |FROM pr JOIN den USING (event_type) ORDER BY event_type, lg""".stripMargin))
 }

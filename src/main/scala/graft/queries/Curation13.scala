@@ -4,8 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
-import graft.functions.TextFunctions.{mdHash, words}
+import graft.{Q, Query}
+import graft.functions.TextFunctions.{mdHash, mdHashSql, words}
 import graft.operators.Materialize
 import graft.sources.Tables
 
@@ -177,17 +177,8 @@ object Curation13 {
       .orderBy("attr")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q225_rrf_fusion" -> q225RrfFusion,
-    "q226_skew_profile" -> q226SkewProfile,
-    "q227_kneser_ney" -> q227KneserNey,
-    "q228_jl_projection" -> q228JlProjection,
-    "q229_scd2_intervals" -> q229Scd2Intervals)
-
-  private val h = DedupSim.h
-
-  val oracles: Map[String, String] = Map(
-    "q225_rrf_fusion" ->
+  val queries: Seq[Query] = Seq(
+    Query("q225_rrf_fusion", q225RrfFusion,
       """WITH docs AS (SELECT doc_id, n_chars,
         |    len(list_filter(string_split(text, ' '), w -> w = 'join')) tf
         |  FROM documents),
@@ -201,8 +192,8 @@ object Curation13 {
         |    (CASE WHEN coalesce(rb, 0) > 0 THEN 1.0 / (rb + 60) ELSE 0.0 END) rrf
         |  FROM ra FULL JOIN rb ON ra.doc_id = rb.doc_id)
         |SELECT doc_id, rank_tf, rank_len, round(rrf, 6) rrf
-        |FROM f ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
-    "q226_skew_profile" ->
+        |FROM f ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin),
+    Query("q226_skew_profile", q226SkewProfile,
       """WITH kc AS (SELECT o_custkey, count(*) c FROM orders GROUP BY o_custkey),
         |coc AS (SELECT c, count(*) m FROM kc GROUP BY c),
         |cum AS (SELECT c, m, sum(m) OVER (ORDER BY c
@@ -219,8 +210,8 @@ object Curation13 {
         |  round(CAST(max_freq AS DOUBLE) / n_rows, 6) top1_share,
         |  round(CAST(ssum AS DOUBLE) / (CAST(n_keys AS DOUBLE) * n_rows)
         |    - CAST(n_keys + 1 AS DOUBLE) / n_keys, 6) gini
-        |FROM st""".stripMargin,
-    "q227_kneser_ney" ->
+        |FROM st""".stripMargin),
+    Query("q227_kneser_ney", q227KneserNey,
       """WITH t AS (SELECT str_split(text, ' ') w FROM documents
         |  WHERE len(str_split(text, ' ')) >= 2),
         |bg AS (SELECT w[i - 1] w1, w[i] w2
@@ -234,10 +225,10 @@ object Curation13 {
         |  round(greatest(c - 0.75, 0) / cw1 + 0.75 * fert / cw1 *
         |    (CAST(ccont AS DOUBLE) / tt), 6) pkn
         |FROM probe JOIN ctx USING (w1) JOIN cont USING (w2), tt
-        |ORDER BY c DESC, w1, w2""".stripMargin,
-    "q228_jl_projection" ->
+        |ORDER BY c DESC, w1, w2""".stripMargin),
+    Query("q228_jl_projection", q228JlProjection,
       s"""WITH cells AS (SELECT k, j,
-         |    ${h.format("'jl|' || k || '|' || j")} % 6 h
+         |    ${mdHashSql("'jl|' || k || '|' || j")} % 6 h
          |  FROM (SELECT unnest(generate_series(0, 15)) k),
          |    (SELECT unnest(generate_series(0, 63)) j)),
          |rows_ AS (SELECT k, list(CASE WHEN h = 0 THEN 1.0 WHEN h = 1 THEN -1.0
@@ -257,8 +248,8 @@ object Curation13 {
          |  round(CAST(sum(CAST(ratio AS DECIMAL(12,6))) AS DOUBLE) / count(*), 6)
          |    mean_ratio,
          |  round(min(ratio), 6) min_ratio, round(max(ratio), 6) max_ratio
-         |FROM rt GROUP BY label ORDER BY label""".stripMargin,
-    "q229_scd2_intervals" ->
+         |FROM rt GROUP BY label ORDER BY label""".stripMargin),
+    Query("q229_scd2_intervals", q229Scd2Intervals,
       """WITH ev AS (SELECT user_id, event_id, ts,
         |    CAST(floor(value / 100) AS BIGINT) attr FROM events),
         |seg AS (SELECT *, CASE WHEN lag(attr) OVER
@@ -280,5 +271,5 @@ object Curation13 {
         |      / sum(CASE WHEN vto IS NOT NULL THEN 1 ELSE 0 END), 6) END avg_days,
         |  CAST(sum(user_id * seg_id) AS BIGINT) checksum,
         |  CAST(max(n_ev) AS BIGINT) max_events
-        |FROM iv GROUP BY attr ORDER BY attr""".stripMargin)
+        |FROM iv GROUP BY attr ORDER BY attr""".stripMargin))
 }

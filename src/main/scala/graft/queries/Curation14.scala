@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.dec2
 import graft.sources.Tables
 
@@ -251,18 +251,8 @@ object Curation14 {
       .limit(20)
   }
 
-  val defs: Map[String, Q] = Map(
-    "q230_resample_locf" -> q230ResampleLocf,
-    "q231_scd2_lookup" -> q231Scd2Lookup,
-    "q232_mann_whitney" -> q232MannWhitney,
-    "q233_chi2_independence" -> q233Chi2Independence,
-    "q234_benford_audit" -> q234BenfordAudit,
-    "q235_ks_drift" -> q235KsDrift,
-    "q236_psi_drift" -> q236PsiDrift,
-    "q237_association_rules" -> q237AssociationRules)
-
-  val oracles: Map[String, String] = Map(
-    "q230_resample_locf" ->
+  val queries: Seq[Query] = Seq(
+    Query("q230_resample_locf", q230ResampleLocf,
       """WITH hourly AS (SELECT user_id, epoch_ms(ts) // 3600000 AS h,
         |    sum(CAST(value AS DECIMAL(18,2))) AS hv
         |  FROM events GROUP BY 1, 2),
@@ -274,8 +264,8 @@ object Curation14 {
         |SELECT user_id, count(*)::BIGINT AS n_hours,
         |  sum(CASE WHEN hv IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS n_observed,
         |  round(CAST(sum(fv) AS DOUBLE), 2) AS locf_sum
-        |FROM f GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q231_scd2_lookup" ->
+        |FROM f GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q231_scd2_lookup", q231Scd2Lookup,
       """WITH ev AS (SELECT user_id, event_id, ts, event_type,
         |    CAST(floor(value / 100) AS BIGINT) AS attr FROM events),
         |marked AS (SELECT *, CASE WHEN lag(attr) OVER w IS NULL
@@ -292,8 +282,8 @@ object Curation14 {
         |FROM (SELECT user_id, event_id, ts FROM ev WHERE event_type = 'purchase') p
         |JOIN iv ON p.user_id = iv.d_user AND p.ts >= iv.vfrom
         |  AND (iv.vto IS NULL OR p.ts < iv.vto)
-        |GROUP BY attr ORDER BY attr""".stripMargin,
-    "q232_mann_whitney" ->
+        |GROUP BY attr ORDER BY attr""".stripMargin),
+    Query("q232_mann_whitney", q232MannWhitney,
       """WITH ev AS (SELECT value, CASE WHEN event_type = 'click' THEN 1 ELSE 0 END is1
         |  FROM events WHERE event_type IN ('click', 'purchase')),
         |byv AS (SELECT value, sum(is1) n1v, count(*) tv, count(*) - sum(is1) n2v
@@ -309,8 +299,8 @@ object Curation14 {
         |SELECT n1::BIGINT AS n1, n2::BIGINT AS n2, round(u1, 4) AS u1,
         |  round((u1 - n1 * n2 / 2.0) / sqrt(n1 * n2 / 12.0 *
         |    ((nn + 1.0) - tt / (nn * (nn - 1.0)))), 6) AS z
-        |FROM u""".stripMargin,
-    "q233_chi2_independence" ->
+        |FROM u""".stripMargin),
+    Query("q233_chi2_independence", q233Chi2Independence,
       """WITH cells AS (SELECT event_type,
         |    least(CAST(floor(value / 50) AS BIGINT), 9) AS b, count(*) AS o
         |  FROM events GROUP BY 1, 2),
@@ -323,8 +313,8 @@ object Curation14 {
         |    (c.o::DOUBLE - rt::DOUBLE * ct::DOUBLE / n::DOUBLE) /
         |    (rt::DOUBLE * ct::DOUBLE / n::DOUBLE), 6) AS contrib
         |FROM cells c JOIN rowt USING (event_type) JOIN colt USING (b), tot
-        |ORDER BY event_type, b""".stripMargin,
-    "q234_benford_audit" ->
+        |ORDER BY event_type, b""".stripMargin),
+    Query("q234_benford_audit", q234BenfordAudit,
       """WITH digits AS (SELECT substr(CAST(CAST(l_quantity AS BIGINT) AS VARCHAR), 1, 1) digit,
         |    count(*) n FROM lineitem GROUP BY 1),
         |tot AS (SELECT sum(n) total FROM digits)
@@ -332,8 +322,8 @@ object Curation14 {
         |  round(n::DOUBLE / total::DOUBLE, 6) AS obs_pct,
         |  round(log10(1.0 + 1.0 / digit::DOUBLE), 6) AS benford_pct,
         |  round(abs(n::DOUBLE / total::DOUBLE - log10(1.0 + 1.0 / digit::DOUBLE)), 6) AS deviation
-        |FROM digits, tot ORDER BY digit""".stripMargin,
-    "q235_ks_drift" ->
+        |FROM digits, tot ORDER BY digit""".stripMargin),
+    Query("q235_ks_drift", q235KsDrift,
       """WITH ev AS (SELECT value,
         |    CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00' THEN 1 ELSE 0 END is1
         |  FROM events),
@@ -349,8 +339,8 @@ object Curation14 {
         |dm AS (SELECT max(diff) dmx FROM d2)
         |SELECT min(n1)::BIGINT AS n1, min(n2)::BIGINT AS n2,
         |  round(min(dmx), 6) AS ks_d, min(value) AS at_value
-        |FROM d2, dm WHERE diff = dmx""".stripMargin,
-    "q236_psi_drift" ->
+        |FROM d2, dm WHERE diff = dmx""".stripMargin),
+    Query("q236_psi_drift", q236PsiDrift,
       """WITH ev AS (SELECT least(CAST(floor(value / 50) AS BIGINT), 9) b,
         |    CASE WHEN ts < TIMESTAMP '2024-01-16 00:00:00' THEN 1 ELSE 0 END is1
         |  FROM events),
@@ -362,8 +352,8 @@ object Curation14 {
         |  round(CASE WHEN pn > 0 AND qn > 0 THEN
         |    (pn::DOUBLE / n1::DOUBLE - qn::DOUBLE / n2::DOUBLE) *
         |    ln((pn::DOUBLE / n1::DOUBLE) / (qn::DOUBLE / n2::DOUBLE)) END, 6) AS psi_contrib
-        |FROM bins, tot ORDER BY b""".stripMargin,
-    "q237_association_rules" ->
+        |FROM bins, tot ORDER BY b""".stripMargin),
+    Query("q237_association_rules", q237AssociationRules,
       """WITH items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
         |pairs AS (SELECT a.l_partkey pa, b.l_partkey pb, count(*) pair_n
         |  FROM items a JOIN items b ON a.l_orderkey = b.l_orderkey
@@ -378,5 +368,5 @@ object Curation14 {
         |    (na.item_n::DOUBLE * nb.item_n::DOUBLE), 6) AS lift
         |FROM pairs JOIN itemn na ON na.l_partkey = pa
         |  JOIN itemn nb ON nb.l_partkey = pb, no
-        |ORDER BY pair_n DESC, pa, pb LIMIT 20""".stripMargin)
+        |ORDER BY pair_n DESC, pa, pb LIMIT 20""".stripMargin))
 }

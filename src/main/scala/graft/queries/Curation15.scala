@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
+import graft.functions.TextFunctions.mdHashSql
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -257,20 +258,8 @@ object Curation15 {
       .orderBy("doc_id")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q244_ab_readout" -> q244AbReadout,
-    "q245_perplexity_filter" -> q245PerplexityFilter,
-    "q238_ngram_novelty" -> q238NgramNovelty,
-    "q239_minhash_containment" -> q239MinhashContainment,
-    "q240_adamic_adar" -> q240AdamicAdar,
-    "q241_gini" -> q241Gini,
-    "q242_cusum_changepoint" -> q242CusumChangepoint,
-    "q243_burstiness" -> q243Burstiness)
-
-  private val h = DedupSim.h
-
-  val oracles: Map[String, String] = Map(
-    "q244_ab_readout" ->
+  val queries: Seq[Query] = Seq(
+    Query("q244_ab_readout", q244AbReadout,
       """WITH pu AS (SELECT user_id,
         |    max(CASE WHEN event_type = 'purchase' AND value > 480 THEN 1 ELSE 0 END) converted
         |  FROM events GROUP BY user_id),
@@ -296,8 +285,8 @@ object Curation15 {
         |    + 1.96 * 1.96 / (4.0 * nbd * nbd))) / (1.0 + 1.96 * 1.96 / nbd), 6) AS wilson_b_lo,
         |  round((xbd / nbd + 1.96 * 1.96 / (2.0 * nbd) + 1.96 * sqrt(xbd / nbd * (1.0 - xbd / nbd) / nbd
         |    + 1.96 * 1.96 / (4.0 * nbd * nbd))) / (1.0 + 1.96 * 1.96 / nbd), 6) AS wilson_b_hi
-        |FROM r""".stripMargin,
-    "q245_perplexity_filter" ->
+        |FROM r""".stripMargin),
+    Query("q245_perplexity_filter", q245PerplexityFilter,
       """WITH docs AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
         |tb AS (SELECT doc_id, w[i] w1, w[i + 1] w2
         |  FROM docs, LATERAL (SELECT unnest(range(1, len(w))) i) t),
@@ -315,8 +304,8 @@ object Curation15 {
         |    count(*) OVER () nd FROM s2)
         |SELECT doc_id, n_bigrams::BIGINT AS n_bigrams, round(nll, 6) AS nll,
         |  (r * 10 <= nd) AS filtered
-        |FROM rk ORDER BY doc_id""".stripMargin,
-    "q238_ngram_novelty" ->
+        |FROM rk ORDER BY doc_id""".stripMargin),
+    Query("q238_ngram_novelty", q238NgramNovelty,
       """WITH docs AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
         |sh AS (SELECT doc_id, list_distinct([array_to_string(w[i:i+2], ' ')
         |    for i in range(1, greatest(len(w) - 2, 1) + 1)]) s FROM docs),
@@ -328,17 +317,17 @@ object Curation15 {
         |SELECT t.doc_id, n_grams::BIGINT AS n_grams,
         |  coalesce(n_seen, 0)::BIGINT AS n_seen,
         |  round(1.0 - coalesce(n_seen, 0)::DOUBLE / n_grams::DOUBLE, 6) AS novelty
-        |FROM tot t LEFT JOIN seen USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "q239_minhash_containment" ->
+        |FROM tot t LEFT JOIN seen USING (doc_id) ORDER BY doc_id""".stripMargin),
+    Query("q239_minhash_containment", q239MinhashContainment,
       s"""WITH docs AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
          |sh AS (SELECT doc_id, list_distinct([array_to_string(w[i:i+2], ' ')
          |    for i in range(1, greatest(len(w) - 2, 1) + 1)]) s FROM docs),
          |sig AS (SELECT doc_id, s,
          |    [list_min(list_transform(s, x ->
-         |      ${h.format("x")} + i * ('0x' || substr(md5(x), 16, 12))::BIGINT))
+         |      ${mdHashSql("x")} + i * ('0x' || substr(md5(x), 16, 12))::BIGINT))
          |      for i in range(0, 48)] sig
          |  FROM sh),
-         |hs AS (SELECT doc_id, list_transform(s, x -> ${h.format("x")}) hh FROM sh),
+         |hs AS (SELECT doc_id, list_transform(s, x -> ${mdHashSql("x")}) hh FROM sh),
          |bands AS (SELECT doc_id, b,
          |    array_to_string(sig[b*4+1 : b*4+4], ',') bkey
          |  FROM sig, (SELECT unnest(range(0, 12)) b) bs),
@@ -352,8 +341,8 @@ object Curation15 {
          |SELECT id_a, id_b, round(jac, 6) AS jac, n_int::BIGINT AS n_int,
          |  round(n_int::DOUBLE / sza::DOUBLE, 6) AS cont_a,
          |  round(n_int::DOUBLE / szb::DOUBLE, 6) AS cont_b
-         |FROM pairs WHERE jac >= 0.5 ORDER BY id_a, id_b""".stripMargin,
-    "q240_adamic_adar" ->
+         |FROM pairs WHERE jac >= 0.5 ORDER BY id_a, id_b""".stripMargin),
+    Query("q240_adamic_adar", q240AdamicAdar,
       """WITH cells AS (SELECT DISTINCT user_id, epoch_ms(ts) // 3600000 AS cell
         |  FROM events WHERE event_type = 'error'),
         |celln AS (SELECT cell, count(*) nc FROM cells GROUP BY cell
@@ -364,16 +353,16 @@ object Curation15 {
         |SELECT a.user_id AS ua, b.user_id AS ub, count(*)::BIGINT AS n_common,
         |  round(CAST(sum(a.w) AS DOUBLE), 6) AS aa
         |FROM wtd a JOIN wtd b ON a.cell = b.cell AND a.user_id < b.user_id
-        |GROUP BY 1, 2 ORDER BY aa DESC, ua, ub LIMIT 30""".stripMargin,
-    "q241_gini" ->
+        |GROUP BY 1, 2 ORDER BY aa DESC, ua, ub LIMIT 30""".stripMargin),
+    Query("q241_gini", q241Gini,
       """WITH totals AS (SELECT user_id, sum(CAST(value AS DECIMAL(18,2))) x
         |  FROM events GROUP BY user_id),
         |ranked AS (SELECT x, row_number() OVER (ORDER BY x, user_id) i FROM totals)
         |SELECT count(*)::BIGINT AS n,
         |  round(2.0 * sum(x * i)::DOUBLE / (count(*)::DOUBLE * sum(x)::DOUBLE) -
         |    (count(*)::DOUBLE + 1.0) / count(*)::DOUBLE, 6) AS gini
-        |FROM ranked""".stripMargin,
-    "q242_cusum_changepoint" ->
+        |FROM ranked""".stripMargin),
+    Query("q242_cusum_changepoint", q242CusumChangepoint,
       """WITH daily AS (SELECT CAST(ts AS DATE) dd, count(*) n FROM events GROUP BY 1),
         |cus AS (SELECT dd,
         |    row_number() OVER (ORDER BY dd) t,
@@ -386,8 +375,8 @@ object Curation15 {
         |SELECT min(dd) AS cp_day, round(min(cusum), 6) AS cusum,
         |  min(nd)::BIGINT AS n_days,
         |  round(min(total::DOUBLE / nd::DOUBLE), 6) AS daily_mean
-        |FROM c2, mx WHERE abs(cusum) = mc""".stripMargin,
-    "q243_burstiness" ->
+        |FROM c2, mx WHERE abs(cusum) = mc""".stripMargin),
+    Query("q243_burstiness", q243Burstiness,
       """WITH hourly AS (SELECT user_id, epoch_ms(ts) // 3600000 h, count(*) c
         |  FROM events GROUP BY 1, 2),
         |agg AS (SELECT user_id, max(h) - min(h) + 1 span_hours,
@@ -396,5 +385,5 @@ object Curation15 {
         |  round((sc2::DOUBLE / span_hours::DOUBLE -
         |    (n_events::DOUBLE / span_hours::DOUBLE) * (n_events::DOUBLE / span_hours::DOUBLE)) /
         |    (n_events::DOUBLE / span_hours::DOUBLE), 6) AS fano
-        |FROM agg ORDER BY user_id""".stripMargin)
+        |FROM agg ORDER BY user_id""".stripMargin))
 }

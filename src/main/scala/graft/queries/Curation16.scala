@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-6 wave 4: Theil-Sen robust trend estimation and
@@ -136,14 +136,8 @@ object Curation16 {
         .as("jackknife_se"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q246_theil_sen" -> q246TheilSen,
-    "q247_token_waterfill" -> q247TokenWaterfill,
-    "q250_rolling_median" -> q250RollingMedian,
-    "q251_jackknife" -> q251Jackknife)
-
-  val oracles: Map[String, String] = Map(
-    "q246_theil_sen" ->
+  val queries: Seq[Query] = Seq(
+    Query("q246_theil_sen", q246TheilSen,
       """WITH daily AS (SELECT CAST(ts AS DATE) dd, count(*) n FROM events GROUP BY 1),
         |idx AS (SELECT n, row_number() OVER (ORDER BY dd) t FROM daily),
         |slopes AS (SELECT (b.n - a.n)::DOUBLE / (b.t - a.t)::DOUBLE slope, a.t ta, b.t tb
@@ -154,8 +148,8 @@ object Curation16 {
         |  round(avg(CASE WHEN m % 2 = 1 THEN
         |      CASE WHEN r * 2 = m + 1 THEN slope END
         |    ELSE CASE WHEN r * 2 = m OR r * 2 = m + 2 THEN slope END END), 6) AS ts_slope
-        |FROM ranked WHERE r * 2 = m OR r * 2 = m + 1 OR r * 2 = m + 2""".stripMargin,
-    "q250_rolling_median" ->
+        |FROM ranked WHERE r * 2 = m OR r * 2 = m + 1 OR r * 2 = m + 2""".stripMargin),
+    Query("q250_rolling_median", q250RollingMedian,
       """WITH daily AS (SELECT event_type, CAST(ts AS DATE) dd, count(*) n
         |  FROM events GROUP BY 1, 2),
         |fr AS (SELECT event_type, dd, n,
@@ -166,8 +160,8 @@ object Curation16 {
         |  round(CASE WHEN len(f) % 2 = 1 THEN f[(len(f) + 1) // 2]::DOUBLE
         |    ELSE (f[len(f) // 2]::DOUBLE + f[len(f) // 2 + 1]::DOUBLE) / 2.0 END, 1)
         |    AS rolling_median
-        |FROM fr ORDER BY event_type, dd""".stripMargin,
-    "q251_jackknife" ->
+        |FROM fr ORDER BY event_type, dd""".stripMargin),
+    Query("q251_jackknife", q251Jackknife,
       """WITH bysrc AS (SELECT source, sum(n_chars) sc, count(*) nc
         |  FROM documents GROUP BY source),
         |tot AS (SELECT sum(sc) st, sum(nc) nt, count(*) g FROM bysrc),
@@ -181,8 +175,8 @@ object Curation16 {
         |SELECT g::BIGINT AS g, round(theta, 6) AS mean_chars,
         |  round(sqrt((g::DOUBLE - 1.0) / g::DOUBLE *
         |    (s2::DOUBLE - g::DOUBLE * theta_bar * theta_bar)), 6) AS jackknife_se
-        |FROM m2""".stripMargin,
-    "q247_token_waterfill" ->
+        |FROM m2""".stripMargin),
+    Query("q247_token_waterfill", q247TokenWaterfill,
       """WITH src AS (SELECT source, sum(n_chars) c FROM documents GROUP BY source),
         |tot AS (SELECT sum(c) total, count(*) ns FROM src),
         |ranked AS (SELECT source, c, (total * 9) // 10 budget, ns,
@@ -197,5 +191,5 @@ object Curation16 {
         |SELECT source, c::BIGINT AS c,
         |  round(CASE WHEN keep THEN c::DOUBLE ELSE lambda END, 4) AS alloc,
         |  NOT keep AS capped
-        |FROM r2, lam ORDER BY source""".stripMargin)
+        |FROM r2, lam ORDER BY source""".stripMargin))
 }

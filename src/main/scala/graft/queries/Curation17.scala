@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-6 wave 5: 2D skyline (Pareto front) and Spearman rank
@@ -156,15 +156,8 @@ object Curation17 {
     rows.reduce(_.unionByName(_)).orderBy("check_name")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q248_skyline_2d" -> q248Skyline2d,
-    "q249_spearman" -> q249Spearman,
-    "q252_cohort_ltv" -> q252CohortLtv,
-    "q253_time_to_convert" -> q253TimeToConvert,
-    "q254_expectations_audit" -> q254ExpectationsAudit)
-
-  val oracles: Map[String, String] = Map(
-    "q252_cohort_ltv" ->
+  val queries: Seq[Query] = Seq(
+    Query("q252_cohort_ltv", q252CohortLtv,
       """WITH first AS (SELECT user_id,
         |    CAST(date_trunc('week', min(ts)) AS DATE) cohort
         |  FROM events GROUP BY user_id),
@@ -181,8 +174,8 @@ object Curation17 {
         |  round(CAST(wv AS DOUBLE), 2) AS week_value,
         |  round(CAST(cum AS DOUBLE) / n_users::DOUBLE, 6) AS ltv_per_user
         |FROM cumw JOIN sizes USING (cohort)
-        |ORDER BY cohort, age_week""".stripMargin,
-    "q253_time_to_convert" ->
+        |ORDER BY cohort, age_week""".stripMargin),
+    Query("q253_time_to_convert", q253TimeToConvert,
       """WITH marked AS (SELECT *,
         |    last_value(CASE WHEN event_type = 'click' THEN ts END IGNORE NULLS)
         |      OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -198,8 +191,8 @@ object Curation17 {
         |  min(CASE WHEN cum * 2 >= n THEN delay_s END)::BIGINT AS p50_s,
         |  min(CASE WHEN cum * 10 >= n * 9 THEN delay_s END)::BIGINT AS p90_s,
         |  round(sum(delay_s * c)::DOUBLE / min(n)::DOUBLE, 6) AS avg_s
-        |FROM ranked""".stripMargin,
-    "q254_expectations_audit" ->
+        |FROM ranked""".stripMargin),
+    Query("q254_expectations_audit", q254ExpectationsAudit,
       """WITH agg AS (SELECT count(*) n,
         |  sum(CASE WHEN NOT (l_quantity >= 1 AND l_quantity <= 50) THEN 1 ELSE 0 END) v1,
         |  sum(CASE WHEN NOT (l_discount >= 0 AND l_discount <= 0.1) THEN 1 ELSE 0 END) v2,
@@ -215,8 +208,8 @@ object Curation17 {
         |  UNION ALL SELECT 'l_shipdate_not_null', n::BIGINT, v4::BIGINT, v4 = 0 FROM agg
         |  UNION ALL SELECT 'l_returnflag_in_domain', n::BIGINT, v5::BIGINT, v5 = 0 FROM agg
         |  UNION ALL SELECT 'l_orderkey_positive', n::BIGINT, v6::BIGINT, v6 = 0 FROM agg)
-        |ORDER BY check_name""".stripMargin,
-    "q248_skyline_2d" ->
+        |ORDER BY check_name""".stripMargin),
+    Query("q248_skyline_2d", q248Skyline2d,
       """WITH docs AS (SELECT doc_id, n_chars x,
         |    len(list_distinct(str_split(text, ' '))) y FROM documents),
         |marked AS (SELECT *,
@@ -225,8 +218,8 @@ object Curation17 {
         |  FROM docs)
         |SELECT doc_id, x::BIGINT AS x, y::BIGINT AS y FROM marked
         |WHERE (maxy_gt IS NULL OR maxy_gt < y) AND maxy_eq = y
-        |ORDER BY x DESC, doc_id""".stripMargin,
-    "q249_spearman" ->
+        |ORDER BY x DESC, doc_id""".stripMargin),
+    Query("q249_spearman", q249Spearman,
       """WITH docs AS (SELECT doc_id, n_chars xv,
         |    len(list_distinct(str_split(text, ' '))) yv FROM documents),
         |rxs AS (SELECT xv, CAST(coalesce(sum(tv) OVER (ORDER BY xv
@@ -244,5 +237,5 @@ object Curation17 {
         |  round((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE) /
         |    sqrt((n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE) *
         |      (n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE)), 6) AS spearman
-        |FROM m""".stripMargin)
+        |FROM m""".stripMargin))
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.{dotNative, normSqNative}
-import graft.functions.TextFunctions.mdHash
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-7 wave: d-dimensional skyline, oracle-checked Structured
@@ -163,7 +163,6 @@ object Curation18 {
     * deterministic round-9 + id cutoff (the q75 discipline).
     */
   private val q261DiversifiedTopk: Q = (s, d) => {
-    graft.functions.GraftRegistry.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
     val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
@@ -271,23 +270,8 @@ object Curation18 {
       .select(col("doc_id"), col("n_chars"), round(col("es_key"), 9).as("es_key"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q255_skyline_3d" -> q255Skyline3d,
-    "q256_stream_interval_join" -> q256StreamIntervalJoin,
-    "q257_stream_window_agg" -> q257StreamWindowAgg,
-    "q258_anova_f" -> q258AnovaF,
-    "q259_kendall_tau" -> q259KendallTau,
-    "q260_markov_transitions" -> q260MarkovTransitions,
-    "q261_diversified_topk" -> q261DiversifiedTopk,
-    "q262_ols_trend" -> q262OlsTrend,
-    "q263_cramers_v" -> q263CramersV,
-    "q264_rendezvous_shards" -> q264RendezvousShards,
-    "q265_weighted_reservoir" -> q265WeightedReservoir)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q255_skyline_3d" ->
+  val queries: Seq[Query] = Seq(
+    Query("q255_skyline_3d", q255Skyline3d,
       """WITH docs AS (SELECT doc_id, n_chars::BIGINT x,
         |    len(list_distinct(str_split(text, ' ')))::BIGINT y,
         |    len(regexp_extract_all(text, '[A-Za-z0-9]{1,4}'))::BIGINT z
@@ -296,8 +280,8 @@ object Curation18 {
         |WHERE NOT EXISTS (SELECT 1 FROM docs q
         |  WHERE q.x >= p.x AND q.y >= p.y AND q.z >= p.z
         |    AND (q.x > p.x OR q.y > p.y OR q.z > p.z))
-        |ORDER BY x DESC, doc_id""".stripMargin,
-    "q256_stream_interval_join" ->
+        |ORDER BY x DESC, doc_id""".stripMargin),
+    Query("q256_stream_interval_join", q256StreamIntervalJoin,
       """WITH c AS (SELECT event_id click_id, user_id, ts c_ts FROM events
         |    WHERE event_type = 'click'),
         |p AS (SELECT event_id purchase_id, user_id, ts p_ts FROM events
@@ -308,12 +292,12 @@ object Curation18 {
         |SELECT count(*) AS n_pairs, count(DISTINCT user_id)::BIGINT AS n_users,
         |  round(sum(delay_us)::DOUBLE / count(*)::DOUBLE / 1000000.0, 6) AS avg_delay_s,
         |  max(purchase_id) AS max_purchase_id
-        |FROM j""".stripMargin,
-    "q257_stream_window_agg" ->
+        |FROM j""".stripMargin),
+    Query("q257_stream_window_agg", q257StreamWindowAgg,
       """SELECT date_trunc('day', ts) AS day, event_type, count(*) AS n,
         |  round(sum(value), 6) AS sum_v
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    "q258_anova_f" ->
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
+    Query("q258_anova_f", q258AnovaF,
       """WITH g AS (SELECT source, count(*) ng, sum(n_chars) sg,
         |    sum(n_chars * n_chars) qg FROM documents GROUP BY source),
         |t AS (SELECT ng, qg, sg,
@@ -322,8 +306,8 @@ object Curation18 {
         |SELECT k::BIGINT AS k, n::BIGINT AS n,
         |  round(((b::DOUBLE - s::DOUBLE * s::DOUBLE / n::DOUBLE) / (k::DOUBLE - 1.0)) /
         |    ((q::DOUBLE - b::DOUBLE) / (n::DOUBLE - k::DOUBLE)), 6) AS f_stat
-        |FROM m""".stripMargin,
-    "q259_kendall_tau" ->
+        |FROM m""".stripMargin),
+    Query("q259_kendall_tau", q259KendallTau,
       """WITH daily AS (SELECT CAST(ts AS DATE) dd, count(*) n FROM events GROUP BY 1),
         |idx AS (SELECT n, row_number() OVER (ORDER BY dd) t FROM daily),
         |p AS (SELECT sum(CASE WHEN b.n > a.n THEN 1 ELSE 0 END) c,
@@ -333,8 +317,8 @@ object Curation18 {
         |  FROM (SELECT n, count(*) tv FROM idx GROUP BY n))
         |SELECT c::BIGINT AS c, disc::BIGINT AS d, n0::BIGINT AS n0,
         |  round((c - disc)::DOUBLE / sqrt(n0::DOUBLE * (n0 - n2)::DOUBLE), 6) AS tau_b
-        |FROM p, ties""".stripMargin,
-    "q260_markov_transitions" ->
+        |FROM p, ties""".stripMargin),
+    Query("q260_markov_transitions", q260MarkovTransitions,
       """WITH tr AS (SELECT event_type ft,
         |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) nt
         |  FROM events),
@@ -342,8 +326,8 @@ object Curation18 {
         |tot AS (SELECT ft, sum(n) t FROM cnt GROUP BY ft)
         |SELECT ft AS from_type, nt AS to_type, n::BIGINT AS n,
         |  round(n::DOUBLE / t::DOUBLE, 6) AS p
-        |FROM cnt JOIN tot USING (ft) ORDER BY from_type, to_type""".stripMargin,
-    "q261_diversified_topk" ->
+        |FROM cnt JOIN tot USING (ft) ORDER BY from_type, to_type""".stripMargin),
+    Query("q261_diversified_topk", q261DiversifiedTopk,
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
         |q AS (SELECT v qv FROM e WHERE vec_id = 0),
@@ -355,8 +339,8 @@ object Curation18 {
         |capped AS (SELECT *, row_number() OVER (PARTITION BY bucket
         |    ORDER BY round(cos, 9) DESC, vec_id) rb FROM cand)
         |SELECT vec_id, bucket, round(cos, 6) AS cos FROM capped WHERE rb <= 2
-        |ORDER BY round(cos, 9) DESC, vec_id LIMIT 10""".stripMargin,
-    "q262_ols_trend" ->
+        |ORDER BY round(cos, 9) DESC, vec_id LIMIT 10""".stripMargin),
+    Query("q262_ols_trend", q262OlsTrend,
       """WITH daily AS (SELECT CAST(ts AS DATE) dd, count(*) n FROM events GROUP BY 1),
         |idx AS (SELECT n, row_number() OVER (ORDER BY dd) t FROM daily),
         |m AS (SELECT count(*) m, sum(t) st, sum(t * t) stt, sum(n) sn,
@@ -369,8 +353,8 @@ object Curation18 {
         |    AS intercept,
         |  round(((md * stnd - std * snd) * (md * stnd - std * snd)) /
         |    ((md * sttd - std * std) * (md * snnd - snd * snd)), 6) AS r2
-        |FROM md""".stripMargin,
-    "q263_cramers_v" ->
+        |FROM md""".stripMargin),
+    Query("q263_cramers_v", q263CramersV,
       """WITH obs AS (SELECT lang, source, count(*) o FROM documents GROUP BY 1, 2),
         |rl AS (SELECT lang, sum(o) rl FROM obs GROUP BY lang),
         |cl AS (SELECT source, sum(o) cl FROM obs GROUP BY source),
@@ -389,24 +373,24 @@ object Curation18 {
         |  round(chi2d::DOUBLE, 6) AS chi2,
         |  round(sqrt(chi2d::DOUBLE / (n::DOUBLE * (least(r, c)::DOUBLE - 1.0))), 6)
         |    AS cramers_v
-        |FROM m""".stripMargin,
-    "q264_rendezvous_shards" ->
+        |FROM m""".stripMargin),
+    Query("q264_rendezvous_shards", q264RendezvousShards,
       s"""WITH h AS (SELECT doc_id, s,
-         |    ${hashSql.format("s::VARCHAR || '|' || doc_id::VARCHAR")} hv
+         |    ${mdHashSql("s::VARCHAR || '|' || doc_id::VARCHAR")} hv
          |  FROM documents, range(0, 8) r(s)),
          |pick AS (SELECT doc_id, s,
          |    row_number() OVER (PARTITION BY doc_id ORDER BY hv DESC, s DESC) rn
          |  FROM h),
-         |md AS (SELECT doc_id, ${hashSql.format("doc_id::VARCHAR")} % 8 ms FROM documents)
+         |md AS (SELECT doc_id, ${mdHashSql("doc_id::VARCHAR")} % 8 ms FROM documents)
          |SELECT p.s::BIGINT AS shard, count(*) AS n_docs,
          |  sum(CASE WHEN p.s = md.ms THEN 1 ELSE 0 END)::BIGINT AS n_same_as_mod
          |FROM pick p JOIN md USING (doc_id) WHERE rn = 1
-         |GROUP BY 1 ORDER BY shard""".stripMargin,
-    "q265_weighted_reservoir" ->
+         |GROUP BY 1 ORDER BY shard""".stripMargin),
+    Query("q265_weighted_reservoir", q265WeightedReservoir,
       s"""WITH w AS (SELECT doc_id, n_chars,
-         |    (${hashSql.format("doc_id::VARCHAR")}::DOUBLE + 1.0) / 1152921504606846976.0 u
+         |    (${mdHashSql("doc_id::VARCHAR")}::DOUBLE + 1.0) / 1152921504606846976.0 u
          |  FROM documents),
          |k AS (SELECT doc_id, n_chars, ln(u) / n_chars::DOUBLE es_key FROM w)
          |SELECT doc_id, n_chars::BIGINT AS n_chars, round(es_key, 9) AS es_key
-         |FROM k ORDER BY es_key DESC, doc_id LIMIT 20""".stripMargin)
+         |FROM k ORDER BY es_key DESC, doc_id LIMIT 20""".stripMargin))
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.dsum
-import graft.functions.TextFunctions.mdHash
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -231,25 +231,11 @@ object Curation19 {
       max(col("n_events")).as("max_events"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q266_stream_dedup" -> q266StreamDedup,
-    "q267_part_bfs" -> q267PartBfs,
-    "q268_event_regex" -> q268EventRegex,
-    "q269_histogram" -> q269Histogram,
-    "q270_trimmed_mean" -> q270TrimmedMean,
-    "q271_dp_release" -> q271DpRelease,
-    "q272_threshold_sweep" -> q272ThresholdSweep,
-    "q273_grid_density" -> q273GridDensity,
-    "q274_itemsets3" -> q274Itemsets3,
-    "q275_sessionize" -> q275Sessionize)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q266_stream_dedup" ->
+  val queries: Seq[Query] = Seq(
+    Query("q266_stream_dedup", q266StreamDedup,
       """SELECT event_type, count(DISTINCT user_id) AS n_users
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-    "q267_part_bfs" ->
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin),
+    Query("q267_part_bfs", q267PartBfs,
       """WITH RECURSIVE
         |edges AS (SELECT DISTINCT a.l_partkey u, b.l_partkey v
         |  FROM lineitem a JOIN lineitem b
@@ -263,22 +249,22 @@ object Curation19 {
         |dst AS (SELECT sd, node, min(hop) hop FROM bfs GROUP BY 1, 2)
         |SELECT sd, hop::BIGINT AS hop, count(*) AS n_parts,
         |  sum(node)::BIGINT AS sum_partkey
-        |FROM dst GROUP BY sd, hop ORDER BY sd, hop""".stripMargin,
-    "q268_event_regex" ->
+        |FROM dst GROUP BY sd, hop ORDER BY sd, hop""".stripMargin),
+    Query("q268_event_regex", q268EventRegex,
       """WITH s AS (SELECT user_id,
         |    string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id) seq
         |  FROM events GROUP BY user_id),
         |m AS (SELECT user_id,
         |    len(regexp_extract_all(seq, 'cv*p'))::BIGINT n_matches FROM s)
         |SELECT n_matches, count(*) AS n_users, sum(user_id)::BIGINT AS sum_user
-        |FROM m GROUP BY 1 ORDER BY n_matches""".stripMargin,
-    "q269_histogram" ->
+        |FROM m GROUP BY 1 ORDER BY n_matches""".stripMargin),
+    Query("q269_histogram", q269Histogram,
       """SELECT CAST(floor(l_extendedprice / CAST(5000.0 AS DOUBLE)) AS BIGINT) AS bucket,
         |  count(*) AS n,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         |  min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price
-        |FROM lineitem GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "q270_trimmed_mean" ->
+        |FROM lineitem GROUP BY 1 ORDER BY bucket""".stripMargin),
+    Query("q270_trimmed_mean", q270TrimmedMean,
       """WITH r AS (SELECT o_orderpriority, o_totalprice,
         |    row_number() OVER (PARTITION BY o_orderpriority
         |      ORDER BY o_totalprice, o_orderkey) rn,
@@ -288,20 +274,20 @@ object Curation19 {
         |SELECT o_orderpriority, count(*) AS n_kept,
         |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) /
         |    count(*)::DOUBLE, 6) AS trimmed_mean
-        |FROM k GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "q271_dp_release" ->
+        |FROM k GROUP BY 1 ORDER BY o_orderpriority""".stripMargin),
+    Query("q271_dp_release", q271DpRelease,
       s"""WITH g AS (SELECT source, count(*) n FROM documents GROUP BY source),
          |u AS (SELECT source, n,
-         |    (${hashSql.format("source")}::DOUBLE + 1.0) / 1152921504606846976.0 u
+         |    (${mdHashSql("source")}::DOUBLE + 1.0) / 1152921504606846976.0 u
          |  FROM g),
          |z AS (SELECT source, n, u - 0.5 v FROM u)
          |SELECT source,
          |  round(n + (-sign(v) * ln(greatest(1e-12, 1.0 - 2.0 * abs(v)))), 4)
          |    AS noisy_n
-         |FROM z WHERE n >= 5 ORDER BY source""".stripMargin,
-    "q272_threshold_sweep" ->
+         |FROM z WHERE n >= 5 ORDER BY source""".stripMargin),
+    Query("q272_threshold_sweep", q272ThresholdSweep,
       s"""${DedupSim.shinglesCte},
-         |hs AS (SELECT doc_id, lang, list_transform(s, x -> ${DedupSim.h.format("x")}) hh FROM sh),
+         |hs AS (SELECT doc_id, lang, list_transform(s, x -> ${mdHashSql("x")}) hh FROM sh),
          |pairs AS (SELECT a.doc_id id_a, b.doc_id id_b,
          |    len(list_intersect(a.hh, b.hh))::DOUBLE /
          |      (len(a.hh)::DOUBLE + len(b.hh)::DOUBLE
@@ -312,8 +298,8 @@ object Curation19 {
          |SELECT t, count(*) AS n_pairs,
          |  round(sum(CAST(round(jac, 6) AS DECIMAL(20,6)))::DOUBLE /
          |    count(*)::DOUBLE, 6) AS avg_jac
-         |FROM p5 JOIN th ON jac >= t GROUP BY t ORDER BY t""".stripMargin,
-    "q273_grid_density" ->
+         |FROM p5 JOIN th ON jac >= t GROUP BY t ORDER BY t""".stripMargin),
+    Query("q273_grid_density", q273GridDensity,
       """WITH pts AS (SELECT
         |    CAST(floor(CAST(embedding[1] AS DOUBLE) / CAST(0.1 AS DOUBLE)) AS BIGINT) cx,
         |    CAST(floor(CAST(embedding[2] AS DOUBLE) / CAST(0.1 AS DOUBLE)) AS BIGINT) cy
@@ -326,14 +312,14 @@ object Curation19 {
         |SELECT c.cx, c.cy, c.n, coalesce(nsum, 0)::BIGINT AS n_neighbors
         |FROM cells c LEFT JOIN nbr USING (cx, cy)
         |WHERE c.n >= 10 AND c.n > coalesce(nmax, 0)
-        |ORDER BY cx, cy""".stripMargin,
-    "q274_itemsets3" ->
+        |ORDER BY cx, cy""".stripMargin),
+    Query("q274_itemsets3", q274Itemsets3,
       """WITH b AS (SELECT DISTINCT l_orderkey o, l_partkey p FROM lineitem)
         |SELECT a.p AS p1, c.p AS p2, e.p AS p3, count(*) AS n
         |FROM b a JOIN b c ON a.o = c.o AND a.p < c.p
         |JOIN b e ON c.o = e.o AND c.p < e.p
-        |GROUP BY 1, 2, 3 ORDER BY n DESC, p1, p2, p3 LIMIT 20""".stripMargin,
-    "q275_sessionize" ->
+        |GROUP BY 1, 2, 3 ORDER BY n DESC, p1, p2, p3 LIMIT 20""".stripMargin),
+    Query("q275_sessionize", q275Sessionize,
       """WITH e AS (SELECT user_id, ts, event_id, epoch_us(ts) tus FROM events),
         |l AS (SELECT *, lag(tus) OVER (PARTITION BY user_id ORDER BY ts, event_id) pts
         |  FROM e),
@@ -346,5 +332,5 @@ object Curation19 {
         |SELECT count(*) AS n_sessions, count(DISTINCT user_id)::BIGINT AS n_users,
         |  round(sum(n_events)::DOUBLE / count(*)::DOUBLE, 6) AS avg_events,
         |  max(span_s)::BIGINT AS max_span_s, max(n_events)::BIGINT AS max_events
-        |FROM sess""".stripMargin)
+        |FROM sess""".stripMargin))
 }

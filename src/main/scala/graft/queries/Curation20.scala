@@ -4,9 +4,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.dsum
-import graft.functions.TextFunctions.{mdHash, words}
+import graft.functions.TextFunctions.{mdHash, mdHashSql, words}
 import graft.sources.Tables
 
 /** Round-7 third wave: winnowing (MOSS) fingerprints, day-of-week
@@ -205,23 +205,11 @@ object Curation20 {
       .orderBy("dim")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q276_winnowing" -> q276Winnowing,
-    "q277_seasonality" -> q277Seasonality,
-    "q278_item_similarity" -> q278ItemSimilarity,
-    "q279_diversity" -> q279Diversity,
-    "q280_decile_lift" -> q280DecileLift,
-    "q281_stream_sliding" -> q281StreamSliding,
-    "q282_srm_audit" -> q282SrmAudit,
-    "q283_feature_screen" -> q283FeatureScreen)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q276_winnowing" ->
+  val queries: Seq[Query] = Seq(
+    Query("q276_winnowing", q276Winnowing,
       s"""WITH docs AS (SELECT doc_id, str_split(text, ' ') w FROM documents
          |    WHERE len(str_split(text, ' ')) >= 6),
-         |hs AS (SELECT doc_id, [${hashSql.format("array_to_string(w[i:i+2], ' ')")}
+         |hs AS (SELECT doc_id, [${mdHashSql("array_to_string(w[i:i+2], ' ')")}
          |    for i in range(1, len(w) - 1)] hh FROM docs),
          |fp AS (SELECT doc_id, list_distinct([list_min(hh[i:i+3])
          |    for i in range(1, len(hh) - 2)]) fps FROM hs),
@@ -230,16 +218,16 @@ object Curation20 {
          |ee AS (SELECT e.doc_id, e.fp FROM e JOIN ok USING (fp))
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared
          |FROM ee a JOIN ee b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""".stripMargin,
-    "q277_seasonality" ->
+         |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""".stripMargin),
+    Query("q277_seasonality", q277Seasonality,
       """WITH daily AS (SELECT CAST(ts AS DATE) dd, count(*) n FROM events GROUP BY 1),
         |bd AS (SELECT dayofweek(dd)::BIGINT dow, count(*) n_days, sum(n) total
         |  FROM daily GROUP BY 1),
         |o AS (SELECT sum(n)::DOUBLE / count(*)::DOUBLE om FROM daily)
         |SELECT dow, n_days, total::BIGINT AS total,
         |  round((total::DOUBLE / n_days::DOUBLE) / om, 6) AS seasonal_index
-        |FROM bd, o ORDER BY dow""".stripMargin,
-    "q278_item_similarity" ->
+        |FROM bd, o ORDER BY dow""".stripMargin),
+    Query("q278_item_similarity", q278ItemSimilarity,
       """WITH b AS (SELECT DISTINCT l_orderkey o, l_partkey p FROM lineitem),
         |co AS (SELECT a.p p1, c.p p2, count(*) co FROM b a
         |  JOIN b c ON a.o = c.o AND a.p < c.p GROUP BY 1, 2),
@@ -248,8 +236,8 @@ object Curation20 {
         |    co::DOUBLE / sqrt(i1.c::DOUBLE * i2.c::DOUBLE) cos
         |  FROM co JOIN items i1 ON i1.p = p1 JOIN items i2 ON i2.p = p2)
         |SELECT p1, p2, co, round(cos, 6) AS cos FROM s
-        |ORDER BY round(cos, 9) DESC, p1, p2 LIMIT 20""".stripMargin,
-    "q279_diversity" ->
+        |ORDER BY round(cos, 9) DESC, p1, p2 LIMIT 20""".stripMargin),
+    Query("q279_diversity", q279Diversity,
       """WITH t AS (SELECT source, unnest(str_split(text, ' ')) wd FROM documents),
         |k AS (SELECT source, wd, count(*) k FROM t GROUP BY 1, 2),
         |n AS (SELECT source, sum(k) n FROM k GROUP BY source),
@@ -262,12 +250,12 @@ object Curation20 {
         |SELECT source, min(n)::BIGINT AS n_tokens, count(*) AS n_distinct,
         |  round(sum(hterm)::DOUBLE, 6) AS shannon,
         |  round(sum(sterm)::DOUBLE, 6) AS simpson
-        |FROM terms GROUP BY source ORDER BY source""".stripMargin,
-    "q280_decile_lift" ->
+        |FROM terms GROUP BY source ORDER BY source""".stripMargin),
+    Query("q280_decile_lift", q280DecileLift,
       s"""WITH scored AS (SELECT doc_id,
          |    len(str_split(text, ' ')) nw,
          |    list_aggregate(list_transform(str_split(text, ' '),
-         |      t -> ${hashSql.format("'w|' || t")} % 2001 - 1000), 'sum') w_sum,
+         |      t -> ${mdHashSql("'w|' || t")} % 2001 - 1000), 'sum') w_sum,
          |    CASE WHEN n_chars >= 400 THEN 1 ELSE 0 END pos
          |  FROM documents),
          |sc AS (SELECT doc_id, pos,
@@ -280,14 +268,14 @@ object Curation20 {
          |SELECT decile, count(*) AS n, sum(pos)::BIGINT AS n_pos,
          |  round(sum(pos)::DOUBLE / count(*)::DOUBLE, 6) AS resp_rate,
          |  round(sum(pos)::DOUBLE / count(*)::DOUBLE / orate, 6) AS lift
-         |FROM dec, o GROUP BY decile, orate ORDER BY decile""".stripMargin,
-    "q281_stream_sliding" ->
+         |FROM dec, o GROUP BY decile, orate ORDER BY decile""".stripMargin),
+    Query("q281_stream_sliding", q281StreamSliding,
       """WITH w AS (SELECT unnest([date_trunc('day', ts),
         |    date_trunc('day', ts) - INTERVAL 1 DAY]) w_start FROM events)
-        |SELECT w_start, count(*) AS n FROM w GROUP BY 1 ORDER BY w_start""".stripMargin,
-    "q282_srm_audit" ->
+        |SELECT w_start, count(*) AS n FROM w GROUP BY 1 ORDER BY w_start""".stripMargin),
+    Query("q282_srm_audit", q282SrmAudit,
       s"""WITH u AS (SELECT DISTINCT user_id FROM events),
-         |a AS (SELECT ${hashSql.format("user_id::VARCHAR")} % 2 arm FROM u),
+         |a AS (SELECT ${mdHashSql("user_id::VARCHAR")} % 2 arm FROM u),
          |m AS (SELECT sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END)::BIGINT n0,
          |    sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END)::BIGINT n1 FROM a)
          |SELECT n0, n1,
@@ -297,8 +285,8 @@ object Curation20 {
          |  ((((n0 - (n0 + n1) / 2.0) * (n0 - (n0 + n1) / 2.0) +
          |    (n1 - (n0 + n1) / 2.0) * (n1 - (n0 + n1) / 2.0))::DOUBLE /
          |    ((n0 + n1) / 2.0)) > 3.841) AS srm
-         |FROM m""".stripMargin,
-    "q283_feature_screen" ->
+         |FROM m""".stripMargin),
+    Query("q283_feature_screen", q283FeatureScreen,
       """WITH x AS (SELECT vec_id, label::BIGINT y,
         |    generate_subscripts(embedding, 1)::BIGINT dim,
         |    CAST(round(CAST(unnest(embedding) AS DOUBLE) * 1000000.0) AS BIGINT) xi
@@ -310,5 +298,5 @@ object Curation20 {
         |  round((n::DOUBLE * sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE) /
         |    sqrt((n::DOUBLE * sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE) *
         |      (n::DOUBLE * syy::DOUBLE - sy::DOUBLE * sy::DOUBLE)), 6) AS corr
-        |FROM m ORDER BY dim""".stripMargin)
+        |FROM m ORDER BY dim""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-7 fourth wave: SymSpell-style edit-distance-1 join, pairwise
@@ -168,23 +168,16 @@ object Curation21 {
         round(sum(col("term")).cast(DoubleType) * 0.1, 6).as("rbo"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q284_symspell_join" -> q284SymspellJoin,
-    "q285_js_divergence" -> q285JsDivergence,
-    "q286_decayed_popularity" -> q286DecayedPopularity,
-    "q287_hll_overlap" -> q287HllOverlap,
-    "q288_rank_biased_overlap" -> q288RankBiasedOverlap)
-
-  val oracles: Map[String, String] = Map(
-    "q284_symspell_join" ->
+  val queries: Seq[Query] = Seq(
+    Query("q284_symspell_join", q284SymspellJoin,
       """WITH names AS (SELECT DISTINCT c_name w FROM customer),
         |vars AS (SELECT DISTINCT w, unnest([w] || [w[1:i-1] || w[i+1:len(w)]
         |    for i in range(1, len(w) + 1)]) v FROM names),
         |cand AS (SELECT DISTINCT a.w w1, b.w w2 FROM vars a
         |  JOIN vars b ON a.v = b.v AND a.w < b.w)
         |SELECT w1, w2 FROM cand WHERE levenshtein(w1, w2) = 1
-        |ORDER BY w1, w2 LIMIT 50""".stripMargin,
-    "q285_js_divergence" ->
+        |ORDER BY w1, w2 LIMIT 50""".stripMargin),
+    Query("q285_js_divergence", q285JsDivergence,
       """WITH t AS (SELECT source, unnest(str_split(text, ' ')) wd FROM documents),
         |k AS (SELECT source, wd, count(*) k FROM t GROUP BY 1, 2),
         |n AS (SELECT source, sum(k) n FROM k GROUP BY source),
@@ -199,8 +192,8 @@ object Curation21 {
         |  FROM bt GROUP BY 1, 2)
         |SELECT s1, s2, round((t::DOUBLE + ln(2.0) * (2.0 - spa::DOUBLE - spb::DOUBLE))
         |  * 0.5, 6) AS js
-        |FROM g ORDER BY js DESC, s1, s2 LIMIT 10""".stripMargin,
-    "q286_decayed_popularity" ->
+        |FROM g ORDER BY js DESC, s1, s2 LIMIT 10""".stripMargin),
+    Query("q286_decayed_popularity", q286DecayedPopularity,
       """WITH maxd AS (SELECT max(o_orderdate) maxd FROM orders),
         |t AS (SELECT l_partkey,
         |    CAST(exp(-date_diff('day', CAST(o_orderdate AS DATE),
@@ -208,8 +201,8 @@ object Curation21 {
         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey CROSS JOIN maxd),
         |g AS (SELECT l_partkey, count(*) n, sum(decay) sc FROM t GROUP BY 1)
         |SELECT l_partkey, n, round(sc::DOUBLE, 6) AS score
-        |FROM g ORDER BY round(sc::DOUBLE, 9) DESC, l_partkey LIMIT 20""".stripMargin,
-    "q287_hll_overlap" ->
+        |FROM g ORDER BY round(sc::DOUBLE, 9) DESC, l_partkey LIMIT 20""".stripMargin),
+    Query("q287_hll_overlap", q287HllOverlap,
       """WITH f AS (SELECT o_custkey,
         |    max(CASE WHEN o_orderdate < DATE '1997-01-01' THEN 1 ELSE 0 END) a,
         |    max(CASE WHEN o_orderdate >= DATE '1997-01-01' THEN 1 ELSE 0 END) b
@@ -218,8 +211,8 @@ object Curation21 {
         |  count(DISTINCT CASE WHEN b = 1 THEN o_custkey END) AS exact_b,
         |  sum(CASE WHEN a = 1 AND b = 1 THEN 1 ELSE 0 END)::BIGINT AS exact_overlap,
         |  true AS est_within_25pct
-        |FROM f""".stripMargin,
-    "q288_rank_biased_overlap" ->
+        |FROM f""".stripMargin),
+    Query("q288_rank_biased_overlap", q288RankBiasedOverlap,
       """WITH g AS (SELECT l_partkey,
         |    sum(CAST(l_extendedprice AS DECIMAL(18,2))) rev,
         |    sum(CAST(l_quantity AS DECIMAL(18,2))) qty
@@ -238,5 +231,5 @@ object Curation21 {
         |  FROM ad)
         |SELECT max(CASE WHEN dd = 50 THEN a_d END)::BIGINT AS overlap_at_50,
         |  round(sum(term)::DOUBLE * 0.1, 6) AS rbo
-        |FROM terms""".stripMargin)
+        |FROM terms""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-7 fifth wave: the two custom-state streaming APIs
@@ -92,20 +92,15 @@ object Curation22 {
       .orderBy("col_name")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q289_stream_running_max" -> q289StreamRunningMax,
-    "q290_stream_running_totals" -> q290StreamRunningTotals,
-    "q291_stats_profile" -> q291StatsProfile)
-
-  val oracles: Map[String, String] = Map(
-    "q289_stream_running_max" ->
+  val queries: Seq[Query] = Seq(
+    Query("q289_stream_running_max", q289StreamRunningMax,
       """SELECT user_id, max(value) AS max_value FROM events
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q290_stream_running_totals" ->
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q290_stream_running_totals", q290StreamRunningTotals,
       """SELECT user_id, count(*) AS n_events, max(ts) AS last_ts,
         |  round(sum(value), 6) AS sum_value
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q291_stats_profile" ->
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q291_stats_profile", q291StatsProfile,
       """WITH s AS (
         |  SELECT 'l_discount' AS col_name, count(*) n,
         |    sum(CASE WHEN l_discount IS NULL THEN 1 ELSE 0 END) n_null,
@@ -134,5 +129,5 @@ object Curation22 {
         |  FROM lineitem)
         |SELECT col_name, n::BIGINT AS n, n_null::BIGINT AS n_null,
         |  n_distinct::BIGINT AS n_distinct, min_v, max_v, sum_v
-        |FROM s ORDER BY col_name""".stripMargin)
+        |FROM s ORDER BY col_name""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.dsum
 import graft.functions.TextFunctions.words
 import graft.operators.Multimodal
@@ -108,14 +108,8 @@ object Curation23 {
       .orderBy("source")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q292_audio_energy" -> q292AudioEnergy,
-    "q293_equidepth_bins" -> q293EquidepthBins,
-    "q294_group_mean_impute" -> q294GroupMeanImpute,
-    "q295_token_fertility" -> q295TokenFertility)
-
-  val oracles: Map[String, String] = Map(
-    "q292_audio_energy" ->
+  val queries: Seq[Query] = Seq(
+    Query("q292_audio_energy", q292AudioEnergy,
       """WITH f AS (SELECT doc_id, source, text, len(text) n FROM documents),
         |win AS (SELECT doc_id, source, n,
         |    len([i for i in range(2, n + 1)
@@ -133,8 +127,8 @@ object Curation23 {
         |  round(sum(CAST(mean_rms AS DECIMAL(20,9)))::DOUBLE /
         |    count(*)::DOUBLE, 6) AS avg_rms,
         |  sum(n_silent)::BIGINT AS n_silent
-        |FROM per GROUP BY source ORDER BY source""".stripMargin,
-    "q293_equidepth_bins" ->
+        |FROM per GROUP BY source ORDER BY source""".stripMargin),
+    Query("q293_equidepth_bins", q293EquidepthBins,
       """WITH b AS (SELECT quantile_cont(l_extendedprice,
         |    [0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875]) bnds FROM lineitem),
         |t AS (SELECT l_extendedprice x,
@@ -142,8 +136,8 @@ object Curation23 {
         |  FROM lineitem, b)
         |SELECT bucket, count(*) AS n, min(x) AS min_x, max(x) AS max_x,
         |  CAST(sum(CAST(x AS DECIMAL(18,2))) AS DOUBLE) AS sum_x
-        |FROM t GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q294_group_mean_impute" ->
+        |FROM t GROUP BY bucket ORDER BY bucket""".stripMargin),
+    Query("q294_group_mean_impute", q294GroupMeanImpute,
       """WITH li AS (SELECT l_returnflag,
         |    CASE WHEN l_linenumber <> 3 THEN l_quantity END dense FROM lineitem),
         |m AS (SELECT l_returnflag,
@@ -157,8 +151,8 @@ object Curation23 {
         |SELECT l_returnflag, count(*) AS n, sum(was_null)::BIGINT AS n_imputed,
         |  round(min(grp_mean), 6) AS grp_mean,
         |  round(CAST(sum(CAST(imputed AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_imputed
-        |FROM j GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q295_token_fertility" ->
+        |FROM j GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q295_token_fertility", q295TokenFertility,
       """SELECT source, count(*) AS n_docs,
         |  sum(len(str_split(text, ' ')))::BIGINT AS n_words,
         |  sum(len(regexp_extract_all(text, '[A-Za-z0-9]{1,4}')))::BIGINT AS n_tokens,
@@ -168,5 +162,5 @@ object Curation23 {
         |  round(sum(n_chars)::DOUBLE /
         |    sum(len(regexp_extract_all(text, '[A-Za-z0-9]{1,4}')))::DOUBLE, 6)
         |    AS chars_per_token
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin)
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.dec2
 import graft.operators.Multimodal
 import graft.sources.Tables
@@ -119,14 +119,8 @@ object Curation24 {
         .as("avg_delta_s"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q296_video_motion" -> q296VideoMotion,
-    "q297_outlier_iqr" -> q297OutlierIqr,
-    "q298_weighted_median" -> q298WeightedMedian,
-    "q299_asof_nearest" -> q299AsofNearest)
-
-  val oracles: Map[String, String] = Map(
-    "q296_video_motion" ->
+  val queries: Seq[Query] = Seq(
+    Query("q296_video_motion", q296VideoMotion,
       """WITH f AS (SELECT doc_id, source, text, len(text) n FROM documents),
         |mo AS (SELECT doc_id, source, n // 64 nf,
         |    [list_avg([abs(ord(text[f*64 + i]) - ord(text[(f-1)*64 + i]))
@@ -143,8 +137,8 @@ object Curation24 {
         |    count(*)::DOUBLE, 6) AS avg_motion,
         |  round(max(max_m), 6) AS max_motion,
         |  sum(n_still)::BIGINT AS n_still
-        |FROM per GROUP BY source ORDER BY source""".stripMargin,
-    "q297_outlier_iqr" ->
+        |FROM per GROUP BY source ORDER BY source""".stripMargin),
+    Query("q297_outlier_iqr", q297OutlierIqr,
       """WITH q AS (SELECT o_orderpriority,
         |    quantile_cont(o_totalprice, [0.25, 0.75]) qs FROM orders GROUP BY 1),
         |fe AS (SELECT o_orderpriority,
@@ -155,8 +149,8 @@ object Curation24 {
         |  sum(CASE WHEN o_totalprice > hi THEN 1 ELSE 0 END)::BIGINT AS n_high,
         |  round(min(lo), 6) AS fence_lo, round(min(hi), 6) AS fence_hi
         |FROM orders o JOIN fe USING (o_orderpriority)
-        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin,
-    "q298_weighted_median" ->
+        |GROUP BY 1 ORDER BY o_orderpriority""".stripMargin),
+    Query("q298_weighted_median", q298WeightedMedian,
       """WITH wv AS (SELECT l_returnflag, l_extendedprice x,
         |    sum(CAST(l_quantity AS DECIMAL(18,2))) w
         |  FROM lineitem GROUP BY 1, 2),
@@ -168,8 +162,8 @@ object Curation24 {
         |SELECT l_returnflag, min(x) AS weighted_median,
         |  round(min(tw)::DOUBLE, 2) AS total_weight
         |FROM cum JOIN tot USING (l_returnflag)
-        |WHERE cw * 2 >= tw GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q299_asof_nearest" ->
+        |WHERE cw * 2 >= tw GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q299_asof_nearest", q299AsofNearest,
       """WITH ev AS (SELECT user_id, ts, event_id, event_type, epoch_us(ts) tus,
         |    last_value(CASE WHEN event_type = 'click' THEN epoch_us(ts) END IGNORE NULLS)
         |      OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -194,5 +188,5 @@ object Curation24 {
         |  round(sum(delta)::DOUBLE /
         |    sum(CASE WHEN delta IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE / 1000000.0, 6)
         |    AS avg_delta_s
-        |FROM m""".stripMargin)
+        |FROM m""".stripMargin))
 }

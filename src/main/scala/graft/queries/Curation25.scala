@@ -3,9 +3,9 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.dsum
-import graft.functions.TextFunctions.{mdHash, words}
+import graft.functions.TextFunctions.{mdHash, mdHashSql, words}
 import graft.sources.Tables
 
 /** Round-7 capstone: the per-source curation scorecard — one row per
@@ -85,12 +85,8 @@ object Curation25 {
       .orderBy("source")
   }
 
-  val defs: Map[String, Q] = Map("q300_source_scorecard" -> q300SourceScorecard)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q300_source_scorecard" ->
+  val queries: Seq[Query] = Seq(
+    Query("q300_source_scorecard", q300SourceScorecard,
       s"""WITH vol AS (SELECT source, count(*) n_docs, sum(n_chars) n_chars
          |  FROM documents GROUP BY source),
          |fert AS (SELECT source,
@@ -106,7 +102,7 @@ object Curation25 {
          |  FROM k JOIN n USING (source) GROUP BY k.source),
          |docs AS (SELECT doc_id, source, str_split(text, ' ') w FROM documents
          |    WHERE len(str_split(text, ' ')) >= 6),
-         |hs AS (SELECT doc_id, [${hashSql.format("array_to_string(w[i:i+2], ' ')")}
+         |hs AS (SELECT doc_id, [${mdHashSql("array_to_string(w[i:i+2], ' ')")}
          |    for i in range(1, len(w) - 1)] hh FROM docs),
          |fp AS (SELECT doc_id, list_distinct([list_min(hh[i:i+3])
          |    for i in range(1, len(hh) - 2)]) fps FROM hs),
@@ -122,7 +118,7 @@ object Curation25 {
          |  JOIN dup USING (doc_id) GROUP BY source),
          |sc AS (SELECT doc_id, source,
          |    1.0 / (1.0 + exp(-(list_aggregate(list_transform(str_split(text, ' '),
-         |      t -> ${hashSql.format("'w|' || t")} % 2001 - 1000), 'sum')::DOUBLE) /
+         |      t -> ${mdHashSql("'w|' || t")} % 2001 - 1000), 'sum')::DOUBLE) /
          |      (1000.0 * len(str_split(text, ' '))::DOUBLE))) score
          |  FROM documents),
          |kp AS (SELECT source, round(sum(CASE WHEN score >= 0.5 THEN 1 ELSE 0 END)::DOUBLE /
@@ -135,5 +131,5 @@ object Curation25 {
          |JOIN div ON vol.source = div.source
          |LEFT JOIN dr ON vol.source = dr.source
          |JOIN kp ON vol.source = kp.source
-         |ORDER BY vol.source""".stripMargin)
+         |ORDER BY vol.source""".stripMargin))
 }

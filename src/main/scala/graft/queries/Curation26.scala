@@ -4,9 +4,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.dec2
-import graft.functions.TextFunctions.{mdHash, words}
+import graft.functions.TextFunctions.{mdHash, mdHashSql, words}
 import graft.sources.Tables
 
 /** Round-7 wave 8: corpus/experiment governance operators — vocabulary
@@ -258,20 +258,8 @@ object Curation26 {
       col("n_cal"), col("n_eval"), col("coverage")).orderBy("event_type")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q301_vocab_coverage" -> q301VocabCoverage,
-    "q302_fdr_bh" -> q302FdrBh,
-    "q303_bootstrap_ci" -> q303BootstrapCi,
-    "q304_sliding_distinct" -> q304SlidingDistinct,
-    "q305_doremi_step" -> q305DoremiStep,
-    "q306_l_diversity" -> q306LDiversity,
-    "q307_streak" -> q307Streak,
-    "q308_conformal" -> q308Conformal)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q301_vocab_coverage" ->
+  val queries: Seq[Query] = Seq(
+    Query("q301_vocab_coverage", q301VocabCoverage,
       """WITH c AS (SELECT wd, count(*) c FROM (
         |    SELECT unnest(str_split(text, ' ')) wd FROM documents) GROUP BY wd),
         |r AS (SELECT c, row_number() OVER (ORDER BY c DESC, wd) r FROM c)
@@ -280,8 +268,8 @@ object Curation26 {
         |  round(sum(CASE WHEN r <= 25 THEN c ELSE 0 END)::DOUBLE / sum(c)::DOUBLE, 6) AS cov_25,
         |  round(sum(CASE WHEN r <= 50 THEN c ELSE 0 END)::DOUBLE / sum(c)::DOUBLE, 6) AS cov_50,
         |  round(sum(CASE WHEN r <= 100 THEN c ELSE 0 END)::DOUBLE / sum(c)::DOUBLE, 6) AS cov_100
-        |FROM r""".stripMargin,
-    "q302_fdr_bh" ->
+        |FROM r""".stripMargin),
+    Query("q302_fdr_bh", q302FdrBh,
       """WITH cells AS (SELECT event_type, user_id % 2 = 0 is_a,
         |    count(*) n, sum(CASE WHEN value >= 250.0 THEN 1 ELSE 0 END) x
         |  FROM events GROUP BY 1, 2),
@@ -305,8 +293,8 @@ object Curation26 {
         |km AS (SELECT max(CASE WHEN p <= i * 0.1 / m THEN i END) kmax FROM rk)
         |SELECT event_type, round(z, 6) AS z, round(p, 6) AS p, i::BIGINT AS i,
         |  (kmax IS NOT NULL AND i <= kmax) AS rejected
-        |FROM rk CROSS JOIN km ORDER BY event_type""".stripMargin,
-    "q303_bootstrap_ci" ->
+        |FROM rk CROSS JOIN km ORDER BY event_type""".stripMargin),
+    Query("q303_bootstrap_ci", q303BootstrapCi,
       s"""WITH daily AS (SELECT CAST(ts AS DATE) dy,
          |    round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*), 6) dm
          |  FROM events GROUP BY 1),
@@ -316,7 +304,7 @@ object Curation26 {
          |slots AS (SELECT i.j s, nn.n, b FROM idx i CROSS JOIN nn
          |    CROSS JOIN (SELECT unnest(range(0, 200)) b)),
          |picked AS (SELECT b,
-         |    ${hashSql.format("'boot|' || b || '|' || s")} % n pick FROM slots),
+         |    ${mdHashSql("'boot|' || b || '|' || s")} % n pick FROM slots),
          |reps AS (SELECT b, round(CAST(sum(dmd) AS DOUBLE) / count(*), 6) rm
          |  FROM picked JOIN idx ON picked.pick = idx.j GROUP BY b),
          |ordered AS (SELECT rm, row_number() OVER (ORDER BY rm, b) r FROM reps),
@@ -325,15 +313,15 @@ object Curation26 {
          |SELECT point, min(CASE WHEN r = 5 THEN rm END) AS ci_lo,
          |  min(CASE WHEN r = 195 THEN rm END) AS ci_hi,
          |  n_days::BIGINT AS n_days, 200::BIGINT AS n_reps
-         |FROM ordered CROSS JOIN pt GROUP BY point, n_days""".stripMargin,
-    "q304_sliding_distinct" ->
+         |FROM ordered CROSS JOIN pt GROUP BY point, n_days""".stripMargin),
+    Query("q304_sliding_distinct", q304SlidingDistinct,
       """WITH pairs AS (SELECT DISTINCT epoch_us(ts) // 3600000000 h, user_id FROM events),
         |hrs AS (SELECT DISTINCT h w FROM pairs),
         |ex AS (SELECT user_id, h + o w FROM pairs
         |  CROSS JOIN (SELECT unnest(range(0, 6)) o))
         |SELECT make_timestamp((w + 1) * 3600000000) AS w_end, count(DISTINCT user_id)::BIGINT AS u
-        |FROM ex JOIN hrs USING (w) GROUP BY w ORDER BY w_end""".stripMargin,
-    "q305_doremi_step" ->
+        |FROM ex JOIN hrs USING (w) GROUP BY w ORDER BY w_end""".stripMargin),
+    Query("q305_doremi_step", q305DoremiStep,
       """WITH per AS (SELECT source, count(*) nd,
         |    sum(len(str_split(text, ' '))) sw FROM documents GROUP BY source),
         |tot AS (SELECT sum(nd) tnd, sum(sw) tsw FROM per),
@@ -348,22 +336,22 @@ object Curation26 {
         |SELECT source, nd::BIGINT AS nd, round(loss, 6) AS loss,
         |  round(excess, 6) AS excess, round(w0, 6) AS w0,
         |  round(CAST(term AS DOUBLE) / CAST(tt AS DOUBLE), 6) AS w1
-        |FROM st CROSS JOIN nm ORDER BY source""".stripMargin,
-    "q306_l_diversity" ->
+        |FROM st CROSS JOIN nm ORDER BY source""".stripMargin),
+    Query("q306_l_diversity", q306LDiversity,
       """SELECT lang, (n_chars // 500)::BIGINT AS len_bucket, count(*)::BIGINT AS n,
         |  count(DISTINCT source)::BIGINT AS l, count(DISTINCT source) >= 3 AS diverse
-        |FROM documents GROUP BY 1, 2 ORDER BY lang, len_bucket""".stripMargin,
-    "q307_streak" ->
+        |FROM documents GROUP BY 1, 2 ORDER BY lang, len_bucket""".stripMargin),
+    Query("q307_streak", q307Streak,
       """WITH days AS (SELECT DISTINCT user_id, CAST(ts AS DATE) dy FROM events),
         |isl AS (SELECT user_id, dy,
         |    dy - CAST(row_number() OVER (PARTITION BY user_id ORDER BY dy) AS INTEGER) grp
         |  FROM days),
         |st AS (SELECT user_id, grp, count(*) len FROM isl GROUP BY 1, 2)
         |SELECT user_id, max(len)::BIGINT AS max_streak FROM st GROUP BY user_id
-        |ORDER BY max_streak DESC, user_id LIMIT 20""".stripMargin,
-    "q308_conformal" ->
+        |ORDER BY max_streak DESC, user_id LIMIT 20""".stripMargin),
+    Query("q308_conformal", q308Conformal,
       s"""WITH tagged AS (SELECT event_type, value,
-         |    ${hashSql.format("'cf|' || event_id")} % 10 bk FROM events),
+         |    ${mdHashSql("'cf|' || event_id")} % 10 bk FROM events),
          |mu AS (SELECT event_type,
          |    round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(*), 6) mu
          |  FROM tagged WHERE bk < 8 GROUP BY event_type),
@@ -380,5 +368,5 @@ object Curation26 {
          |  round(sum(CASE WHEN floor(abs(value - mu) * 100)::BIGINT <= qhat_cents
          |    THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE, 6) AS coverage
          |FROM tagged t JOIN mu USING (event_type) JOIN qh USING (event_type)
-         |WHERE bk = 9 GROUP BY t.event_type ORDER BY t.event_type""".stripMargin)
+         |WHERE bk = 9 GROUP BY t.event_type ORDER BY t.event_type""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-7 wave 9: per-label embedding centroids with inter-centroid
@@ -163,15 +163,8 @@ object Curation27 {
       .orderBy("source")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q309_label_centroids" -> q309LabelCentroids,
-    "q310_stream_session" -> q310StreamSession,
-    "q311_image_channels" -> q311ImageChannels,
-    "q312_kcore_peel" -> q312KcorePeel,
-    "q313_winsorize" -> q313Winsorize)
-
-  val oracles: Map[String, String] = Map(
-    "q309_label_centroids" ->
+  val queries: Seq[Query] = Seq(
+    Query("q309_label_centroids", q309LabelCentroids,
       """WITH e AS (SELECT label, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
         |cells AS MATERIALIZED (SELECT label, (i - 1)::INT pos, v[i] x
@@ -184,8 +177,8 @@ object Curation27 {
         |  round(list_dot_product(a.v, b.v) /
         |    sqrt(list_dot_product(a.v, a.v) * list_dot_product(b.v, b.v)), 6) AS cos
         |FROM vecs a JOIN vecs b ON a.label < b.label
-        |ORDER BY l1, l2""".stripMargin,
-    "q310_stream_session" ->
+        |ORDER BY l1, l2""".stripMargin),
+    Query("q310_stream_session", q310StreamSession,
       """WITH ord AS (SELECT user_id, ts,
         |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) prev_ts
         |  FROM events),
@@ -202,8 +195,8 @@ object Curation27 {
         |  FROM sess GROUP BY 1, 2)
         |SELECT user_id, count(*)::BIGINT AS n_sessions, sum(n)::BIGINT AS n_events,
         |  max(n)::BIGINT AS max_session_events, min(st) AS first_session_start
-        |FROM per GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q311_image_channels" ->
+        |FROM per GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q311_image_channels", q311ImageChannels,
       """WITH f AS (SELECT doc_id, source, text, len(text) n FROM documents),
         |cells AS MATERIALIZED (SELECT source, (i - 1) % 3 channel, ord(text[i]) b
         |  FROM f, LATERAL (SELECT unnest(range(1, n + 1)) i))
@@ -212,8 +205,8 @@ object Curation27 {
         |  round(sqrt(sum(b*b)::DOUBLE / count(*)::DOUBLE -
         |    (sum(b)::DOUBLE / count(*)::DOUBLE) ^ 2), 6) AS std,
         |  min(b)::BIGINT AS min_v, max(b)::BIGINT AS max_v
-        |FROM cells GROUP BY source, channel ORDER BY source, channel""".stripMargin,
-    "q312_kcore_peel" ->
+        |FROM cells GROUP BY source, channel ORDER BY source, channel""".stripMargin),
+    Query("q312_kcore_peel", q312KcorePeel,
       """WITH cells AS MATERIALIZED (SELECT DISTINCT user_id, epoch_ms(ts) // 3600000 cell
         |  FROM events WHERE event_type = 'error'),
         |cn AS MATERIALIZED (SELECT cell, count(*) nc FROM cells GROUP BY cell
@@ -245,8 +238,8 @@ object Curation27 {
         |UNION ALL SELECT 4,
         |  (SELECT count(DISTINCT u) FROM (SELECT ua u FROM e4 UNION ALL SELECT ub FROM e4)),
         |  (SELECT count(*) FROM e4)
-        |ORDER BY round""".stripMargin,
-    "q313_winsorize" ->
+        |ORDER BY round""".stripMargin),
+    Query("q313_winsorize", q313Winsorize,
       """WITH byv AS (SELECT source, n_chars, count(*) c FROM documents GROUP BY 1, 2),
         |cum AS (SELECT source, n_chars, c,
         |    sum(c) OVER (PARTITION BY source ORDER BY n_chars ROWS UNBOUNDED PRECEDING) cum,
@@ -263,5 +256,5 @@ object Curation27 {
         |  round(sum(greatest(p05, least(p95, n_chars)))::DOUBLE /
         |    count(*)::DOUBLE, 6) AS mean_winsor
         |FROM documents d JOIN fences USING (source)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin)
+        |GROUP BY d.source ORDER BY d.source""".stripMargin))
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.{dec2, dotNative, normSqNative}
-import graft.functions.TextFunctions.{mdHash, words}
+import graft.functions.TextFunctions.{mdHash, mdHashSql, words}
 import graft.sources.Tables
 
 /** Round-7 wave 10: evaluation & governance — retrieval MRR, blocked
@@ -209,17 +209,8 @@ object Curation28 {
       .orderBy("event_type")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q314_mrr_eval" -> q314MrrEval,
-    "q315_entity_resolution" -> q315EntityResolution,
-    "q316_ips_eval" -> q316IpsEval,
-    "q317_agreement_kappa" -> q317AgreementKappa,
-    "q318_simpson_audit" -> q318SimpsonAudit)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q314_mrr_eval" ->
+  val queries: Seq[Query] = Seq(
+    Query("q314_mrr_eval", q314MrrEval,
       s"""WITH e AS (SELECT vec_id, label,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM embeddings),
         |qm2 AS (SELECT ${graft.operators.Similarity.fixedCountModulusLadderSql("c")} q_m
@@ -240,8 +231,8 @@ object Curation28 {
         |  sum(CASE WHEN hit_rank = 1 THEN 1 ELSE 0 END)::BIGINT AS hits_at_1,
         |  sum(CASE WHEN hit_rank <= 5 THEN 1 ELSE 0 END)::BIGINT AS hits_at_5,
         |  sum(CASE WHEN hit_rank IS NOT NULL THEN 1 ELSE 0 END)::BIGINT AS hits_at_10
-        |FROM q LEFT JOIN fh USING (qid)""".stripMargin,
-    "q315_entity_resolution" ->
+        |FROM q LEFT JOIN fh USING (qid)""".stripMargin),
+    Query("q315_entity_resolution", q315EntityResolution,
       // Target-size blocking contract (B = 50, the engine default):
       // same-(nat, kb) pairs at most B apart in the (bal, id) rank
       // order. Identical to the legacy unbounded block join whenever
@@ -257,8 +248,8 @@ object Curation28 {
         |    (CASE WHEN len(a.nm) = len(b.nm) THEN 0.405 ELSE -0.105 END), 6) AS score
         |FROM r a JOIN r b ON a.nat = b.nat AND a.kb = b.kb
         |  AND b.rk - a.rk BETWEEN 1 AND 50
-        |ORDER BY score DESC, id_a, id_b LIMIT 30""".stripMargin,
-    "q316_ips_eval" ->
+        |ORDER BY score DESC, id_a, id_b LIMIT 30""".stripMargin),
+    Query("q316_ips_eval", q316IpsEval,
       """WITH ev AS (SELECT user_id % 4 ctx, event_type,
         |    least(value / 500.0, 1.0) r FROM events),
         |na AS (SELECT count(DISTINCT event_type) na FROM ev),
@@ -274,14 +265,14 @@ object Curation28 {
         |  round(CAST(sum(rw) AS DOUBLE) / count(*)::DOUBLE, 6) AS ips,
         |  round(CAST(sum(rw) AS DOUBLE) / CAST(sum(wd) AS DOUBLE), 6) AS snips,
         |  round(CAST(sum(wd) AS DOUBLE) / count(*)::DOUBLE, 6) AS avg_w
-        |FROM terms GROUP BY ctx ORDER BY ctx""".stripMargin,
-    "q317_agreement_kappa" ->
+        |FROM terms GROUP BY ctx ORDER BY ctx""".stripMargin),
+    Query("q317_agreement_kappa", q317AgreementKappa,
       s"""WITH g AS (SELECT
          |    CASE WHEN len(list_distinct(str_split(text, ' ')))::DOUBLE /
          |      len(str_split(text, ' '))::DOUBLE >= 0.6 THEN 1 ELSE 0 END g1,
          |    CASE WHEN 1.0 / (1.0 + exp(-(list_aggregate(list_transform(
          |        str_split(text, ' '),
-         |        t -> ${hashSql.format("'w|' || t")} % 2001 - 1000), 'sum')::DOUBLE) /
+         |        t -> ${mdHashSql("'w|' || t")} % 2001 - 1000), 'sum')::DOUBLE) /
          |      (1000.0 * len(str_split(text, ' '))::DOUBLE))) >= 0.5
          |      THEN 1 ELSE 0 END g2
          |  FROM documents),
@@ -298,8 +289,8 @@ object Curation28 {
          |       (n01 + n00)::DOUBLE / n * ((n10 + n00)::DOUBLE / n))) /
          |    (1.0 - ((n11 + n10)::DOUBLE / n * ((n11 + n01)::DOUBLE / n) +
          |       (n01 + n00)::DOUBLE / n * ((n10 + n00)::DOUBLE / n))), 6) AS kappa
-         |FROM conf""".stripMargin,
-    "q318_simpson_audit" ->
+         |FROM conf""".stripMargin),
+    Query("q318_simpson_audit", q318SimpsonAudit,
       """WITH ev AS (SELECT event_type, hour(ts)::BIGINT x, value FROM events),
         |per AS (SELECT event_type, count(*) n, sum(x) sx, sum(x * x) sxx,
         |    sum(CAST(value AS DECIMAL(18,2))) sy,
@@ -319,5 +310,5 @@ object Curation28 {
         |  FROM per)
         |SELECT event_type, n, slope_group, slope_pooled,
         |  sign(slope_group) <> sign(slope_pooled) AS flipped
-        |FROM grp CROSS JOIN ps ORDER BY event_type""".stripMargin)
+        |FROM grp CROSS JOIN ps ORDER BY event_type""".stripMargin))
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions.dec2
-import graft.functions.TextFunctions.{mdHash, words}
+import graft.functions.TextFunctions.{mdHash, mdHashSql, words}
 import graft.sources.Tables
 
 /** Round-7 wave 11: dataset cartography (confidence/variability data
@@ -148,16 +148,8 @@ object Curation29 {
       round(col("n_common").cast(DoubleType) / lit(k.toDouble), 6).as("overlap"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q319_dataset_cartography" -> q319DatasetCartography,
-    "q320_seasonal_decompose" -> q320SeasonalDecompose,
-    "q321_partial_corr" -> q321PartialCorr,
-    "q322_coordinated_sample" -> q322CoordinatedSample)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q319_dataset_cartography" ->
+  val queries: Seq[Query] = Seq(
+    Query("q319_dataset_cartography", q319DatasetCartography,
       s"""WITH hp AS (SELECT source,
          |    list_transform(str_split(text, ' '), t -> struct_pack(
          |      h1 := ('0x' || substr(md5(t), 1, 15))::BIGINT,
@@ -182,8 +174,8 @@ object Curation29 {
          |    count(*)::DOUBLE, 6) AS avg_conf,
          |  round(CAST(sum(CAST(variab AS DECIMAL(20,12))) AS DOUBLE) /
          |    count(*)::DOUBLE, 6) AS avg_var
-         |FROM b GROUP BY source, bucket ORDER BY source, bucket""".stripMargin,
-    "q320_seasonal_decompose" ->
+         |FROM b GROUP BY source, bucket ORDER BY source, bucket""".stripMargin),
+    Query("q320_seasonal_decompose", q320SeasonalDecompose,
       """WITH daily AS (SELECT CAST(ts AS DATE) dy,
         |    round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 2) v
         |  FROM events GROUP BY 1),
@@ -204,8 +196,8 @@ object Curation29 {
         |SELECT dy AS day, dt.dow::BIGINT AS dow, v, trend, seasonal,
         |  round(detr - seasonal, 6) AS resid
         |FROM dt JOIN seas ON dt.dow = seas.dow
-        |WHERE detr IS NOT NULL ORDER BY day""".stripMargin,
-    "q321_partial_corr" ->
+        |WHERE detr IS NOT NULL ORDER BY day""".stripMargin),
+    Query("q321_partial_corr", q321PartialCorr,
       """WITH base AS (SELECT source, n_chars x,
         |    len(str_split(text, ' ')) y FROM documents),
         |g AS (SELECT source, count(*) n, sum(x) sx, sum(y) sy,
@@ -226,15 +218,15 @@ object Curation29 {
         |    sqrt((sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE / n::DOUBLE) *
         |      (syy::DOUBLE - sy::DOUBLE * sy::DOUBLE / n::DOUBLE)), 6) AS pooled_r,
         |  round(wxy / sqrt(wxx * wyy), 6) AS partial_r
-        |FROM w""".stripMargin,
-    "q322_coordinated_sample" ->
+        |FROM w""".stripMargin),
+    Query("q322_coordinated_sample", q322CoordinatedSample,
       s"""WITH h AS (SELECT doc_id,
-         |    ${hashSql.format("'cs|' || doc_id")} h FROM documents),
+         |    ${mdHashSql("'cs|' || doc_id")} h FROM documents),
          |sa AS (SELECT doc_id FROM h ORDER BY h, doc_id LIMIT 200),
          |sb AS (SELECT doc_id FROM h WHERE doc_id % 10 <> 3
          |  ORDER BY h, doc_id LIMIT 200),
          |c AS (SELECT count(*) n_common FROM sa JOIN sb USING (doc_id))
          |SELECT 200::BIGINT AS k, n_common::BIGINT AS n_common,
          |  round(n_common::DOUBLE / 200.0, 6) AS overlap
-         |FROM c""".stripMargin)
+         |FROM c""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.operators.Bpe
 import graft.sources.{Bucketing, Tables}
 
@@ -272,17 +272,6 @@ object Curation3 {
         sum(coalesce(col("bought"), lit(0))).as("n_purchased_after_click"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q152_bucketed_join" -> q152BucketedJoin,
-    "q153_bpe_merges" -> q153BpeMerges,
-    "q154_ngram_diversity" -> q154NgramDiversity,
-    "q155_temperature_mix" -> q155TemperatureMix,
-    "q156_binary_ingest" -> q156BinaryIngest,
-    "q157_rank_auc" -> q157RankAuc,
-    "q158_calibration" -> q158Calibration,
-    "q159_logreg_gd" -> q159LogregGd,
-    "q160_funnel" -> q160Funnel)
-
   /** One unrolled BPE round in the DuckDB oracle: pair-count `repr`,
     * pick the (weight desc, lhs, rhs) argmax, space-anchored replace.
     */
@@ -308,15 +297,15 @@ object Curation3 {
        |    '  ' || regexp_replace(word, '(.)', '\\1  ', 'g') AS repr FROM v),
        |""".stripMargin + (1 to 6).map(r => bpeRound(s"r${r - 1}", r)).mkString(",\n")
 
-  val oracles: Map[String, String] = Map(
-    "q152_bucketed_join" ->
+  val queries: Seq[Query] = Seq(
+    Query("q152_bucketed_join", q152BucketedJoin,
       """SELECT o_orderpriority, count(*) AS n_items,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |WHERE l_returnflag = 'R'
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q153_bpe_merges" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q153_bpe_merges", q153BpeMerges,
       (bpeChain6 +
         """
         |SELECT * FROM (
@@ -326,8 +315,8 @@ object Curation3 {
         |  UNION ALL SELECT 4, lhs, rhs, lhs||rhs, weight FROM b4
         |  UNION ALL SELECT 5, lhs, rhs, lhs||rhs, weight FROM b5
         |  UNION ALL SELECT 6, lhs, rhs, lhs||rhs, weight FROM b6
-        |) ORDER BY round""".stripMargin),
-    "q154_ngram_diversity" ->
+        |) ORDER BY round""".stripMargin)),
+    Query("q154_ngram_diversity", q154NgramDiversity,
       """WITH docs AS (SELECT source, str_split(text, ' ') AS w FROM documents),
         |uni AS (SELECT source, count(*) AS n_tokens,
         |    count(DISTINCT g) AS n_types
@@ -342,8 +331,8 @@ object Curation3 {
         |  round(n_types::DOUBLE / n_tokens::DOUBLE, 9) AS ttr,
         |  n_trigrams, n_tri_types,
         |  round(n_tri_types::DOUBLE / n_trigrams::DOUBLE, 9) AS tri_diversity
-        |FROM uni JOIN tri USING (source) ORDER BY source""".stripMargin,
-    "q155_temperature_mix" ->
+        |FROM uni JOIN tri USING (source) ORDER BY source""".stripMargin),
+    Query("q155_temperature_mix", q155TemperatureMix,
       """WITH shares AS (SELECT lang, count(*) AS n_l,
         |    CAST(round(sqrt(count(*)::DOUBLE), 9) AS DECIMAL(15,9)) AS s_l
         |  FROM documents GROUP BY lang),
@@ -356,13 +345,13 @@ object Curation3 {
         |  CAST(sum(n_chars) AS BIGINT) AS chars_selected
         |FROM ranked, tot
         |WHERE CAST(rn AS DECIMAL(10,0)) * s_total <= CAST(2000 AS DECIMAL(10,0)) * s_l
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q156_binary_ingest" ->
+        |GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("q156_binary_ingest", q156BinaryIngest,
       """SELECT source,
         |  CAST(octet_length(encode(string_agg(text, chr(10) ORDER BY doc_id))) AS BIGINT) AS length,
         |  md5(string_agg(text, chr(10) ORDER BY doc_id)) AS content_md5
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q157_rank_auc" ->
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+    Query("q157_rank_auc", q157RankAuc,
       """WITH scored AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END AS y,
         |    CAST(embedding[1] AS DOUBLE) AS score FROM embeddings),
         |by_score AS (SELECT score, count(*) AS n, CAST(sum(y) AS BIGINT) AS p
@@ -374,8 +363,8 @@ object Curation3 {
         |  round((CAST(sum(p * (2 * cum_n - n + 1)) AS DOUBLE)
         |    - sum(p)::DOUBLE * (sum(p)::DOUBLE + 1.0))
         |    / (2.0 * sum(p)::DOUBLE * sum(n - p)::DOUBLE), 9) AS auc
-        |FROM ranked""".stripMargin,
-    "q158_calibration" ->
+        |FROM ranked""".stripMargin),
+    Query("q158_calibration", q158Calibration,
       """WITH p AS (SELECT CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y,
         |    0.5 + ((n_chars::DOUBLE - 300.0) / 200.0)
         |      / (2.0 * (1.0 + abs((n_chars::DOUBLE - 300.0) / 200.0))) AS p
@@ -388,8 +377,8 @@ object Curation3 {
         |  round(abs(CAST(sum(CAST(p AS DECIMAL(20,9))) AS DOUBLE) / count(*)::DOUBLE
         |      - CAST(sum(y) AS DOUBLE) / count(*)::DOUBLE)
         |    * count(*)::DOUBLE / (SELECT t FROM tot), 6) AS ece_term
-        |FROM p GROUP BY 1 ORDER BY bin""".stripMargin,
-    "q159_logreg_gd" ->
+        |FROM p GROUP BY 1 ORDER BY bin""".stripMargin),
+    Query("q159_logreg_gd", q159LogregGd,
       """WITH data AS (SELECT CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
         |    n_chars::DOUBLE / 1000.0 AS x FROM documents),
         |n AS (SELECT count(*)::DOUBLE AS n FROM data),
@@ -407,8 +396,8 @@ object Curation3 {
         |  FROM data, s2 GROUP BY s2.w0, s2.w1)
         |SELECT 'w0' AS param, round(w0, 6) AS value FROM s3
         |UNION ALL SELECT 'w1', round(w1, 6) FROM s3
-        |ORDER BY param""".stripMargin,
-    "q160_funnel" ->
+        |ORDER BY param""".stripMargin),
+    Query("q160_funnel", q160Funnel,
       """WITH v AS (SELECT user_id, min(ts) AS t_view FROM events
         |  WHERE event_type = 'view' GROUP BY user_id),
         |c AS (SELECT e.user_id, min(e.ts) AS t_click FROM events e
@@ -421,5 +410,5 @@ object Curation3 {
         |  CAST(sum(CASE WHEN c.user_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_clicked_after_view,
         |  CAST(sum(CASE WHEN b.user_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_purchased_after_click
         |FROM v LEFT JOIN c ON v.user_id = c.user_id
-        |LEFT JOIN b ON v.user_id = b.user_id""".stripMargin)
+        |LEFT JOIN b ON v.user_id = b.user_id""".stripMargin))
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-7 wave 12: robust geometry and distribution-shift metrics —
@@ -195,15 +195,8 @@ object Curation30 {
           count(lit(1)).cast(DoubleType), 6).as("mmd2"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q323_geometric_median" -> q323GeometricMedian,
-    "q324_cluster_purity" -> q324ClusterPurity,
-    "q325_emd_1d" -> q325Emd1d,
-    "q326_brier_decomposition" -> q326BrierDecomposition,
-    "q327_mmd_linear" -> q327MmdLinear)
-
-  val oracles: Map[String, String] = Map(
-    "q323_geometric_median" ->
+  val queries: Seq[Query] = Seq(
+    Query("q323_geometric_median", q323GeometricMedian,
       """WITH e AS (SELECT label, vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM embeddings),
         |cl AS (SELECT label, vec_id, (i - 1)::INT pos, v[i] x
@@ -227,8 +220,8 @@ object Curation30 {
         |  round(sqrt(CAST(sum(CAST((swx / sw - c0) * (swx / sw - c0)
         |    AS DECIMAL(30,15))) AS DOUBLE)), 6) AS step_move
         |FROM c1 JOIN ws USING (label) JOIN c0 USING (label, pos)
-        |GROUP BY label ORDER BY label""".stripMargin,
-    "q324_cluster_purity" ->
+        |GROUP BY label ORDER BY label""".stripMargin),
+    Query("q324_cluster_purity", q324ClusterPurity,
       s"""${DedupSim.lshClusterCtes},
          |bl AS (SELECT cluster_id, lang, count(*) k
          |  FROM comp JOIN documents ON comp.id = documents.doc_id
@@ -240,8 +233,8 @@ object Curation30 {
          |  round(CAST(sum(CAST(purity * n::DOUBLE AS DECIMAL(20,8))) AS DOUBLE) /
          |    sum(n)::DOUBLE, 6) AS weighted_purity,
          |  sum(CASE WHEN purity = 1.0 THEN 1 ELSE 0 END)::BIGINT AS n_pure
-         |FROM per""".stripMargin,
-    "q325_emd_1d" ->
+         |FROM per""".stripMargin),
+    Query("q325_emd_1d", q325Emd1d,
       """WITH d AS (SELECT source, (n_chars // 100)::BIGINT b FROM documents),
         |counts AS (SELECT source, b, count(*) k FROM d GROUP BY 1, 2),
         |totals AS (SELECT source, count(*) n FROM d GROUP BY source),
@@ -258,8 +251,8 @@ object Curation30 {
         |    AS DOUBLE), 6) AS emd_buckets
         |FROM cdf a JOIN cdf b2 ON a.b = b2.b AND a.source < b2.source
         |GROUP BY a.source, b2.source
-        |ORDER BY emd_buckets DESC, s1, s2 LIMIT 10""".stripMargin,
-    "q326_brier_decomposition" ->
+        |ORDER BY emd_buckets DESC, s1, s2 LIMIT 10""".stripMargin),
+    Query("q326_brier_decomposition", q326BrierDecomposition,
       """WITH base AS (SELECT
         |    CASE WHEN lang = 'en' THEN 1 ELSE 0 END y,
         |    0.5 + ((n_chars::DOUBLE - 300.0) / 200.0) /
@@ -285,8 +278,8 @@ object Curation30 {
         |  round(CAST(sum(resb) AS DOUBLE) / n::DOUBLE, 6) AS resolution,
         |  round((ny::DOUBLE / n::DOUBLE) * (1.0 - ny::DOUBLE / n::DOUBLE), 6)
         |    AS uncertainty
-        |FROM terms GROUP BY n, brier_sum, ny""".stripMargin,
-    "q327_mmd_linear" ->
+        |FROM terms GROUP BY n, brier_sum, ny""".stripMargin),
+    Query("q327_mmd_linear", q327MmdLinear,
       """WITH e AS (SELECT vec_id, label < 5 isx,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM embeddings),
         |rx AS (SELECT v, (row_number() OVER (ORDER BY vec_id) - 1) // 2 j,
@@ -316,5 +309,5 @@ object Curation30 {
         |  FROM xp JOIN yp USING (j))
         |SELECT count(*)::BIGINT AS n_quads,
         |  round(CAST(sum(h) AS DOUBLE) / count(*)::DOUBLE, 6) AS mmd2
-        |FROM h""".stripMargin)
+        |FROM h""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-8 wave, part 1: watermark late-data-drop semantics exercised
@@ -83,19 +83,16 @@ object Curation31 {
       .orderBy("w_start", "event_type")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q328_watermark_late_drop" -> q328WatermarkLateDrop)
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // Window-end vs watermark semantics: a row is accepted iff its
     // window still ends after the watermark (max − 72 h, a microsecond
     // value that is never exactly hour-aligned, so <= vs < at the
     // boundary cannot matter). Batch-1 rows (last 24 h) pass trivially.
-    "q328_watermark_late_drop" ->
+    Query("q328_watermark_late_drop", q328WatermarkLateDrop,
       """WITH mx AS (SELECT max(ts) m FROM events)
         |SELECT date_trunc('hour', ts) AS w_start, event_type,
         |  count(*)::BIGINT AS n
         |FROM events, mx
         |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR > m - INTERVAL 72 HOUR
-        |GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin)
+        |GROUP BY 1, 2 ORDER BY w_start, event_type""".stripMargin))
 }

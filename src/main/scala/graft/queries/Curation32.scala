@@ -5,8 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 2: causal-inference and representation-analysis
@@ -240,17 +240,8 @@ object Curation32 {
         round(col("fxy"), 2).as("hsic_xy"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q329_permutation_test" -> q329PermutationTest,
-    "q330_diff_in_diff" -> q330DiffInDiff,
-    "q331_propensity_match" -> q331PropensityMatch,
-    "q332_nelson_aalen" -> q332NelsonAalen,
-    "q333_cka_linear" -> q333CkaLinear)
-
-  private val h = DedupSim.h
-
-  val oracles: Map[String, String] = Map(
-    "q329_permutation_test" ->
+  val queries: Seq[Query] = Seq(
+    Query("q329_permutation_test", q329PermutationTest,
       s"""WITH u AS (SELECT user_id, count(*) n,
          |    sum(round(value, 2)::DECIMAL(18,2)) sv
          |  FROM events GROUP BY user_id),
@@ -262,7 +253,7 @@ object Curation32 {
          |      AS DOUBLE) /
          |      nullif(sum(CASE WHEN user_id % 2 = 0 THEN n ELSE 0 END), 0)::DOUBLE obs
          |  FROM u),
-         |pm AS (SELECT p, ${h.format("user_id::VARCHAR || ':' || p::VARCHAR")} % 2 side,
+         |pm AS (SELECT p, ${mdHashSql("user_id::VARCHAR || ':' || p::VARCHAR")} % 2 side,
          |    n, sv FROM u CROSS JOIN range(0, 200) t(p)),
          |pd AS (SELECT p,
          |    CAST(sum(CASE WHEN side = 1 THEN sv ELSE 0::DECIMAL(18,2) END) AS DOUBLE) /
@@ -275,8 +266,8 @@ object Curation32 {
          |  round(min(obs), 6) AS obs_diff,
          |  round((sum(CASE WHEN abs(diff) >= abs(obs) THEN 1 ELSE 0 END) + 1)::DOUBLE /
          |    (count(*) + 1)::DOUBLE, 6) AS p_value
-         |FROM pd CROSS JOIN obs""".stripMargin,
-    "q330_diff_in_diff" ->
+         |FROM pd CROSS JOIN obs""".stripMargin),
+    Query("q330_diff_in_diff", q330DiffInDiff,
       """WITH c AS (SELECT
         |  CAST(sum(CASE WHEN user_id % 2 = 0 AND ts < TIMESTAMP '2024-01-16'
         |    THEN round(value, 2)::DECIMAL(18,2) ELSE 0::DECIMAL(18,2) END) AS DOUBLE) /
@@ -298,8 +289,8 @@ object Curation32 {
         |SELECT round(m_c_pre, 6) AS m_c_pre, round(m_c_post, 6) AS m_c_post,
         |  round(m_t_pre, 6) AS m_t_pre, round(m_t_post, 6) AS m_t_post,
         |  round((m_t_post - m_t_pre) - (m_c_post - m_c_pre), 6) AS did
-        |FROM c""".stripMargin,
-    "q331_propensity_match" ->
+        |FROM c""".stripMargin),
+    Query("q331_propensity_match", q331PropensityMatch,
       """WITH y AS (SELECT o_custkey, sum(round(o_totalprice, 2)::DECIMAL(18,2)) ysum
         |  FROM orders GROUP BY o_custkey),
         |cust AS (SELECT c_custkey id, c_custkey % 2 = 1 treated,
@@ -344,8 +335,8 @@ object Curation32 {
         |  round(CAST(sum(CASE WHEN dir IS NOT NULL
         |      THEN CAST(y - cy AS DECIMAL(20,6)) END) AS DOUBLE) /
         |    sum(CASE WHEN dir IS NOT NULL THEN 1 ELSE 0 END)::DOUBLE, 6) AS att
-        |FROM fin""".stripMargin,
-    "q332_nelson_aalen" ->
+        |FROM fin""".stripMargin),
+    Query("q332_nelson_aalen", q332NelsonAalen,
       """WITH t0 AS (SELECT user_id, min(ts) t0 FROM events
         |  WHERE event_type = 'signup' GROUP BY user_id),
         |fe AS (SELECT t0.user_id, t0.t0, min(e.ts) te FROM t0 LEFT JOIN events e
@@ -366,8 +357,8 @@ object Curation32 {
         |  round(CAST(sum(CAST(h AS DECIMAL(20,9)))
         |    OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |    AS DOUBLE), 6) AS cum_hazard
-        |FROM na ORDER BY t""".stripMargin,
-    "q333_cka_linear" ->
+        |FROM na ORDER BY t""".stripMargin),
+    Query("q333_cka_linear", q333CkaLinear,
       """WITH e AS (SELECT vec_id,
         |    list_transform(embedding[1:16], x -> CAST(x AS DOUBLE)) v FROM embeddings),
         |wy AS (SELECT vec_id, v,
@@ -397,5 +388,5 @@ object Curation32 {
         |    (SELECT CAST(sum(CAST(s * s AS DECIMAL(38,6))) AS DOUBLE) FROM syy) fyy)
         |SELECT round(fxy / (sqrt(fxx) * sqrt(fyy)), 6) AS cka,
         |  round(fxy, 2) AS hsic_xy
-        |FROM f""".stripMargin)
+        |FROM f""".stripMargin))
 }

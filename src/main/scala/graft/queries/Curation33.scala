@@ -4,8 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 3: representation- and annotation-quality readouts —
@@ -225,17 +225,8 @@ object Curation33 {
       .withColumn("credit", (col("wt") * col("p_value")).cast(DecimalType(24, 8)))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q334_silhouette" -> q334Silhouette,
-    "q335_effective_rank" -> q335EffectiveRank,
-    "q336_quantile_normalize" -> q336QuantileNormalize,
-    "q337_krippendorff_alpha" -> q337KrippendorffAlpha,
-    "q338_ushaped_attribution" -> q338UShapedAttribution)
-
-  private val h = DedupSim.h
-
-  val oracles: Map[String, String] = Map(
-    "q334_silhouette" ->
+  val queries: Seq[Query] = Seq(
+    Query("q334_silhouette", q334Silhouette,
       """WITH pts AS (SELECT vec_id, label, (i - 1)::INT i,
         |    CAST(embedding[i] AS DOUBLE) x
         |  FROM embeddings, range(1, 17) t(i)),
@@ -256,8 +247,8 @@ object Curation33 {
         |SELECT label, count(*) n,
         |  round(CAST(sum(CAST(s AS DECIMAL(20,12))) AS DOUBLE) / count(*), 6)
         |    AS mean_silhouette
-        |FROM sil GROUP BY label ORDER BY label""".stripMargin,
-    "q335_effective_rank" ->
+        |FROM sil GROUP BY label ORDER BY label""".stripMargin),
+    Query("q335_effective_rank", q335EffectiveRank,
       """WITH xs AS (SELECT vec_id, (i - 1)::INT i, CAST(embedding[i] AS DOUBLE) x
         |  FROM embeddings, range(1, 17) t(i)),
         |mx AS (SELECT i, CAST(sum(CAST(x AS DECIMAL(30,12))) AS DOUBLE) / count(*) m
@@ -273,8 +264,8 @@ object Curation33 {
         |  FROM cells)
         |SELECT round(tr, 6) AS trace, round(f2, 6) AS frob2,
         |  round(tr * tr / f2, 4) AS effective_rank
-        |FROM f""".stripMargin,
-    "q336_quantile_normalize" ->
+        |FROM f""".stripMargin),
+    Query("q336_quantile_normalize", q336QuantileNormalize,
       """WITH docs AS (SELECT source, n_chars v FROM documents),
         |sv AS (SELECT source, v, count(*) c FROM docs GROUP BY source, v),
         |sp AS (SELECT source, v, c,
@@ -295,10 +286,10 @@ object Curation33 {
         |  round(CAST(sum(CAST(norm * c AS DECIMAL(30,6))) AS DOUBLE) /
         |    sum(c)::DOUBLE, 6) AS mean_norm,
         |  min(norm) AS min_norm, max(norm) AS max_norm
-        |FROM mapped GROUP BY source ORDER BY source""".stripMargin,
-    "q337_krippendorff_alpha" ->
+        |FROM mapped GROUP BY source ORDER BY source""".stripMargin),
+    Query("q337_krippendorff_alpha", q337KrippendorffAlpha,
       s"""WITH ratings AS (SELECT doc_id,
-         |    CASE WHEN ${h.format("doc_id::VARCHAR || ':' || k::VARCHAR")} % 5 = 0
+         |    CASE WHEN ${mdHashSql("doc_id::VARCHAR || ':' || k::VARCHAR")} % 5 = 0
          |      THEN 'zz' ELSE lang END r
          |  FROM documents, range(0, 3) t(k)),
          |nuc AS (SELECT doc_id, r, count(*) n_uc FROM ratings GROUP BY doc_id, r),
@@ -314,8 +305,8 @@ object Curation33 {
          |  round(1.0 - (d_o_num / n_tot::DOUBLE) /
          |    ((n_tot * n_tot - sq_marg)::DOUBLE /
          |     (n_tot * (n_tot - 1))::DOUBLE), 6) AS alpha
-         |FROM pu CROSS JOIN marg""".stripMargin,
-    "q338_ushaped_attribution" ->
+         |FROM pu CROSS JOIN marg""".stripMargin),
+    Query("q338_ushaped_attribution", q338UShapedAttribution,
       """WITH p AS (SELECT event_id p_id, user_id p_user, ts p_ts,
         |    round(value, 2) p_value FROM events WHERE event_type = 'purchase'),
         |t AS (SELECT event_id t_id, user_id t_user, ts t_ts, event_type t_type
@@ -337,5 +328,5 @@ object Curation33 {
         |  sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END)::BIGINT AS n_first,
         |  sum(CASE WHEN rn = cnt THEN 1 ELSE 0 END)::BIGINT AS n_last,
         |  round(CAST(sum(credit) AS DOUBLE), 4) AS total_credit
-        |FROM cr GROUP BY t_type ORDER BY touch_type""".stripMargin)
+        |FROM cr GROUP BY t_type ORDER BY touch_type""".stripMargin))
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 4: corpus-curation and audit readouts — Flesch
@@ -133,7 +133,6 @@ object Curation34 {
     * integer sums.
     */
   private val q343HubnessAudit: Q = (s, d) => {
-    graft.functions.GraftRegistry.register(s)
     import graft.functions.GraftFunctions.{dotNative, normSqNative}
     val wsamp = Window.partitionBy("label")
       .orderBy(mdHash(col("vec_id")), col("vec_id"))
@@ -174,17 +173,8 @@ object Curation34 {
       .orderBy("label")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q339_flesch_bands" -> q339FleschBands,
-    "q340_rake_keyphrases" -> q340RakeKeyphrases,
-    "q341_equalized_odds" -> q341EqualizedOdds,
-    "q342_temperature_mixture" -> q342TemperatureMixture,
-    "q343_hubness_audit" -> q343HubnessAudit)
-
-  private val h = DedupSim.h
-
-  val oracles: Map[String, String] = Map(
-    "q339_flesch_bands" ->
+  val queries: Seq[Query] = Seq(
+    Query("q339_flesch_bands", q339FleschBands,
       """WITH c AS (SELECT
         |    len(string_split(text, ' ')) w,
         |    greatest(1, len(regexp_extract_all(text, '[.!?]'))) sen,
@@ -198,8 +188,8 @@ object Curation34 {
         |SELECT band, count(*) n_docs,
         |  round(CAST(sum(CAST(fre AS DECIMAL(24,9))) AS DOUBLE) / count(*), 6)
         |    AS mean_fre
-        |FROM b GROUP BY band ORDER BY band""".stripMargin,
-    "q340_rake_keyphrases" ->
+        |FROM b GROUP BY band ORDER BY band""".stripMargin),
+    Query("q340_rake_keyphrases", q340RakeKeyphrases,
       ("""WITH frags AS (SELECT unnest(regexp_split_to_array(
         |    regexp_replace(lower(text), '[^a-z ]', ' ', 'g'),
         |    '""" + stopRe + """')) frag
@@ -216,8 +206,8 @@ object Curation34 {
         |  round(CAST(sum(CAST(wscore AS DECIMAL(24,9))) AS DOUBLE), 6) AS score
         |FROM ow JOIN ws USING (word)
         |GROUP BY phrase, n_occurrences
-        |ORDER BY score DESC, phrase LIMIT 20""").stripMargin,
-    "q341_equalized_odds" ->
+        |ORDER BY score DESC, phrase LIMIT 20""").stripMargin),
+    Query("q341_equalized_odds", q341EqualizedOdds,
       """WITH d AS (SELECT (substr(source, 4)::INT % 2) grp,
         |    lang = 'en' y,
         |    strpos(lower(text), ' the ') > 0 p
@@ -229,8 +219,8 @@ object Curation34 {
         |    sum(CASE WHEN y THEN 1 ELSE 0 END)::DOUBLE, 6) AS tpr,
         |  round(sum(CASE WHEN p AND NOT y THEN 1 ELSE 0 END)::DOUBLE /
         |    sum(CASE WHEN NOT y THEN 1 ELSE 0 END)::DOUBLE, 6) AS fpr
-        |FROM d GROUP BY grp ORDER BY grp""".stripMargin,
-    "q342_temperature_mixture" ->
+        |FROM d GROUP BY grp ORDER BY grp""".stripMargin),
+    Query("q342_temperature_mixture", q342TemperatureMixture,
       """WITH c AS (SELECT source, count(*) n FROM documents GROUP BY source),
         |t AS (SELECT sum(n) tot FROM c),
         |p AS (SELECT source, n, n::DOUBLE / tot::DOUBLE p, sqrt(n::DOUBLE / tot::DOUBLE) r
@@ -239,11 +229,11 @@ object Curation34 {
         |SELECT source, n, round(p, 6) AS p, round(r / z, 6) AS q,
         |  round((r / z) / p, 4) AS boost,
         |  round((r / z) * 10000, 2) AS expected_docs
-        |FROM p CROSS JOIN z ORDER BY source""".stripMargin,
-    "q343_hubness_audit" ->
+        |FROM p CROSS JOIN z ORDER BY source""".stripMargin),
+    Query("q343_hubness_audit", q343HubnessAudit,
       s"""WITH samp AS (SELECT label, vec_id, embedding
          |  FROM (SELECT *, row_number() OVER (PARTITION BY label
-         |      ORDER BY ${h.format("vec_id::VARCHAR")}, vec_id) rn
+         |      ORDER BY ${mdHashSql("vec_id::VARCHAR")}, vec_id) rn
          |    FROM embeddings) WHERE rn <= 100),
          |vs AS (SELECT label, vec_id,
          |    list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM samp),
@@ -264,5 +254,5 @@ object Curation34 {
          |  sum(CASE WHEN k = 0 THEN 1 ELSE 0 END)::BIGINT AS n_antihubs,
          |  round((sum(k * k)::DOUBLE - sum(k)::DOUBLE * sum(k)::DOUBLE /
          |    count(*)::DOUBLE) / count(*)::DOUBLE, 6) AS ko_variance
-         |FROM j GROUP BY label ORDER BY label""".stripMargin)
+         |FROM j GROUP BY label ORDER BY label""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-8 wave 5: corpus-growth and graph-structure readouts —
@@ -89,12 +89,8 @@ object Curation35 {
           6).as("assortativity"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q344_heaps_law" -> q344HeapsLaw,
-    "q345_degree_assortativity" -> q345DegreeAssortativity)
-
-  val oracles: Map[String, String] = Map(
-    "q344_heaps_law" ->
+  val queries: Seq[Query] = Seq(
+    Query("q344_heaps_law", q344HeapsLaw,
       """WITH docs AS (SELECT doc_id, string_split(text, ' ') ws FROM documents),
         |bounds AS (SELECT min(doc_id) lo, max(doc_id) hi FROM docs),
         |cps AS (SELECT k, (lo + (hi - lo) * k // 10)::BIGINT t
@@ -115,8 +111,8 @@ object Curation35 {
         |  round((np * sxy - sx * sy) / (np * sxx - sx * sx), 6) AS beta,
         |  round((sy - ((np * sxy - sx * sy) / (np * sxx - sx * sx)) * sx) / np, 6)
         |    AS ln_k
-        |FROM m""".stripMargin,
-    "q345_degree_assortativity" ->
+        |FROM m""".stripMargin),
+    Query("q345_degree_assortativity", q345DegreeAssortativity,
       """WITH edges AS (SELECT DISTINCT a.l_partkey u, b.l_partkey v
         |  FROM lineitem a JOIN lineitem b
         |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
@@ -129,5 +125,5 @@ object Curation35 {
         |  round((ne * sxy - sx * sy)::DOUBLE /
         |    (sqrt((ne * sxx - sx * sx)::DOUBLE) *
         |     sqrt((ne * syy - sy * sy)::DOUBLE)), 6) AS assortativity
-        |FROM m""".stripMargin)
+        |FROM m""".stripMargin))
 }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-8 wave 6: sketch algebra at scale — rolling distinct counts
@@ -48,10 +48,8 @@ object Curation36 {
       .orderBy("wend")
   }
 
-  val defs: Map[String, Q] = Map("q346_rolling_hll" -> q346RollingHll)
-
-  val oracles: Map[String, String] = Map(
-    "q346_rolling_hll" ->
+  val queries: Seq[Query] = Seq(
+    Query("q346_rolling_hll", q346RollingHll,
       """WITH ev AS (SELECT DISTINCT CAST(ts AS DATE) dy, user_id FROM events),
         |dys AS (SELECT DISTINCT dy FROM ev),
         |fan AS (SELECT (dy + o::INT) wend, user_id
@@ -59,5 +57,5 @@ object Curation36 {
         |ex AS (SELECT wend, count(DISTINCT user_id) exact_users
         |  FROM fan JOIN dys ON wend = dy GROUP BY wend)
         |SELECT wend, exact_users, TRUE AS within_15pct
-        |FROM ex ORDER BY wend""".stripMargin)
+        |FROM ex ORDER BY wend""".stripMargin))
 }

@@ -2,9 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
 import graft.operators.Materialize
 import graft.sources.Tables
 
@@ -13,8 +14,6 @@ import graft.sources.Tables
   * McNemar's paired test, and Levene's variance-homogeneity test.
   */
 object Curation37 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** The part co-purchase edge set (directed both ways, simple): the
     * q267/q345 construction — in-row pair generation from per-order
@@ -147,19 +146,13 @@ object Curation37 {
           .as("levene_w"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q347_label_propagation" -> q347LabelPropagation,
-    "q348_modularity" -> q348Modularity,
-    "q349_mcnemar_paired" -> q349McnemarPaired,
-    "q350_levene_variance" -> q350LeveneVariance)
-
   private val edgesSql =
     """edges AS (SELECT DISTINCT a.l_partkey u, b.l_partkey v
       |  FROM lineitem a JOIN lineitem b
       |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q347_label_propagation" ->
+  val queries: Seq[Query] = Seq(
+    Query("q347_label_propagation", q347LabelPropagation,
       s"""WITH $edgesSql,
         |l0 AS (SELECT DISTINCT u AS node, u AS lbl FROM edges),
         |n1 AS (SELECT e.v node, min(l.lbl) nm FROM edges e JOIN l0 l ON l.node = e.u GROUP BY e.v),
@@ -172,8 +165,8 @@ object Curation37 {
         |SELECT count(*)::BIGINT AS n_communities, sum(c)::BIGINT AS n_nodes,
         |  max(c)::BIGINT AS max_size,
         |  sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)::BIGINT AS n_singletons
-        |FROM sz""".stripMargin,
-    "q348_modularity" ->
+        |FROM sz""".stripMargin),
+    Query("q348_modularity", q348Modularity,
       s"""WITH $edgesSql,
         |tagged AS (SELECT pu.p_brand bu, pv.p_brand bv FROM edges e
         |  JOIN part pu ON pu.p_partkey = e.u JOIN part pv ON pv.p_partkey = e.v),
@@ -183,8 +176,8 @@ object Curation37 {
         |SELECT max(e)::BIGINT AS n_edges_directed, count(*)::BIGINT AS n_communities,
         |  round(sum(ecc::DOUBLE / e::DOUBLE -
         |    (k::DOUBLE / e::DOUBLE) * (k::DOUBLE / e::DOUBLE)), 6) AS modularity
-        |FROM per CROSS JOIN tot""".stripMargin,
-    "q349_mcnemar_paired" ->
+        |FROM per CROSS JOIN tot""".stripMargin),
+    Query("q349_mcnemar_paired", q349McnemarPaired,
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) dy, hour(ts) h, event_type
         |  FROM events),
         |per AS (SELECT user_id, dy,
@@ -197,8 +190,8 @@ object Curation37 {
         |SELECT b, c,
         |  round(((abs(b - c) - 1) * (abs(b - c) - 1))::DOUBLE / (b + c)::DOUBLE, 6)
         |    AS mcnemar_chi2
-        |FROM cells""".stripMargin,
-    "q350_levene_variance" ->
+        |FROM cells""".stripMargin),
+    Query("q350_levene_variance", q350LeveneVariance,
       """WITH ev AS (SELECT event_type, value FROM events),
         |means AS (SELECT event_type,
         |    CAST(sum(CAST(value AS DECIMAL(38,15))) / count(*) AS DOUBLE) m
@@ -214,5 +207,5 @@ object Curation37 {
         |SELECT k::BIGINT AS k, n::BIGINT AS n,
         |  round(((n - k)::DOUBLE / (k - 1)::DOUBLE) *
         |    ((nzb2 - (szall * szall) / n) / wgss), 6) AS levene_w
-        |FROM m""".stripMargin)
+        |FROM m""".stripMargin))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
 import graft.sources.Tables
 
 /** Round-8 wave 8: calibration and sequential statistics — isotonic
@@ -14,8 +15,6 @@ import graft.sources.Tables
   * bipartite purchase graph.
   */
 object Curation38 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q351: isotonic calibration (pool-adjacent-violators) of the
     * purchase rate against the event value — fit_i =
@@ -202,15 +201,8 @@ object Curation38 {
       .orderBy(col("avg_nll_nats").desc, col("doc_id")).limit(5)
   }
 
-  val defs: Map[String, Q] = Map(
-    "q351_isotonic_pav" -> q351IsotonicPav,
-    "q352_holt_linear" -> q352HoltLinear,
-    "q353_page_hinkley" -> q353PageHinkley,
-    "q354_hits_bipartite" -> q354HitsBipartite,
-    "q355_bigram_surprisal" -> q355BigramSurprisal)
-
-  val oracles: Map[String, String] = Map(
-    "q351_isotonic_pav" ->
+  val queries: Seq[Query] = Seq(
+    Query("q351_isotonic_pav", q351IsotonicPav,
       """WITH ev AS (SELECT value,
         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END y FROM events),
         |bounds AS (SELECT min(value) lo, max(value) hi FROM ev),
@@ -228,8 +220,8 @@ object Curation38 {
         |  GROUP BY i)
         |SELECT bin, n, round(pos::DOUBLE / n::DOUBLE, 6) AS raw_rate,
         |  round(iso, 6) AS iso_rate
-        |FROM cum JOIN fit ON r = i ORDER BY bin""".stripMargin,
-    "q352_holt_linear" ->
+        |FROM cum JOIN fit ON r = i ORDER BY bin""".stripMargin),
+    Query("q352_holt_linear", q352HoltLinear,
       """WITH RECURSIVE daily AS (SELECT CAST(ts AS DATE) dy, count(*)::DOUBLE y
         |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
         |idx AS (SELECT row_number() OVER (ORDER BY dy) i, y FROM daily),
@@ -242,8 +234,8 @@ object Curation38 {
         |  FROM holt h JOIN idx ON idx.i = h.i + 1)
         |SELECT nd::BIGINT AS n_days, round(l, 6) AS level, round(b, 6) AS trend,
         |  round(l + b, 6) AS forecast_1
-        |FROM holt JOIN n ON i = nd""".stripMargin,
-    "q353_page_hinkley" ->
+        |FROM holt JOIN n ON i = nd""".stripMargin),
+    Query("q353_page_hinkley", q353PageHinkley,
       """WITH daily AS (SELECT CAST(ts AS DATE) dy, count(*) x FROM events GROUP BY 1),
         |rm AS (SELECT dy, x,
         |    (sum(x) OVER (ORDER BY dy))::DOUBLE /
@@ -252,8 +244,8 @@ object Curation38 {
         |ph AS (SELECT dy, (max(m) OVER (ORDER BY dy)) - m ph FROM m),
         |mx AS (SELECT max(ph) mxv FROM ph)
         |SELECT min(dy) AS alarm_day, round(min(ph), 6) AS ph_stat
-        |FROM ph CROSS JOIN mx WHERE ph = mxv""".stripMargin,
-    "q354_hits_bipartite" ->
+        |FROM ph CROSS JOIN mx WHERE ph = mxv""".stripMargin),
+    Query("q354_hits_bipartite", q354HitsBipartite,
       """WITH edges AS (SELECT DISTINCT o.o_custkey c, l.l_partkey p
         |  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
         |a0 AS (SELECT DISTINCT p, 1::BIGINT a FROM edges),
@@ -265,8 +257,8 @@ object Curation38 {
         |norm AS (SELECT sum(a) s FROM a2)
         |SELECT p AS partkey,
         |  round((a::DOUBLE / s::DOUBLE) * 1000000, 6) AS auth_ppm
-        |FROM a2 CROSS JOIN norm ORDER BY auth_ppm DESC, partkey LIMIT 5""".stripMargin,
-    "q355_bigram_surprisal" ->
+        |FROM a2 CROSS JOIN norm ORDER BY auth_ppm DESC, partkey LIMIT 5""".stripMargin),
+    Query("q355_bigram_surprisal", q355BigramSurprisal,
       """WITH docs AS (SELECT doc_id, text FROM documents),
         |bigrams AS (SELECT doc_id,
         |  unnest(list_transform(range(1, len(text)),
@@ -283,5 +275,5 @@ object Curation38 {
         |  round(-CAST(sum(CAST(lp AS DECIMAL(38,15))) AS DOUBLE) / count(*)::DOUBLE, 6)
         |    AS avg_nll_nats
         |FROM bigrams JOIN model USING (bg)
-        |GROUP BY doc_id ORDER BY avg_nll_nats DESC, doc_id LIMIT 5""".stripMargin)
+        |GROUP BY doc_id ORDER BY avg_nll_nats DESC, doc_id LIMIT 5""".stripMargin))
 }

@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 9: data valuation and experiment-monitoring shapes —
@@ -16,8 +17,6 @@ import graft.sources.Tables
   * readout with cluster-robust (block-level) variance.
   */
 object Curation39 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q356: exact KNN-Shapley data valuation (Jia et al., VLDB 2019) —
     * the per-training-point value of each embedding for a K=5 nearest-
@@ -38,7 +37,6 @@ object Curation39 {
     * 10 most valuable training points.
     */
   private val q356KnnShapley: Q = (s, d) => {
-    graft.functions.GraftRegistry.register(s)
     import graft.functions.GraftFunctions.dotNative
     val emb = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"), col("label"))
@@ -222,20 +220,11 @@ object Curation39 {
         round(col("se"), 6).as("se"), round(col("diff") / col("se"), 6).as("t_stat"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q356_knn_shapley" -> q356KnnShapley,
-    "q357_raking_weights" -> q357RakingWeights,
-    "q358_sprt_monitor" -> q358SprtMonitor,
-    "q359_pinball_loss" -> q359PinballLoss,
-    "q360_switchback_readout" -> q360SwitchbackReadout)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q356_knn_shapley" ->
+  val queries: Seq[Query] = Seq(
+    Query("q356_knn_shapley", q356KnnShapley,
       s"""WITH emb AS (SELECT vec_id, embedding, label FROM embeddings),
          |tests AS (SELECT vec_id tid, embedding tv, label tl FROM emb
-         |  ORDER BY ${hashSql.format("'ks|' || vec_id")}, vec_id LIMIT 32),
+         |  ORDER BY ${mdHashSql("'ks|' || vec_id")}, vec_id LIMIT 32),
          |train AS (SELECT * FROM emb WHERE vec_id NOT IN (SELECT tid FROM tests)),
          |pairs AS (SELECT t.tid, tr.vec_id,
          |    list_dot_product(tr.embedding, t.tv) dp,
@@ -257,8 +246,8 @@ object Curation39 {
          |    CAST(sum(CAST(s AS DECIMAL(38,15))) AS DOUBLE) / 32.0 m
          |  FROM shap GROUP BY vec_id)
          |SELECT vec_id, round(m * 1000, 6) AS shapley_x1000
-         |FROM m ORDER BY m DESC, vec_id LIMIT 10""".stripMargin,
-    "q357_raking_weights" ->
+         |FROM m ORDER BY m DESC, vec_id LIMIT 10""".stripMargin),
+    Query("q357_raking_weights", q357RakingWeights,
       """WITH cust AS (SELECT c_custkey, c_nationkey nk, c_mktsegment seg FROM customer),
         |tn AS (SELECT nk, count(*) tn FROM cust GROUP BY nk),
         |ts AS (SELECT seg, count(*) ts FROM cust GROUP BY seg),
@@ -280,8 +269,8 @@ object Curation39 {
         |SELECT nk AS nationkey, target_n::BIGINT AS target_n,
         |  round(raked, 6) AS raked_total,
         |  round((raked - target_n::DOUBLE) / target_n::DOUBLE, 6) AS rel_err
-        |FROM fin ORDER BY nationkey""".stripMargin,
-    "q358_sprt_monitor" ->
+        |FROM fin ORDER BY nationkey""".stripMargin),
+    Query("q358_sprt_monitor", q358SprtMonitor,
       """WITH daily AS (SELECT user_id % 2 arm, CAST(ts AS DATE) dy,
         |    count(*) n,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) cv
@@ -300,8 +289,8 @@ object Curation39 {
         |      DATE '9999-12-31') cross_dn_day
         |  FROM cum GROUP BY arm)
         |SELECT arm, final_llr, cross_up_day, cross_dn_day
-        |FROM fin JOIN cr USING (arm) ORDER BY arm""".stripMargin,
-    "q359_pinball_loss" ->
+        |FROM fin JOIN cr USING (arm) ORDER BY arm""".stripMargin),
+    Query("q359_pinball_loss", q359PinballLoss,
       """WITH ev AS (SELECT event_type, CAST(ts AS DATE) dy, value FROM events),
         |split AS (SELECT min(dy) + 15 cut FROM ev),
         |f AS (SELECT event_type,
@@ -315,8 +304,8 @@ object Curation39 {
         |    AS DECIMAL(38,15))) AS DOUBLE) / count(*)::DOUBLE, 6) AS pinball50,
         |  round(CAST(sum(CAST(greatest((value - f90) * 0.9, (value - f90) * -0.1)
         |    AS DECIMAL(38,15))) AS DOUBLE) / count(*)::DOUBLE, 6) AS pinball90
-        |FROM test GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q360_switchback_readout" ->
+        |FROM test GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q360_switchback_readout", q360SwitchbackReadout,
       """WITH blocked AS (SELECT epoch_us(ts) // 21600000000 blk,
         |    count(*) n,
         |    sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) cv
@@ -341,5 +330,5 @@ object Curation39 {
         |  FROM piv)
         |SELECT nb0::BIGINT AS nb0, nb1::BIGINT AS nb1, round(diff, 6) AS diff,
         |  round(se, 6) AS se, round(diff / se, 6) AS t_stat
-        |FROM st""".stripMargin)
+        |FROM st""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -499,29 +499,12 @@ object Curation4 {
       .orderBy("id", "format")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q178_image_decode" -> q178ImageDecode,
-    "q177_volume_anomaly" -> q177VolumeAnomaly,
-    "q168_robust_stats" -> q168RobustStats,
-    "q170_bucketed_agg" -> q170BucketedAgg,
-    "q172_span_scrub" -> q172SpanScrub,
-    "q175_corpus_report" -> q175CorpusReport,
-    "q176_span_corruption" -> q176SpanCorruption,
-    "q169_ewma" -> q169Ewma,
-    "q161_cdc_chunks" -> q161CdcChunks,
-    "q162_pmi_collocations" -> q162PmiCollocations,
-    "q163_corrupt_ingest" -> q163CorruptIngest,
-    "q164_bitext_mining" -> q164BitextMining,
-    "q165_bpe_encode" -> q165BpeEncode,
-    "q166_bucket_pruning" -> q166BucketPruning,
-    "q167_incremental_agg" -> q167IncrementalAgg)
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // the oracle re-derives the PNG pixel sums from the generating
     // formula arithmetically — lossless codec means the engine's real
     // ImageIO decode must reproduce them bit-for-bit; JPEG rows are
     // dimension-checked (lossy sums are NULL by contract)
-    "q178_image_decode" ->
+    Query("q178_image_decode", q178ImageDecode,
       """WITH ids AS (
         |  SELECT doc_id AS id, 'png' AS format,
         |    16 + doc_id % 17 AS w, 12 + doc_id % 13 AS h
@@ -537,8 +520,8 @@ object Curation4 {
         |  CASE WHEN format = 'png' THEN SUM((y + 2*id) % 256)::BIGINT END AS sum_g,
         |  CASE WHEN format = 'png' THEN SUM((x + y + 3*id) % 256)::BIGINT END AS sum_b,
         |  (w*h)::BIGINT AS n_px
-        |FROM px GROUP BY id, format, w, h ORDER BY id, format""".stripMargin,
-    "q177_volume_anomaly" ->
+        |FROM px GROUP BY id, format, w, h ORDER BY id, format""".stripMargin),
+    Query("q177_volume_anomaly", q177VolumeAnomaly,
       """WITH pm AS (SELECT event_type, epoch_ms(ts) // 60000 AS minute_idx,
         |    count(*) AS n
         |  FROM events GROUP BY 1, 2),
@@ -554,8 +537,8 @@ object Curation4 {
         |    THEN (n::DOUBLE - s1::DOUBLE / c::DOUBLE)
         |      / sqrt((s2::DOUBLE - s1::DOUBLE * s1::DOUBLE / c::DOUBLE) / (c::DOUBLE - 1.0))
         |    END, 6) AS z
-        |FROM st ORDER BY event_type, minute_idx""".stripMargin,
-    "q176_span_corruption" ->
+        |FROM st ORDER BY event_type, minute_idx""".stripMargin),
+    Query("q176_span_corruption", q176SpanCorruption,
       """WITH toks AS (SELECT doc_id, pos, w[pos] AS tok
         |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS pos
         |        FROM (SELECT doc_id, str_split(text, ' ') AS w FROM documents))),
@@ -584,8 +567,8 @@ object Curation4 {
         |  CAST(max(k) AS BIGINT) AS n_spans,
         |  md5(coalesce(string_agg(in_piece, ' ' ORDER BY pos), '')) AS input_md5,
         |  md5(coalesce(string_agg(tg_piece, ' ' ORDER BY pos), '')) AS target_md5
-        |FROM pieces GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q175_corpus_report" ->
+        |FROM pieces GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q175_corpus_report", q175CorpusReport,
       s"""SELECT source, count(*) AS n_docs,
          |  CAST(sum(len(str_split(text, ' '))) AS BIGINT) AS n_tokens,
          |  CAST(sum(n_chars) AS BIGINT) AS n_chars,
@@ -593,8 +576,8 @@ object Curation4 {
          |  count(DISTINCT lang) AS n_langs,
          |  round(CAST(sum(CAST(${Curation.qScore} AS DECIMAL(20,9))) AS DOUBLE)
          |    / count(*)::DOUBLE, 6) AS mean_quality
-         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q172_span_scrub" ->
+         |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+    Query("q172_span_scrub", q172SpanScrub,
       """WITH docs AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
         |wins AS (SELECT doc_id, p,
         |    ('0x' || substr(md5(array_to_string(w[p:p+7], ' ')), 1, 15))::BIGINT AS h
@@ -616,13 +599,13 @@ object Curation4 {
         |  CAST(len(d.w) - coalesce(k.n_kept, 0) AS BIGINT) AS n_removed,
         |  md5(coalesce(k.scrubbed, '')) AS scrub_md5
         |FROM docs d LEFT JOIN kept k USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
-    "q170_bucketed_agg" ->
+        |ORDER BY d.doc_id""".stripMargin),
+    Query("q170_bucketed_agg", q170BucketedAgg,
       """SELECT l_orderkey, count(*) AS n_items,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY l_orderkey HAVING count(*) >= 5
-        |ORDER BY l_orderkey""".stripMargin,
-    "q168_robust_stats" ->
+        |ORDER BY l_orderkey""".stripMargin),
+    Query("q168_robust_stats", q168RobustStats,
       """WITH med AS (SELECT lang, quantile_cont(n_chars, 0.5) AS med
         |  FROM documents GROUP BY lang),
         |dev AS (SELECT d.lang, abs(d.n_chars::DOUBLE - m.med) AS dev, m.med
@@ -632,8 +615,8 @@ object Curation4 {
         |  count(*) AS n_docs,
         |  CAST(sum(CASE WHEN dev.dev > 3.0 * mad.mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
         |FROM dev JOIN mad USING (lang)
-        |GROUP BY dev.lang ORDER BY dev.lang""".stripMargin,
-    "q169_ewma" ->
+        |GROUP BY dev.lang ORDER BY dev.lang""".stripMargin),
+    Query("q169_ewma", q169Ewma,
       """WITH ranked AS (SELECT user_id, value,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS r,
         |    count(*) OVER (PARTITION BY user_id) AS n
@@ -641,8 +624,8 @@ object Curation4 {
         |SELECT user_id, CAST(max(n) AS BIGINT) AS n_events,
         |  round(CAST(sum(CAST(value * CASE WHEN r = 1 THEN pow(0.7, n - 1)
         |    ELSE 0.3 * pow(0.7, n - r) END AS DECIMAL(25,12))) AS DOUBLE), 6) AS ewma
-        |FROM ranked GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q161_cdc_chunks" ->
+        |FROM ranked GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q161_cdc_chunks", q161CdcChunks,
       """WITH toks AS (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS pos
         |  FROM (SELECT doc_id, str_split(text, ' ') AS w FROM documents)),
         |flagged AS (SELECT doc_id, pos, w[pos] AS tok,
@@ -657,8 +640,8 @@ object Curation4 {
         |SELECT doc_id, chunk_idx, count(*) AS n_tokens,
         |  ('0x' || substr(md5(string_agg(tok, ' ' ORDER BY pos)), 1, 15))::BIGINT AS chunk_hash
         |FROM chunked GROUP BY doc_id, chunk_idx
-        |ORDER BY doc_id, chunk_idx""".stripMargin,
-    "q162_pmi_collocations" ->
+        |ORDER BY doc_id, chunk_idx""".stripMargin),
+    Query("q162_pmi_collocations", q162PmiCollocations,
       """WITH docs AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents),
         |uni AS (SELECT x, count(*) AS cx FROM
         |  (SELECT unnest(w) AS x FROM docs) GROUP BY x),
@@ -671,29 +654,29 @@ object Curation4 {
         |  CAST(ux.cx AS BIGINT) AS cx, CAST(uy.cx AS BIGINT) AS cy,
         |  round(ln(cxy::DOUBLE * (SELECT n FROM tot) / (ux.cx::DOUBLE * uy.cx::DOUBLE)), 6) AS pmi
         |FROM pairs p JOIN uni ux ON p.x = ux.x JOIN uni uy ON p.y = uy.x
-        |ORDER BY pmi DESC, p.x, p.y LIMIT 30""".stripMargin,
-    "q163_corrupt_ingest" ->
+        |ORDER BY pmi DESC, p.x, p.y LIMIT 30""".stripMargin),
+    Query("q163_corrupt_ingest", q163CorruptIngest,
       """SELECT CAST(sum(CASE WHEN doc_id % 100 <> 7 THEN 1 ELSE 0 END) AS BIGINT) AS n_good,
         |  CAST(sum(CASE WHEN doc_id % 100 = 7 THEN 1 ELSE 0 END) AS BIGINT) AS n_quarantined,
         |  CAST(sum(CASE WHEN doc_id % 100 <> 7 THEN n_chars END) AS BIGINT) AS chars_good,
         |  count(DISTINCT CASE WHEN doc_id % 100 <> 7 THEN lang END) AS langs_good
-        |FROM documents""".stripMargin,
-    "q165_bpe_encode" ->
+        |FROM documents""".stripMargin),
+    Query("q165_bpe_encode", q165BpeEncode,
       (Curation3.bpeChain6 +
         """
         |SELECT tok, CAST(sum(freq) AS BIGINT) AS n
         |FROM (SELECT freq, unnest(string_split(trim(repr), '  ')) AS tok FROM r6)
-        |GROUP BY tok ORDER BY n DESC, tok LIMIT 20""".stripMargin),
-    "q166_bucket_pruning" ->
+        |GROUP BY tok ORDER BY n DESC, tok LIMIT 20""".stripMargin)),
+    Query("q166_bucket_pruning", q166BucketPruning,
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
         |WHERE l_orderkey IN (7, 42)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q167_incremental_agg" ->
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("q167_incremental_agg", q167IncrementalAgg,
       """SELECT user_id, event_type, count(*) AS n,
         |  round(CAST(sum(CAST(value AS DECIMAL(20,6))) AS DOUBLE), 6) AS sum_value
         |FROM events GROUP BY user_id, event_type
-        |ORDER BY user_id, event_type""".stripMargin,
-    "q164_bitext_mining" ->
+        |ORDER BY user_id, event_type""".stripMargin),
+    Query("q164_bitext_mining", q164BitextMining,
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
         |l AS (SELECT e.vec_id, v, lang FROM e JOIN documents d ON e.vec_id = d.doc_id),
@@ -705,5 +688,5 @@ object Curation4 {
         |ranked AS (SELECT qid, lang, nid, cos,
         |    row_number() OVER (PARTITION BY qid ORDER BY round(cos, 9) DESC, nid ASC) AS rn
         |  FROM sims)
-        |SELECT qid, lang, nid, cos FROM ranked WHERE rn = 1 ORDER BY qid""".stripMargin)
+        |SELECT qid, lang, nid, cos FROM ranked WHERE rn = 1 ORDER BY qid""".stripMargin))
 }

@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
 import graft.sources.Tables
 
 /** Round-8 wave 10: causal counterfactuals, attribution, and
@@ -15,8 +16,6 @@ import graft.sources.Tables
   * the Qini uplift curve, and Good-Turing unseen-mass estimation.
   */
 object Curation40 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q361: synthetic control for nation 0's monthly order volume —
     * donors are the other 24 nations, weighted by pre-period (1995–98)
@@ -316,15 +315,8 @@ object Curation40 {
       .orderBy("r")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q361_synthetic_control" -> q361SyntheticControl,
-    "q362_markov_attribution" -> q362MarkovAttribution,
-    "q363_rec_coverage" -> q363RecCoverage,
-    "q364_qini_uplift" -> q364QiniUplift,
-    "q365_good_turing" -> q365GoodTuring)
-
-  val oracles: Map[String, String] = Map(
-    "q361_synthetic_control" ->
+  val queries: Seq[Query] = Seq(
+    Query("q361_synthetic_control", q361SyntheticControl,
       """WITH nm AS (SELECT c.c_nationkey nk,
         |    year(o.o_orderdate) * 100 + month(o.o_orderdate) ym, count(*) x
         |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
@@ -355,8 +347,8 @@ object Curation40 {
         |SELECT n_pre_months::BIGINT AS n_pre_months,
         |  n_post_months::BIGINT AS n_post_months, round(att, 6) AS att,
         |  top_donor, top_w
-        |FROM npre CROSS JOIN att CROSS JOIN top""".stripMargin,
-    "q362_markov_attribution" -> {
+        |FROM npre CROSS JOIN att CROSS JOIN top""".stripMargin),
+    Query("q362_markov_attribution", q362MarkovAttribution, {
       // 12 value-iteration rounds, unrolled (no recursive CTE: the
       // engine runs the identical foldLeft, one keyed decimal sum per
       // round with the absorbers as CASE constants)
@@ -410,8 +402,8 @@ object Curation40 {
         |  round(v, 6) AS p_conv_removed, round(e, 6) AS removal_effect,
         |  round(e / es, 6) AS attribution
         |FROM eff CROSS JOIN esum ORDER BY channel""".stripMargin
-    },
-    "q363_rec_coverage" ->
+    }),
+    Query("q363_rec_coverage", q363RecCoverage,
       """WITH purch AS (SELECT DISTINCT o.o_custkey c, l.l_partkey p
         |  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey),
         |bp AS (SELECT DISTINCT l_orderkey o, l_partkey p FROM lineitem),
@@ -445,8 +437,8 @@ object Curation40 {
         |  n_rec_parts::BIGINT AS n_rec_parts, n_catalog::BIGINT AS n_catalog,
         |  round(n_rec_parts::DOUBLE / n_catalog::DOUBLE, 6) AS coverage,
         |  round(nov, 6) AS novelty_nats
-        |FROM us CROSS JOIN cov CROSS JOIN cat CROSS JOIN nov""".stripMargin,
-    "q364_qini_uplift" ->
+        |FROM us CROSS JOIN cov CROSS JOIN cat CROSS JOIN nov""".stripMargin),
+    Query("q364_qini_uplift", q364QiniUplift,
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) dy, event_type FROM events),
         |split AS (SELECT min(dy) + 15 cut FROM ev),
         |score AS (SELECT user_id, count(*) score FROM ev CROSS JOIN split
@@ -479,8 +471,8 @@ object Curation40 {
         |  round(((cc1::DOUBLE / cn1::DOUBLE - cc0::DOUBLE / cn0::DOUBLE) -
         |    (tc1::DOUBLE / tn1::DOUBLE - tc0::DOUBLE / tn0::DOUBLE)) *
         |    (cn1 + cn0)::DOUBLE, 6) AS qini_cum
-        |FROM cum CROSS JOIN tot ORDER BY decile""".stripMargin,
-    "q365_good_turing" ->
+        |FROM cum CROSS JOIN tot ORDER BY decile""".stripMargin),
+    Query("q365_good_turing", q365GoodTuring,
       """WITH tok AS (SELECT w, count(*) r FROM (SELECT
         |    unnest(list_transform(range(1, len(ws)),
         |      i -> ws[i] || ' ' || ws[i + 1])) w
@@ -493,5 +485,5 @@ object Curation40 {
         |    AS r_star,
         |  n::BIGINT AS n_tokens, v::BIGINT AS vocab
         |FROM nr a LEFT JOIN nr b ON b.r = a.r + 1 CROSS JOIN tot
-        |WHERE a.r <= 4 ORDER BY a.r""".stripMargin)
+        |WHERE a.r <= 4 ORDER BY a.r""".stripMargin))
 }

@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
 import graft.sources.Tables
 
 /** Round-8 wave 11: density clustering, search-log bias auditing,
@@ -15,8 +16,6 @@ import graft.sources.Tables
   * mixture, and Elias-gamma posting-list compression estimates.
   */
 object Curation41 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q366: grid-DBSCAN over the first two embedding dimensions — the
     * standard scalable DBSCAN surrogate: bucket points into a bounded
@@ -229,15 +228,8 @@ object Curation41 {
       .orderBy(col("gamma_bits").desc, col("term")).limit(10)
   }
 
-  val defs: Map[String, Q] = Map(
-    "q366_grid_dbscan" -> q366GridDbscan,
-    "q367_position_bias_coec" -> q367PositionBiasCoec,
-    "q368_rec_holdout_eval" -> q368RecHoldoutEval,
-    "q369_gmm_em_step" -> q369GmmEmStep,
-    "q370_posting_compression" -> q370PostingCompression)
-
-  val oracles: Map[String, String] = Map(
-    "q366_grid_dbscan" -> {
+  val queries: Seq[Query] = Seq(
+    Query("q366_grid_dbscan", q366GridDbscan, {
       val labelRounds = (2 to 9).map { i =>
         s"""l$i AS (SELECT a.cx, a.cy, min(b.lbl) lbl
            |  FROM dense a JOIN l${i - 1} b
@@ -261,8 +253,8 @@ object Curation41 {
         |  count(*)::BIGINT AS n_clusters,
         |  coalesce(max(pts), 0)::BIGINT AS max_cluster_points
         |FROM sized""".stripMargin
-    },
-    "q367_position_bias_coec" ->
+    }),
+    Query("q367_position_bias_coec", q367PositionBiasCoec,
       """WITH ev AS (SELECT user_id,
         |    least(row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
         |      ORDER BY ts, event_id), 20) pos,
@@ -277,8 +269,8 @@ object Curation41 {
         |    AS expected,
         |  round(sum(cc)::DOUBLE /
         |    CAST(sum(CAST(n::DOUBLE * ctr AS DECIMAL(38,15))) AS DOUBLE), 6) AS coec
-        |FROM seg JOIN curve USING (pos) GROUP BY segment ORDER BY segment""".stripMargin,
-    "q368_rec_holdout_eval" ->
+        |FROM seg JOIN curve USING (pos) GROUP BY segment ORDER BY segment""".stripMargin),
+    Query("q368_rec_holdout_eval", q368RecHoldoutEval,
       """WITH li AS (SELECT l_orderkey, l_partkey p FROM lineitem),
         |oy AS (SELECT o_orderkey, o_custkey c, year(o_orderdate) yr FROM orders),
         |trainp AS (SELECT DISTINCT oy.c, li.p FROM oy
@@ -316,8 +308,8 @@ object Curation41 {
         |    AS hit_rate_3,
         |  round(sum(nh)::DOUBLE / sum(nt)::DOUBLE, 6) AS recall_3,
         |  round(sum(nh)::DOUBLE / sum(nr)::DOUBLE, 6) AS precision_3
-        |FROM u""".stripMargin,
-    "q369_gmm_em_step" ->
+        |FROM u""".stripMargin),
+    Query("q369_gmm_em_step", q369GmmEmStep,
       """WITH x AS (SELECT value x FROM events),
         |mom AS (SELECT count(*) n,
         |    CAST(sum(CAST(x AS DECIMAL(38,15))) AS DOUBLE) sx,
@@ -338,8 +330,8 @@ object Curation41 {
         |  round(sr2 / n::DOUBLE, 6) AS w2,
         |  round(sr1x / (n::DOUBLE - sr2), 6) AS mu1_new,
         |  round(sr2x / sr2, 6) AS mu2_new
-        |FROM mstep""".stripMargin,
-    "q370_posting_compression" ->
+        |FROM mstep""".stripMargin),
+    Query("q370_posting_compression", q370PostingCompression,
       """WITH posting AS (SELECT DISTINCT doc_id, w FROM (SELECT doc_id,
         |    unnest(str_split(text, ' ')) w FROM documents) WHERE len(w) > 0),
         |gaps AS (SELECT w,
@@ -350,5 +342,5 @@ object Curation41 {
         |SELECT w AS term, count(*)::BIGINT AS df,
         |  sum(bits)::BIGINT AS gamma_bits,
         |  round(sum(bits)::DOUBLE / (count(*) * 64)::DOUBLE, 6) AS vs_raw64
-        |FROM bits GROUP BY w ORDER BY gamma_bits DESC, term LIMIT 10""".stripMargin)
+        |FROM bits GROUP BY w ORDER BY gamma_bits DESC, term LIMIT 10""".stripMargin))
 }

@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 12: production monitoring and estimation statistics —
@@ -15,8 +16,6 @@ import graft.sources.Tables
   * delta-method confidence intervals for ratio metrics.
   */
 object Curation42 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q371: multi-window, multi-burn-rate SLO alerting (the SRE-workbook
     * algorithm): hourly error rates against a 19% error-budget target,
@@ -229,17 +228,8 @@ object Curation42 {
       round((col("r1") - col("r0")) / sqrt(col("v0") + col("v1")), 6).as("z_stat"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q371_slo_burn_alerts" -> q371SloBurnAlerts,
-    "q372_metric_bridge" -> q372MetricBridge,
-    "q373_embedding_whitening" -> q373EmbeddingWhitening,
-    "q374_horvitz_thompson" -> q374HorvitzThompson,
-    "q375_delta_method_ratio" -> q375DeltaMethodRatio)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q371_slo_burn_alerts" ->
+  val queries: Seq[Query] = Seq(
+    Query("q371_slo_burn_alerts", q371SloBurnAlerts,
       """WITH hourly AS (SELECT epoch_us(ts) // 3600000000 h, count(*) n,
         |    sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) err
         |  FROM events GROUP BY h),
@@ -259,8 +249,8 @@ object Curation42 {
         |SELECT make_timestamp(h * 3600 * 1000000) AS alert_hour,
         |  round(burn_6h, 6) AS burn_6h, round(burn_24h, 6) AS burn_24h
         |FROM rates WHERE burn_6h >= 1.1 AND burn_24h >= 1.05
-        |ORDER BY alert_hour LIMIT 10""".stripMargin,
-    "q372_metric_bridge" ->
+        |ORDER BY alert_hour LIMIT 10""".stripMargin),
+    Query("q372_metric_bridge", q372MetricBridge,
       """WITH ev AS (SELECT user_id % 4 segment, CAST(ts AS DATE) dy,
         |    CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END rev
         |  FROM events),
@@ -279,8 +269,8 @@ object Curation42 {
         |  round(v1::DOUBLE * (r2 - r1), 6) AS rate_effect,
         |  round((v2 - v1)::DOUBLE * (r2 - r1), 6) AS interaction,
         |  round(v2::DOUBLE * r2 - v1::DOUBLE * r1, 6) AS delta_total
-        |FROM piv ORDER BY segment""".stripMargin,
-    "q373_embedding_whitening" ->
+        |FROM piv ORDER BY segment""".stripMargin),
+    Query("q373_embedding_whitening", q373EmbeddingWhitening,
       """WITH xy AS (SELECT embedding[1]::DOUBLE x, embedding[2]::DOUBLE y
         |  FROM embeddings),
         |mom AS (SELECT count(*) n,
@@ -312,11 +302,11 @@ object Curation42 {
         |    / count(*)::DOUBLE, 6) AS white_var_y,
         |  round(CAST(sum(CAST(wx * wy AS DECIMAL(38,15))) AS DOUBLE)
         |    / count(*)::DOUBLE, 6) AS white_cov
-        |FROM wht GROUP BY l1, l2""".stripMargin,
-    "q374_horvitz_thompson" ->
+        |FROM wht GROUP BY l1, l2""".stripMargin),
+    Query("q374_horvitz_thompson", q374HorvitzThompson,
       s"""WITH pop AS (SELECT c_custkey, c_acctbal y,
          |    least(0.99, ((c_custkey % 10) + 1)::DOUBLE / 20.0) pi,
-         |    ${hashSql.format("'ht|' || c_custkey")}::DOUBLE
+         |    ${mdHashSql("'ht|' || c_custkey")}::DOUBLE
          |      / 1152921504606846976.0 u
          |  FROM customer),
          |truth AS (SELECT CAST(sum(CAST(y AS DECIMAL(38,15))) AS DOUBLE) true_total
@@ -330,8 +320,8 @@ object Curation42 {
          |  round(true_total, 6) AS true_total,
          |  round((ht_total - true_total) / true_total, 6) AS rel_err,
          |  round(sqrt(vhat), 6) AS ht_se
-         |FROM samp CROSS JOIN truth""".stripMargin,
-    "q375_delta_method_ratio" ->
+         |FROM samp CROSS JOIN truth""".stripMargin),
+    Query("q375_delta_method_ratio", q375DeltaMethodRatio,
       """WITH pu AS (SELECT user_id, user_id % 2 arm,
         |    CAST(sum(CAST(CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END
         |      AS DECIMAL(38,15))) AS DOUBLE) x,
@@ -362,5 +352,5 @@ object Curation42 {
         |  round(r0, 6) AS r0, round(r1, 6) AS r1, round(r1 - r0, 6) AS diff,
         |  round(sqrt(v0 + v1), 6) AS se,
         |  round((r1 - r0) / sqrt(v0 + v1), 6) AS z_stat
-        |FROM piv""".stripMargin)
+        |FROM piv""".stripMargin))
 }

@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 13: estimation depth — random-effects meta-analysis,
@@ -15,8 +16,6 @@ import graft.sources.Tables
   * index).
   */
 object Curation43 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q376: DerSimonian–Laird random-effects meta-analysis of the
     * per-nation treatment effect (order totals, arm = custkey parity):
@@ -216,17 +215,8 @@ object Curation43 {
         col("n_tail"), round(col("khat"), 6).as("hill_khat"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q376_meta_analysis_dl" -> q376MetaAnalysisDl,
-    "q377_overdispersion_nb" -> q377OverdispersionNb,
-    "q378_bloom_planning" -> q378BloomPlanning,
-    "q379_ar2_yule_walker" -> q379Ar2YuleWalker,
-    "q380_importance_ess" -> q380ImportanceEss)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q376_meta_analysis_dl" ->
+  val queries: Seq[Query] = Seq(
+    Query("q376_meta_analysis_dl", q376MetaAnalysisDl,
       """WITH o AS (SELECT c.c_nationkey nk, o.o_custkey % 2 arm, o.o_totalprice y
         |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey),
         |mom AS (SELECT nk, arm, count(*) n,
@@ -260,8 +250,8 @@ object Curation43 {
         |SELECT k::BIGINT AS k, round(q, 6) AS q_stat, round(i2, 6) AS i_sq,
         |  round(tau2, 6) AS tau_sq, round(dfix, 6) AS effect_fixed,
         |  round(drand, 6) AS effect_random
-        |FROM re""".stripMargin,
-    "q377_overdispersion_nb" ->
+        |FROM re""".stripMargin),
+    Query("q377_overdispersion_nb", q377OverdispersionNb,
       """WITH pu AS (SELECT event_type, user_id, count(*) k
         |  FROM events GROUP BY 1, 2),
         |mom AS (SELECT event_type, count(*) n, sum(k) sk, sum(k * k) skk
@@ -273,18 +263,18 @@ object Curation43 {
         |  round(v, 6) AS var_k, round(v / m, 6) AS dispersion,
         |  round(CASE WHEN v > m THEN m * m / (v - m) ELSE -1.0 END, 6) AS nb_r,
         |  round(CASE WHEN v > m THEN m / v ELSE -1.0 END, 6) AS nb_p
-        |FROM st ORDER BY event_type""".stripMargin,
-    "q378_bloom_planning" ->
+        |FROM st ORDER BY event_type""".stripMargin),
+    Query("q378_bloom_planning", q378BloomPlanning,
       s"""WITH seeds AS (SELECT unnest([1, 2, 3, 4, 5]) sd),
          |members AS (SELECT c_custkey FROM customer),
          |bits AS (SELECT DISTINCT
-         |    ${hashSql.format("'bf|' || sd || '|' || c_custkey")} % 16384 bpos
+         |    ${mdHashSql("'bf|' || sd || '|' || c_custkey")} % 16384 bpos
          |  FROM members CROSS JOIN seeds),
          |nbits AS (SELECT count(*) n_set_bits FROM bits),
          |nmem AS (SELECT count(*) n_members FROM members),
          |probes AS (SELECT 'probe|' || p_partkey pk FROM part),
          |ph AS (SELECT pk, count(*) hits FROM (SELECT p.pk,
-         |      ${hashSql.format("'bf|' || sd || '|' || pk")} % 16384 bpos
+         |      ${mdHashSql("'bf|' || sd || '|' || pk")} % 16384 bpos
          |    FROM probes p CROSS JOIN seeds) x
          |  WHERE bpos IN (SELECT bpos FROM bits) GROUP BY pk),
          |fp AS (SELECT count(*) n_probes,
@@ -296,8 +286,8 @@ object Curation43 {
          |  round(n_fp::DOUBLE / n_probes::DOUBLE, 6) AS fpr_measured,
          |  round(pow(1.0 - exp((-5.0 * n_members::DOUBLE) / 16384.0), 5.0), 6)
          |    AS fpr_predicted
-         |FROM fp CROSS JOIN nbits CROSS JOIN nmem""".stripMargin,
-    "q379_ar2_yule_walker" ->
+         |FROM fp CROSS JOIN nbits CROSS JOIN nmem""".stripMargin),
+    Query("q379_ar2_yule_walker", q379Ar2YuleWalker,
       """WITH daily AS (SELECT CAST(ts AS DATE) dy, count(*) y FROM events
         |  WHERE event_type = 'purchase' GROUP BY 1),
         |lagged AS (SELECT dy, y::DOUBLE y,
@@ -325,8 +315,8 @@ object Curation43 {
         |SELECT n::BIGINT AS n, round(r1, 6) AS r1, round(r2, 6) AS r2,
         |  round(phi1, 6) AS phi1, round(phi2, 6) AS phi2,
         |  round(mu + phi1 * (yn - mu) + phi2 * (yn1 - mu), 6) AS forecast_1
-        |FROM fit CROSS JOIN tail""".stripMargin,
-    "q380_importance_ess" ->
+        |FROM fit CROSS JOIN tail""".stripMargin),
+    Query("q380_importance_ess", q380ImportanceEss,
       """WITH w AS (SELECT doc_id, (n_chars % 97 + 3)::DOUBLE / 50.0 w
         |  FROM documents),
         |ess AS (SELECT count(*) n,
@@ -341,5 +331,5 @@ object Curation43 {
         |SELECT n::BIGINT AS n, round(sw * sw / sww, 6) AS ess,
         |  round(sw * sw / sww / n::DOUBLE, 6) AS ess_frac,
         |  n_tail::BIGINT AS n_tail, round(khat, 6) AS hill_khat
-        |FROM ess CROSS JOIN hill""".stripMargin)
+        |FROM ess CROSS JOIN hill""".stripMargin))
 }

@@ -1,10 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 14: customer analytics and observability — RFM tier
@@ -14,8 +15,6 @@ import graft.sources.Tables
   * relative accuracy.
   */
 object Curation44 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q381: RFM (recency/frequency/monetary) tier segmentation — the
     * retention playbook's canonical customer cut. Per-customer R/F/M
@@ -219,17 +218,8 @@ object Curation44 {
       .orderBy(col("wracc").desc, col("nationkey"), col("segment")).limit(10)
   }
 
-  val defs: Map[String, Q] = Map(
-    "q381_rfm_segments" -> q381RfmSegments,
-    "q382_shapley_attribution" -> q382ShapleyAttribution,
-    "q383_direct_adjustment" -> q383DirectAdjustment,
-    "q384_tail_sampling" -> q384TailSampling,
-    "q385_subgroup_wracc" -> q385SubgroupWracc)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q381_rfm_segments" ->
+  val queries: Seq[Query] = Seq(
+    Query("q381_rfm_segments", q381RfmSegments,
       """WITH o AS (SELECT o_custkey c, o_orderdate dt, o_totalprice tp FROM orders),
         |mx AS (SELECT max(CAST(dt AS DATE)) dmax FROM o),
         |rfm AS (SELECT c, min(date_diff('day', CAST(dt AS DATE), dmax)) rec,
@@ -259,8 +249,8 @@ object Curation44 {
         |  round(CAST(sum(CAST(mon AS DECIMAL(38,15))) AS DOUBLE)
         |    / count(*)::DOUBLE, 6) AS avg_monetary,
         |  round(sum(rec)::DOUBLE / count(*)::DOUBLE, 6) AS avg_recency_days
-        |FROM tiers GROUP BY tier ORDER BY tier""".stripMargin,
-    "q382_shapley_attribution" ->
+        |FROM tiers GROUP BY tier ORDER BY tier""".stripMargin),
+    Query("q382_shapley_attribution", q382ShapleyAttribution,
       """WITH pu AS (SELECT user_id,
         |    max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) b0,
         |    max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) b1,
@@ -291,8 +281,8 @@ object Curation44 {
         |  FROM contrib GROUP BY channel),
         |tot AS (SELECT CAST(sum(CAST(phi AS DECIMAL(38,15))) AS DOUBLE) tphi FROM phi)
         |SELECT channel, round(phi, 6) AS phi, round(phi / tphi, 6) AS share
-        |FROM phi CROSS JOIN tot ORDER BY channel""".stripMargin,
-    "q383_direct_adjustment" ->
+        |FROM phi CROSS JOIN tot ORDER BY channel""".stripMargin),
+    Query("q383_direct_adjustment", q383DirectAdjustment,
       """WITH med AS (SELECT quantile_cont(value, 0.5) med FROM events),
         |u AS (SELECT user_id % 4 seg, user_id,
         |    max(CASE WHEN value > med THEN 1 ELSE 0 END) x,
@@ -316,12 +306,12 @@ object Curation44 {
         |    FROM grid GROUP BY seg, pseg))
         |SELECT round(c1 - c0, 6) AS crude_diff, round(dadj, 6) AS adjusted_diff,
         |  round((c1 - c0) - dadj, 6) AS confounding_bias
-        |FROM crude CROSS JOIN adj""".stripMargin,
-    "q384_tail_sampling" ->
+        |FROM crude CROSS JOIN adj""".stripMargin),
+    Query("q384_tail_sampling", q384TailSampling,
       s"""WITH ev AS (SELECT user_id, CAST(ts AS DATE) dy, event_type FROM events),
          |traces AS (SELECT user_id, dy,
          |    (max(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) = 1 OR
-         |     ${hashSql.format("'ts|' || user_id || '|' || dy")}::DOUBLE
+         |     ${mdHashSql("'ts|' || user_id || '|' || dy")}::DOUBLE
          |       / 1152921504606846976.0 < 0.1) keep
          |  FROM ev GROUP BY user_id, dy),
          |kept AS (SELECT ev.event_type FROM ev JOIN traces
@@ -334,8 +324,8 @@ object Curation44 {
          |  round(n_full::DOUBLE / tf::DOUBLE, 6) AS share_full,
          |  round(n_kept::DOUBLE / tk::DOUBLE, 6) AS share_kept
          |FROM full_ JOIN kt USING (event_type) CROSS JOIN tf CROSS JOIN tk
-         |ORDER BY event_type""".stripMargin,
-    "q385_subgroup_wracc" ->
+         |ORDER BY event_type""".stripMargin),
+    Query("q385_subgroup_wracc", q385SubgroupWracc,
       """WITH o AS (SELECT c.c_nationkey nk, c.c_mktsegment seg, ord.o_totalprice tp
         |  FROM orders ord JOIN customer c ON c.c_custkey = ord.o_custkey),
         |p75 AS (SELECT quantile_cont(tp, 0.75) p75 FROM o),
@@ -348,5 +338,5 @@ object Curation44 {
         |  round((n::DOUBLE / nt::DOUBLE) *
         |    (h::DOUBLE / n::DOUBLE - ht::DOUBLE / nt::DOUBLE), 6) AS wracc
         |FROM sg CROSS JOIN base
-        |ORDER BY wracc DESC, nationkey, segment LIMIT 10""".stripMargin)
+        |ORDER BY wracc DESC, nationkey, segment LIMIT 10""".stripMargin))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Q
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
 import graft.sources.Tables
 
 /** Round-8 wave 15: survival inference, coreset selection, learned
@@ -14,8 +15,6 @@ import graft.sources.Tables
   * GPD peaks-over-threshold moment fit.
   */
 object Curation45 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q386: two-sample log-rank test on time-to-first-purchase — the
     * survival-curve comparison q221/q332 describe but never test. Per
@@ -235,15 +234,8 @@ object Curation45 {
         .as("return_level_1e4"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q386_logrank_test" -> q386LogrankTest,
-    "q387_kcenter_coreset" -> q387KcenterCoreset,
-    "q388_learned_index_fit" -> q388LearnedIndexFit,
-    "q389_kendall_w" -> q389KendallW,
-    "q390_gpd_tail_fit" -> q390GpdTailFit)
-
-  val oracles: Map[String, String] = Map(
-    "q386_logrank_test" ->
+  val queries: Seq[Query] = Seq(
+    Query("q386_logrank_test", q386LogrankTest,
       """WITH ev AS (SELECT user_id, CAST(ts AS DATE) dy, event_type FROM events),
         |d0 AS (SELECT min(dy) d0, max(dy) dmax FROM ev),
         |users AS (SELECT user_id % 2 arm,
@@ -275,8 +267,8 @@ object Curation45 {
         |  round(CAST(sum(CAST(ome AS DECIMAL(38,15))) AS DOUBLE) *
         |    CAST(sum(CAST(ome AS DECIMAL(38,15))) AS DOUBLE) /
         |    CAST(sum(CAST(v AS DECIMAL(38,15))) AS DOUBLE), 6) AS logrank_chi2
-        |FROM terms""".stripMargin,
-    "q387_kcenter_coreset" -> {
+        |FROM terms""".stripMargin),
+    Query("q387_kcenter_coreset", q387KcenterCoreset, {
       // greedy farthest-point, 8 rounds unrolled: cN picks the argmax
       // of min-distance to {c1..cN-1} with vec_id tiebreak
       val rounds = (2 to 8).map { i =>
@@ -300,8 +292,8 @@ object Curation45 {
         |SELECT rank, vec_id, dist_sq_x1000 AS dist_sq_x1000 FROM (
         |$sel
         |) ORDER BY rank""".stripMargin
-    },
-    "q388_learned_index_fit" ->
+    }),
+    Query("q388_learned_index_fit", q388LearnedIndexFit,
       s"""WITH keys AS (SELECT DISTINCT o_orderkey k FROM orders),
         |st AS (SELECT
         |    ${graft.operators.Similarity.sqrtModulusLadderSql("c", min = 8L)} m,
@@ -333,8 +325,8 @@ object Curation45 {
         |SELECT sg AS segment, n::BIGINT AS n,
         |  round(slope * 1000000, 6) AS slope_x1e6,
         |  round(maxerr, 6) AS max_abs_err
-        |FROM err ORDER BY segment""".stripMargin,
-    "q389_kendall_w" ->
+        |FROM err ORDER BY segment""".stripMargin),
+    Query("q389_kendall_w", q389KendallW,
       """WITH nm AS (SELECT c.c_nationkey nk,
         |    year(o.o_orderdate) * 100 + month(o.o_orderdate) ym, count(*) x
         |  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey GROUP BY 1, 2),
@@ -352,8 +344,8 @@ object Curation45 {
         |    (144.0 * (n::DOUBLE * n::DOUBLE * n::DOUBLE - n::DOUBLE)), 6) AS w,
         |  round(12.0 * (n::DOUBLE - 1) * 12.0 * (rss - tot * tot / n)::DOUBLE /
         |    (144.0 * (n::DOUBLE * n::DOUBLE * n::DOUBLE - n::DOUBLE)), 6) AS chi2
-        |FROM mn""".stripMargin,
-    "q390_gpd_tail_fit" ->
+        |FROM mn""".stripMargin),
+    Query("q390_gpd_tail_fit", q390GpdTailFit,
       """WITH v AS (SELECT value x FROM events),
         |th AS (SELECT quantile_cont(x, 0.9) u, count(*) nt FROM v),
         |exc AS (SELECT x - u e, u, nt FROM v CROSS JOIN th WHERE x > u),
@@ -373,5 +365,5 @@ object Curation45 {
         |  round(m, 6) AS mean_excess, round(xi, 6) AS xi, round(beta, 6) AS beta,
         |  round(u + beta / xi * (pow(lam / 0.0001, xi) - 1.0), 6)
         |    AS return_level_1e4
-        |FROM fit""".stripMargin)
+        |FROM fit""".stripMargin))
 }

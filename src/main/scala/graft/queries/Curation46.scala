@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 16: systems capacity modeling and experiment hygiene —
@@ -14,8 +15,6 @@ import graft.sources.Tables
   * ring migration cost, and A/B bucket-reuse carryover audits.
   */
 object Curation46 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q391: cache-TTL planning — replay the event stream as accesses to
     * a per-(user, type) cache and measure the hit rate a TTL would
@@ -172,17 +171,8 @@ object Curation46 {
         .as("carryover_interaction"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q391_cache_ttl_curve" -> q391CacheTtlCurve,
-    "q392_zonemap_skipping" -> q392ZonemapSkipping,
-    "q393_spc_control_chart" -> q393SpcControlChart,
-    "q394_consistent_hash_migration" -> q394ConsistentHashMigration,
-    "q395_bucket_carryover" -> q395BucketCarryover)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q391_cache_ttl_curve" ->
+  val queries: Seq[Query] = Seq(
+    Query("q391_cache_ttl_curve", q391CacheTtlCurve,
       """WITH gaps AS (SELECT epoch_us(ts) -
         |    lag(epoch_us(ts)) OVER (PARTITION BY user_id, event_type
         |      ORDER BY epoch_us(ts), event_id) gap
@@ -193,8 +183,8 @@ object Curation46 {
         |    THEN 1 ELSE 0 END)::BIGINT AS n_hits,
         |  round(sum(CASE WHEN gap IS NOT NULL AND gap <= ttl_s::BIGINT * 1000000
         |    THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE, 6) AS hit_rate
-        |FROM gaps CROSS JOIN ttls GROUP BY ttl_s ORDER BY ttl_s""".stripMargin,
-    "q392_zonemap_skipping" ->
+        |FROM gaps CROSS JOIN ttls GROUP BY ttl_s ORDER BY ttl_s""".stripMargin),
+    Query("q392_zonemap_skipping", q392ZonemapSkipping,
       """WITH rg AS (SELECT l_orderkey // 8192 rg,
         |    min(CAST(l_shipdate AS DATE)) lo, max(CAST(l_shipdate AS DATE)) hi
         |  FROM lineitem GROUP BY 1),
@@ -207,8 +197,8 @@ object Curation46 {
         |    AS n_scanned,
         |  round(1.0 - sum(CASE WHEN lo <= phi AND hi >= plo THEN 1 ELSE 0 END)::DOUBLE
         |    / count(*)::DOUBLE, 6) AS skip_frac
-        |FROM rg CROSS JOIN preds GROUP BY pid ORDER BY pid""".stripMargin,
-    "q393_spc_control_chart" ->
+        |FROM rg CROSS JOIN preds GROUP BY pid ORDER BY pid""".stripMargin),
+    Query("q393_spc_control_chart", q393SpcControlChart,
       """WITH daily AS (SELECT CAST(ts AS DATE) dy,
         |    CAST(sum(CAST(value AS DECIMAL(38,15))) AS DOUBLE)
         |      / count(*)::DOUBLE m
@@ -234,8 +224,8 @@ object Curation46 {
         |    w8 AS (ORDER BY dy ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
         |SELECT dy AS day, round(z, 6) AS z, r1::BIGINT AS r1, r2::BIGINT AS r2,
         |  r8::BIGINT AS r8
-        |FROM rules WHERE rn >= 8 ORDER BY day""".stripMargin,
-    "q394_consistent_hash_migration" -> {
+        |FROM rules WHERE rn >= 8 ORDER BY day""".stripMargin),
+    Query("q394_consistent_hash_migration", q394ConsistentHashMigration, {
       def ring(nodes: Int) =
         "[" + (for (n <- 1 to nodes; v <- 1 to 16) yield
           s"struct_pack(h := ('0x' || substr(md5('ring|$n|$v'), 1, 15))::BIGINT, " +
@@ -244,7 +234,7 @@ object Curation46 {
         s"""coalesce(list_min(list_filter($r, p -> p.h >= h)).node,
            |    list_min($r).node)""".stripMargin
       s"""WITH keys AS (SELECT c_custkey,
-         |    ${hashSql.format("'key|' || c_custkey")} h FROM customer),
+         |    ${mdHashSql("'key|' || c_custkey")} h FROM customer),
          |assigned AS (SELECT c_custkey,
          |    ${owner(ring(8))} n8,
          |    ${owner(ring(9))} n9
@@ -255,14 +245,14 @@ object Curation46 {
          |    / count(*)::DOUBLE, 6) AS moved_frac,
          |  round(1.0 / 9.0, 6) AS ideal_frac
          |FROM assigned""".stripMargin
-    },
-    "q395_bucket_carryover" ->
+    }),
+    Query("q395_bucket_carryover", q395BucketCarryover,
       s"""WITH u AS (SELECT user_id,
          |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) y
          |  FROM events GROUP BY user_id),
          |asg AS (SELECT
-         |    ${hashSql.format("'exp1|' || user_id")} % 2 a1,
-         |    ${hashSql.format("'exp2|' || user_id")} % 2 a2, y
+         |    ${mdHashSql("'exp1|' || user_id")} % 2 a1,
+         |    ${mdHashSql("'exp2|' || user_id")} % 2 a2, y
          |  FROM u),
          |cells AS (SELECT a1, a2, count(*) n, sum(y) cv FROM asg GROUP BY 1, 2),
          |rr AS (SELECT a1, a2, n, cv::DOUBLE / n::DOUBLE r FROM cells),
@@ -276,5 +266,5 @@ object Curation46 {
          |SELECT n_users::BIGINT AS n_users, round(r00, 6) AS r00,
          |  round(r01, 6) AS r01, round(r10, 6) AS r10, round(r11, 6) AS r11,
          |  round((r11 - r10) - (r01 - r00), 6) AS carryover_interaction
-         |FROM piv""".stripMargin)
+         |FROM piv""".stripMargin))
 }

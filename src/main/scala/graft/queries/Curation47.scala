@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 17: estimation and optimizer internals — the doubly
@@ -15,8 +16,6 @@ import graft.sources.Tables
   * DP that query optimizers build for cardinality estimation.
   */
 object Curation47 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q396: doubly robust (AIPW) estimation of the high-value-exposure
     * effect on conversion — the estimator that stays consistent if
@@ -203,17 +202,8 @@ object Curation47 {
       .orderBy("k")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q396_doubly_robust" -> q396DoublyRobust,
-    "q397_next_event_eval" -> q397NextEventEval,
-    "q398_priority_sampling" -> q398PrioritySampling,
-    "q399_sketch_merge_error" -> q399SketchMergeError,
-    "q400_voptimal_histogram" -> q400VoptimalHistogram)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q396_doubly_robust" ->
+  val queries: Seq[Query] = Seq(
+    Query("q396_doubly_robust", q396DoublyRobust,
       """WITH um AS (SELECT user_id % 4 seg, user_id,
         |    CAST(sum(CAST(value AS DECIMAL(38,15))) AS DOUBLE)
         |      / count(*)::DOUBLE mv,
@@ -242,8 +232,8 @@ object Curation47 {
         |  round(CAST(sum(CAST(psi AS DECIMAL(38,15))) AS DOUBLE) / count(*)::DOUBLE -
         |    CAST(sum(CAST(dg AS DECIMAL(38,15))) AS DOUBLE) / count(*)::DOUBLE, 6)
         |    AS model_gap
-        |FROM scored""".stripMargin,
-    "q397_next_event_eval" ->
+        |FROM scored""".stripMargin),
+    Query("q397_next_event_eval", q397NextEventEval,
       """WITH ev AS (SELECT user_id, ts, event_id, event_type, CAST(ts AS DATE) dy
         |  FROM events),
         |cut AS (SELECT min(dy) + 15 cut FROM ev),
@@ -266,11 +256,11 @@ object Curation47 {
         |    / count(*)::DOUBLE, 6) AS accuracy,
         |  round(sum(CASE WHEN nxt = maj THEN 1 ELSE 0 END)::DOUBLE
         |    / count(*)::DOUBLE, 6) AS baseline_accuracy
-        |FROM test""".stripMargin,
-    "q398_priority_sampling" ->
+        |FROM test""".stripMargin),
+    Query("q398_priority_sampling", q398PrioritySampling,
       s"""WITH pop AS (SELECT c_custkey, c_acctbal + 1000.0 w FROM customer),
          |pri AS (SELECT c_custkey, w,
-         |    w / (${hashSql.format("'ps|' || c_custkey")}::DOUBLE
+         |    w / (${mdHashSql("'ps|' || c_custkey")}::DOUBLE
          |      / 1152921504606846976.0) q
          |  FROM pop),
          |topk1 AS (SELECT * FROM pri ORDER BY q DESC, c_custkey LIMIT 201),
@@ -282,13 +272,13 @@ object Curation47 {
          |    CAST(sum(CAST(w AS DECIMAL(38,15))) AS DOUBLE) tw FROM pop)
          |SELECT n::BIGINT AS n, k::BIGINT AS k, round(est, 6) AS est_total,
          |  round(tw, 6) AS true_total, round((est - tw) / tw, 6) AS rel_err
-         |FROM est CROSS JOIN truth""".stripMargin,
-    "q399_sketch_merge_error" ->
+         |FROM est CROSS JOIN truth""".stripMargin),
+    Query("q399_sketch_merge_error", q399SketchMergeError,
       """SELECT event_type, count(*)::BIGINT AS n,
         |  round(quantile_cont(value, 0.99), 6) AS exact_p99,
         |  TRUE AS within_5pct
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q400_voptimal_histogram" -> {
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q400_voptimal_histogram", q400VoptimalHistogram, {
       // unrolled k = 2..6 DP rounds over the bounded 20-bin grid; sse
       // uses the same prefix-moment closed form as the engine
       val rounds = (2 to 6).map { k =>
@@ -326,5 +316,5 @@ object Curation47 {
         |SELECT k::BIGINT AS k, round(sse, 6) AS sse_opt FROM (
         |$sel
         |) ORDER BY k""".stripMargin
-    })
+    }))
 }

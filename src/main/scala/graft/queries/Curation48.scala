@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 18: forecasting hierarchies, absorbing chains, GBDT
@@ -15,8 +16,6 @@ import graft.sources.Tables
   * (the LightGBM kernel), and the energy-distance two-sample test.
   */
 object Curation48 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q401: hierarchical forecast reconciliation — nation series roll
     * up to regions, and the classic question is whether to forecast
@@ -204,7 +203,6 @@ object Curation48 {
     * metric-space (non-kernel) statistic.
     */
   private val q405EnergyDistance: Q = (s, d) => {
-    graft.functions.GraftRegistry.register(s)
     import graft.functions.GraftFunctions.{dotNative, normSqNative}
     val wsamp = Window.partitionBy("lbl").orderBy(mdHash(col("vec_id")), col("vec_id"))
     val samp = Tables.embeddings(s, d)
@@ -240,17 +238,8 @@ object Curation48 {
     graft.operators.Materialize.spillRelease(out, samp)
   }
 
-  val defs: Map[String, Q] = Map(
-    "q401_hierarchical_reconcile" -> q401HierarchicalReconcile,
-    "q402_absorbing_time" -> q402AbsorbingTime,
-    "q403_mase_backtest" -> q403MaseBacktest,
-    "q404_stump_split_finding" -> q404StumpSplitFinding,
-    "q405_energy_distance" -> q405EnergyDistance)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q401_hierarchical_reconcile" ->
+  val queries: Seq[Query] = Seq(
+    Query("q401_hierarchical_reconcile", q401HierarchicalReconcile,
       """WITH nr AS (SELECT c.c_custkey, c.c_nationkey nk, n.n_regionkey rk
         |  FROM customer c JOIN nation n ON n.n_nationkey = c.c_nationkey),
         |nm AS (SELECT nr.nk, nr.rk,
@@ -279,8 +268,8 @@ object Curation48 {
         |    / count(*)::DOUBLE, 6) AS mae_bottom_up,
         |  round(CAST(sum(CAST(etd AS DECIMAL(38,15))) AS DOUBLE)
         |    / count(*)::DOUBLE, 6) AS mae_top_down
-        |FROM scored GROUP BY rk ORDER BY rk""".stripMargin,
-    "q402_absorbing_time" -> {
+        |FROM scored GROUP BY rk ORDER BY rk""".stripMargin),
+    Query("q402_absorbing_time", q402AbsorbingTime, {
       val tRounds = (2 to 15).map { i =>
         s"""t$i AS (SELECT ps.src state,
            |    CAST(sum(CAST(ps.p * (CASE WHEN ps.dst IN ('CONV', 'NULL') THEN 0.0
@@ -326,8 +315,8 @@ object Curation48 {
         |SELECT t15.state, round(v15.v, 6) AS p_conv,
         |  round(t15.v, 6) AS expected_steps
         |FROM t15 JOIN v15 USING (state) ORDER BY state""".stripMargin
-    },
-    "q403_mase_backtest" ->
+    }),
+    Query("q403_mase_backtest", q403MaseBacktest,
       """WITH daily AS (SELECT CAST(ts AS DATE) dy, count(*) y FROM events
         |  WHERE event_type = 'purchase' GROUP BY 1),
         |lagged AS (SELECT dy, y, lag(y, 7) OVER (ORDER BY dy) y7,
@@ -345,8 +334,8 @@ object Curation48 {
         |SELECT n_train::BIGINT AS n_train, n_test::BIGINT AS n_test,
         |  round(mae, 6) AS mae, round(scale, 6) AS scale,
         |  round(mae / scale, 6) AS mase
-        |FROM ma CROSS JOIN sc""".stripMargin,
-    "q404_stump_split_finding" ->
+        |FROM ma CROSS JOIN sc""".stripMargin),
+    Query("q404_stump_split_finding", q404StumpSplitFinding,
       """WITH ev AS (SELECT value,
         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END y FROM events),
         |b AS (SELECT min(value) lo, max(value) hi FROM ev),
@@ -369,12 +358,12 @@ object Curation48 {
         |SELECT bin AS split_bin, cn::BIGINT AS n_left,
         |  round(pl, 6) AS rate_left, round(pr, 6) AS rate_right,
         |  round(gain * 1000, 6) AS gini_gain_x1000
-        |FROM gains ORDER BY gain DESC, split_bin LIMIT 3""".stripMargin,
-    "q405_energy_distance" ->
+        |FROM gains ORDER BY gain DESC, split_bin LIMIT 3""".stripMargin),
+    Query("q405_energy_distance", q405EnergyDistance,
       s"""WITH samp AS (SELECT vec_id, label % 2 lbl, embedding v
          |  FROM (SELECT vec_id, label, embedding,
          |      row_number() OVER (PARTITION BY label % 2
-         |        ORDER BY ${hashSql.format("vec_id::VARCHAR")}, vec_id) rn
+         |        ORDER BY ${mdHashSql("vec_id::VARCHAR")}, vec_id) rn
          |    FROM embeddings) WHERE rn <= 100),
          |dxy AS (SELECT count(*) np,
          |    CAST(sum(CAST(sqrt(greatest(0.0,
@@ -399,5 +388,5 @@ object Curation48 {
          |  round(dyy.sd / dyy.np::DOUBLE, 6) AS mean_within_1,
          |  round(2.0 * dxy.sd / dxy.np::DOUBLE - dxx.sd / dxx.np::DOUBLE -
          |    dyy.sd / dyy.np::DOUBLE, 6) AS energy_dist
-         |FROM dxy CROSS JOIN dxx CROSS JOIN dyy""".stripMargin)
+         |FROM dxy CROSS JOIN dxx CROSS JOIN dyy""".stripMargin))
 }

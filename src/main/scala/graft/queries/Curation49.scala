@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-8 wave 19: sampling through joins, experiment planning, and
@@ -15,8 +16,6 @@ import graft.sources.Tables
   * demographic-parity threshold search.
   */
 object Curation49 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q406: universe sampling through a join — the reason engines hash
     * the JOIN KEY: sampling both sides by the same seeded key hash at
@@ -186,19 +185,10 @@ object Curation49 {
         round(col("gap"), 6).as("parity_gap"), round(col("overall"), 6).as("overall"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q406_universe_join_sample" -> q406UniverseJoinSample,
-    "q407_power_analysis" -> q407PowerAnalysis,
-    "q408_eb_shrinkage" -> q408EbShrinkage,
-    "q409_woe_binning" -> q409WoeBinning,
-    "q410_fair_thresholds" -> q410FairThresholds)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q406_universe_join_sample" -> {
+  val queries: Seq[Query] = Seq(
+    Query("q406_universe_join_sample", q406UniverseJoinSample, {
       def u(c: String, seed: String) =
-        s"${hashSql.format(s"'$seed|' || $c")}::DOUBLE / 1152921504606846976.0"
+        s"${mdHashSql(s"'$seed|' || $c")}::DOUBLE / 1152921504606846976.0"
       s"""WITH li AS (SELECT l_orderkey, l_extendedprice FROM lineitem),
          |o AS (SELECT o_orderkey l_orderkey FROM orders),
          |truth AS (SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(38,15)))
@@ -220,8 +210,8 @@ object Curation49 {
          |  round(ie / 1000000.0, 6) AS indep_est_m,
          |  round((ie - t) / t, 6) AS indep_rel_err
          |FROM truth CROSS JOIN ue CROSS JOIN ie""".stripMargin
-    },
-    "q407_power_analysis" ->
+    }),
+    Query("q407_power_analysis", q407PowerAnalysis,
       """WITH u AS (SELECT user_id % 2 arm, user_id,
         |    max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) y
         |  FROM events GROUP BY 1, 2),
@@ -236,8 +226,8 @@ object Curation49 {
         |  FROM st)
         |SELECT n0::BIGINT AS n0, n1::BIGINT AS n1, p_pool, n_required_per_arm,
         |  least(n0, n1) >= n_required_per_arm AS is_powered
-        |FROM req""".stripMargin,
-    "q408_eb_shrinkage" ->
+        |FROM req""".stripMargin),
+    Query("q408_eb_shrinkage", q408EbShrinkage,
       """WITH late AS (SELECT l.l_suppkey,
         |    CASE WHEN date_diff('day', CAST(o.o_orderdate AS DATE),
         |      CAST(l.l_shipdate AS DATE)) > 90 THEN 1 ELSE 0 END lt
@@ -257,8 +247,8 @@ object Curation49 {
         |  round((x::DOUBLE + alpha) / (n::DOUBLE + alpha + beta), 6)
         |    AS shrunken_rate
         |FROM per CROSS JOIN prior
-        |ORDER BY shrunken_rate DESC, suppkey LIMIT 10""".stripMargin,
-    "q409_woe_binning" ->
+        |ORDER BY shrunken_rate DESC, suppkey LIMIT 10""".stripMargin),
+    Query("q409_woe_binning", q409WoeBinning,
       """WITH ev AS (SELECT value,
         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END y FROM events),
         |b AS (SELECT min(value) lo, max(value) hi FROM ev),
@@ -286,8 +276,8 @@ object Curation49 {
         |  round(ln(ps / ns), 6) AS woe_raw,
         |  round(ln((isoc / (1.0 - isoc)) / (tp::DOUBLE / tn::DOUBLE)), 6) AS woe_iso,
         |  round((ps - ns) * ln(ps / ns) * 1000, 6) AS iv_contrib_x1000
-        |FROM adj ORDER BY bin""".stripMargin,
-    "q410_fair_thresholds" ->
+        |FROM adj ORDER BY bin""".stripMargin),
+    Query("q410_fair_thresholds", q410FairThresholds,
       """WITH u AS (SELECT user_id % 2 g, user_id, count(*) sc
         |  FROM events GROUP BY 1, 2),
         |b AS (SELECT min(sc) lo, max(sc) hi FROM u),
@@ -307,5 +297,5 @@ object Curation49 {
         |SELECT ta AS threshold_bin_g0, tb AS threshold_bin_g1,
         |  round(ra, 6) AS rate_g0, round(rb, 6) AS rate_g1,
         |  round(gap, 6) AS parity_gap, round(overall, 6) AS overall
-        |FROM combos ORDER BY gap, ta, tb LIMIT 1""".stripMargin)
+        |FROM combos ORDER BY gap, ta, tb LIMIT 1""".stripMargin))
 }

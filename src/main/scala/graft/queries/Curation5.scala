@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.operators.Ranking
 import graft.sources.Tables
 
@@ -238,17 +238,8 @@ object Curation5 {
       .limit(40)
       .select(round(col("pos"), 6).as("pos"), col("lang"), col("doc_id"), col("rn"))
 
-  val defs: Map[String, Q] = Map(
-    "q180_url_curation" -> q180UrlCuration,
-    "q181_block_packing" -> q181BlockPacking,
-    "q182_shard_balance" -> q182ShardBalance,
-    "q183_pq_search" -> q183PqSearch,
-    "q184_preference_pairs" -> q184PreferencePairs,
-    "q185_chat_render" -> q185ChatRender,
-    "q186_interleave_schedule" -> q186InterleaveSchedule)
-
-  val oracles: Map[String, String] = Map(
-    "q180_url_curation" ->
+  val queries: Seq[Query] = Seq(
+    Query("q180_url_curation", q180UrlCuration,
       """WITH u AS (SELECT doc_id, n_chars,
         |    'HTTPS://' ||
         |    CASE WHEN doc_id % 3 = 0 THEN 'WWW.' WHEN doc_id % 3 = 1 THEN 'cdn.' ELSE '' END ||
@@ -290,8 +281,8 @@ object Curation5 {
         |  CAST(count(*) FILTER (WHERE rn <= 3) AS BIGINT) AS n_kept,
         |  CAST(sum(CASE WHEN rn <= 3 THEN ('0x' || substr(md5(nurl), 1, 15))::BIGINT END) AS BIGINT) AS kept_hash_sum,
         |  min(CASE WHEN rn <= 3 THEN nurl END) AS first_url
-        |FROM r GROUP BY domain ORDER BY domain""".stripMargin,
-    "q181_block_packing" ->
+        |FROM r GROUP BY domain ORDER BY domain""".stripMargin),
+    Query("q181_block_packing", q181BlockPacking,
       """WITH t AS (SELECT source, doc_id,
         |    list_append(string_split(text, ' '), '<eos>') toks FROM documents),
         |o AS (SELECT source, doc_id, toks, len(toks) l,
@@ -302,8 +293,8 @@ object Curation5 {
         |SELECT source, CAST(gpos // 128 AS BIGINT) AS block, count(*) AS n_toks,
         |  ('0x' || substr(md5(string_agg(tok, ' ' ORDER BY gpos)), 1, 15))::BIGINT AS block_hash
         |FROM e GROUP BY source, CAST(gpos // 128 AS BIGINT)
-        |ORDER BY source, block""".stripMargin,
-    "q182_shard_balance" ->
+        |ORDER BY source, block""".stripMargin),
+    Query("q182_shard_balance", q182ShardBalance,
       """WITH t AS (SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) n_tok FROM documents),
         |r AS (SELECT doc_id, n_tok,
@@ -311,8 +302,8 @@ object Curation5 {
         |SELECT CAST((rnk - 1) % 8 AS BIGINT) AS shard, count(*) AS n_docs,
         |  CAST(sum(n_tok) AS BIGINT) AS tok_sum,
         |  CAST(sum(('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 1000000007) AS BIGINT) AS id_hash_sum
-        |FROM r GROUP BY CAST((rnk - 1) % 8 AS BIGINT) ORDER BY shard""".stripMargin,
-    "q183_pq_search" ->
+        |FROM r GROUP BY CAST((rnk - 1) % 8 AS BIGINT) ORDER BY shard""".stripMargin),
+    Query("q183_pq_search", q183PqSearch,
       """WITH v AS (SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) e FROM embeddings),
         |sub AS (SELECT vec_id, s, e[s*8+1 : s*8+8] AS sv
@@ -335,8 +326,8 @@ object Curation5 {
         |  row_number() OVER (PARTITION BY q_id ORDER BY dist, x_id) rnk FROM pd)
         |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, x_id,
         |  round(CAST(dist AS DOUBLE), 6) AS dist
-        |FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin,
-    "q184_preference_pairs" ->
+        |FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin),
+    Query("q184_preference_pairs", q184PreferencePairs,
       """WITH a AS (SELECT user_id, event_type, value, event_id,
         |    row_number() OVER (PARTITION BY user_id, event_type
         |      ORDER BY value DESC, event_id DESC) rh,
@@ -349,8 +340,8 @@ object Curation5 {
         |  round(hv - lv, 6) AS margin
         |FROM h JOIN l USING (user_id, event_type)
         |WHERE c >= 2 AND hv - lv >= 100.0
-        |ORDER BY user_id, event_type""".stripMargin,
-    "q185_chat_render" ->
+        |ORDER BY user_id, event_type""".stripMargin),
+    Query("q185_chat_render", q185ChatRender,
       """WITH r AS (SELECT user_id, event_id, event_type,
         |    CAST(floor(value * 100) AS BIGINT) cents,
         |    row_number() OVER (PARTITION BY user_id ORDER BY event_id) rn,
@@ -364,8 +355,8 @@ object Curation5 {
         |  substr(string_agg(
         |    CASE WHEN rn % 2 = 1 THEN '<|user|>' ELSE '<|assistant|>' END
         |      || event_type || '#' || cents, ' ' ORDER BY rn), 1, 40) AS head
-        |FROM k GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "q186_interleave_schedule" ->
+        |FROM k GROUP BY user_id ORDER BY user_id""".stripMargin),
+    Query("q186_interleave_schedule", q186InterleaveSchedule,
       """WITH t AS (SELECT doc_id, lang,
         |    ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT h FROM documents),
         |r AS (SELECT doc_id, lang,
@@ -374,5 +365,5 @@ object Curation5 {
         |SELECT round((CAST(rn AS DOUBLE) - 0.5) / cnt, 6) AS pos, lang, doc_id,
         |  CAST(rn AS BIGINT) AS rn
         |FROM r ORDER BY (CAST(rn AS DOUBLE) - 0.5) / cnt, lang, doc_id
-        |LIMIT 40""".stripMargin)
+        |LIMIT 40""".stripMargin))
 }

@@ -2,10 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.GraftFunctions.{dotNative, normSqNative}
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.{dec, dotNative, normSqNative}
 import graft.sources.Tables
 
 /** Round-9 wave 20: streaming STATE LIFECYCLE across a real
@@ -15,8 +15,6 @@ import graft.sources.Tables
   * multilingual mixture epochs.
   */
 object Curation50 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** Write `df` as one parquet file named `name` into `inDir` (the
     * streaming-source batch-file convention of [[Curation31]]): older
@@ -208,7 +206,6 @@ object Curation50 {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast(DoubleType)).as("v"))
-    graft.functions.GraftRegistry.register(s)
     val scaled = e.select(col("vec_id"), col("v"),
         (aggregate(col("v"), lit(0.0), (a, x) => greatest(a, abs(x))) / 127.0)
           .as("sc"))
@@ -254,20 +251,13 @@ object Curation50 {
       .orderBy("lang")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q411_restart_watermark" -> q411RestartWatermark,
-    "q412_restart_dedup" -> q412RestartDedup,
-    "q413_chao1_vocab" -> q413Chao1Vocab,
-    "q414_int8_quant_audit" -> q414Int8QuantAudit,
-    "q415_mixture_epochs" -> q415MixtureEpochs)
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // identical acceptance rule to q328: a window survives iff it ends
     // after the restored watermark max − 72 h. n_emits models the
     // exactly-once sink: one emission per run that touched the key —
     // run 1 = keys of the newest 24 h (k1), run 2 = keys of the rest
     // that pass the restored watermark (k2), run 3 = none.
-    "q411_restart_watermark" ->
+    Query("q411_restart_watermark", q411RestartWatermark,
       """WITH mx AS (SELECT max(ts) m FROM events),
         |k1 AS (SELECT DISTINCT date_trunc('hour', ts) w_start, event_type
         |  FROM events, mx WHERE ts > m - INTERVAL 24 HOUR),
@@ -287,14 +277,14 @@ object Curation50 {
         |FROM fin f
         |LEFT JOIN k1 ON f.w_start = k1.w_start AND f.event_type = k1.event_type
         |LEFT JOIN k2 ON f.w_start = k2.w_start AND f.event_type = k2.event_type
-        |ORDER BY w_start, event_type""".stripMargin,
+        |ORDER BY w_start, event_type""".stripMargin),
     // every event id emitted exactly once across both runs — the batch
     // distinct twin; n_events = n_distinct is the no-reemission claim
-    "q412_restart_dedup" ->
+    Query("q412_restart_dedup", q412RestartDedup,
       """SELECT event_type, count(*)::BIGINT AS n_events,
         |  count(DISTINCT event_id)::BIGINT AS n_distinct
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-    "q413_chao1_vocab" ->
+        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin),
+    Query("q413_chao1_vocab", q413Chao1Vocab,
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) w FROM documents),
         |counts AS (SELECT w, count(*) c FROM tok WHERE w <> '' GROUP BY w),
         |cc AS (SELECT count(*) d, sum(c) n_tokens,
@@ -306,8 +296,8 @@ object Curation50 {
         |  round(d::DOUBLE + f1::DOUBLE * (f1::DOUBLE - 1.0) /
         |    (2.0 * (f2::DOUBLE + 1.0)), 6) AS chao1,
         |  round(1.0 - f1::DOUBLE / n_tokens::DOUBLE, 6) AS gt_coverage
-        |FROM cc""".stripMargin,
-    "q414_int8_quant_audit" ->
+        |FROM cc""".stripMargin),
+    Query("q414_int8_quant_audit", q414Int8QuantAudit,
       """WITH e AS (SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM embeddings),
         |sc AS (SELECT vec_id, v,
@@ -328,8 +318,8 @@ object Curation50 {
         |  round(CAST(sum(CAST(cos AS DECIMAL(38,15))) AS DOUBLE) /
         |    count(*)::DOUBLE, 6) AS mean_cos,
         |  round(min(cos), 6) AS worst_cos
-        |FROM per""".stripMargin,
-    "q415_mixture_epochs" ->
+        |FROM per""".stripMargin),
+    Query("q415_mixture_epochs", q415MixtureEpochs,
       """WITH t AS (SELECT lang,
         |    sum(len(string_split(text, ' '))::BIGINT) tokens
         |  FROM documents GROUP BY lang),
@@ -342,5 +332,5 @@ object Curation50 {
         |    tokens::DOUBLE, 6) AS epochs,
         |  2.0 * total::DOUBLE * (sqrt(tokens::DOUBLE) / sw) /
         |    tokens::DOUBLE > 4.0 AS over_repeated
-        |FROM t CROSS JOIN tot ORDER BY lang""".stripMargin)
+        |FROM t CROSS JOIN tot ORDER BY lang""".stripMargin))
 }

@@ -3,10 +3,11 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-9 wave 21: corpus statistics and training-prep planning —
@@ -16,8 +17,6 @@ import graft.sources.Tables
   * splits, and the word2vec-style negative-sampling table.
   */
 object Curation51 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q416: best-of-n sampling yield curve — what quality does
     * rejection sampling buy? For the empirical quality distribution,
@@ -154,16 +153,8 @@ object Curation51 {
       .orderBy(col("c").desc, col("w"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q416_best_of_n_yield" -> q416BestOfNYield,
-    "q417_restart_sessions" -> q417RestartSessions,
-    "q418_covariate_shift" -> q418CovariateShift,
-    "q419_neg_sampling" -> q419NegSampling)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q416_best_of_n_yield" -> {
+  val queries: Seq[Query] = Seq(
+    Query("q416_best_of_n_yield", q416BestOfNYield, {
       val qs = Curation.qScore
       s"""WITH q AS (SELECT doc_id,
         |    $qs q
@@ -179,7 +170,7 @@ object Curation51 {
         |  round(CAST(sum(CAST(term AS DECIMAL(38,15))) AS DOUBLE), 6)
         |    AS expected_max_q
         |FROM terms GROUP BY n ORDER BY n""".stripMargin
-    },
+    }),
     // batch gap sessionization; a session is emitted iff the final
     // watermark (max ts − 24 h) passed its end (last event + gap).
     // Break on gap >= 1 hour, NOT >: session_window's range is
@@ -187,7 +178,7 @@ object Curation51 {
     // predecessor falls outside and starts a NEW session (the q82
     // convention at TimeWindows.scala; a `>` oracle only agreed with
     // Spark because no exact-gap pair existed in the test data).
-    "q417_restart_sessions" ->
+    Query("q417_restart_sessions", q417RestartSessions,
       """WITH mx AS (SELECT max(ts) m FROM events),
         |marked AS (SELECT user_id, ts,
         |    CASE WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
@@ -203,9 +194,9 @@ object Curation51 {
         |SELECT s_start, user_id, n_events::BIGINT AS n_events
         |FROM agg CROSS JOIN mx
         |WHERE s_end + INTERVAL 1 HOUR <= m - INTERVAL 24 HOUR
-        |ORDER BY s_start, user_id""".stripMargin,
-    "q418_covariate_shift" -> {
-      val h = hashSql.format("'covshift|' || doc_id::VARCHAR")
+        |ORDER BY s_start, user_id""".stripMargin),
+    Query("q418_covariate_shift", q418CovariateShift, {
+      val h = mdHashSql("'covshift|' || doc_id::VARCHAR")
       s"""WITH docs AS (SELECT doc_id,
         |    len(string_split(text, ' '))::BIGINT len,
         |    len(list_distinct(string_split(text, ' ')))::DOUBLE /
@@ -231,8 +222,8 @@ object Curation51 {
         |    CAST(sum(CAST(w.w AS DECIMAL(38,15))) AS DOUBLE), 6) AS weighted_ttr,
         |  round(max(w.w), 6) AS max_bin_weight
         |FROM binned JOIN w USING (bin) WHERE NOT is_train""".stripMargin
-    },
-    "q419_neg_sampling" ->
+    }),
+    Query("q419_neg_sampling", q419NegSampling,
       """WITH tok AS (SELECT unnest(string_split(text, ' ')) w FROM documents),
         |counts AS (SELECT w, count(*) c FROM tok WHERE w <> '' GROUP BY w),
         |tot AS (SELECT CAST(sum(CAST(pow(c::DOUBLE, 0.75) AS DECIMAL(38,15)))
@@ -241,5 +232,5 @@ object Curation51 {
         |p AS (SELECT w, c, pow(c::DOUBLE, 0.75) / z p FROM top CROSS JOIN tot)
         |SELECT w, c::BIGINT AS c, round(p * 1000, 6) AS p_x1000,
         |  round(sum(p) OVER (ORDER BY c DESC, w) * 1000, 6) AS cum_p_x1000
-        |FROM p ORDER BY c DESC, w""".stripMargin)
+        |FROM p ORDER BY c DESC, w""".stripMargin))
 }

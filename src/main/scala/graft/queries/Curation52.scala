@@ -2,10 +2,11 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.dec
+import graft.functions.TextFunctions.{mdHash, mdHashSql}
 import graft.sources.Tables
 
 /** Round-9 wave 22: evaluation and index-planning statistics — DeLong
@@ -13,8 +14,6 @@ import graft.sources.Tables
   * and O'Brien–Fleming group-sequential monitoring boundaries.
   */
 object Curation52 {
-
-  private def dec(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 15))
 
   /** q420: DeLong AUC variance and 95% CI — the number a model-gate
     * review needs NEXT to the AUC (q157 reports the point estimate).
@@ -168,15 +167,8 @@ object Curation52 {
       .orderBy("look")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q420_delong_auc_ci" -> q420DelongAucCi,
-    "q421_lsh_planner" -> q421LshPlanner,
-    "q422_obf_sequential" -> q422ObfSequential)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q420_delong_auc_ci" ->
+  val queries: Seq[Query] = Seq(
+    Query("q420_delong_auc_ci", q420DelongAucCi,
       """WITH scored AS (SELECT CASE WHEN label >= 5 THEN 1 ELSE 0 END y,
         |    round(embedding[1]::DOUBLE, 3) sc FROM embeddings),
         |bys AS (SELECT sc, sum(y) p, count(*) - sum(y) q
@@ -206,9 +198,9 @@ object Curation52 {
         |  round(auc, 6) AS auc, round(sqrt(varAuc), 6) AS se,
         |  round(auc - 1.959964 * sqrt(varAuc), 6) AS ci_lo,
         |  round(auc + 1.959964 * sqrt(varAuc), 6) AS ci_hi
-        |FROM res""".stripMargin,
-    "q421_lsh_planner" -> {
-      val h = hashSql.format("'lshplan|' || doc_id::VARCHAR")
+        |FROM res""".stripMargin),
+    Query("q421_lsh_planner", q421LshPlanner, {
+      val h = mdHashSql("'lshplan|' || doc_id::VARCHAR")
       s"""WITH samp AS (SELECT doc_id, string_split(text, ' ') w FROM documents
         |  ORDER BY $h, doc_id LIMIT 100),
         |sh AS (SELECT doc_id, list_distinct(
@@ -242,8 +234,8 @@ object Curation52 {
         |  round(CAST(sum(CAST(fn + fp AS DECIMAL(38,15))) AS DOUBLE) * 1000, 6)
         |    AS err_x1000
         |FROM err GROUP BY b, r ORDER BY err_x1000, b, r""".stripMargin
-    },
-    "q422_obf_sequential" ->
+    }),
+    Query("q422_obf_sequential", q422ObfSequential,
       """WITH d0 AS (SELECT min(CAST(ts AS DATE)) d0 FROM events),
         |byday AS (SELECT user_id % 2 arm,
         |    date_diff('day', d0, CAST(ts AS DATE)) dy,
@@ -269,5 +261,5 @@ object Curation52 {
         |SELECT look::INT AS look, n1::BIGINT AS n1, n0::BIGINT AS n0,
         |  round(z, 6) AS z, round(bound, 6) AS obf_bound,
         |  abs(z) >= bound AS crossed
-        |FROM z ORDER BY look""".stripMargin)
+        |FROM z ORDER BY look""".stripMargin))
 }

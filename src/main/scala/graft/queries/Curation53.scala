@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-10 wave 23: streaming state EVICTION (the complement of
@@ -70,13 +70,10 @@ object Curation53 {
       .orderBy("src")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q423_state_eviction" -> q423StateEviction)
-
-  val oracles: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // the b3 group EQUALS b1 (eviction -> re-emission); b2b is absent
     // (still inside its horizon -> suppressed)
-    "q423_state_eviction" ->
+    Query("q423_state_eviction", q423StateEviction,
       """WITH mm AS (SELECT min(ts) a, max(ts) b FROM events),
         |b1 AS (SELECT event_id FROM events, mm WHERE ts <= a + INTERVAL 24 HOUR),
         |b2 AS (SELECT event_id FROM events, mm WHERE ts > b - INTERVAL 24 HOUR)
@@ -87,5 +84,5 @@ object Curation53 {
         |    count(DISTINCT event_id)::BIGINT FROM b2
         |  UNION ALL SELECT 'b3', count(*)::BIGINT,
         |    count(DISTINCT event_id)::BIGINT FROM b1)
-        |ORDER BY src""".stripMargin)
+        |ORDER BY src""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.TextFunctions.mdHash
 import graft.sources.Tables
 
@@ -167,14 +167,8 @@ object Curation54 {
         round(col("u").cast(DoubleType) / col("i").cast(DoubleType), 6).as("beta_step"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q424_iv_2sls" -> q424Iv2sls,
-    "q425_template_dedup" -> q425TemplateDedup,
-    "q426_sort_rle_advisor" -> q426SortRleAdvisor,
-    "q427_cox_ph_step" -> q427CoxPhStep)
-
-  val oracles: Map[String, String] = Map(
-    "q424_iv_2sls" ->
+  val queries: Seq[Query] = Seq(
+    Query("q424_iv_2sls", q424Iv2sls,
       """WITH j AS (
         |  SELECT c_mktsegment AS segment,
         |    CASE WHEN c_custkey % 7 < 3 THEN 1 ELSE 0 END AS z,
@@ -193,8 +187,8 @@ object Curation54 {
         |  round((n-2) * (pow(szx - sz*sx/(n*1.0), 2) / ((sz*(n-sz)/(n*1.0)) * (sx*(n-sx)/(n*1.0))))
         |    / (1.0 - pow(szx - sz*sx/(n*1.0), 2) / ((sz*(n-sz)/(n*1.0)) * (sx*(n-sx)/(n*1.0)))), 6) AS first_stage_f,
         |  round((szy::DOUBLE - sz*sy::DOUBLE/(n*1.0)) / (szx - sz*sx/(n*1.0)), 6) AS beta_iv
-        |FROM m ORDER BY segment""".stripMargin,
-    "q425_template_dedup" ->
+        |FROM m ORDER BY segment""".stripMargin),
+    Query("q425_template_dedup", q425TemplateDedup,
       """WITH toks AS (
         |  SELECT doc_id, source, list_transform(str_split(lower(text), ' '),
         |    w -> CASE WHEN w IN ('a','the','and','of','to') THEN w ELSE '_' END) AS tl
@@ -207,8 +201,8 @@ object Curation54 {
         |  count(*) AS n_docs, count(DISTINCT source) AS n_sources,
         |  min(doc_id) AS exemplar_doc
         |FROM tpl GROUP BY 1
-        |ORDER BY n_docs DESC, template_hash LIMIT 20""".stripMargin,
-    "q426_sort_rle_advisor" ->
+        |ORDER BY n_docs DESC, template_hash LIMIT 20""".stripMargin),
+    Query("q426_sort_rle_advisor", q426SortRleAdvisor,
       """WITH li AS (
         |  SELECT date_trunc('month', l_shipdate) AS m, l_partkey, l_suppkey,
         |    l_returnflag, l_orderkey, l_linenumber FROM lineitem),
@@ -233,8 +227,8 @@ object Curation54 {
         |SELECT candidate, sum(rp)::BIGINT AS runs_partkey,
         |  sum(rs)::BIGINT AS runs_suppkey, sum(rf)::BIGINT AS runs_flag,
         |  (sum(rp) + sum(rs) + sum(rf))::BIGINT AS total_runs
-        |FROM runs GROUP BY candidate ORDER BY total_runs, candidate""".stripMargin,
-    "q427_cox_ph_step" ->
+        |FROM runs GROUP BY candidate ORDER BY total_runs, candidate""".stripMargin),
+    Query("q427_cox_ph_step", q427CoxPhStep,
       """WITH t0 AS (SELECT user_id, min(ts) AS t0 FROM events
         |    WHERE event_type = 'signup' GROUP BY user_id),
         |fe AS (SELECT t0.user_id, t0.t0, min(e.ts) AS te
@@ -261,5 +255,5 @@ object Curation54 {
         |  round(CAST(sum(u_t) AS DOUBLE), 6) AS score_u,
         |  round(CAST(sum(i_t) AS DOUBLE), 6) AS info_i,
         |  round(CAST(sum(u_t) AS DOUBLE) / CAST(sum(i_t) AS DOUBLE), 6) AS beta_step
-        |FROM terms, nu GROUP BY n_users, n_events""".stripMargin)
+        |FROM terms, nu GROUP BY n_users, n_events""".stripMargin))
 }

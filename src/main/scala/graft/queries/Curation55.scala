@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.operators.{Similarity, TopK}
 import graft.sources.Tables
 
@@ -137,13 +137,8 @@ object Curation55 {
       .orderBy(col("stage"), col("mean_reward").desc, col("arm"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q428_binary_quant_recall" -> q428BinaryQuantRecall,
-    "q429_croston" -> q429Croston,
-    "q430_successive_halving" -> q430SuccessiveHalving)
-
-  val oracles: Map[String, String] = Map(
-    "q428_binary_quant_recall" ->
+  val queries: Seq[Query] = Seq(
+    Query("q428_binary_quant_recall", q428BinaryQuantRecall,
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
         |packs AS (SELECT vec_id,
@@ -170,8 +165,8 @@ object Curation55 {
         |SELECT x.qid, count(r.nid)::BIGINT AS n_hits,
         |  round(count(r.nid) / 5.0, 6) AS recall_at_5
         |FROM exact x LEFT JOIN rer r ON r.qid = x.qid AND r.nid = x.nid
-        |GROUP BY x.qid ORDER BY x.qid""".stripMargin,
-    "q429_croston" ->
+        |GROUP BY x.qid ORDER BY x.qid""".stripMargin),
+    Query("q429_croston", q429Croston,
       """WITH dd AS (SELECT event_type, ts::DATE AS day,
         |    sum(CAST(round(value, 2) AS DECIMAL(18,2))) AS z
         |  FROM events WHERE value >= 250.0 GROUP BY event_type, ts::DATE),
@@ -190,8 +185,8 @@ object Curation55 {
         |  round(CAST(sum(zt) AS DOUBLE), 6) AS z_hat,
         |  round(CAST(sum(gt) AS DOUBLE), 6) AS p_hat,
         |  round(CAST(sum(zt) AS DOUBLE) / CAST(sum(gt) AS DOUBLE), 6) AS croston_forecast
-        |FROM terms GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q430_successive_halving" ->
+        |FROM terms GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q430_successive_halving", q430SuccessiveHalving,
       """WITH ev AS (SELECT event_id % 16 AS arm, ts, event_id,
         |    CAST(round(value, 2) AS DECIMAL(18,2)) AS v FROM events),
         |rk AS (SELECT arm, v, row_number() OVER (PARTITION BY arm
@@ -219,5 +214,5 @@ object Curation55 {
         |    CASE WHEN rank3 <= 2 THEN 1 ELSE 0 END FROM r3
         |  UNION ALL SELECT 4, arm, n4::BIGINT, m4,
         |    CASE WHEN rank4 <= 1 THEN 1 ELSE 0 END FROM r4)
-        |ORDER BY stage, mean_reward DESC, arm""".stripMargin)
+        |ORDER BY stage, mean_reward DESC, arm""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.TextFunctions.mdHash
 import graft.operators.Layout
 import graft.sources.Tables
@@ -199,7 +199,6 @@ object Curation56 {
     * never a single-task window).
     */
   private val q434HilbertLayout: Q = (s, d) => {
-    graft.functions.GraftRegistry.register(s) // graft_hilbert must resolve
     val li = Tables.lineitem(s, d).select(
       pmod(col("l_partkey"), lit(256)).as("xx"),
       pmod(col("l_suppkey"), lit(256)).as("yy"),
@@ -288,15 +287,8 @@ object Curation56 {
       .orderBy("lag_k")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q431_stream_left_outer" -> q431StreamLeftOuter,
-    "q432_rmst" -> q432Rmst,
-    "q433_local_dp_freq" -> q433LocalDpFreq,
-    "q434_hilbert_layout" -> q434HilbertLayout,
-    "q435_pacf" -> q435Pacf)
-
-  val oracles: Map[String, String] = Map(
-    "q431_stream_left_outer" ->
+  val queries: Seq[Query] = Seq(
+    Query("q431_stream_left_outer", q431StreamLeftOuter,
       """WITH c AS (SELECT event_id AS click_id, user_id, ts AS c_ts FROM events
         |    WHERE event_type = 'click'),
         |p AS (SELECT event_id AS purchase_id, user_id, ts AS p_ts FROM events
@@ -311,8 +303,8 @@ object Curation56 {
         |    AND c.c_ts + INTERVAL 30 MINUTE < wm.w)
         |SELECT (SELECT count(*) FROM m)::BIGINT AS n_matched_pairs,
         |  (SELECT count(*) FROM nulls)::BIGINT AS n_null_clicks,
-        |  (SELECT coalesce(sum(click_id), 0) FROM nulls)::BIGINT AS null_click_id_sum""".stripMargin,
-    "q432_rmst" ->
+        |  (SELECT coalesce(sum(click_id), 0) FROM nulls)::BIGINT AS null_click_id_sum""".stripMargin),
+    Query("q432_rmst", q432Rmst,
       """WITH t0 AS (SELECT user_id, min(ts) t0 FROM events
         |  WHERE event_type = 'signup' GROUP BY user_id),
         |fe AS (SELECT t0.user_id, t0.t0, min(e.ts) te FROM t0 LEFT JOIN events e
@@ -350,8 +342,8 @@ object Curation56 {
         |  CAST(n_events AS BIGINT) n_events,
         |  round(CAST(body AS DOUBLE) + round(slast * greatest(0, 60 - tlast), 9), 6)
         |    AS rmst_60
-        |FROM coh JOIN body USING (x) ORDER BY cohort""".stripMargin,
-    "q433_local_dp_freq" ->
+        |FROM coh JOIN body USING (x) ORDER BY cohort""".stripMargin),
+    Query("q433_local_dp_freq", q433LocalDpFreq,
       """WITH rr AS (SELECT event_id, event_type,
         |    ('0x' || substr(md5('rr|' || event_id::VARCHAR), 1, 15))::BIGINT u,
         |    list_position(['click','error','purchase','signup','view'], event_type) - 1 idx0
@@ -370,8 +362,8 @@ object Curation56 {
         |  round((coalesce(n_reported, 0) / (n * 1.0) - 0.0625) / 0.6875, 6) pi_hat,
         |  round(abs((coalesce(n_reported, 0) / (n * 1.0) - 0.0625) / 0.6875
         |    - coalesce(n_true, 0) / (n * 1.0)), 6) abs_err
-        |FROM tc FULL JOIN rc USING (event_type), nn ORDER BY event_type""".stripMargin,
-    "q434_hilbert_layout" -> {
+        |FROM tc FULL JOIN rc USING (event_type), nn ORDER BY event_type""".stripMargin),
+    Query("q434_hilbert_layout", q434HilbertLayout, {
       val hilbert = graft.operators.Layout.hilbertSqlCtes(
         "src", "xx", "yy", 8,
         Seq("xx", "yy", "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"))
@@ -395,8 +387,8 @@ object Curation56 {
         |SELECT layout, count(*)::BIGINT n_buckets, sum(xs)::BIGINT sum_x_span,
         |  sum(ys)::BIGINT sum_y_span, (sum(xs) + sum(ys))::BIGINT total_span
         |FROM g GROUP BY layout ORDER BY layout""".stripMargin
-    },
-    "q435_pacf" ->
+    }),
+    Query("q435_pacf", q435Pacf,
       """WITH dday AS (SELECT ts::DATE dy, sum(CAST(round(value, 2) AS DECIMAL(18,2))) v
         |  FROM events GROUP BY 1),
         |st AS (SELECT count(*) n, sum(v) sv FROM dday),
@@ -434,5 +426,5 @@ object Curation56 {
         |  UNION ALL SELECT 3, round(r3, 6), round(p33, 6) FROM l5
         |  UNION ALL SELECT 4, round(r4, 6), round(p44, 6) FROM l5
         |  UNION ALL SELECT 5, round(r5, 6), round(p55, 6) FROM l5)
-        |ORDER BY lag_k""".stripMargin)
+        |ORDER BY lag_k""".stripMargin))
 }

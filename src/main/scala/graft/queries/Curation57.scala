@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -209,12 +209,6 @@ object Curation57 {
       .orderBy("cohort")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q436_stream_scd2_enrich" -> q436StreamScd2Enrich,
-    "q437_ivf_probe_curve" -> q437IvfProbeCurve,
-    "q438_spec_decode_acceptance" -> q438SpecDecodeAcceptance,
-    "q439_feature_leakage_audit" -> q439FeatureLeakageAudit)
-
   /** q437's per-nprobe recall CTE block (modeled on the q77 oracle,
     * generated per probe level so the three variants cannot drift).
     */
@@ -235,8 +229,8 @@ object Curation57 {
        |  FROM hits$np) WHERE rank <= 3),
        |m$np AS (SELECT count(*) n_hits FROM top$np JOIN exact USING (qid, nid))""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q436_stream_scd2_enrich" ->
+  val queries: Seq[Query] = Seq(
+    Query("q436_stream_scd2_enrich", q436StreamScd2Enrich,
       """WITH ev AS (SELECT user_id, event_id, ts, event_type,
         |    CAST(floor(value / 100) AS BIGINT) attr FROM events),
         |seg AS (SELECT user_id, event_id, ts, attr,
@@ -258,8 +252,8 @@ object Curation57 {
         |  sum(event_id)::BIGINT AS checksum
         |FROM probe JOIN iv ON user_id = d_user
         |  AND ts >= vfrom AND (vto IS NULL OR ts < vto)
-        |GROUP BY attr ORDER BY attr""".stripMargin,
-    "q437_ivf_probe_curve" -> {
+        |GROUP BY attr ORDER BY attr""".stripMargin),
+    Query("q437_ivf_probe_curve", q437IvfProbeCurve, {
       val blocks = Seq(1, 2, 4).map(ivfRecallCte).mkString(",\n")
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
@@ -292,8 +286,8 @@ object Curation57 {
         |  UNION ALL SELECT 2, n_hits FROM m2
         |  UNION ALL SELECT 4, n_hits FROM m4)
         |ORDER BY nprobe""".stripMargin
-    },
-    "q438_spec_decode_acceptance" ->
+    }),
+    Query("q438_spec_decode_acceptance", q438SpecDecodeAcceptance,
       """WITH docs AS (SELECT doc_id, source, str_split(text, ' ') w FROM documents
         |  WHERE len(str_split(text, ' ')) >= 2),
         |bigrams AS (SELECT source, w[i - 1] prev, w[i] cur
@@ -316,8 +310,8 @@ object Curation57 {
         |    + pow(CAST(sum(a) AS DOUBLE) / count(*), 3)
         |    + pow(CAST(sum(a) AS DOUBLE) / count(*), 4), 6)
         |    expected_tokens_per_pass
-        |FROM acc GROUP BY source ORDER BY source""".stripMargin,
-    "q439_feature_leakage_audit" ->
+        |FROM acc GROUP BY source ORDER BY source""".stripMargin),
+    Query("q439_feature_leakage_audit", q439FeatureLeakageAudit,
       """WITH ev AS (SELECT user_id, event_id, ts, event_type,
         |    CAST(round(value, 2) AS DECIMAL(18,2)) v FROM events
         |  WHERE event_type IN ('click', 'purchase')),
@@ -347,5 +341,5 @@ object Curation57 {
         |  round(CAST(sum(naive_m) AS DOUBLE) / sum(warm), 6) mean_naive,
         |  round(CAST(sum(asof_m) AS DOUBLE) / sum(warm), 6) mean_asof,
         |  round(CAST(sum(naive_m) - sum(asof_m) AS DOUBLE) / sum(warm), 6) leak_gap
-        |FROM j GROUP BY cohort ORDER BY cohort""".stripMargin)
+        |FROM j GROUP BY cohort ORDER BY cohort""".stripMargin))
 }

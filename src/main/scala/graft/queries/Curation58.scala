@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.TextFunctions.{mdHash, words, wordShingles}
 import graft.sources.Tables
 
@@ -233,15 +233,8 @@ object Curation58 {
       .orderBy("crawl_day")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q440_watermark_greenlist" -> q440WatermarkGreenlist,
-    "q441_naive_bayes_langid" -> q441NaiveBayesLangid,
-    "q442_grpo_advantage" -> q442GrpoAdvantage,
-    "q443_prototype_pruning" -> q443PrototypePruning,
-    "q444_crawl_novelty" -> q444CrawlNovelty)
-
-  val oracles: Map[String, String] = Map(
-    "q440_watermark_greenlist" ->
+  val queries: Seq[Query] = Seq(
+    Query("q440_watermark_greenlist", q440WatermarkGreenlist,
       """WITH docs AS (SELECT doc_id, source, str_split(text, ' ') w FROM documents
         |  WHERE len(str_split(text, ' ')) >= 2),
         |bg AS (SELECT doc_id, source, len(w) - 1 t,
@@ -256,8 +249,8 @@ object Curation58 {
         |  round(CAST(sum(z) AS DOUBLE) / count(*), 6) AS mean_z,
         |  round(CAST(max(z) AS DOUBLE), 6) AS max_z,
         |  sum(CASE WHEN z > 3 THEN 1 ELSE 0 END)::BIGINT AS n_flagged
-        |FROM z GROUP BY source ORDER BY source""".stripMargin,
-    "q441_naive_bayes_langid" ->
+        |FROM z GROUP BY source ORDER BY source""".stripMargin),
+    Query("q441_naive_bayes_langid", q441NaiveBayesLangid,
       """WITH docs AS (SELECT doc_id, lang, str_split(text, ' ') w,
         |    ('0x' || substr(md5('nb|' || doc_id::VARCHAR), 1, 15))::BIGINT % 5 sp
         |  FROM documents),
@@ -291,8 +284,8 @@ object Curation58 {
         |  FROM scores) WHERE rk = 1)
         |SELECT t.lang AS true_lang, pred_lang, count(*) AS n
         |FROM test t JOIN pred USING (doc_id)
-        |GROUP BY t.lang, pred_lang ORDER BY true_lang, pred_lang""".stripMargin,
-    "q442_grpo_advantage" ->
+        |GROUP BY t.lang, pred_lang ORDER BY true_lang, pred_lang""".stripMargin),
+    Query("q442_grpo_advantage", q442GrpoAdvantage,
       """WITH ev AS (SELECT event_id, user_id,
         |    CAST(round(value, 2) AS DECIMAL(18,2)) r FROM events),
         |g AS (SELECT user_id, count(*) n, sum(r) sr,
@@ -318,8 +311,8 @@ object Curation58 {
         |  round(CAST(sum(abs(clipped)) AS DOUBLE) / count(*), 6) AS mean_abs_adv,
         |  round(sum(CASE WHEN abs(adv) > 2 THEN 1 ELSE 0 END)::DOUBLE / count(*), 6)
         |    AS clip_frac
-        |FROM c GROUP BY cohort ORDER BY cohort""".stripMargin,
-    "q443_prototype_pruning" ->
+        |FROM c GROUP BY cohort ORDER BY cohort""".stripMargin),
+    Query("q443_prototype_pruning", q443PrototypePruning,
       """WITH e AS (SELECT vec_id, label,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM embeddings),
         |cells AS (SELECT label, i - 1 pos,
@@ -344,8 +337,8 @@ object Curation58 {
         |    sum(CASE WHEN NOT dropped THEN 1 ELSE 0 END), 6) AS mean_cos_kept,
         |  round(CAST(sum(CASE WHEN dropped THEN cos END) AS DOUBLE) /
         |    sum(CASE WHEN dropped THEN 1 ELSE 0 END), 6) AS mean_cos_dropped
-        |FROM fl GROUP BY label ORDER BY label""".stripMargin,
-    "q444_crawl_novelty" ->
+        |FROM fl GROUP BY label ORDER BY label""".stripMargin),
+    Query("q444_crawl_novelty", q444CrawlNovelty,
       """WITH docs AS (SELECT doc_id % 10 crawl_day, str_split(text, ' ') w FROM documents
         |  WHERE len(str_split(text, ' ')) >= 3),
         |daysh AS (SELECT DISTINCT crawl_day,
@@ -358,5 +351,5 @@ object Curation58 {
         |  round(n_new::DOUBLE / n_seen, 6) AS novelty_rate,
         |  CAST(sum(n_new) OVER (ORDER BY crawl_day
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_vocab
-        |FROM seen JOIN fresh USING (crawl_day) ORDER BY crawl_day""".stripMargin)
+        |FROM seen JOIN fresh USING (crawl_day) ORDER BY crawl_day""".stripMargin))
 }

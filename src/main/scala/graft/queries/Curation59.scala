@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.TextFunctions.mdHash
 import graft.sources.Tables
 
@@ -332,16 +332,8 @@ object Curation59 {
           .as("refit_icept"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q445_ucb1_audit" -> q445Ucb1Audit,
-    "q446_aipw_ate" -> q446AipwAte,
-    "q447_als_step" -> q447AlsStep,
-    "q448_did_cluster" -> q448DidCluster,
-    "q449_msprt" -> q449Msprt,
-    "q450_ransac" -> q450Ransac)
-
-  val oracles: Map[String, String] = Map(
-    "q445_ucb1_audit" ->
+  val queries: Seq[Query] = Seq(
+    Query("q445_ucb1_audit", q445Ucb1Audit,
       """WITH ev AS (SELECT ts::DATE obs_day, event_type arm,
         |    CAST(round(value, 2) AS DECIMAL(18,2)) r FROM events),
         |cell AS (SELECT obs_day, arm, count(*) n, sum(r) sr FROM ev GROUP BY obs_day, arm),
@@ -364,8 +356,8 @@ object Curation59 {
         |  round(ucb, 6) AS ucb_index
         |FROM (SELECT *, row_number() OVER (PARTITION BY obs_day
         |    ORDER BY ucb DESC, arm ASC) rk FROM scored)
-        |WHERE rk = 1 ORDER BY obs_day""".stripMargin,
-    "q446_aipw_ate" ->
+        |WHERE rk = 1 ORDER BY obs_day""".stripMargin),
+    Query("q446_aipw_ate", q446AipwAte,
       """WITH ev AS (SELECT event_id, user_id % 4 x,
         |    CAST(round(value, 2) AS DECIMAL(18,2)) y,
         |    CASE WHEN ('0x' || substr(md5('trt|' || event_id::VARCHAR), 1, 15))::BIGINT
@@ -389,8 +381,8 @@ object Curation59 {
         |    AS naive_diff,
         |  round(CAST(sum(ipw) AS DOUBLE) / count(*), 6) AS ipw_ate,
         |  round(CAST(sum(aipw) AS DOUBLE) / count(*), 6) AS aipw_ate
-        |FROM rows_""".stripMargin,
-    "q447_als_step" ->
+        |FROM rows_""".stripMargin),
+    Query("q447_als_step", q447AlsStep,
       """WITH ratings AS (SELECT o_custkey c, l_partkey p,
         |    max(CAST(l_quantity AS BIGINT)) r
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -429,8 +421,8 @@ object Curation59 {
         |  round(sqrt(CAST(sum(r2) AS DOUBLE) / count(*)), 6) AS rmse_before,
         |  round(sqrt(CAST(sum(CAST(e * e AS DECIMAL(30,18))) AS DOUBLE)
         |    / count(*)), 6) AS rmse_after
-        |FROM resid GROUP BY cohort ORDER BY cohort""".stripMargin,
-    "q448_did_cluster" ->
+        |FROM resid GROUP BY cohort ORDER BY cohort""".stripMargin),
+    Query("q448_did_cluster", q448DidCluster,
       """WITH ev0 AS (SELECT user_id, ts,
         |    CAST(round(value, 2) AS DECIMAL(18,2)) y FROM events),
         |mid AS (SELECT (epoch_ms(min(ts)) + epoch_ms(max(ts))) // 2 m FROM ev0),
@@ -464,8 +456,8 @@ object Curation59 {
         |  round(CAST(m1p - m1r - (m0p - m0r) AS DOUBLE)
         |    / sqrt(CAST(vtot AS DOUBLE)), 6) AS t_stat,
         |  n_users_t, n_users_c
-        |FROM mw, vw""".stripMargin,
-    "q449_msprt" ->
+        |FROM mw, vw""".stripMargin),
+    Query("q449_msprt", q449Msprt,
       """WITH ev AS (SELECT (user_id % 2)::INT arm,
         |    CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END conv,
         |    least(CAST(ceil(day(ts) / 6.0) AS INT), 5) look FROM events),
@@ -498,8 +490,8 @@ object Curation59 {
         |  round(min(least(1.0, 1.0 / CAST(lambda AS DOUBLE)))
         |    OVER (ORDER BY look ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
         |    AS p_av
-        |FROM lam ORDER BY look""".stripMargin,
-    "q450_ransac" ->
+        |FROM lam ORDER BY look""".stripMargin),
+    Query("q450_ransac", q450Ransac,
       """WITH ev AS (SELECT user_id, event_type,
         |    CAST(round(value, 2) AS DECIMAL(18,2)) v FROM events
         |  WHERE event_type IN ('click', 'purchase')),
@@ -551,5 +543,5 @@ object Curation59 {
         |    (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
         |    - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
         |    * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS refit_icept
-        |FROM mom""".stripMargin)
+        |FROM mom""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, TimestampType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.operators.Materialize
 import graft.sources.Tables
 
@@ -111,14 +111,8 @@ object Curation6 {
       .orderBy("cohort_day", "day_off")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q187_corpus_diff" -> q187CorpusDiff,
-    "q188_schema_evolution" -> q188SchemaEvolution,
-    "q189_snapshot_asof" -> q189SnapshotAsof,
-    "q190_cohort_retention" -> q190CohortRetention)
-
-  val oracles: Map[String, String] = Map(
-    "q187_corpus_diff" ->
+  val queries: Seq[Query] = Seq(
+    Query("q187_corpus_diff", q187CorpusDiff,
       """WITH v1 AS (SELECT doc_id, source s1,
         |    ('0x' || substr(md5(text), 1, 15))::BIGINT h1 FROM documents),
         |v2 AS (SELECT doc_id, source s2,
@@ -134,14 +128,14 @@ object Curation6 {
         |       WHEN h1 <> h2 THEN 'changed' ELSE 'unchanged' END AS status,
         |  count(*) AS n
         |FROM v1 FULL JOIN v2 USING (doc_id)
-        |GROUP BY 1, 2 ORDER BY source, status""".stripMargin,
-    "q188_schema_evolution" ->
+        |GROUP BY 1, 2 ORDER BY source, status""".stripMargin),
+    Query("q188_schema_evolution", q188SchemaEvolution,
       """SELECT (o_orderkey % 2 = 1) AS has_priority, count(*) AS n,
         |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE), 2) AS total,
         |  CAST(count(DISTINCT CASE WHEN o_orderkey % 2 = 1 THEN o_orderpriority END)
         |    AS BIGINT) AS n_priorities
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q189_snapshot_asof" ->
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q189_snapshot_asof", q189SnapshotAsof,
       """WITH pre AS (SELECT user_id, event_id, value,
         |    row_number() OVER (PARTITION BY user_id
         |      ORDER BY ts DESC, event_id DESC) rn
@@ -153,8 +147,8 @@ object Curation6 {
         |SELECT a.user_id, p.event_id AS asof_id, round(p.value, 6) AS asof_value,
         |  CAST(n_later AS BIGINT) AS n_later, n_total
         |FROM agg a LEFT JOIN (SELECT * FROM pre WHERE rn = 1) p USING (user_id)
-        |ORDER BY user_id""".stripMargin,
-    "q190_cohort_retention" ->
+        |ORDER BY user_id""".stripMargin),
+    Query("q190_cohort_retention", q190CohortRetention,
       """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day FROM events),
         |c AS (SELECT user_id, min(day) cohort_day FROM e GROUP BY user_id)
         |SELECT cohort_day,
@@ -162,5 +156,5 @@ object Curation6 {
         |  count(DISTINCT user_id) AS n_users
         |FROM e JOIN c USING (user_id)
         |WHERE date_diff('day', cohort_day, day) IN (0, 1, 7, 14)
-        |GROUP BY 1, 2 ORDER BY cohort_day, day_off""".stripMargin)
+        |GROUP BY 1, 2 ORDER BY cohort_day, day_off""".stripMargin))
 }

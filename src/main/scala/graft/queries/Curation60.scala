@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Round-11 wave 29: newsvendor order quantities, a cross-table data
@@ -173,20 +173,14 @@ object Curation60 {
       .orderBy("cohort")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q451_newsvendor" -> q451Newsvendor,
-    "q452_contract_audit" -> q452ContractAudit,
-    "q453_variance_decomp" -> q453VarianceDecomp,
-    "q454_stream_token_bucket" -> q454StreamTokenBucket)
-
   /** q454's bucket-refill expression, interpolated once so the three
     * uses inside the recursive step cannot drift from each other. */
   private val fillExpr =
     "least(3, s.tokens + CASE WHEN e.us > s.lastus " +
       "THEN (e.us - s.lastus) // 172800000000 ELSE 0 END)"
 
-  val oracles: Map[String, String] = Map(
-    "q451_newsvendor" ->
+  val queries: Seq[Query] = Seq(
+    Query("q451_newsvendor", q451Newsvendor,
       """WITH dem AS (SELECT p_brand brand, l_shipdate ship_day,
         |    sum(CAST(l_quantity AS BIGINT)) dd
         |  FROM lineitem JOIN part ON l_partkey = p_partkey
@@ -207,8 +201,8 @@ object Curation60 {
         |  sum(2 * greatest(q_mean - dd, 0) + 8 * greatest(dd - q_mean, 0))::BIGINT
         |    AS cost_at_qmean
         |FROM dem JOIN dec_ USING (brand)
-        |GROUP BY brand ORDER BY brand""".stripMargin,
-    "q452_contract_audit" ->
+        |GROUP BY brand ORDER BY brand""".stripMargin),
+    Query("q452_contract_audit", q452ContractAudit,
       """SELECT check_name, n_violations FROM (
         |  SELECT 'docs_empty_text' check_name,
         |    (SELECT count(*) FROM documents WHERE length(text) = 0) n_violations
@@ -230,8 +224,8 @@ object Curation60 {
         |    (SELECT count(*) FROM lineitem WHERE l_extendedprice <= 0)
         |  UNION ALL SELECT 'qty_range',
         |    (SELECT count(*) FROM lineitem WHERE l_quantity < 1 OR l_quantity > 50))
-        |ORDER BY check_name""".stripMargin,
-    "q453_variance_decomp" ->
+        |ORDER BY check_name""".stripMargin),
+    Query("q453_variance_decomp", q453VarianceDecomp,
       """WITH ev AS (SELECT event_type a, user_id % 4 b,
         |    CAST(round(value, 2) AS DECIMAL(18,2)) y FROM events),
         |cells AS (SELECT a, b, count(*) n, sum(y) sy,
@@ -256,8 +250,8 @@ object Curation60 {
         |  round((tc - ta - tb + cf) / (CAST(sss AS DOUBLE) - cf), 6) AS eta2_ab,
         |  round((CAST(sss AS DOUBLE) - tc) / (CAST(sss AS DOUBLE) - cf), 6)
         |    AS eta2_resid
-        |FROM corr, ma, mb, mc""".stripMargin,
-    "q454_stream_token_bucket" ->
+        |FROM corr, ma, mb, mc""".stripMargin),
+    Query("q454_stream_token_bucket", q454StreamTokenBucket,
       s"""WITH RECURSIVE ev AS (SELECT user_id, epoch_us(ts) us,
         |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) i
         |  FROM events),
@@ -280,5 +274,5 @@ object Curation60 {
         |SELECT user_id % 4 AS cohort, count(*) AS n_users,
         |  sum(adm)::BIGINT AS n_admitted, sum(den)::BIGINT AS n_denied,
         |  round(sum(den)::DOUBLE / (sum(adm) + sum(den)), 6) AS deny_rate
-        |FROM fin GROUP BY cohort ORDER BY cohort""".stripMargin)
+        |FROM fin GROUP BY cohort ORDER BY cohort""".stripMargin))
 }

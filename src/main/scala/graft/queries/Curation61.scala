@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.operators.Similarity
 import graft.sources.Tables
 
@@ -106,13 +106,8 @@ object Curation61 {
       .orderBy("label")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q455_rdp_accountant" -> q455RdpAccountant,
-    "q456_filtered_ann" -> q456FilteredAnn,
-    "q457_class_balance" -> q457ClassBalance)
-
-  val oracles: Map[String, String] = Map(
-    "q455_rdp_accountant" ->
+  val queries: Seq[Query] = Seq(
+    Query("q455_rdp_accountant", q455RdpAccountant,
       """WITH per AS (SELECT source, count(*) n FROM documents GROUP BY source),
         |tot AS (SELECT sum(n) nn FROM per),
         |grid AS (SELECT source, n, CAST(n AS DOUBLE) / nn qf, alpha,
@@ -124,8 +119,8 @@ object Curation61 {
         |  round(CAST(eps_at AS DOUBLE), 6) AS epsilon
         |FROM (SELECT *, row_number() OVER (PARTITION BY source
         |    ORDER BY eps_at ASC, alpha ASC) rk FROM grid)
-        |WHERE rk = 1 ORDER BY source""".stripMargin,
-    "q456_filtered_ann" -> {
+        |WHERE rk = 1 ORDER BY source""".stripMargin),
+    Query("q456_filtered_ann", q456FilteredAnn, {
       s"""WITH e AS (SELECT vec_id, label,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) v FROM embeddings),
         |qm AS (SELECT ${Similarity.fixedCountModulusLadderSql("c")} q_m
@@ -159,8 +154,8 @@ object Curation61 {
         |    AS full_yield
         |FROM perq JOIN exn USING (qid) LEFT JOIN hit USING (qid)
         |GROUP BY qlabel ORDER BY label""".stripMargin
-    },
-    "q457_class_balance" ->
+    }),
+    Query("q457_class_balance", q457ClassBalance,
       """WITH per AS (SELECT label, count(*) n,
         |    round((1.0 - pow(0.999, n)) / 0.001, 9) eff FROM embeddings
         |  GROUP BY label),
@@ -170,5 +165,5 @@ object Curation61 {
         |  round(raw_w * nn / zz, 6) AS weight,
         |  round(CAST(n AS DOUBLE) / nn, 6) AS raw_share,
         |  round(raw_w * n / zz, 6) AS weighted_share
-        |FROM pw, z ORDER BY label""".stripMargin)
+        |FROM pw, z ORDER BY label""".stripMargin))
 }

@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.TextFunctions.{mdHash, Mod60}
 import graft.sources.Tables
 
 /** Round-11 wave 31: order-independent table fingerprints, a join-key
@@ -12,8 +12,6 @@ import graft.sources.Tables
   * (Sobel) analysis.
   */
 object Curation62 {
-
-  private val Mod60 = 1152921504606846976L // 2^60
 
   /** q458: order-independent table fingerprint — the dataset-version
     * checksum a 100 TB migration verifies with: each row canonicalizes
@@ -201,14 +199,8 @@ object Curation62 {
       round(a * b / sqrt(a * a * seB2 + b * b * seA2), 6).as("sobel_z"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q458_table_fingerprint" -> q458TableFingerprint,
-    "q459_skew_advisor" -> q459SkewAdvisor,
-    "q460_reg_discontinuity" -> q460RegDiscontinuity,
-    "q461_mediation" -> q461Mediation)
-
-  val oracles: Map[String, String] = Map(
-    "q458_table_fingerprint" ->
+  val queries: Seq[Query] = Seq(
+    Query("q458_table_fingerprint", q458TableFingerprint,
       s"""WITH rows_ AS (SELECT l_orderkey, l_linenumber,
         |    ('0x' || substr(md5(l_orderkey::VARCHAR || '|' || l_linenumber::VARCHAR
         |      || '|' || l_partkey::VARCHAR || '|'
@@ -229,8 +221,8 @@ object Curation62 {
         |FROM (SELECT 'base' variant, n_rows, fingerprint FROM base
         |  UNION ALL SELECT 'mutated', n_rows, fingerprint FROM mut
         |  UNION ALL SELECT 'shuffled', n_rows, fingerprint FROM base)
-        |ORDER BY variant""".stripMargin,
-    "q459_skew_advisor" ->
+        |ORDER BY variant""".stripMargin),
+    Query("q459_skew_advisor", q459SkewAdvisor,
       """WITH keys(join_key) AS (VALUES ('l_orderkey'), ('l_partkey'), ('l_suppkey')),
         |counts AS (
         |  SELECT 'l_orderkey' jk, count(*) c FROM lineitem GROUP BY l_orderkey
@@ -255,8 +247,8 @@ object Curation62 {
         |  greatest(1, CAST(ceil(32.0 * max_c / n_rows) AS BIGINT))
         |    AS recommended_salt
         |FROM tot JOIN p50 USING (jk) JOIN p99 USING (jk), nr
-        |ORDER BY join_key""".stripMargin,
-    "q460_reg_discontinuity" ->
+        |ORDER BY join_key""".stripMargin),
+    Query("q460_reg_discontinuity", q460RegDiscontinuity,
       """WITH ni AS (SELECT l_orderkey ok, count(*) y FROM lineitem GROUP BY l_orderkey),
         |o AS (SELECT CASE WHEN x < 0 THEN 'left' ELSE 'right' END side, x, y
         |  FROM (SELECT CAST(round(o_totalprice, 2) AS DECIMAL(18,2))
@@ -293,8 +285,8 @@ object Curation62 {
         |  round(sqrt(l.se * l.se + r.se * r.se), 6) AS se,
         |  round((r.a - l.a) / sqrt(l.se * l.se + r.se * r.se), 6) AS t_stat
         |FROM (SELECT * FROM f WHERE side = 'left') l,
-        |  (SELECT * FROM f WHERE side = 'right') r""".stripMargin,
-    "q461_mediation" ->
+        |  (SELECT * FROM f WHERE side = 'right') r""".stripMargin),
+    Query("q461_mediation", q461Mediation,
       """WITH ev AS (SELECT
         |    CAST(round(value, 2) AS DECIMAL(18,2)) v,
         |    ('0x' || substr(md5('med|' || event_id::VARCHAR), 1, 15))::BIGINT % 2 t
@@ -336,5 +328,5 @@ object Curation62 {
         |  round(total, 6) AS total_effect,
         |  round(sqrt(a * a * seb2 + b * b * sea2), 6) AS sobel_se,
         |  round(a * b / sqrt(a * a * seb2 + b * b * sea2), 6) AS sobel_z
-        |FROM e""".stripMargin)
+        |FROM e""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.TextFunctions.{mdHash, words}
 import graft.operators.Similarity
 import graft.sources.Tables
@@ -195,13 +195,8 @@ object Curation63 {
         round(col("tp").cast(DoubleType) / (col("tp") + col("fn")), 6).as("recall"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q462_mink_prob" -> q462MinkProb,
-    "q463_table_diff" -> q463TableDiff,
-    "q464_fellegi_sunter" -> q464FellegiSunter)
-
-  val oracles: Map[String, String] = Map(
-    "q462_mink_prob" ->
+  val queries: Seq[Query] = Seq(
+    Query("q462_mink_prob", q462MinkProb,
       """WITH docs AS (SELECT doc_id, source, str_split(text, ' ') w FROM documents
         |  WHERE len(str_split(text, ' ')) >= 2),
         |bigrams AS (SELECT doc_id, source, i - 1 pos, w[i - 1] prev, w[i] cur
@@ -228,8 +223,8 @@ object Curation63 {
         |  round(CAST(sum(CASE WHEN rk <= (nd + 19) // 20 THEN mink END) AS DOUBLE)
         |    / sum(CASE WHEN rk <= (nd + 19) // 20 THEN 1 ELSE 0 END), 6)
         |    AS mean_top5pct
-        |FROM rk GROUP BY source ORDER BY source""".stripMargin,
-    "q463_table_diff" ->
+        |FROM rk GROUP BY source ORDER BY source""".stripMargin),
+    Query("q463_table_diff", q463TableDiff,
       """WITH li AS (SELECT ('0x' || substr(md5(l_orderkey::VARCHAR || '|'
         |      || l_linenumber::VARCHAR || '|' || l_partkey::VARCHAR || '|'
         |      || l_suppkey::VARCHAR), 1, 15))::BIGINT hv,
@@ -252,8 +247,8 @@ object Curation63 {
         |  FROM li b FULL OUTER JOIN newv n ON b.hv = n.hv)
         |SELECT category, count(*) AS n_rows,
         |  CAST(sum(hv) % 1152921504606846976 AS BIGINT) AS checksum
-        |FROM j GROUP BY category ORDER BY category""".stripMargin,
-    "q464_fellegi_sunter" -> {
+        |FROM j GROUP BY category ORDER BY category""".stripMargin),
+    Query("q464_fellegi_sunter", q464FellegiSunter, {
       s"""WITH orig AS (SELECT c_custkey id, c_name nm, c_nationkey nat,
         |    c_mktsegment seg FROM customer),
         |bm AS (SELECT ${Similarity.fixedCountModulusLadderSql("c", target = 8L)} b_m
@@ -310,5 +305,5 @@ object Curation63 {
         |      + sum(CASE WHEN is_match AND wgt <= 0 THEN 1 ELSE 0 END)), 6)
         |    AS recall
         |FROM wt""".stripMargin
-    })
+    }))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.D9
 import graft.functions.TextFunctions.mdHash
 import graft.sources.Tables
 
@@ -13,8 +14,6 @@ import graft.sources.Tables
   * confident-learning label-noise matrix.
   */
 object Curation64 {
-
-  private val D9 = DecimalType(24, 9)
 
   /** q465: two Sinkhorn iterations of entropic optimal transport
     * between the doc-length histograms of two deterministic corpus
@@ -265,14 +264,8 @@ object Curation64 {
       .orderBy("i", "j")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q465_sinkhorn_ot" -> q465SinkhornOt,
-    "q466_mi_ranking" -> q466MiRanking,
-    "q467_ams_f2" -> q467AmsF2,
-    "q468_confident_learning" -> q468ConfidentLearning)
-
-  val oracles: Map[String, String] = Map(
-    "q465_sinkhorn_ot" ->
+  val queries: Seq[Query] = Seq(
+    Query("q465_sinkhorn_ot", q465SinkhornOt,
       """WITH hist AS (SELECT least(7, n_chars // 64) b,
         |    ('0x' || substr(md5('ot|' || doc_id::VARCHAR), 1, 15))::BIGINT % 2 side,
         |    count(*) n FROM documents GROUP BY 1, 2),
@@ -316,8 +309,8 @@ object Curation64 {
         |  round(v2.v2::DOUBLE / 1000000000, 9) v2,
         |  rm.row_mass, cost.total_cost
         |FROM r JOIN c ON r.b = c.b JOIN u2 ON r.b = u2.b JOIN v2 ON r.b = v2.b
-        |  JOIN rm ON r.b = rm.b, cost ORDER BY r.b""".stripMargin,
-    "q466_mi_ranking" ->
+        |  JOIN rm ON r.b = rm.b, cost ORDER BY r.b""".stripMargin),
+    Query("q466_mi_ranking", q466MiRanking,
       """WITH base AS (SELECT
         |    CASE WHEN l_extendedprice * (1.0 - l_discount) > 30000.0
         |      THEN 1 ELSE 0 END y,
@@ -346,8 +339,8 @@ object Curation64 {
         |  GROUP BY feature)
         |SELECT row_number() OVER (ORDER BY mi DESC, feature ASC) rank,
         |  feature, mi, n_levels
-        |FROM mi ORDER BY rank""".stripMargin,
-    "q467_ams_f2" ->
+        |FROM mi ORDER BY rank""".stripMargin),
+    Query("q467_ams_f2", q467AmsF2,
       """WITH counts AS (SELECT l_partkey k, count(*) c FROM lineitem GROUP BY 1),
         |exact AS (SELECT sum(c * c) f2_exact FROM counts),
         |chans AS (SELECT unnest(generate_series(0, 15)) ch),
@@ -357,8 +350,8 @@ object Curation64 {
         |ams AS (SELECT sum(sm * sm)::DOUBLE / 16.0 f2_ams FROM sums)
         |SELECT f2_exact::BIGINT AS f2_exact, f2_ams,
         |  round(abs(f2_ams - f2_exact::DOUBLE) / f2_exact, 6) AS rel_err
-        |FROM exact, ams""".stripMargin,
-    "q468_confident_learning" ->
+        |FROM exact, ams""".stripMargin),
+    Query("q468_confident_learning", q468ConfidentLearning,
       """WITH base0 AS (SELECT o_orderkey id, o_orderstatus t,
         |    ('0x' || substr(md5('cl1|' || o_orderkey::VARCHAR), 1, 15))::BIGINT
         |      % 20 h
@@ -406,5 +399,5 @@ object Curation64 {
         |  coalesce(truth.n_truth, 0) AS n_truth
         |FROM cj JOIN rt ON cj.i = rt.i
         |  LEFT JOIN truth ON cj.i = truth.i AND cj.j = truth.j
-        |ORDER BY cj.i, cj.j""".stripMargin)
+        |ORDER BY cj.i, cj.j""".stripMargin))
 }

@@ -3,9 +3,10 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.D9
 import graft.functions.TextFunctions.{mdHash, words}
 import graft.operators.{Materialize, Ranking}
 import graft.sources.Tables
@@ -15,8 +16,6 @@ import graft.sources.Tables
   * an approx_percentile rank-error audit.
   */
 object Curation65 {
-
-  private val D9 = DecimalType(24, 9)
 
   /** q469: greedy max-coverage source selection (the weighted
     * set-cover heuristic with its (1-1/e) guarantee) — which 5 sources
@@ -168,12 +167,6 @@ object Curation65 {
       .orderBy("p")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q469_set_cover" -> q469SetCover,
-    "q470_bcubed" -> q470Bcubed,
-    "q471_seq_pattern" -> q471SeqPattern,
-    "q472_approx_pct_audit" -> q472ApproxPercentileAudit)
-
   /** q469's oracle: five greedy rounds generated by one loop so the
     * pick/cover CTE pair can never drift between rounds; zero-gain
     * sources stay pickable via the LEFT JOIN against the source list
@@ -212,9 +205,9 @@ object Curation65 {
        |ORDER BY pick_order""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q469_set_cover" -> q469OracleSql,
-    "q470_bcubed" ->
+  val queries: Seq[Query] = Seq(
+    Query("q469_set_cover", q469SetCover, q469OracleSql),
+    Query("q470_bcubed", q470Bcubed,
       """WITH items AS (SELECT doc_id t,
         |    CASE WHEN i = 2 THEN text || ' zz' || (doc_id % 7)::VARCHAR
         |      ELSE text END txt
@@ -236,8 +229,8 @@ object Curation65 {
         |  round(sr::DOUBLE / n_items, 6) AS b3_recall,
         |  round(2.0 * (sp::DOUBLE / n_items) * (sr::DOUBLE / n_items)
         |    / (sp::DOUBLE / n_items + sr::DOUBLE / n_items), 6) AS b3_f1
-        |FROM agg, tot""".stripMargin,
-    "q471_seq_pattern" ->
+        |FROM agg, tot""".stripMargin),
+    Query("q471_seq_pattern", q471SeqPattern,
       """WITH ev AS (SELECT user_id, event_type,
         |    lead(event_type, 1) OVER w b1,
         |    lead(event_type, 2) OVER w b2,
@@ -249,8 +242,8 @@ object Curation65 {
         |  UNION ALL SELECT user_id, event_type, b3 FROM ev WHERE b3 IS NOT NULL)
         |SELECT a, b, count(DISTINCT user_id) AS support, count(*) AS n_occur
         |FROM pairs GROUP BY a, b
-        |ORDER BY support DESC, n_occur DESC, a ASC, b ASC""".stripMargin,
-    "q472_approx_pct_audit" ->
+        |ORDER BY support DESC, n_occur DESC, a ASC, b ASC""".stripMargin),
+    Query("q472_approx_pct_audit", q472ApproxPercentileAudit,
       """WITH v AS (SELECT l_extendedprice x FROM lineitem),
         |n AS (SELECT count(*) n FROM v),
         |ranked AS (SELECT x, row_number() OVER (ORDER BY x) rnk FROM v),
@@ -259,5 +252,5 @@ object Curation65 {
         |  FROM (SELECT unnest([0.5::DOUBLE, 0.95::DOUBLE, 0.99::DOUBLE]) p))
         |SELECT t.p, r1.x AS exact_v, TRUE AS rank_ok
         |FROM tgt t JOIN ranked r1 ON r1.rnk = t.r
-        |ORDER BY t.p""".stripMargin)
+        |ORDER BY t.p""".stripMargin))
 }

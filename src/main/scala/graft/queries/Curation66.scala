@@ -3,8 +3,8 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
-import graft.functions.TextFunctions.mdHash
+import graft.{Q, Query}
+import graft.functions.TextFunctions.{mdHash, Mod60}
 import graft.sources.Tables
 
 /** Round-11 wave 35: Merkle-style partition diff, Neyman stratified
@@ -12,8 +12,6 @@ import graft.sources.Tables
   * engine-contract audit.
   */
 object Curation66 {
-
-  private val Mod60 = 1152921504606846976L // 2^60
 
   /** q473: Merkle-style partition-level diff — the 100 TB integrity
     * pattern: compare two table versions block-first (one commutative
@@ -158,14 +156,8 @@ object Curation66 {
         min(coalesce(col("in_report"), lit(false))).as("all_found"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q473_merkle_diff" -> q473MerklePartitionDiff,
-    "q474_neyman_alloc" -> q474NeymanAllocation,
-    "q475_group_kfold" -> q475GroupKfold,
-    "q476_freq_items_audit" -> q476FreqItemsAudit)
-
-  val oracles: Map[String, String] = Map(
-    "q473_merkle_diff" ->
+  val queries: Seq[Query] = Seq(
+    Query("q473_merkle_diff", q473MerklePartitionDiff,
       """WITH base AS (SELECT doc_id, source,
         |    ('0x' || substr(md5(doc_id::VARCHAR || '|' || text), 1, 15))::BIGINT rh
         |  FROM documents),
@@ -198,8 +190,8 @@ object Curation66 {
         |  coalesce(r.n_removed, 0)::BIGINT AS n_removed,
         |  coalesce(r.n_modified, 0)::BIGINT AS n_modified
         |FROM blocks b LEFT JOIN rows_ r USING (source)
-        |ORDER BY b.source""".stripMargin,
-    "q474_neyman_alloc" ->
+        |ORDER BY b.source""".stripMargin),
+    Query("q474_neyman_alloc", q474NeymanAllocation,
       """WITH m AS (SELECT source, count(*) nh,
         |    sum(n_chars::HUGEINT) sx, sum((n_chars * n_chars)::HUGEINT) sx2
         |  FROM documents GROUP BY source),
@@ -214,8 +206,8 @@ object Curation66 {
         |  round(nhsh::DOUBLE / t_nhsh, 6) AS alloc_frac,
         |  CAST(floor(1000.0 * nhsh::DOUBLE / t_nhsh) AS BIGINT) AS alloc_n,
         |  round(t_nhsh::DOUBLE * t_nhsh / (n_pop * t_nhs2), 6) AS design_effect
-        |FROM w, tot ORDER BY source""".stripMargin,
-    "q475_group_kfold" ->
+        |FROM w, tot ORDER BY source""".stripMargin),
+    Query("q475_group_kfold", q475GroupKfold,
       """WITH ev AS (SELECT user_id, event_type,
         |    ('0x' || substr(md5('fold|' || user_id::VARCHAR), 1, 15))::BIGINT % 5
         |      fold
@@ -232,11 +224,11 @@ object Curation66 {
         |SELECT ft.fold, ft.nf::BIGINT AS n_events, us.n_users, dev.max_mix_dev,
         |  integ.n_leaky_users::BIGINT AS n_leaky_users
         |FROM ft JOIN us USING (fold) JOIN dev USING (fold), integ
-        |ORDER BY ft.fold""".stripMargin,
-    "q476_freq_items_audit" ->
+        |ORDER BY ft.fold""".stripMargin),
+    Query("q476_freq_items_audit", q476FreqItemsAudit,
       """WITH n AS (SELECT count(*) n FROM events)
         |SELECT count(*) AS n_true_frequent, TRUE AS all_found
         |FROM (SELECT event_type, count(*) cnt FROM events GROUP BY event_type)
         |  , n
-        |WHERE cnt > n.n * 0.1""".stripMargin)
+        |WHERE cnt > n.n * 0.1""".stripMargin))
 }

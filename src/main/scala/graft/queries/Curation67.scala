@@ -4,8 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
-import graft.functions.GraftFunctions.jaroWinklerNative
+import graft.{Q, Query}
+import graft.functions.GraftFunctions.{D9, jaroWinklerNative}
 import graft.functions.TextFunctions.mdHash
 import graft.operators.Similarity
 import graft.sources.Tables
@@ -15,8 +15,6 @@ import graft.sources.Tables
   * Theil-Sen robust trend estimator.
   */
 object Curation67 {
-
-  private val D9 = DecimalType(24, 9)
 
   /** q477: Jaro-Winkler blocked record linkage — the fuzzy-name join
     * scored by the native codegen'd [[graft.functions.JaroWinklerExpr]]
@@ -28,7 +26,6 @@ object Curation67 {
     * true and false pairs (the separation the threshold exploits).
     */
   private val q477JwLinkage: Q = (s, d) => {
-    graft.functions.GraftRegistry.register(s)
     val c = Tables.customer(s, d)
     val nC = c.count()
     val blockMod = Similarity.fixedCountModulus(nC, target = 8L)
@@ -176,13 +173,8 @@ object Curation67 {
         col("n_pairs"), col("n_days"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q477_jw_linkage" -> q477JwLinkage,
-    "q478_synthetic_control" -> q478SyntheticControl,
-    "q479_theil_sen" -> q479TheilSen)
-
-  val oracles: Map[String, String] = Map(
-    "q477_jw_linkage" -> {
+  val queries: Seq[Query] = Seq(
+    Query("q477_jw_linkage", q477JwLinkage, {
       s"""WITH orig AS (SELECT c_custkey id, c_name nm FROM customer),
         |bm AS (SELECT ${Similarity.fixedCountModulusLadderSql("c", target = 8L)} b_m
         |  FROM (SELECT count(*) c FROM orig)),
@@ -221,8 +213,8 @@ object Curation67 {
         |  round(CAST(sum(CASE WHEN NOT is_match THEN jw END) AS DOUBLE)
         |    / sum(CASE WHEN NOT is_match THEN 1 ELSE 0 END), 6) AS mean_jw_false
         |FROM cls""".stripMargin
-    },
-    "q478_synthetic_control" ->
+    }),
+    Query("q478_synthetic_control", q478SyntheticControl,
       """WITH daily AS (SELECT CAST(o_orderdate AS DATE) dt, c_nationkey nat,
         |    sum(CAST(o_totalprice AS DECIMAL(18,2))) rev
         |  FROM orders JOIN customer ON o_custkey = c_custkey
@@ -246,8 +238,8 @@ object Curation67 {
         |  count(*) AS n_days,
         |  round(CAST(sum(CAST(round(y::DOUBLE - (w1 * x1 + w2 * x2), 6)
         |    AS DECIMAL(24,9))) AS DOUBLE) / count(*), 4) AS mean_gap
-        |FROM grid, w GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q479_theil_sen" ->
+        |FROM grid, w GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q479_theil_sen", q479TheilSen,
       """WITH daily AS (SELECT datediff('day', DATE '1992-01-01',
         |      CAST(o_orderdate AS DATE)) di, count(*) y
         |  FROM orders GROUP BY 1),
@@ -266,5 +258,5 @@ object Curation67 {
         |  n_pairs, n_days
         |FROM (SELECT slope, n_pairs, ic, di,
         |    row_number() OVER (ORDER BY ic ASC, di ASC) rn FROM ic), nd
-        |WHERE rn = (n_days + 1) // 2""".stripMargin)
+        |WHERE rn = (n_days + 1) // 2""".stripMargin))
 }

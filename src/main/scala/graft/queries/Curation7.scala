@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.operators.Materialize
 import graft.sources.Tables
 
@@ -140,14 +140,8 @@ object Curation7 {
       .orderBy("dim")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q191_triangle_count" -> q191TriangleCount,
-    "q192_length_batching" -> q192LengthBatching,
-    "q193_maxsim_search" -> q193MaxsimSearch,
-    "q194_feature_scaling" -> q194FeatureScaling)
-
-  val oracles: Map[String, String] = Map(
-    "q191_triangle_count" ->
+  val queries: Seq[Query] = Seq(
+    Query("q191_triangle_count", q191TriangleCount,
       """WITH e AS (SELECT DISTINCT least(l_orderkey % 300, l_partkey % 300) a,
         |    greatest(l_orderkey % 300, l_partkey % 300) b
         |  FROM lineitem WHERE l_orderkey % 300 <> l_partkey % 300),
@@ -162,8 +156,8 @@ object Curation7 {
         |SELECT (SELECT CAST(count(*) AS BIGINT) FROM e) n_edges,
         |  w.w2 // 2 AS n_wedges, CAST(tri.t AS BIGINT) n_triangles,
         |  round(3.0 * tri.t / (CAST(w.w2 AS DOUBLE) / 2.0), 6) AS clustering
-        |FROM tri, w""".stripMargin,
-    "q192_length_batching" ->
+        |FROM tri, w""".stripMargin),
+    Query("q192_length_batching", q192LengthBatching,
       """WITH t AS (SELECT doc_id,
         |    CAST(len(string_split(text, ' ')) AS BIGINT) n_tok FROM documents),
         |b AS (SELECT doc_id, n_tok, CAST(n_tok // 16 AS BIGINT) AS bucket,
@@ -175,8 +169,8 @@ object Curation7 {
         |  CAST(sum(n_in_batch) AS BIGINT) AS n_docs,
         |  CAST(sum(mx * n_in_batch - tok) AS BIGINT) AS pad_tokens,
         |  CAST(sum(mx * n_in_batch) AS BIGINT) AS slot_tokens
-        |FROM g GROUP BY bucket ORDER BY bucket""".stripMargin,
-    "q193_maxsim_search" ->
+        |FROM g GROUP BY bucket ORDER BY bucket""".stripMargin),
+    Query("q193_maxsim_search", q193MaxsimSearch,
       """WITH v AS (SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) e FROM embeddings),
         |sub AS (SELECT vec_id, s, e[s*8+1 : s*8+8] AS sv
@@ -192,8 +186,8 @@ object Curation7 {
         |  row_number() OVER (PARTITION BY q_id ORDER BY score DESC, x_id) rnk FROM sc)
         |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, x_id,
         |  round(CAST(score AS DOUBLE), 6) AS score
-        |FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin,
-    "q194_feature_scaling" ->
+        |FROM rk WHERE rnk <= 3 ORDER BY q_id, rnk""".stripMargin),
+    Query("q194_feature_scaling", q194FeatureScaling,
       """WITH v AS (SELECT vec_id,
         |    list_transform(embedding, x -> CAST(x AS DOUBLE)) e FROM embeddings),
         |x AS (SELECT vec_id, p AS dim, e[p + 1] AS val
@@ -204,5 +198,5 @@ object Curation7 {
         |  round(max(mu), 6) AS mean_raw, round(max(sd), 6) AS std_raw,
         |  (abs(avg(zv)) < 1e-9) AS centered_ok,
         |  (abs(stddev_samp(zv) - 1.0) < 1e-6) AS unit_ok
-        |FROM z GROUP BY dim ORDER BY dim""".stripMargin)
+        |FROM z GROUP BY dim ORDER BY dim""".stripMargin))
 }

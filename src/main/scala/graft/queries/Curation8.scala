@@ -4,8 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Q
-import graft.functions.GraftRegistry
+import graft.{Q, Query}
 import graft.functions.TextFunctions.{mdHash, mdHash2}
 import graft.operators.{KeywordScrub, Materialize, Multimodal}
 import graft.sources.Tables
@@ -202,7 +201,6 @@ object Curation8 {
     * checksum arithmetically per digit position.
     */
   private val q199LuhnPii: Q = (s, d) => {
-    GraftRegistry.register(s)
     Tables.orders(s, d)
       .select(col("o_orderkey"),
         lpad(((col("o_orderkey") * 7919 + col("o_custkey")) %
@@ -253,16 +251,8 @@ object Curation8 {
           col("n") - 1.0) < 0.2).as("within_20pct"))
   }
 
-  val defs: Map[String, Q] = Map(
-    "q195_fuzzy_join" -> q195FuzzyJoin,
-    "q196_phash_dedup" -> q196PhashDedup,
-    "q197_keyword_scrub" -> q197KeywordScrub,
-    "q198_source_jaccard" -> q198SourceJaccard,
-    "q199_luhn_pii" -> q199LuhnPii,
-    "q200_kmv_distinct" -> q200KmvDistinct)
-
-  val oracles: Map[String, String] = Map(
-    "q195_fuzzy_join" ->
+  val queries: Seq[Query] = Seq(
+    Query("q195_fuzzy_join", q195FuzzyJoin,
       """WITH clean AS (
         |  SELECT c_custkey, translate(lpad(CAST(c_custkey AS VARCHAR), 6, '0'),
         |    '0123456789', 'abcdefghij') AS name FROM customer),
@@ -284,12 +274,12 @@ object Curation8 {
         |SELECT o_orderkey % 3 AS edit_kind, dist, count(*) AS n_matches,
         |  CAST(sum(CASE WHEN c_custkey = o_custkey THEN 1 ELSE 0 END) AS BIGINT) AS n_true,
         |  CAST(sum(c_custkey) AS BIGINT) AS key_sum
-        |FROM m GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
+        |FROM m GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
     // hashes recomputed arithmetically from the PNG generating formula
     // (lossless codec ⇒ decoded pixels ≡ formula); neighbor counts from
     // an exact all-pairs distance join (oracle-side only — the engine
     // side must get the same counts out of the banded chunk join)
-    "q196_phash_dedup" ->
+    Query("q196_phash_dedup", q196PhashDedup,
       """WITH ids AS (SELECT doc_id AS id, 16 + doc_id % 17 AS w, 12 + doc_id % 13 AS h
         |  FROM documents WHERE doc_id % 10 = 0),
         |px AS (
@@ -313,8 +303,8 @@ object Curation8 {
         |  GROUP BY a.id)
         |SELECT hs.id, hs.hash_hi, hs.hash_lo, hs.n_ones,
         |  CAST(coalesce(nb.nn, 0) AS BIGINT) AS n_neighbors
-        |FROM hs LEFT JOIN nb ON nb.id = hs.id ORDER BY hs.id""".stripMargin,
-    "q197_keyword_scrub" ->
+        |FROM hs LEFT JOIN nb ON nb.id = hs.id ORDER BY hs.id""".stripMargin),
+    Query("q197_keyword_scrub", q197KeywordScrub,
       """WITH terms AS (
         |  SELECT w AS term FROM (
         |    SELECT w, count(*) n FROM (SELECT unnest(string_split(text, ' ')) w
@@ -326,8 +316,8 @@ object Curation8 {
         |  FROM documents d, terms t)
         |SELECT term, CAST(count(CASE WHEN n > 0 THEN 1 END) AS BIGINT) AS n_docs,
         |  CAST(sum(n) AS BIGINT) AS n_occ
-        |FROM occ GROUP BY term ORDER BY term""".stripMargin,
-    "q198_source_jaccard" ->
+        |FROM occ GROUP BY term ORDER BY term""".stripMargin),
+    Query("q198_source_jaccard", q198SourceJaccard,
       """WITH sh AS (SELECT DISTINCT source, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
         |  FROM (SELECT source, string_split(text, ' ') w FROM documents),
         |       unnest(range(1, greatest(len(w) - 1, 1))) t(i)),
@@ -348,8 +338,8 @@ object Curation8 {
         |  round(est.eq / 16.0, 6) AS mh_estimate
         |FROM inter i JOIN sz za ON za.source = i.sa JOIN sz zb ON zb.source = i.sb
         |JOIN est ON est.sa = i.sa AND est.sb = i.sb
-        |ORDER BY 1, 2""".stripMargin,
-    "q199_luhn_pii" ->
+        |ORDER BY 1, 2""".stripMargin),
+    Query("q199_luhn_pii", q199LuhnPii,
       """WITH cand AS (SELECT o_orderkey,
         |    lpad(CAST((o_orderkey * 7919 + o_custkey) % 10000000000000000 AS VARCHAR),
         |      16, '0') AS pan
@@ -364,8 +354,8 @@ object Curation8 {
         |  FROM digits GROUP BY 1, 2)
         |SELECT (s % 10 = 0) AS luhn_valid, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(o_orderkey) AS BIGINT) AS key_sum
-        |FROM luhn GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q200_kmv_distinct" ->
+        |FROM luhn GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q200_kmv_distinct", q200KmvDistinct,
       """WITH sh AS (SELECT DISTINCT source, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
         |  FROM (SELECT source, string_split(text, ' ') w FROM documents),
         |       unnest(range(1, greatest(len(w) - 1, 1))) t(i)),
@@ -387,5 +377,5 @@ object Curation8 {
         |  (direct.hk = merged.hk) AS merge_consistent,
         |  (abs(CAST((direct.k - 1) * 281474976710656 // direct.hk AS DOUBLE)
         |    / exact.n - 1.0) < 0.2) AS within_20pct
-        |FROM direct, merged, exact""".stripMargin)
+        |FROM direct, merged, exact""".stripMargin))
 }

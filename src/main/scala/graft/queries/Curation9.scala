@@ -4,8 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
-import graft.functions.GraftRegistry
+import graft.{Q, Query}
 import graft.functions.TextFunctions.words
 import graft.sources.Tables
 
@@ -109,7 +108,6 @@ object Curation9 {
     * GROUP BY ... HAVING.
     */
   private val q204HeavyHitters: Q = (s, d) => {
-    GraftRegistry.register(s)
     // spread the single-row-group doc scan (the per-char explode ran
     // single-task), and fuse the exact total into the Misra-Gries pass:
     // the sketch pass, the count pass and the re-count pass were three
@@ -251,26 +249,16 @@ object Curation9 {
       .orderBy("source")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q201_attribution" -> q201Attribution,
-    "q202_fim_split" -> q202FimSplit,
-    "q203_target_encode" -> q203TargetEncode,
-    "q204_heavy_hitters" -> q204HeavyHitters,
-    "q205_thread_paths" -> q205ThreadPaths,
-    "q206_rouge_overlap" -> q206RougeOverlap,
-    "q207_skipgram_pairs" -> q207SkipgramPairs,
-    "q208_ndcg_eval" -> q208NdcgEval)
-
-  val oracles: Map[String, String] = Map(
-    "q201_attribution" ->
+  val queries: Seq[Query] = Seq(
+    Query("q201_attribution", q201Attribution,
       """WITH ev AS (SELECT user_id, event_type, value, epoch_us(ts) us FROM events),
         |a AS (SELECT *, last_value(CASE WHEN event_type <> 'purchase' THEN event_type END IGNORE NULLS)
         |        OVER (PARTITION BY user_id ORDER BY us RANGE BETWEEN 604800000000 PRECEDING AND 1 PRECEDING) channel
         |      FROM ev)
         |SELECT coalesce(channel, 'organic') AS channel, CAST(count(*) AS BIGINT) n_conv,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(28,2)) revenue
-        |FROM a WHERE event_type = 'purchase' GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q202_fim_split" ->
+        |FROM a WHERE event_type = 'purchase' GROUP BY 1 ORDER BY 1""".stripMargin),
+    Query("q202_fim_split", q202FimSplit,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') w, len(str_split(text, ' ')) n FROM documents
         |  WHERE len(str_split(text, ' ')) >= 3),
         |s AS (SELECT doc_id, n, 1 + (doc_id * 7919 + 13) % (n - 1) AS p1,
@@ -284,8 +272,8 @@ object Curation9 {
         |  CAST(n - hi AS BIGINT) n_suffix,
         |  md5(CASE WHEN doc_id % 2 = 0 THEN '<PRE>' || pre || '<SUF>' || suf || '<MID>' || mid
         |           ELSE '<SUF>' || suf || '<PRE>' || pre || '<MID>' || mid END) AS fim_md5
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "q203_target_encode" ->
+        |FROM r ORDER BY doc_id""".stripMargin),
+    Query("q203_target_encode", q203TargetEncode,
       """WITH base AS (SELECT o_orderpriority cat, o_orderkey % 5 fold,
         |    CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END y FROM orders),
         |cf AS (SELECT cat, fold, CAST(count(*) AS BIGINT) n_cf, CAST(sum(y) AS BIGINT) s_cf
@@ -294,15 +282,15 @@ object Curation9 {
         |g AS (SELECT sum(y)::DOUBLE / count(*) pri FROM base)
         |SELECT cat, CAST(fold AS BIGINT) fold, n_cf AS n_rows,
         |  round((s_c - s_cf + 10.0 * (SELECT pri FROM g)) / (n_c - n_cf + 10), 9) AS enc
-        |FROM cf JOIN ct USING (cat) ORDER BY cat, fold""".stripMargin,
-    "q204_heavy_hitters" ->
+        |FROM cf JOIN ct USING (cat) ORDER BY cat, fold""".stripMargin),
+    Query("q204_heavy_hitters", q204HeavyHitters,
       """WITH t AS (SELECT unnest(str_split(replace(text, ' ', ''), '')) w FROM documents),
         |t2 AS (SELECT w FROM t WHERE w <> ''),
         |c AS (SELECT w, CAST(count(*) AS BIGINT) n_exact FROM t2 GROUP BY w),
         |n AS (SELECT count(*)::DOUBLE tot FROM t2)
         |SELECT w AS word, n_exact FROM c, n WHERE n_exact > tot / 15.0
-        |ORDER BY n_exact DESC, word""".stripMargin,
-    "q205_thread_paths" ->
+        |ORDER BY n_exact DESC, word""".stripMargin),
+    Query("q205_thread_paths", q205ThreadPaths,
       """WITH RECURSIVE ch AS (
         |  SELECT event_id AS id, event_id AS root, 0 AS depth, CAST(event_id AS VARCHAR) AS path
         |  FROM events WHERE event_id % 5 = 0
@@ -311,8 +299,8 @@ object Curation9 {
         |  FROM events e JOIN ch ON e.event_id - 1 = ch.id AND e.event_id % 5 <> 0)
         |SELECT CAST(depth AS BIGINT) depth, CAST(count(*) AS BIGINT) n,
         |  CAST(sum(root) AS BIGINT) root_sum, min(path) min_path, max(path) max_path
-        |FROM ch GROUP BY depth ORDER BY depth""".stripMargin,
-    "q206_rouge_overlap" ->
+        |FROM ch GROUP BY depth ORDER BY depth""".stripMargin),
+    Query("q206_rouge_overlap", q206RougeOverlap,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
         |candt AS (SELECT doc_id // 2 AS pid, w[1:30] w FROM t WHERE doc_id % 2 = 0),
         |reft AS (SELECT doc_id // 2 AS pid, w FROM t WHERE doc_id % 2 = 1),
@@ -332,16 +320,16 @@ object Curation9 {
         |  coalesce(ov2, 0) ov2, coalesce(reftot2, 0) reftot2,
         |  round(coalesce(ov2, 0)::DOUBLE / nullif(coalesce(reftot2, 0), 0), 6) rouge2
         |FROM rt1 LEFT JOIN ov1 USING (pid) LEFT JOIN rt2 USING (pid) LEFT JOIN ov2 USING (pid)
-        |ORDER BY pid""".stripMargin,
-    "q207_skipgram_pairs" ->
+        |ORDER BY pid""".stripMargin),
+    Query("q207_skipgram_pairs", q207SkipgramPairs,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') l FROM documents),
         |p AS (SELECT doc_id, l[i] AS w, i FROM t, unnest(generate_series(1, len(l))) AS g(i)
         |  WHERE l[i] <> ''),
         |pr AS (SELECT a.w x, b.w y, abs(a.i - b.i) dist FROM p a JOIN p b
         |  ON a.doc_id = b.doc_id AND abs(a.i - b.i) BETWEEN 1 AND 3)
         |SELECT x, y, CAST(dist AS BIGINT) dist, CAST(count(*) AS BIGINT) n
-        |FROM pr GROUP BY 1, 2, 3 ORDER BY n DESC, x, y, dist LIMIT 40""".stripMargin,
-    "q208_ndcg_eval" ->
+        |FROM pr GROUP BY 1, 2, 3 ORDER BY n DESC, x, y, dist LIMIT 40""".stripMargin),
+    Query("q208_ndcg_eval", q208NdcgEval,
       """WITH d AS (SELECT source, doc_id, n_chars, (doc_id // 20) % 4 rel FROM documents),
         |rk AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) rnk FROM d),
         |ik AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY rel DESC, doc_id) irnk FROM d),
@@ -352,5 +340,5 @@ object Curation9 {
         |SELECT source, n_ranked, round(CAST(dcg AS DOUBLE), 6) dcg,
         |  round(CAST(idcg AS DOUBLE), 6) idcg,
         |  round(CAST(dcg AS DOUBLE) / nullif(CAST(idcg AS DOUBLE), 0.0), 6) ndcg
-        |FROM dcg JOIN idcg USING (source) ORDER BY source""".stripMargin)
+        |FROM dcg JOIN idcg USING (source) ORDER BY source""".stripMargin))
 }

@@ -4,7 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
+import graft.{Q, Query}
+import graft.functions.TextFunctions.mdHashSql
 import graft.operators.{Dedup, Similarity}
 import graft.sources.Tables
 
@@ -269,30 +270,6 @@ object DedupSim {
       .select("anchor", "rank", "neg", "bucket", "cos")
       .orderBy("anchor", "rank")
 
-  val defs: Map[String, Q] = Map(
-    "q174_hard_negatives" -> q174HardNegatives,
-    "q173_ivf_indexed" -> q173IvfIndexed,
-    "q112_semdedup" -> q112Semdedup,
-    "q109_paragraph_dedup" -> q109ParagraphDedup,
-    "q105_lsh_recall" -> q105LshRecall,
-    "q104_simhash_hamming" -> q104SimhashHamming,
-    "q101_cross_doc_spans" -> q101CrossDocSpans,
-    "q100_kmeans_step" -> q100KmeansStep,
-    "q70_dedup_exact" -> q70DedupExact,
-    "q68_dedup_clusters" -> q68DedupClusters,
-    "q89_dedup_e2e" -> q89DedupE2E,
-    "q78_dedup_keep_best" -> q78DedupKeepBest,
-    "q79_embedding_quantize" -> q79EmbeddingQuantize,
-    "q71_dedup_minhash_lsh" -> q71MinhashLsh,
-    "q72_dedup_simhash" -> q72Simhash,
-    "q73_dedup_ngram_jaccard" -> q73NgramJaccard,
-    "q74_dedup_cosine" -> q74CosineNearDup,
-    "q75_similarity_topk" -> q75SimilarityTopK,
-    "q76_similarity_lsh" -> q76LshNearDup,
-    "q77_similarity_ivf" -> q77SimilarityIvf)
-
-  private[queries] val h = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
   /** Shared oracle CTE chain: per-doc 64-bit SimHash sketch as a signed
     * BIGINT (`sh(doc_id, sh64)`). Word hash = first 16 md5 hex chars as
     * UBIGINT (bit slicing is sign-agnostic); the HUGEINT bit-sum is
@@ -338,10 +315,10 @@ object DedupSim {
     s"""${shinglesCte.replaceFirst("^WITH ", "WITH RECURSIVE ")},
        |sig AS (SELECT doc_id, s,
        |    [list_min(list_transform(s, x ->
-       |      ${h.format("x")} + i * ('0x' || substr(md5(x), 16, 12))::BIGINT))
+       |      ${mdHashSql("x")} + i * ('0x' || substr(md5(x), 16, 12))::BIGINT))
        |      for i in range(0, 48)] sig
        |  FROM sh),
-       |hs AS (SELECT doc_id, list_transform(s, x -> ${h.format("x")}) hh FROM sh),
+       |hs AS (SELECT doc_id, list_transform(s, x -> ${mdHashSql("x")}) hh FROM sh),
        |bands AS (SELECT doc_id, b,
        |    array_to_string(sig[b*4+1 : b*4+4], ',') bkey
        |  FROM sig, (SELECT unnest(range(0, 12)) b) bs),
@@ -360,8 +337,8 @@ object DedupSim {
        |  SELECT e.dst AS id, reach.r FROM edges e JOIN reach ON e.src = reach.id),
        |comp AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
 
-  val oracles: Map[String, String] = Map(
-    "q105_lsh_recall" ->
+  val queries: Seq[Query] = Seq(
+    Query("q105_lsh_recall", q105LshRecall,
       s"""$vecCte,
          |exact AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
          |  FROM vecs a JOIN vecs b ON a.vec_id < b.vec_id
@@ -370,7 +347,7 @@ object DedupSim {
          |dotted AS (SELECT vec_id, e,
          |    list_transform(range(0, 8), p ->
          |      list_sum(list_transform(range(1, 65), j ->
-         |        e[j] * CASE WHEN ${h.format("p::VARCHAR || ',' || j::VARCHAR")} % 2 = 1
+         |        e[j] * CASE WHEN ${mdHashSql("p::VARCHAR || ',' || j::VARCHAR")} % 2 = 1
          |               THEN 1.0 ELSE -1.0 END))) dots
          |  FROM vecs),
          |bucketed AS (SELECT vec_id, e,
@@ -386,15 +363,15 @@ object DedupSim {
          |  (SELECT count(*) FROM lsh) AS n_lsh,
          |  (SELECT count(*) FROM common) AS n_common,
          |  round((SELECT count(*) FROM common)::DOUBLE /
-         |    (SELECT count(*) FROM exact)::DOUBLE, 6) AS recall""".stripMargin,
-    "q104_simhash_hamming" ->
+         |    (SELECT count(*) FROM exact)::DOUBLE, 6) AS recall""".stripMargin),
+    Query("q104_simhash_hamming", q104SimhashHamming,
       s"""$simhash64Ctes
          |SELECT a.doc_id id_a, b.doc_id id_b,
          |  bit_count(xor(a.sh64, b.sh64))::INT AS hamming
          |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
          |WHERE bit_count(xor(a.sh64, b.sh64)) <= 1
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q101_cross_doc_spans" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Query("q101_cross_doc_spans", q101CrossDocSpans,
       """WITH docs AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
         |g AS (SELECT doc_id,
         |    unnest([('0x' || substr(md5(array_to_string(w[i:i+5], ' ')), 1, 15))::BIGINT
@@ -405,8 +382,8 @@ object DedupSim {
         |  sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END)::BIGINT AS n_dup,
         |  round(sum(CASE WHEN nd >= 2 THEN 1 ELSE 0 END)::DOUBLE / count(*)::DOUBLE, 6)
         |    AS dup_frac
-        |FROM g JOIN ph USING (h) GROUP BY doc_id ORDER BY id""".stripMargin,
-    "q100_kmeans_step" ->
+        |FROM g JOIN ph USING (h) GROUP BY doc_id ORDER BY id""".stripMargin),
+    Query("q100_kmeans_step", q100KmeansStep,
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
         |mm AS (SELECT ${Similarity.sqrtModulusLadderSql("c")} m
@@ -423,12 +400,12 @@ object DedupSim {
         |  FROM assigned, range(1, 65) t(i))
         |SELECT cid, pos, count(*) AS n_members,
         |  round(CAST(sum(CAST(x AS DECIMAL(30,12))) AS DOUBLE) / count(*), 6) AS coord
-        |FROM cells GROUP BY cid, pos ORDER BY cid, pos""".stripMargin,
-    "q68_dedup_clusters" ->
+        |FROM cells GROUP BY cid, pos ORDER BY cid, pos""".stripMargin),
+    Query("q68_dedup_clusters", q68DedupClusters,
       s"""$lshClusterCtes
          |SELECT cluster_id, count(*) AS n_docs, max(id) AS max_id
-         |FROM comp GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
-    "q89_dedup_e2e" ->
+         |FROM comp GROUP BY cluster_id ORDER BY cluster_id""".stripMargin),
+    Query("q89_dedup_e2e", q89DedupE2E,
       s"""$lshClusterCtes,
          |scored AS (SELECT d.doc_id, d.lang, d.n_chars,
          |    coalesce(c.cluster_id, d.doc_id) AS cid,
@@ -444,18 +421,18 @@ object DedupSim {
          |    FROM scored) WHERE rn = 1)
          |SELECT lang, count(*) AS n_kept, sum(n_chars)::BIGINT AS sum_chars,
          |  min(doc_id) AS first_doc
-         |FROM kept GROUP BY lang ORDER BY lang""".stripMargin,
-    "q79_embedding_quantize" ->
+         |FROM kept GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("q79_embedding_quantize", q79EmbeddingQuantize,
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
         |m AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS max_abs FROM e)
         |SELECT vec_id, round(max_abs, 6) AS max_abs,
         |  list_sum(list_transform(v, x -> round(x * 127.0 / max_abs, 0)::BIGINT))::BIGINT AS qsum
-        |FROM m ORDER BY vec_id""".stripMargin,
-    "q78_dedup_keep_best" ->
+        |FROM m ORDER BY vec_id""".stripMargin),
+    Query("q78_dedup_keep_best", q78DedupKeepBest,
       s"""WITH t AS (SELECT doc_id, text, str_split(text, ' ') w FROM documents),
          |f AS (SELECT doc_id,
-         |    ${h.format("array_to_string(list_sort(list_distinct(w)), ' ')")} fp,
+         |    ${mdHashSql("array_to_string(list_sort(list_distinct(w)), ' ')")} fp,
          |    least(len(w)::DOUBLE / 100.0, 1.0) * 0.4
          |      + (len(list_distinct(w))::DOUBLE / len(w)::DOUBLE) * 0.3
          |      + ((length(regexp_replace(text, '[^A-Za-z ]', '', 'g'))::DOUBLE + 1.0)
@@ -466,8 +443,8 @@ object DedupSim {
          |    row_number() OVER (PARTITION BY fp ORDER BY q DESC, doc_id ASC) rn
          |  FROM f)
          |SELECT fp, doc_id AS kept_id, n_docs, round(q, 6) AS kept_quality
-         |FROM r WHERE n_docs >= 2 AND rn = 1 ORDER BY fp""".stripMargin,
-    "q112_semdedup" ->
+         |FROM r WHERE n_docs >= 2 AND rn = 1 ORDER BY fp""".stripMargin),
+    Query("q112_semdedup", q112Semdedup,
       s"""$vecCte,
          |mm AS (SELECT ${Similarity.sqrtModulusLadderSql("c")} m
          |  FROM (SELECT count(*) c FROM base)),
@@ -485,8 +462,8 @@ object DedupSim {
          |FROM assigned a JOIN assigned b ON a.cid = b.cid AND a.nid < b.nid
          |WHERE list_dot_product(a.e, b.e) /
          |    sqrt(list_dot_product(a.e, a.e) * list_dot_product(b.e, b.e)) >= 0.99
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q109_paragraph_dedup" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Query("q109_paragraph_dedup", q109ParagraphDedup,
       """WITH lined AS (
         |  SELECT doc_id,
         |    list_transform(range(0, CAST(ceil(len(string_split(text, ' ')) / 8.0) AS INT)),
@@ -507,23 +484,23 @@ object DedupSim {
         |SELECT l.doc_id, len(l.ls)::BIGINT AS n_lines,
         |  coalesce(a.n_kept, 0) AS n_kept,
         |  coalesce(a.text_kept, '') AS text_kept
-        |FROM lined l LEFT JOIN agg a USING (doc_id) ORDER BY doc_id""".stripMargin,
-    "q70_dedup_exact" ->
+        |FROM lined l LEFT JOIN agg a USING (doc_id) ORDER BY doc_id""".stripMargin),
+    Query("q70_dedup_exact", q70DedupExact,
       """WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 100000, text FROM documents WHERE doc_id % 10 = 0)
         |SELECT md5(text) AS content_hash, min(doc_id) AS kept_id, count(*) AS n_copies
         |FROM corpus GROUP BY md5(text) HAVING count(*) >= 2
-        |ORDER BY content_hash""".stripMargin,
-    "q71_dedup_minhash_lsh" ->
+        |ORDER BY content_hash""".stripMargin),
+    Query("q71_dedup_minhash_lsh", q71MinhashLsh,
       s"""$shinglesCte,
          |sig AS (SELECT doc_id, s,
          |    [list_min(list_transform(s, x ->
-         |      ${h.format("x")} + i * ('0x' || substr(md5(x), 16, 12))::BIGINT))
+         |      ${mdHashSql("x")} + i * ('0x' || substr(md5(x), 16, 12))::BIGINT))
          |      for i in range(0, 48)] sig
          |  FROM sh),
-         |hs AS (SELECT doc_id, list_transform(s, x -> ${h.format("x")}) hh FROM sh),
+         |hs AS (SELECT doc_id, list_transform(s, x -> ${mdHashSql("x")}) hh FROM sh),
          |bands AS (SELECT doc_id, b,
          |    array_to_string(sig[b*4+1 : b*4+4], ',') bkey
          |  FROM sig, (SELECT unnest(range(0, 12)) b) bs),
@@ -534,29 +511,29 @@ object DedupSim {
          |      (len(x.hh)::DOUBLE + len(y.hh)::DOUBLE - len(list_intersect(x.hh, y.hh))::DOUBLE) jac
          |  FROM cand JOIN hs x ON x.doc_id = id_a JOIN hs y ON y.doc_id = id_b)
          |SELECT id_a, id_b, round(jac, 6) AS jac FROM pairs
-         |WHERE jac >= 0.8 ORDER BY id_a, id_b""".stripMargin,
-    "q72_dedup_simhash" ->
+         |WHERE jac >= 0.8 ORDER BY id_a, id_b""".stripMargin),
+    Query("q72_dedup_simhash", q72Simhash,
       s"""$simhash64Ctes
          |SELECT sh64, count(*) AS n_docs, min(doc_id) AS min_id
-         |FROM sh GROUP BY sh64 HAVING count(*) >= 2 ORDER BY sh64""".stripMargin,
-    "q73_dedup_ngram_jaccard" ->
+         |FROM sh GROUP BY sh64 HAVING count(*) >= 2 ORDER BY sh64""".stripMargin),
+    Query("q73_dedup_ngram_jaccard", q73NgramJaccard,
       s"""$shinglesCte,
-         |hs AS (SELECT doc_id, lang, list_transform(s, x -> ${h.format("x")}) hh FROM sh)
+         |hs AS (SELECT doc_id, lang, list_transform(s, x -> ${mdHashSql("x")}) hh FROM sh)
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |  round(len(list_intersect(a.hh, b.hh))::DOUBLE /
          |    (len(a.hh)::DOUBLE + len(b.hh)::DOUBLE - len(list_intersect(a.hh, b.hh))::DOUBLE), 6) AS jac
          |FROM hs a JOIN hs b ON a.lang = b.lang AND a.doc_id < b.doc_id
          |WHERE len(list_intersect(a.hh, b.hh))::DOUBLE /
          |    (len(a.hh)::DOUBLE + len(b.hh)::DOUBLE - len(list_intersect(a.hh, b.hh))::DOUBLE) >= 0.8
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q74_dedup_cosine" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Query("q74_dedup_cosine", q74CosineNearDup,
       s"""$vecCte
          |SELECT a.vec_id AS id_a, b.vec_id AS id_b,
          |  list_dot_product(a.e, b.e) / sqrt(list_dot_product(a.e, a.e) * list_dot_product(b.e, b.e)) AS cos
          |FROM vecs a JOIN vecs b ON a.vec_id < b.vec_id
          |WHERE list_dot_product(a.e, b.e) / sqrt(list_dot_product(a.e, a.e) * list_dot_product(b.e, b.e)) >= 0.99
-         |ORDER BY id_a, id_b""".stripMargin,
-    "q75_similarity_topk" ->
+         |ORDER BY id_a, id_b""".stripMargin),
+    Query("q75_similarity_topk", q75SimilarityTopK,
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
         |qm2 AS (SELECT ${Similarity.fixedCountModulusLadderSql("c")} q_m
@@ -569,8 +546,8 @@ object DedupSim {
         |    row_number() OVER (PARTITION BY qid ORDER BY round(cos, 9) DESC, nid ASC) AS rank
         |  FROM sims)
         |SELECT qid, rank, nid, cos FROM ranked WHERE rank <= 5
-        |ORDER BY qid, rank""".stripMargin,
-    "q173_ivf_indexed" ->
+        |ORDER BY qid, rank""".stripMargin),
+    Query("q173_ivf_indexed", q173IvfIndexed,
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
         |mm AS (SELECT ${Similarity.sqrtModulusLadderSql("c")} m
@@ -602,8 +579,8 @@ object DedupSim {
         |      ORDER BY round(cos, 9) DESC, nid ASC) AS rank
         |  FROM hits)
         |SELECT qid, rank, nid, cos FROM ranked WHERE rank <= 3
-        |ORDER BY qid, rank""".stripMargin,
-    "q77_similarity_ivf" ->
+        |ORDER BY qid, rank""".stripMargin),
+    Query("q77_similarity_ivf", q77SimilarityIvf,
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) v
         |    FROM embeddings),
         |mm AS (SELECT ${Similarity.sqrtModulusLadderSql("c")} m
@@ -635,14 +612,14 @@ object DedupSim {
         |      ORDER BY round(cos, 9) DESC, nid ASC) AS rank
         |  FROM hits)
         |SELECT qid, rank, nid, cos FROM ranked WHERE rank <= 3
-        |ORDER BY qid, rank""".stripMargin,
-    "q174_hard_negatives" ->
+        |ORDER BY qid, rank""".stripMargin),
+    Query("q174_hard_negatives", q174HardNegatives,
       s"""WITH e0 AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) e
          |    FROM embeddings),
          |dotted AS (SELECT vec_id, e,
          |    list_transform(range(0, 8), p ->
          |      list_sum(list_transform(range(1, 65), j ->
-         |        e[j] * CASE WHEN ${h.format("p::VARCHAR || ',' || j::VARCHAR")} % 2 = 1
+         |        e[j] * CASE WHEN ${mdHashSql("p::VARCHAR || ',' || j::VARCHAR")} % 2 = 1
          |               THEN 1.0 ELSE -1.0 END))) dots
          |  FROM e0),
          |bucketed AS (SELECT vec_id, e,
@@ -657,13 +634,13 @@ object DedupSim {
          |      ORDER BY round(cos, 9) DESC, neg ASC) AS rank
          |  FROM cand WHERE cos <= 0.9)
          |SELECT anchor, rank, neg, bucket, cos FROM ranked WHERE rank <= 3
-         |ORDER BY anchor, rank""".stripMargin,
-    "q76_similarity_lsh" ->
+         |ORDER BY anchor, rank""".stripMargin),
+    Query("q76_similarity_lsh", q76LshNearDup,
       s"""$vecCte,
          |dotted AS (SELECT vec_id, e,
          |    list_transform(range(0, 8), p ->
          |      list_sum(list_transform(range(1, 65), j ->
-         |        e[j] * CASE WHEN ${h.format("p::VARCHAR || ',' || j::VARCHAR")} % 2 = 1
+         |        e[j] * CASE WHEN ${mdHashSql("p::VARCHAR || ',' || j::VARCHAR")} % 2 = 1
          |               THEN 1.0 ELSE -1.0 END))) dots
          |  FROM vecs),
          |bucketed AS (SELECT vec_id, e,
@@ -674,5 +651,5 @@ object DedupSim {
          |  list_dot_product(a.e, b.e) / sqrt(list_dot_product(a.e, a.e) * list_dot_product(b.e, b.e)) AS cos
          |FROM bucketed a JOIN bucketed b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
          |WHERE list_dot_product(a.e, b.e) / sqrt(list_dot_product(a.e, a.e) * list_dot_product(b.e, b.e)) >= 0.99
-         |ORDER BY id_a, id_b""".stripMargin)
+         |ORDER BY id_a, id_b""".stripMargin))
 }

@@ -2,8 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Q
-import graft.functions.GraftRegistry
+import graft.{Q, Query}
 import graft.operators.Multimodal
 import graft.sources.Tables
 
@@ -15,7 +14,6 @@ object Extended {
 
   /** Typed-Aggregator UDAF (geometric mean) next to stock aggregates. */
   private val q33Geomean: Q = (s, d) => {
-    GraftRegistry.register(s)
     Tables.lineitem(s, d)
       .groupBy("l_returnflag")
       .agg(
@@ -32,7 +30,6 @@ object Extended {
     * bit-for-bit.
     */
   private val q115CountMin: Q = (s, d) => {
-    GraftRegistry.register(s)
     import graft.functions.TextFunctions.mdHash
     val ev = Tables.events(s, d)
       .select(get_json_object(col("props"), "$.k").cast("long").cast("string").as("page"))
@@ -51,7 +48,6 @@ object Extended {
 
   /** Native codegen'd logit expression through the SQL registry. */
   private val q34NativeLogit: Q = (s, d) => {
-    GraftRegistry.register(s)
     Tables.lineitem(s, d)
       .select(
         col("l_orderkey"), col("l_linenumber"),
@@ -110,7 +106,6 @@ object Extended {
     * rows → top-15 histogram.
     */
   private val q36CustomGenerator: Q = (s, d) => {
-    GraftRegistry.register(s)
     Tables.documents(s, d).createOrReplaceTempView("documents_v")
     s.sql(
       """SELECT shingle, count(*) AS n FROM (
@@ -118,17 +113,8 @@ object Extended {
         |GROUP BY shingle ORDER BY n DESC, shingle ASC LIMIT 15""".stripMargin)
   }
 
-  val defs: Map[String, Q] = Map(
-    "q115_count_min" -> q115CountMin,
-    "q33_udaf_geomean" -> q33Geomean,
-    "q36_custom_generator" -> q36CustomGenerator,
-    "q34_native_logit" -> q34NativeLogit,
-    "q35_multimodal_decode" -> q35Multimodal,
-    "q83_multimodal_resize" -> q83MultimodalResize,
-    "q84_multimodal_frame_sample" -> q84MultimodalFrameSample)
-
-  val oracles: Map[String, String] = Map(
-    "q115_count_min" ->
+  val queries: Seq[Query] = Seq(
+    Query("q115_count_min", q115CountMin,
       """WITH pages AS (SELECT CAST(json_extract_string(props, '$.k') AS BIGINT)::VARCHAR AS page
         |  FROM events),
         |exact AS (SELECT page, count(*) AS n_exact FROM pages GROUP BY page),
@@ -140,21 +126,21 @@ object Extended {
         |est AS (SELECT h.page, min(c.cell)::BIGINT AS est
         |  FROM h JOIN cells c ON h.i = c.i AND h.b = c.b GROUP BY h.page)
         |SELECT CAST(e.page AS BIGINT) AS page, e.n_exact, est.est
-        |FROM exact e JOIN est USING (page) ORDER BY page""".stripMargin,
-    "q36_custom_generator" ->
+        |FROM exact e JOIN est USING (page) ORDER BY page""".stripMargin),
+    Query("q36_custom_generator", q36CustomGenerator,
       """WITH t AS (SELECT str_split(text, ' ') w FROM documents),
         |sh AS (SELECT unnest([array_to_string(w[i:i+2], ' ')
         |    for i in range(1, greatest(len(w) - 2, 1) + 1)]) AS shingle FROM t)
         |SELECT shingle, count(*) AS n FROM sh
-        |GROUP BY shingle ORDER BY n DESC, shingle ASC LIMIT 15""".stripMargin,
-    "q33_udaf_geomean" ->
+        |GROUP BY shingle ORDER BY n DESC, shingle ASC LIMIT 15""".stripMargin),
+    Query("q33_udaf_geomean", q33Geomean,
       """SELECT l_returnflag, exp(avg(ln(l_extendedprice))) AS geo_price, count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q34_native_logit" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q34_native_logit", q34NativeLogit,
       """SELECT l_orderkey, l_linenumber,
         |  round(ln((l_discount + 0.05) / (1.0 - (l_discount + 0.05))), 6) AS logit_disc
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "q83_multimodal_resize" ->
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    Query("q83_multimodal_resize", q83MultimodalResize,
       """WITH t AS (SELECT doc_id AS id, text,
         |    ((doc_id % 8) * 160 + 320)::INT AS w,
         |    ((doc_id % 8) * 90 + 180)::INT AS h,
@@ -169,8 +155,8 @@ object Extended {
         |  FROM t)
         |SELECT id, 8 AS out_w, 6 AS out_h, 48 AS n_bytes,
         |  ('0x' || substr(md5(out), 1, 15))::BIGINT AS checksum
-        |FROM px ORDER BY id""".stripMargin,
-    "q84_multimodal_frame_sample" ->
+        |FROM px ORDER BY id""".stripMargin),
+    Query("q84_multimodal_frame_sample", q84MultimodalFrameSample,
       """WITH t AS (SELECT doc_id AS id, text, length(text) AS len
         |  FROM documents
         |  WHERE doc_id < 300 AND octet_length(encode(text)) = length(text)
@@ -181,13 +167,13 @@ object Extended {
         |  FROM t)
         |SELECT id, n_frames, ((n_frames + 2) // 3)::INT AS n_sampled,
         |  ('0x' || substr(md5(samp), 1, 15))::BIGINT AS checksum
-        |FROM fr ORDER BY id""".stripMargin,
-    "q35_multimodal_decode" ->
+        |FROM fr ORDER BY id""".stripMargin),
+    Query("q35_multimodal_decode", q35Multimodal,
       """SELECT doc_id AS id, source,
         |  octet_length(encode(text))::BIGINT AS n_bytes,
         |  ('0x' || substr(md5(text), 1, 15))::BIGINT AS checksum,
         |  upper(hex(encode(substr(text, 1, 16)))) AS frame_hex,
         |  ((doc_id % 8) * 160 + 320)::INT AS width,
         |  ((doc_id % 8) * 90 + 180)::INT AS height
-        |FROM documents ORDER BY id""".stripMargin)
+        |FROM documents ORDER BY id""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Scalar-function surface (SURVEY.md §2.2: filter algebra, math, string,
@@ -213,28 +213,16 @@ object Functions {
       .orderBy("doc_id")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q50_filter_predicates" -> q50FilterPredicates,
-    "q51_math_funcs" -> q51MathFuncs,
-    "q52_string_funcs" -> q52StringFuncs,
-    "q53_date_funcs" -> q53DateFuncs,
-    "q54_array_funcs" -> q54ArrayFuncs,
-    "q55_higher_order" -> q55HigherOrder,
-    "q56_json_funcs" -> q56JsonFuncs,
-    "q57_explode" -> q57Explode,
-    "q58_posexplode" -> q58PosExplode,
-    "q59_map_funcs" -> q59MapFuncs)
-
-  val oracles: Map[String, String] = Map(
-    "q50_filter_predicates" ->
+  val queries: Seq[Query] = Seq(
+    Query("q50_filter_predicates", q50FilterPredicates,
       """SELECT l_returnflag, count(*) AS n, sum(CAST(l_quantity AS BIGINT))::BIGINT AS sum_qty
         |FROM lineitem
         |WHERE l_returnflag IN ('A','R') AND l_quantity BETWEEN 5 AND 45
         |  AND NOT (l_linestatus = 'O')
         |  AND (l_shipdate >= TIMESTAMP '1994-01-01' OR l_discount > 0.08)
         |  AND l_returnflag IS NOT NULL AND l_linestatus LIKE 'F%'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q51_math_funcs" ->
+        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q51_math_funcs", q51MathFuncs,
       """SELECT p_partkey,
         |  round(sqrt(p_retailprice), 6) AS sqrt_price,
         |  round(exp(CAST(p_size AS DOUBLE) / 10.0), 6) AS exp_size,
@@ -243,8 +231,8 @@ object Functions {
         |  CAST(floor(p_retailprice) AS BIGINT) AS floor_price,
         |  CAST(ceil(p_retailprice) AS BIGINT) AS ceil_price,
         |  round(ln(p_retailprice + 1.0), 6) AS ln_price
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q52_string_funcs" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q52_string_funcs", q52StringFuncs,
       """SELECT p_partkey,
         |  length(p_name) AS name_len,
         |  upper(p_brand) AS brand_up,
@@ -257,8 +245,8 @@ object Functions {
         |  strpos(p_type, 'a') AS a_pos,
         |  lpad(CAST(p_partkey AS VARCHAR), 8, '0') AS key_pad,
         |  len(str_split(p_name, ' ')) AS n_words
-        |FROM part ORDER BY p_partkey""".stripMargin,
-    "q53_date_funcs" ->
+        |FROM part ORDER BY p_partkey""".stripMargin),
+    Query("q53_date_funcs", q53DateFuncs,
       """SELECT o_orderkey,
         |  year(o_orderdate) AS y, month(o_orderdate) AS m,
         |  day(o_orderdate) AS dom, dayofweek(o_orderdate) + 1 AS dow,
@@ -266,8 +254,8 @@ object Functions {
         |  epoch(o_orderdate)::BIGINT AS epoch_s,
         |  CAST(o_orderdate AS DATE) + INTERVAL 30 DAY AS due_date,
         |  datediff('day', CAST(o_orderdate AS DATE), DATE '1999-01-01') AS days_to_99
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q54_array_funcs" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("q54_array_funcs", q54ArrayFuncs,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') w FROM documents)
         |SELECT doc_id,
         |  len(w) AS n_words,
@@ -278,8 +266,8 @@ object Functions {
         |  list_sort(list_distinct(w))[1] AS min_w,
         |  len(list_intersect(w, ['spark','data','query'])) AS n_kw,
         |  len(flatten([w[1:2], w[3:4]])) AS n_flat
-        |FROM t ORDER BY doc_id""".stripMargin,
-    "q55_higher_order" ->
+        |FROM t ORDER BY doc_id""".stripMargin),
+    Query("q55_higher_order", q55HigherOrder,
       """WITH t AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) e
         |  FROM embeddings)
         |SELECT vec_id,
@@ -288,24 +276,24 @@ object Functions {
         |  round(e[1] * 2.0, 6) AS first_x2,
         |  round(list_sum(list_transform(range(1, len(e) + 1),
         |    i -> e[i] * e[len(e) - i + 1])), 6) AS rev_dot
-        |FROM t ORDER BY vec_id""".stripMargin,
-    "q56_json_funcs" ->
+        |FROM t ORDER BY vec_id""".stripMargin),
+    Query("q56_json_funcs", q56JsonFuncs,
       """SELECT event_type, count(*) AS n,
         |  sum(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT AS sum_k,
         |  min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS min_k,
         |  max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k,
         |  sum(CAST(json_extract_string(props, '$.k') AS BIGINT))::BIGINT AS sum_k_typed,
         |  'STRUCT<k: BIGINT>' AS inferred_schema
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q57_explode" ->
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q57_explode", q57Explode,
       """SELECT word, count(*) AS n FROM (
         |  SELECT unnest(str_split(text, ' ')) AS word FROM documents)
-        |GROUP BY word ORDER BY n DESC, word ASC LIMIT 20""".stripMargin,
-    "q58_posexplode" ->
+        |GROUP BY word ORDER BY n DESC, word ASC LIMIT 20""".stripMargin),
+    Query("q58_posexplode", q58PosExplode,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') w FROM documents WHERE doc_id < 20)
         |SELECT doc_id, unnest([(i - 1)::VARCHAR || ':' || w[i] for i in range(1, len(w) + 1)]) AS pos_word
-        |FROM t ORDER BY doc_id, pos_word""".stripMargin,
-    "q59_map_funcs" ->
+        |FROM t ORDER BY doc_id, pos_word""".stripMargin),
+    Query("q59_map_funcs", q59MapFuncs,
       """WITH t AS (SELECT doc_id,
         |    list_sort(list_distinct(str_split(text, ' ')))[1:3] w3
         |  FROM documents WHERE doc_id < 50)
@@ -314,5 +302,5 @@ object Functions {
         |  array_to_string(w3, ',') AS keys_csv,
         |  list_sum(list_transform(w3, w -> length(w)))::INT AS sum_lens,
         |  length(w3[1]) AS first_len
-        |FROM t ORDER BY doc_id""".stripMargin)
+        |FROM t ORDER BY doc_id""".stripMargin))
 }

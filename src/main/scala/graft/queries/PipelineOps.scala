@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Q, Query}
 import graft.operators.{Contamination, Dedup, Sampling}
 import graft.sources.Tables
 
@@ -340,25 +340,6 @@ object PipelineOps {
       .orderBy("doc_id")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q133_negative_sampling" -> q133NegativeSampling,
-    "q134_word_dropout" -> q134WordDropout,
-    "q132_bloom_takedown" -> q132BloomTakedown,
-    "q130_gopher_rules" -> q130GopherRules,
-    "q131_bloom_semi_join" -> q131BloomSemiJoin,
-    "q126_zorder" -> q126Zorder,
-    "q179_dpp_join" -> q179DppJoin,
-    "q125_merge_upsert" -> q125MergeUpsert,
-    "q114_mixture_sample" -> q114MixtureSample,
-    "q113_importance_weights" -> q113ImportanceWeights,
-    "q111_quantile_filter" -> q111QuantileFilter,
-    "q110_pagerank" -> q110PageRank,
-    "q28_contamination" -> q28Contamination,
-    "q29_stratified_sample" -> q29StratifiedSample,
-    "q37_source_cap" -> q37SourceCap,
-    "q98_crosstab" -> q98Crosstab,
-    "q99_pipeline_e2e" -> q99PipelineE2E)
-
   /** One unrolled PageRank round for the q110 oracle — mirrors
     * Graph.pageRank's expression shapes exactly (decimal rank domain,
     * double intermediates, identical operand order).
@@ -374,8 +355,8 @@ object PipelineOps {
        |  FROM base b LEFT JOIN c$i c ON b.id = c.dst)""".stripMargin
   }
 
-  val oracles: Map[String, String] = Map(
-    "q133_negative_sampling" ->
+  val queries: Seq[Query] = Seq(
+    Query("q133_negative_sampling", q133NegativeSampling,
       """WITH n AS (SELECT count(*) AS n FROM embeddings),
         |cand AS (SELECT vec_id, label, j,
         |    ('0x' || substr(md5('neg|' || vec_id::VARCHAR || '|' || j::VARCHAR), 1, 15))::BIGINT
@@ -387,8 +368,8 @@ object PipelineOps {
         |SELECT g.vec_id, g.j, g.neg_id, e.label AS neg_label
         |FROM neg g JOIN embeddings e ON g.neg_id = e.vec_id
         |WHERE e.label <> g.label
-        |ORDER BY g.vec_id, g.j""".stripMargin,
-    "q134_word_dropout" ->
+        |ORDER BY g.vec_id, g.j""".stripMargin),
+    Query("q134_word_dropout", q134WordDropout,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') AS w
         |  FROM documents WHERE doc_id < 300),
         |k AS (SELECT doc_id, [w[i] FOR i IN range(1, len(w) + 1) IF
@@ -397,15 +378,15 @@ object PipelineOps {
         |  FROM t)
         |SELECT doc_id, len(kept)::BIGINT AS n_kept,
         |  array_to_string(kept[1:12], ' ') AS head
-        |FROM k ORDER BY doc_id""".stripMargin,
-    "q132_bloom_takedown" ->
+        |FROM k ORDER BY doc_id""".stripMargin),
+    Query("q132_bloom_takedown", q132BloomTakedown,
       """SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS sum_chars,
         |  min(doc_id) AS first_doc
         |FROM documents
         |WHERE md5(text) NOT IN (
         |  SELECT md5(text) FROM documents WHERE source = 'src3' AND lang = 'fr')
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q130_gopher_rules" ->
+        |GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("q130_gopher_rules", q130GopherRules,
       """WITH t AS (SELECT source, doc_id,
         |    len(str_split(text, ' ')) AS nw,
         |    length(replace(text, ' ', ''))::DOUBLE
@@ -418,19 +399,19 @@ object PipelineOps {
         |    WHEN mwl < 4.3 OR mwl > 4.7 THEN 'word_len'
         |    WHEN alpha < 0.999 THEN 'symbols' ELSE 'pass' END AS reason,
         |  count(*) AS n_docs, min(doc_id) AS first_doc, sum(nw)::BIGINT AS sum_words
-        |FROM t GROUP BY source, reason ORDER BY source, reason""".stripMargin,
-    "q131_bloom_semi_join" ->
+        |FROM t GROUP BY source, reason ORDER BY source, reason""".stripMargin),
+    Query("q131_bloom_semi_join", q131BloomSemiJoin,
       """SELECT o_orderpriority, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |FROM orders
         |WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_mktsegment = 'BUILDING')
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q179_dpp_join" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q179_dpp_join", q179DppJoin,
       """SELECT event_type, count(*) AS n,
         |  count(DISTINCT user_id) AS n_users
         |FROM events WHERE dayofweek(ts::DATE) = 1
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q126_zorder" ->
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+    Query("q126_zorder", q126Zorder,
       """SELECT o_orderkey,
         |  list_sum(list_transform(range(0, 10), b ->
         |    ((((o_custkey % 1024) >> b) & 1) << (2*b))
@@ -439,8 +420,8 @@ object PipelineOps {
         |    ((((o_custkey % 1024) >> b) & 1) << (3*b))
         |      + ((((o_orderkey % 1024) >> b) & 1) << (3*b + 1))
         |      + (((day(o_orderdate) >> b) & 1) << (3*b + 2))))::BIGINT AS zval3
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q125_merge_upsert" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Query("q125_merge_upsert", q125MergeUpsert,
       """WITH changes AS (
         |  SELECT doc_id, text, lang, source, n_chars + 1000 AS n_chars
         |  FROM documents WHERE doc_id % 20 = 0
@@ -455,8 +436,8 @@ object PipelineOps {
         |  FROM documents d FULL OUTER JOIN changes c ON d.doc_id = c.doc_id)
         |SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS sum_chars,
         |  max(doc_id) AS max_id
-        |FROM merged GROUP BY lang ORDER BY lang""".stripMargin,
-    "q114_mixture_sample" ->
+        |FROM merged GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("q114_mixture_sample", q114MixtureSample,
       """WITH c AS (SELECT source AS s, count(*) AS n FROM documents
         |  WHERE source IN ('src0', 'src1', 'src2') GROUP BY source),
         |w AS (SELECT * FROM (VALUES ('src0', 0.5), ('src1', 0.25), ('src2', 0.25)) t(s, wt)),
@@ -468,8 +449,8 @@ object PipelineOps {
         |FROM documents d JOIN r ON d.source = r.s
         |WHERE ('0x' || substr(md5('mix|' || d.doc_id::VARCHAR), 1, 15))::BIGINT % 1000 <
         |  CAST(floor(r.rate * 1000) AS BIGINT)
-        |GROUP BY d.source ORDER BY d.source""".stripMargin,
-    "q113_importance_weights" ->
+        |GROUP BY d.source ORDER BY d.source""".stripMargin),
+    Query("q113_importance_weights", q113ImportanceWeights,
       """WITH toks AS (SELECT doc_id, lang = 'en' AS tgt,
         |    unnest(str_split(text, ' ')) AS word FROM documents),
         |vocab AS (SELECT word, count(*) AS cnt_all,
@@ -486,8 +467,8 @@ object PipelineOps {
         |SELECT doc_id, count(*) AS n_words,
         |  round(CAST(sum(lw) AS DOUBLE), 6) AS log_weight
         |FROM toks JOIN lr USING (word)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q111_quantile_filter" ->
+        |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q111_quantile_filter", q111QuantileFilter,
       """WITH t AS (SELECT doc_id, lang, text, str_split(text, ' ') w FROM documents),
         |q AS (SELECT doc_id, lang,
         |    least(len(w)::DOUBLE / 100.0, 1.0) * 0.4
@@ -500,8 +481,8 @@ object PipelineOps {
         |  sum(doc_id)::BIGINT AS id_sum,
         |  round(CAST(sum(CAST(q.q AS DECIMAL(30,12))) AS DOUBLE) / count(*), 6) AS avg_q
         |FROM q JOIN thr ON q.lang = thr.lang AND q.q >= thr.thr
-        |GROUP BY q.lang ORDER BY q.lang""".stripMargin,
-    "q110_pagerank" ->
+        |GROUP BY q.lang ORDER BY q.lang""".stripMargin),
+    Query("q110_pagerank", q110PageRank,
       s"""WITH seq AS (SELECT user_id,
          |    CAST(json_extract_string(props, '$$.k') AS BIGINT) page, ts, event_id
          |  FROM events),
@@ -518,8 +499,8 @@ object PipelineOps {
          |    CAST(1.0/(SELECT n FROM params) AS DECIMAL(30,12)) AS rank FROM base),
          |${(1 to 5).map(prRound).mkString(",\n")}
          |SELECT id AS page, CAST(rank AS DOUBLE) AS rank
-         |FROM r5 ORDER BY page""".stripMargin,
-    "q28_contamination" ->
+         |FROM r5 ORDER BY page""".stripMargin),
+    Query("q28_contamination", q28Contamination,
       """WITH docs AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
         |sh AS (SELECT doc_id, list_distinct([array_to_string(w[i:i+2], ' ')
         |    for i in range(1, greatest(len(w) - 2, 1) + 1)]) s
@@ -528,15 +509,15 @@ object PipelineOps {
         |  len(list_intersect(t.s, e.s))::BIGINT AS n_shared
         |FROM sh t JOIN sh e ON t.doc_id % 7 <> 0 AND e.doc_id % 7 = 0
         |WHERE len(list_intersect(t.s, e.s)) >= 2
-        |ORDER BY train_id, eval_id""".stripMargin,
-    "q29_stratified_sample" ->
+        |ORDER BY train_id, eval_id""".stripMargin),
+    Query("q29_stratified_sample", q29StratifiedSample,
       """SELECT lang, count(*) AS n_sampled, min(doc_id) AS first_id,
         |  sum(doc_id)::BIGINT AS id_sum
         |FROM documents
         |WHERE ('0x' || substr(md5('sample|' || doc_id::VARCHAR), 1, 15))::BIGINT % 1000 <
         |  (CASE WHEN lang = 'en' THEN 0.5 ELSE 0.15 END * 1000)::BIGINT
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    "q37_source_cap" ->
+        |GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("q37_source_cap", q37SourceCap,
       """WITH t AS (SELECT source, doc_id, text, str_split(text, ' ') w FROM documents),
         |scored AS (SELECT source, doc_id,
         |    round(least(len(w)::DOUBLE / 100.0, 1.0) * 0.4
@@ -549,16 +530,16 @@ object PipelineOps {
         |      ORDER BY q DESC, doc_id ASC)::INT AS rank
         |  FROM scored)
         |SELECT source, rank, doc_id, round(q, 6) AS quality
-        |FROM r WHERE rank <= 5 ORDER BY source, rank""".stripMargin,
-    "q98_crosstab" ->
+        |FROM r WHERE rank <= 5 ORDER BY source, rank""".stripMargin),
+    Query("q98_crosstab", q98Crosstab,
       """SELECT source AS source_lang,
         |  sum(CASE WHEN lang = 'de' THEN 1 ELSE 0 END)::BIGINT AS de,
         |  sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)::BIGINT AS en,
         |  sum(CASE WHEN lang = 'es' THEN 1 ELSE 0 END)::BIGINT AS es,
         |  sum(CASE WHEN lang = 'fr' THEN 1 ELSE 0 END)::BIGINT AS fr,
         |  sum(CASE WHEN lang = 'zh' THEN 1 ELSE 0 END)::BIGINT AS zh
-        |FROM documents GROUP BY source ORDER BY source_lang""".stripMargin,
-    "q99_pipeline_e2e" ->
+        |FROM documents GROUP BY source ORDER BY source_lang""".stripMargin),
+    Query("q99_pipeline_e2e", q99PipelineE2E,
       """WITH scored AS (SELECT doc_id, lang, text, str_split(text, ' ') w,
         |    least(len(str_split(text, ' '))::DOUBLE / 100.0, 1.0) * 0.4
         |      + (len(list_distinct(str_split(text, ' ')))::DOUBLE
@@ -582,5 +563,5 @@ object PipelineOps {
         |SELECT lang, count(*) AS n_docs,
         |  sum(len(str_split(text, ' ')))::BIGINT AS n_tokens,
         |  min(doc_id) AS first_doc
-        |FROM sampled GROUP BY lang ORDER BY lang""".stripMargin)
+        |FROM sampled GROUP BY lang ORDER BY lang""".stripMargin))
 }

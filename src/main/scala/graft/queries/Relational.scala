@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -12,7 +12,7 @@ import graft.sources.Tables
   * window functions, sort/limit, set operations. Every query is fully
   * deterministic (exact decimal aggregation of money columns, total
   * ordering with unique tie-breakers) so it hash-matches the DuckDB
-  * oracle in `oracles`.
+  * oracle next to it in `queries`.
   *
   * Scale notes: all joins are key-equi (shuffle- or broadcast-planned by
   * Catalyst + AQE); dimension tables (region/nation/supplier/customer at
@@ -345,36 +345,8 @@ object Relational {
 
   // ------------------------------------------------------------- registry
 
-  val defs: Map[String, Q] = Map(
-    "q01_agg_pricing_summary" -> q01PricingSummary,
-    "q02_agg_count_distinct" -> q02CountDistinct,
-    "q03_agg_rollup" -> q03Rollup,
-    "q04_agg_cube" -> q04Cube,
-    "q05_agg_stats" -> q05Stats,
-    "q06_agg_collect" -> q06CollectList,
-    "q10_join_inner" -> q10JoinInner,
-    "q11_join_multiway" -> q11JoinMultiway,
-    "q12_join_left_histogram" -> q12JoinLeftHistogram,
-    "q13_join_semi" -> q13JoinSemi,
-    "q14_join_anti" -> q14JoinAnti,
-    "q15_join_full_outer" -> q15JoinFullOuter,
-    "q16_join_cross" -> q16JoinCross,
-    "q17_join_range" -> q17JoinRange,
-    "q18_join_asof" -> q18JoinAsOf,
-    "q20_window_topk" -> q20WindowTopK,
-    "q21_window_running" -> q21WindowRunning,
-    "q22_window_lag_lead" -> q22WindowLagLead,
-    "q23_window_moving_avg" -> q23WindowMovingAvg,
-    "q24_window_rank" -> q24WindowRank,
-    "q30_sort_limit" -> q30SortLimit,
-    "q31_offset_limit" -> q31OffsetLimit,
-    "q40_union" -> q40Union,
-    "q41_intersect" -> q41Intersect,
-    "q42_except" -> q42Except,
-    "q43_distinct" -> q43Distinct)
-
-  val oracles: Map[String, String] = Map(
-    "q01_agg_pricing_summary" ->
+  val queries: Seq[Query] = Seq(
+    Query("q01_agg_pricing_summary", q01PricingSummary,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -382,24 +354,24 @@ object Relational {
         |  CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_qty,
         |  count(*) AS count_order
         |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q02_agg_count_distinct" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    Query("q02_agg_count_distinct", q02CountDistinct,
       """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_cust, count(*) AS n_orders,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q03_agg_rollup" ->
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q03_agg_rollup", q03Rollup,
       """SELECT r_name, n_name,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal, count(*) AS n
         |FROM customer JOIN nation ON c_nationkey = n_nationkey
         |  JOIN region ON n_regionkey = r_regionkey
         |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin,
-    "q04_agg_cube" ->
+        |ORDER BY r_name NULLS FIRST, n_name NULLS FIRST""".stripMargin),
+    Query("q04_agg_cube", q04Cube,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q05_agg_stats" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    Query("q05_agg_stats", q05Stats,
       """SELECT l_returnflag, count(*) AS n, min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
         |  CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avg_qty,
         |  (CAST(sum(CAST(l_quantity AS BIGINT)*CAST(l_quantity AS BIGINT)) AS DOUBLE)
@@ -408,18 +380,18 @@ object Relational {
         |  sqrt((CAST(sum(CAST(l_quantity AS BIGINT)*CAST(l_quantity AS BIGINT)) AS DOUBLE)
         |    - CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE)*CAST(sum(CAST(l_quantity AS BIGINT)) AS DOUBLE)/CAST(count(*) AS DOUBLE))
         |    / (CAST(count(*) AS DOUBLE) - 1)) AS stddev_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q06_agg_collect" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q06_agg_collect", q06CollectList,
       """SELECT r_name, array_to_string(list_sort(list(DISTINCT n_name)), ',') AS nations, count(*) AS n_nations
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "q10_join_inner" ->
+        |GROUP BY r_name ORDER BY r_name""".stripMargin),
+    Query("q10_join_inner", q10JoinInner,
       """SELECT o_orderpriority,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q11_join_multiway" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q11_join_multiway", q11JoinMultiway,
       """SELECT r_name, n_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
@@ -427,72 +399,72 @@ object Relational {
         |  JOIN customer ON o_custkey = c_custkey
         |  JOIN nation ON c_nationkey = n_nationkey
         |  JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-    "q12_join_left_histogram" ->
+        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin),
+    Query("q12_join_left_histogram", q12JoinLeftHistogram,
       """SELECT c_count, count(*) AS custdist FROM (
         |  SELECT c_custkey, count(o_orderkey) AS c_count
         |  FROM customer LEFT JOIN orders ON c_custkey = o_custkey
         |  GROUP BY c_custkey)
-        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "q13_join_semi" ->
+        |GROUP BY c_count ORDER BY custdist DESC, c_count DESC""".stripMargin),
+    Query("q13_join_semi", q13JoinSemi,
       """SELECT o_orderstatus, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
         |FROM orders WHERE EXISTS (
         |  SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-    "q14_join_anti" ->
+        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
+    Query("q14_join_anti", q14JoinAnti,
       """SELECT c_mktsegment, count(*) AS n
         |FROM customer WHERE NOT EXISTS (
         |  SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q15_join_full_outer" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("q15_join_full_outer", q15JoinFullOuter,
       """WITH c AS (SELECT c_nationkey AS ck, count(*) AS n_cust
         |    FROM customer WHERE c_acctbal > 9000 GROUP BY c_nationkey),
         |  s AS (SELECT s_nationkey AS sk, count(*) AS n_supp
         |    FROM supplier GROUP BY s_nationkey)
         |SELECT coalesce(ck, sk) AS nationkey, n_cust, n_supp
-        |FROM c FULL OUTER JOIN s ON ck = sk ORDER BY nationkey""".stripMargin,
-    "q16_join_cross" ->
+        |FROM c FULL OUTER JOIN s ON ck = sk ORDER BY nationkey""".stripMargin),
+    Query("q16_join_cross", q16JoinCross,
       """SELECT r_name, c_mktsegment, r_name || '/' || c_mktsegment AS combo
         |FROM region CROSS JOIN (SELECT DISTINCT c_mktsegment FROM customer)
-        |ORDER BY r_name, c_mktsegment""".stripMargin,
-    "q17_join_range" ->
+        |ORDER BY r_name, c_mktsegment""".stripMargin),
+    Query("q17_join_range", q17JoinRange,
       """SELECT p_brand, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |  AND l_quantity >= p_size - 2 AND l_quantity <= p_size + 2
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q18_join_asof" ->
+        |GROUP BY p_brand ORDER BY p_brand""".stripMargin),
+    Query("q18_join_asof", q18JoinAsOf,
       """SELECT p.event_id AS purchase_id, p.user_id, c.event_id AS matched_click
         |FROM (SELECT * FROM events WHERE event_type = 'purchase') p
         |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
         |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY purchase_id""".stripMargin,
-    "q20_window_topk" ->
+        |ORDER BY purchase_id""".stripMargin),
+    Query("q20_window_topk", q20WindowTopK,
       """SELECT o_orderpriority, rn, o_orderkey, o_totalprice FROM (
         |  SELECT o_orderpriority, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_orderpriority
         |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
         |  FROM orders)
-        |WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin,
-    "q21_window_running" ->
+        |WHERE rn <= 3 ORDER BY o_orderpriority, rn""".stripMargin),
+    Query("q21_window_running", q21WindowRunning,
       """SELECT event_id, user_id,
         |  round(sum(value) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value
-        |FROM events WHERE user_id < 10 ORDER BY event_id""".stripMargin,
-    "q22_window_lag_lead" ->
+        |FROM events WHERE user_id < 10 ORDER BY event_id""".stripMargin),
+    Query("q22_window_lag_lead", q22WindowLagLead,
       """SELECT event_id, user_id,
         |  round(value - lag(value, 1) OVER w, 4) AS delta_prev,
         |  round(lead(value, 1) OVER w - value, 4) AS delta_next
         |FROM events WHERE user_id < 10
         |WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
-        |ORDER BY event_id""".stripMargin,
-    "q23_window_moving_avg" ->
+        |ORDER BY event_id""".stripMargin),
+    Query("q23_window_moving_avg", q23WindowMovingAvg,
       """SELECT event_id, user_id,
         |  round(avg(value) OVER (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
         |    ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS mavg3
-        |FROM events WHERE user_id < 10 ORDER BY event_id""".stripMargin,
-    "q24_window_rank" ->
+        |FROM events WHERE user_id < 10 ORDER BY event_id""".stripMargin),
+    Query("q24_window_rank", q24WindowRank,
       """SELECT c_mktsegment, c_custkey, c_acctbal, rnk, drnk, quartile, rn FROM (
         |  SELECT c_mktsegment, c_custkey, c_acctbal,
         |    rank() OVER wt AS rnk, dense_rank() OVER wt AS drnk,
@@ -500,27 +472,27 @@ object Relational {
         |  FROM customer
         |  WINDOW wt AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC),
         |    wu AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC))
-        |WHERE rn <= 20 ORDER BY c_mktsegment, rn""".stripMargin,
-    "q30_sort_limit" ->
+        |WHERE rn <= 20 ORDER BY c_mktsegment, rn""".stripMargin),
+    Query("q30_sort_limit", q30SortLimit,
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
         |ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
-        |LIMIT 100""".stripMargin,
-    "q31_offset_limit" ->
+        |LIMIT 100""".stripMargin),
+    Query("q31_offset_limit", q31OffsetLimit,
       """SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem
         |ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC
-        |LIMIT 50 OFFSET 100""".stripMargin,
-    "q40_union" ->
+        |LIMIT 50 OFFSET 100""".stripMargin),
+    Query("q40_union", q40Union,
       """SELECT c_nationkey AS k FROM customer
-        |UNION SELECT s_nationkey AS k FROM supplier ORDER BY k""".stripMargin,
-    "q41_intersect" ->
+        |UNION SELECT s_nationkey AS k FROM supplier ORDER BY k""".stripMargin),
+    Query("q41_intersect", q41Intersect,
       """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
         |INTERSECT
         |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
-        |ORDER BY o_custkey""".stripMargin,
-    "q42_except" ->
+        |ORDER BY o_custkey""".stripMargin),
+    Query("q42_except", q42Except,
       """SELECT c_custkey FROM customer
-        |EXCEPT SELECT o_custkey FROM orders ORDER BY c_custkey""".stripMargin,
-    "q43_distinct" ->
+        |EXCEPT SELECT o_custkey FROM orders ORDER BY c_custkey""".stripMargin),
+    Query("q43_distinct", q43Distinct,
       """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin)
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.GraftFunctions._
 import graft.sources.Tables
 
@@ -167,34 +167,23 @@ object Relational2 {
       .orderBy("l_returnflag", "rank")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q27_topk_native" -> q27TopKNative,
-    "q07_agg_approx_distinct" -> q07ApproxDistinct,
-    "q39_range_bin_join" -> q39RangeBinJoin,
-    "q08_agg_percentile_corr" -> q08PercentileCorr,
-    "q09_agg_pivot" -> q09Pivot,
-    "q44_grouping_sets" -> q44GroupingSets,
-    "q25_window_analytics" -> q25WindowAnalytics,
-    "q26_window_range_frame" -> q26WindowRangeFrame,
-    "q19_join_asof_forward" -> q19JoinAsOfForward)
-
   // DuckDB `sum(<integer>)` yields HUGEINT, which pandas renders as
   // float/object and the driver's canonicalized hash then mismatches
   // Spark's long — every integer sum below is therefore wrapped
   // `::BIGINT` on the oracle side.
-  val oracles: Map[String, String] = Map(
-    "q27_topk_native" ->
+  val queries: Seq[Query] = Seq(
+    Query("q27_topk_native", q27TopKNative,
       """SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice, rank FROM (
         |  SELECT l_returnflag, l_orderkey, l_linenumber, l_extendedprice,
         |    row_number() OVER (PARTITION BY l_returnflag
         |      ORDER BY l_extendedprice DESC, l_orderkey ASC, l_linenumber ASC)::INT AS rank
         |  FROM lineitem)
-        |WHERE rank <= 3 ORDER BY l_returnflag, rank""".stripMargin,
-    "q07_agg_approx_distinct" ->
+        |WHERE rank <= 3 ORDER BY l_returnflag, rank""".stripMargin),
+    Query("q07_agg_approx_distinct", q07ApproxDistinct,
       """SELECT o_orderpriority, count(DISTINCT o_custkey) AS exact_cust,
         |  TRUE AS within_15pct
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q39_range_bin_join" ->
+        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q39_range_bin_join", q39RangeBinJoin,
       """WITH p AS (SELECT o_orderkey AS p_key, o_totalprice AS price
         |    FROM orders WHERE o_orderkey % 11 = 0),
         |b AS (SELECT o_orderkey AS b_key, o_totalprice - 1000.0 AS lo,
@@ -202,27 +191,27 @@ object Relational2 {
         |  FROM orders WHERE o_orderkey % 13 = 0)
         |SELECT b_key, count(*) AS n_in_band, min(p_key) AS first_point
         |FROM b JOIN p ON price >= lo AND price <= hi
-        |GROUP BY b_key ORDER BY b_key""".stripMargin,
-    "q08_agg_percentile_corr" ->
+        |GROUP BY b_key ORDER BY b_key""".stripMargin),
+    Query("q08_agg_percentile_corr", q08PercentileCorr,
       """SELECT l_returnflag,
         |  quantile_cont(l_quantity, 0.5) AS median_qty,
         |  quantile_cont(l_quantity, 0.9) AS p90_qty,
         |  round(corr(l_quantity, l_extendedprice), 6) AS corr_qty_price,
         |  round(covar_samp(l_quantity, l_discount), 6) AS covar_qty_disc
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "q09_agg_pivot" ->
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin),
+    Query("q09_agg_pivot", q09Pivot,
       """SELECT l_linestatus,
         |  sum(CASE WHEN l_returnflag = 'A' THEN CAST(l_quantity AS BIGINT) END)::BIGINT AS A,
         |  sum(CASE WHEN l_returnflag = 'N' THEN CAST(l_quantity AS BIGINT) END)::BIGINT AS N,
         |  sum(CASE WHEN l_returnflag = 'R' THEN CAST(l_quantity AS BIGINT) END)::BIGINT AS R
-        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-    "q44_grouping_sets" ->
+        |FROM lineitem GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
+    Query("q44_grouping_sets", q44GroupingSets,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  sum(CAST(l_quantity AS BIGINT))::BIGINT AS sum_qty
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin,
-    "q25_window_analytics" ->
+        |ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST""".stripMargin),
+    Query("q25_window_analytics", q25WindowAnalytics,
       """SELECT c_mktsegment, c_custkey, pr, cd, richest, third, rn FROM (
         |  SELECT c_mktsegment, c_custkey,
         |    round(percent_rank() OVER w, 6) AS pr,
@@ -232,13 +221,13 @@ object Relational2 {
         |    row_number() OVER w AS rn
         |  FROM customer
         |  WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey ASC))
-        |WHERE rn <= 10 ORDER BY c_mktsegment, rn""".stripMargin,
-    "q26_window_range_frame" ->
+        |WHERE rn <= 10 ORDER BY c_mktsegment, rn""".stripMargin),
+    Query("q26_window_range_frame", q26WindowRangeFrame,
       """SELECT o_orderkey, o_orderpriority, o_totalprice,
         |  count(*) OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice ASC
         |    RANGE BETWEEN 5000 PRECEDING AND CURRENT ROW) AS n_band
-        |FROM orders WHERE o_orderkey < 3000 ORDER BY o_orderkey""".stripMargin,
-    "q19_join_asof_forward" ->
+        |FROM orders WHERE o_orderkey < 3000 ORDER BY o_orderkey""".stripMargin),
+    Query("q19_join_asof_forward", q19JoinAsOfForward,
       """WITH u AS (
         |  SELECT user_id, ts, event_id AS click_id, NULL::BIGINT AS purchase_id, 0 AS is_p
         |  FROM events WHERE event_type = 'click'
@@ -251,5 +240,5 @@ object Relational2 {
         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS matched_click
         |  FROM u)
         |SELECT purchase_id, user_id, matched_click FROM m WHERE is_p = 1
-        |ORDER BY purchase_id""".stripMargin)
+        |ORDER BY purchase_id""".stripMargin))
 }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** SQL-text surface (spark.sql over registered views) and non-parquet
@@ -560,67 +560,35 @@ object SqlAndSources {
       |  GROUP BY l_suppkey HAVING sum(l_quantity) > 1500)
       |ORDER BY s_name""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "q127_sql_q2_shape" -> q127SqlQ2Shape,
-    "q128_sql_q9_shape" -> q128SqlQ9Shape,
-    "q129_sql_q11_shape" -> q129SqlQ11Shape,
-    "q121_sql_q1_shape" -> q121SqlQ1Shape,
-    "q122_sql_q6_shape" -> q122SqlQ6Shape,
-    "q123_sql_q8_shape" -> q123SqlQ8Shape,
-    "q124_sql_q20_shape" -> q124SqlQ20Shape,
-    "q116_sql_q5_shape" -> q116SqlQ5Shape,
-    "q117_sql_q13_shape" -> q117SqlQ13Shape,
-    "q118_sql_q17_shape" -> q118SqlQ17Shape,
-    "q119_sql_q18_shape" -> q119SqlQ18Shape,
-    "q120_sql_q21_shape" -> q120SqlQ21Shape,
-    "q108_sql_topk" -> q108SqlTopK,
-    "q90_sql_tpch_q3" -> q90SqlTpchQ3,
-    "q93_sql_correlated_subquery" -> q93SqlCorrelated,
-    "q94_sql_q22_shape" -> q94SqlQ22Shape,
-    "q95_sql_q15_shape" -> q95SqlQ15Shape,
-    "q45_sql_q4_shape" -> q45SqlQ4Shape,
-    "q46_sql_q12_shape" -> q46SqlQ12Shape,
-    "q47_sql_q14_shape" -> q47SqlQ14Shape,
-    "q48_sql_q16_shape" -> q48SqlQ16Shape,
-    "q38_sql_q19_shape" -> q38SqlQ19Shape,
-    "q106_sql_q7_shape" -> q106SqlQ7Shape,
-    "q107_sql_q10_shape" -> q107SqlQ10Shape,
-    "q32_arrow_roundtrip" -> q32ArrowRoundtrip,
-    "q91_csv_roundtrip" -> q91CsvRoundtrip,
-    "q92_json_roundtrip" -> q92JsonRoundtrip,
-    "q96_orc_roundtrip" -> q96OrcRoundtrip,
-    "q97_text_roundtrip" -> q97TextRoundtrip,
-    "q49_json_regex" -> q49JsonRegex)
-
-  val oracles: Map[String, String] = Map(
-    "q127_sql_q2_shape" -> Q2_SQL,
-    "q128_sql_q9_shape" -> Q9_SQL,
-    "q129_sql_q11_shape" -> Q11_SQL,
-    "q121_sql_q1_shape" -> Q1_SQL,
-    "q122_sql_q6_shape" -> Q6_SQL,
-    "q123_sql_q8_shape" -> Q8_SQL,
-    "q124_sql_q20_shape" -> Q20_SQL,
-    "q116_sql_q5_shape" -> Q5_SQL,
-    "q117_sql_q13_shape" -> Q13_SQL,
-    "q118_sql_q17_shape" -> Q17_SQL,
-    "q119_sql_q18_shape" -> Q18_SQL,
-    "q120_sql_q21_shape" -> Q21_SQL,
-    "q108_sql_topk" ->
+  val queries: Seq[Query] = Seq(
+    Query("q127_sql_q2_shape", q127SqlQ2Shape, Q2_SQL),
+    Query("q128_sql_q9_shape", q128SqlQ9Shape, Q9_SQL),
+    Query("q129_sql_q11_shape", q129SqlQ11Shape, Q11_SQL),
+    Query("q121_sql_q1_shape", q121SqlQ1Shape, Q1_SQL),
+    Query("q122_sql_q6_shape", q122SqlQ6Shape, Q6_SQL),
+    Query("q123_sql_q8_shape", q123SqlQ8Shape, Q8_SQL),
+    Query("q124_sql_q20_shape", q124SqlQ20Shape, Q20_SQL),
+    Query("q116_sql_q5_shape", q116SqlQ5Shape, Q5_SQL),
+    Query("q117_sql_q13_shape", q117SqlQ13Shape, Q13_SQL),
+    Query("q118_sql_q17_shape", q118SqlQ17Shape, Q17_SQL),
+    Query("q119_sql_q18_shape", q119SqlQ18Shape, Q18_SQL),
+    Query("q120_sql_q21_shape", q120SqlQ21Shape, Q21_SQL),
+    Query("q108_sql_topk", q108SqlTopK,
       """SELECT o_orderpriority, o_orderkey, o_totalprice, rn FROM (
         |  SELECT o_orderpriority, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_orderpriority
         |      ORDER BY o_totalprice DESC, o_orderkey ASC)::INT AS rn
         |  FROM orders)
         |WHERE rn <= 3
-        |ORDER BY o_orderpriority, rn""".stripMargin,
-    "q94_sql_q22_shape" ->
+        |ORDER BY o_orderpriority, rn""".stripMargin),
+    Query("q94_sql_q22_shape", q94SqlQ22Shape,
       """SELECT c_mktsegment, count(*) AS numcust,
         |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
         |FROM customer c
         |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)
         |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-    "q95_sql_q15_shape" ->
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
+    Query("q95_sql_q15_shape", q95SqlQ15Shape,
       """WITH revenue AS (
         |  SELECT l_suppkey, CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS total
@@ -629,14 +597,14 @@ object SqlAndSources {
         |SELECT s_suppkey, s_name, total
         |FROM supplier JOIN revenue ON s_suppkey = l_suppkey
         |WHERE total = (SELECT max(total) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-    "q93_sql_correlated_subquery" ->
+        |ORDER BY s_suppkey""".stripMargin),
+    Query("q93_sql_correlated_subquery", q93SqlCorrelated,
       """SELECT o_orderkey, o_custkey, o_totalprice
         |FROM orders o
         |WHERE o_totalprice > 1.8 * (
         |  SELECT avg(o2.o_totalprice) FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q90_sql_tpch_q3" ->
+        |ORDER BY o_orderkey""".stripMargin),
+    Query("q90_sql_tpch_q3", q90SqlTpchQ3,
       """SELECT o_orderkey,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -645,8 +613,8 @@ object SqlAndSources {
         |  JOIN lineitem ON l_orderkey = o_orderkey
         |WHERE c_mktsegment = 'BUILDING' AND o_orderdate < TIMESTAMP '1995-03-15'
         |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-    "q106_sql_q7_shape" ->
+        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin),
+    Query("q106_sql_q7_shape", q106SqlQ7Shape,
       """SELECT supp_nation, cust_nation, l_year,
         |  CAST(sum(volume) AS DOUBLE) AS revenue
         |FROM (
@@ -663,8 +631,8 @@ object SqlAndSources {
         |     OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
         |) shipping
         |GROUP BY supp_nation, cust_nation, l_year
-        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-    "q107_sql_q10_shape" ->
+        |ORDER BY supp_nation, cust_nation, l_year""".stripMargin),
+    Query("q107_sql_q10_shape", q107SqlQ10Shape,
       """SELECT c_custkey, c_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) *
         |    (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
@@ -674,20 +642,20 @@ object SqlAndSources {
         |  JOIN nation ON c_nationkey = n_nationkey
         |WHERE l_returnflag = 'R'
         |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin,
-    "q32_arrow_roundtrip" ->
+        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin),
+    Query("q32_arrow_roundtrip", q32ArrowRoundtrip,
       """SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS sum_chars,
         |  min(doc_id) AS first_doc
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "q91_csv_roundtrip" ->
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("q91_csv_roundtrip", q91CsvRoundtrip,
       """SELECT r_name, count(*) AS n_nations, min(n_name) AS first_nation
         |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "q92_json_roundtrip" ->
+        |GROUP BY r_name ORDER BY r_name""".stripMargin),
+    Query("q92_json_roundtrip", q92JsonRoundtrip,
       """SELECT s_nationkey, count(*) AS n,
         |  CAST(sum(CAST(s_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin,
-    "q45_sql_q4_shape" ->
+        |FROM supplier GROUP BY s_nationkey ORDER BY s_nationkey""".stripMargin),
+    Query("q45_sql_q4_shape", q45SqlQ4Shape,
       """SELECT o_orderpriority, count(*) AS order_count
         |FROM orders
         |WHERE o_orderdate >= TIMESTAMP '1996-07-01'
@@ -695,8 +663,8 @@ object SqlAndSources {
         |  AND EXISTS (SELECT 1 FROM lineitem
         |    WHERE l_orderkey = o_orderkey
         |      AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "q46_sql_q12_shape" ->
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
+    Query("q46_sql_q12_shape", q46SqlQ12Shape,
       """SELECT l_linestatus,
         |  sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |      THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
@@ -705,8 +673,8 @@ object SqlAndSources {
         |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
         |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-    "q47_sql_q14_shape" ->
+        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin),
+    Query("q47_sql_q14_shape", q47SqlQ14Shape,
       """SELECT round(100.00 * CAST(sum(CASE WHEN p_type LIKE 'PROMO%'
         |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) *
         |      (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
@@ -716,34 +684,34 @@ object SqlAndSources {
         |  AS promo_revenue
         |FROM lineitem JOIN part ON l_partkey = p_partkey
         |WHERE l_shipdate >= TIMESTAMP '1996-07-01'
-        |  AND l_shipdate < TIMESTAMP '1996-08-01'""".stripMargin,
-    "q48_sql_q16_shape" ->
+        |  AND l_shipdate < TIMESTAMP '1996-08-01'""".stripMargin),
+    Query("q48_sql_q16_shape", q48SqlQ16Shape,
       """SELECT p_brand, count(DISTINCT s_suppkey) AS supplier_cnt
         |FROM part JOIN lineitem ON p_partkey = l_partkey
         |  JOIN supplier ON l_suppkey = s_suppkey
         |WHERE p_size IN (5, 15, 25, 35)
         |  AND s_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand ORDER BY supplier_cnt DESC, p_brand""".stripMargin,
-    "q38_sql_q19_shape" ->
+        |GROUP BY p_brand ORDER BY supplier_cnt DESC, p_brand""".stripMargin),
+    Query("q38_sql_q19_shape", q38SqlQ19Shape,
       """SELECT count(*) AS n,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS gross
         |FROM lineitem JOIN part ON p_partkey = l_partkey
         |WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
         |    AND l_quantity BETWEEN 1 AND 20)
         |  OR (p_brand = 'Brand#3' AND p_size BETWEEN 10 AND 30
-        |    AND l_quantity BETWEEN 20 AND 40)""".stripMargin,
-    "q96_orc_roundtrip" ->
+        |    AND l_quantity BETWEEN 20 AND 40)""".stripMargin),
+    Query("q96_orc_roundtrip", q96OrcRoundtrip,
       """SELECT p_brand, count(*) AS n, max(p_size) AS max_size,
         |  CAST(sum(CAST(p_retailprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "q97_text_roundtrip" ->
+        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin),
+    Query("q97_text_roundtrip", q97TextRoundtrip,
       """WITH w AS (SELECT unnest(str_split(text, ' ')) AS word
         |  FROM documents WHERE doc_id < 200 AND NOT contains(text, chr(10)))
         |SELECT word, count(*) AS n FROM w
-        |GROUP BY word ORDER BY n DESC, word ASC LIMIT 15""".stripMargin,
-    "q49_json_regex" ->
+        |GROUP BY word ORDER BY n DESC, word ASC LIMIT 15""".stripMargin),
+    Query("q49_json_regex", q49JsonRegex,
       """SELECT event_id,
         |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
         |  array_to_string(regexp_extract_all(props, '[0-9]+'), ',') AS digits
-        |FROM events WHERE event_id < 500 ORDER BY event_id""".stripMargin)
+        |FROM events WHERE event_id < 500 ORDER BY event_id""".stripMargin))
 }

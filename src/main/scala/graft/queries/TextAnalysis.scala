@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -132,22 +132,10 @@ object TextAnalysis {
       .orderBy("shard", "pack_id")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q60_text_stats" -> q60TextStats,
-    "q65_text_normalize" -> q65Normalize,
-    "q66_train_test_split" -> q66TrainTestSplit,
-    "q67_sequence_packing" -> q67SequencePacking,
-    "q61_lang_id" -> q61LangId,
-    "q62_token_count" -> q62TokenCount,
-    "q63_fingerprint" -> q63Fingerprint,
-    "q64_quality_score" -> q64Quality)
-
-  private val hashSql = "('0x' || substr(md5(%s), 1, 15))::BIGINT"
-
-  val oracles: Map[String, String] = Map(
-    "q67_sequence_packing" ->
+  val queries: Seq[Query] = Seq(
+    Query("q67_sequence_packing", q67SequencePacking,
       s"""WITH t AS (SELECT doc_id, len(str_split(text, ' ')) AS tokens,
-         |    ${hashSql.format("doc_id::VARCHAR")} % 8 AS shard
+         |    ${mdHashSql("doc_id::VARCHAR")} % 8 AS shard
          |  FROM documents),
          |c AS (SELECT shard, doc_id, tokens,
          |    coalesce(sum(tokens) OVER (PARTITION BY shard ORDER BY doc_id
@@ -155,21 +143,21 @@ object TextAnalysis {
          |  FROM t)
          |SELECT shard, CAST(floor(pre_sum / 2048) AS BIGINT) AS pack_id,
          |  count(*) AS n_docs, sum(tokens)::BIGINT AS pack_tokens, min(doc_id) AS first_doc
-         |FROM c GROUP BY 1, 2 ORDER BY shard, pack_id""".stripMargin,
-    "q65_text_normalize" ->
+         |FROM c GROUP BY 1, 2 ORDER BY shard, pack_id""".stripMargin),
+    Query("q65_text_normalize", q65Normalize,
       """SELECT doc_id, length(text) AS n_raw,
         |  length(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS n_norm,
         |  md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS norm_hash
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "q66_train_test_split" ->
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    Query("q66_train_test_split", q66TrainTestSplit,
       s"""WITH t AS (SELECT lang, n_chars,
-         |    ${hashSql.format("doc_id::VARCHAR")} % 100 AS b
+         |    ${mdHashSql("doc_id::VARCHAR")} % 100 AS b
          |  FROM documents)
          |SELECT lang,
          |  CASE WHEN b < 80 THEN 'train' WHEN b < 90 THEN 'val' ELSE 'test' END AS split,
          |  count(*) AS n, sum(n_chars)::BIGINT AS sum_chars
-         |FROM t GROUP BY 1, 2 ORDER BY lang, split""".stripMargin,
-    "q60_text_stats" ->
+         |FROM t GROUP BY 1, 2 ORDER BY lang, split""".stripMargin),
+    Query("q60_text_stats", q60TextStats,
       """WITH t AS (SELECT lang, text, str_split(text, ' ') w FROM documents)
         |SELECT lang, count(*) AS n_docs,
         |  sum(len(w)::BIGINT)::BIGINT AS sum_words,
@@ -177,8 +165,8 @@ object TextAnalysis {
         |  round(avg(len(list_distinct(w))::DOUBLE / len(w)::DOUBLE), 6) AS avg_diversity,
         |  sum(length(text)::BIGINT)::BIGINT AS sum_chars,
         |  max(len(w)) AS max_words
-        |FROM t GROUP BY lang ORDER BY lang""".stripMargin,
-    "q61_lang_id" ->
+        |FROM t GROUP BY lang ORDER BY lang""".stripMargin),
+    Query("q61_lang_id", q61LangId,
       """WITH t AS (SELECT lang, text, str_split(text, ' ') w FROM documents),
         |scored AS (SELECT lang,
         |    len(regexp_extract_all(text, '[\x{4e00}-\x{9fff}]')) cjk,
@@ -195,26 +183,26 @@ object TextAnalysis {
         |      WHEN c_de > 0 THEN 'de' ELSE 'und' END predicted
         |  FROM scored)
         |SELECT lang, predicted, count(*) AS n FROM p
-        |GROUP BY lang, predicted ORDER BY lang, predicted""".stripMargin,
-    "q62_token_count" ->
+        |GROUP BY lang, predicted ORDER BY lang, predicted""".stripMargin),
+    Query("q62_token_count", q62TokenCount,
       """SELECT source, count(*) AS n_docs,
         |  sum(len(str_split(text, ' '))::BIGINT)::BIGINT AS ws_tokens,
         |  sum(len(regexp_extract_all(text, '[A-Za-z0-9]{1,4}'))::BIGINT)::BIGINT AS bpe_tokens,
         |  max(len(str_split(text, ' '))) AS max_ws
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-    "q63_fingerprint" ->
+        |FROM documents GROUP BY source ORDER BY source""".stripMargin),
+    Query("q63_fingerprint", q63Fingerprint,
       s"""WITH t AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
          |f AS (SELECT doc_id,
-         |    ${hashSql.format("array_to_string(list_sort(list_distinct(w)), ' ')")} fp,
+         |    ${mdHashSql("array_to_string(list_sort(list_distinct(w)), ' ')")} fp,
          |    list_min(list_transform(
          |      list_distinct([array_to_string(w[i:i+2], ' ')
          |        for i in range(1, greatest(len(w) - 2, 1) + 1)]),
-         |      x -> ${hashSql.format("x")})) minfp
+         |      x -> ${mdHashSql("x")})) minfp
          |  FROM t)
          |SELECT fp, count(*) AS n_docs, min(doc_id) AS min_id,
          |  count(DISTINCT minfp) AS n_minfp
-         |FROM f GROUP BY fp HAVING count(*) >= 2 ORDER BY fp""".stripMargin,
-    "q64_quality_score" ->
+         |FROM f GROUP BY fp HAVING count(*) >= 2 ORDER BY fp""".stripMargin),
+    Query("q64_quality_score", q64Quality,
       """WITH t AS (SELECT source, text, str_split(text, ' ') w FROM documents),
         |q AS (SELECT source,
         |    least(len(w)::DOUBLE / 100.0, 1.0) * 0.4
@@ -224,5 +212,5 @@ object TextAnalysis {
         |  FROM t)
         |SELECT source, round(avg(q), 6) AS avg_quality,
         |  count(CASE WHEN q >= 0.7 THEN 1 END) AS n_high, count(*) AS n_docs
-        |FROM q GROUP BY source ORDER BY source""".stripMargin)
+        |FROM q GROUP BY source ORDER BY source""".stripMargin))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
-import graft.Q
+import graft.{Q, Query}
 import graft.functions.TextFunctions._
 import graft.sources.Tables
 
@@ -187,17 +187,8 @@ object TextAnalysis2 {
       .orderBy("rank")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q103_bm25_search" -> q103Bm25Search,
-    "q102_pii_redact" -> q102PiiRedact,
-    "q69_vocab_build" -> q69VocabBuild,
-    "q86_pii_scan" -> q86PiiScan,
-    "q85_unigram_logprob" -> q85UnigramLogprob,
-    "q87_repetition_signals" -> q87RepetitionSignals,
-    "q88_tfidf_top_terms" -> q88TfidfTopTerms)
-
-  val oracles: Map[String, String] = Map(
-    "q103_bm25_search" ->
+  val queries: Seq[Query] = Seq(
+    Query("q103_bm25_search", q103Bm25Search,
       """WITH docs AS (SELECT doc_id, str_split(text, ' ') w FROM documents),
         |lens AS (SELECT doc_id, len(w)::BIGINT dl FROM docs),
         |tokens AS (SELECT doc_id, unnest(w) AS word FROM docs),
@@ -217,8 +208,8 @@ object TextAnalysis2 {
         |r AS (SELECT doc_id, s,
         |    row_number() OVER (ORDER BY s DESC, doc_id ASC)::INT AS rank FROM scored)
         |SELECT rank, doc_id, round(s::DOUBLE, 6) AS score
-        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin,
-    "q102_pii_redact" ->
+        |FROM r WHERE rank <= 20 ORDER BY rank""".stripMargin),
+    Query("q102_pii_redact", q102PiiRedact,
       """WITH r AS (SELECT doc_id, text,
         |    regexp_replace(regexp_replace(regexp_replace(text,
         |      '[A-Za-z0-9._]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
@@ -229,8 +220,8 @@ object TextAnalysis2 {
         |  (len(regexp_extract_all(text, '[A-Za-z0-9._]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
         |   + len(regexp_extract_all(text, 'https?://[^ ]+'))
         |   + len(regexp_extract_all(red, '<NUM>')))::BIGINT AS n_redactions
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "q86_pii_scan" ->
+        |FROM r ORDER BY doc_id""".stripMargin),
+    Query("q86_pii_scan", q86PiiScan,
       """WITH t AS (SELECT source,
         |    len(regexp_extract_all(text, '[A-Za-z0-9._]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS e,
         |    len(regexp_extract_all(text, 'https?://[^ ]+')) AS u,
@@ -240,14 +231,14 @@ object TextAnalysis2 {
         |  sum(e)::BIGINT AS n_emails, sum(u)::BIGINT AS n_urls,
         |  sum(dr)::BIGINT AS n_digit_runs,
         |  count(CASE WHEN e + u + dr > 0 THEN 1 END) AS n_flagged
-        |FROM t GROUP BY source ORDER BY source""".stripMargin,
-    "q69_vocab_build" ->
+        |FROM t GROUP BY source ORDER BY source""".stripMargin),
+    Query("q69_vocab_build", q69VocabBuild,
       """WITH w AS (SELECT unnest(str_split(text, ' ')) AS word FROM documents),
         |v AS (SELECT word, count(*) AS n FROM w GROUP BY word
         |  ORDER BY n DESC, word ASC LIMIT 200)
         |SELECT row_number() OVER (ORDER BY n DESC, word ASC) AS rank, word, n
-        |FROM v ORDER BY rank""".stripMargin,
-    "q85_unigram_logprob" ->
+        |FROM v ORDER BY rank""".stripMargin),
+    Query("q85_unigram_logprob", q85UnigramLogprob,
       """WITH t AS (SELECT doc_id, unnest(str_split(text, ' ')) AS word FROM documents),
         |v AS (SELECT word, count(*) AS cnt FROM t GROUP BY word),
         |tot AS (SELECT count(*)::DOUBLE AS total FROM t),
@@ -257,8 +248,8 @@ object TextAnalysis2 {
         |  WHERE t.doc_id < 100)
         |SELECT doc_id, count(*) AS n_words,
         |  round(CAST(sum(lp) AS DOUBLE) / count(*)::DOUBLE, 6) AS avg_logprob
-        |FROM lp GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q87_repetition_signals" ->
+        |FROM lp GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    Query("q87_repetition_signals", q87RepetitionSignals,
       """WITH t AS (SELECT doc_id, str_split(text, ' ') AS w FROM documents
         |    WHERE doc_id < 100),
         |g AS (SELECT doc_id, w,
@@ -273,8 +264,8 @@ object TextAnalysis2 {
         |  round(list_max(list_transform(dw,
         |      wd -> len(list_filter(w, x -> x = wd))))::DOUBLE / len(w)::DOUBLE, 6)
         |    AS max_word_ratio
-        |FROM g ORDER BY doc_id""".stripMargin,
-    "q88_tfidf_top_terms" ->
+        |FROM g ORDER BY doc_id""".stripMargin),
+    Query("q88_tfidf_top_terms", q88TfidfTopTerms,
       """WITH t AS (SELECT doc_id, unnest(str_split(text, ' ')) AS word FROM documents),
         |tf AS (SELECT doc_id, word, count(*) AS cnt FROM t GROUP BY doc_id, word),
         |dl AS (SELECT doc_id, count(*) AS len FROM t GROUP BY doc_id),
@@ -289,5 +280,5 @@ object TextAnalysis2 {
         |      ORDER BY round(score, 9) DESC, word ASC) AS rk
         |  FROM scored)
         |SELECT doc_id, rk, word, round(score, 6) AS score
-        |FROM ranked WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin)
+        |FROM ranked WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin))
 }

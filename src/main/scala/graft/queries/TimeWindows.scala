@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
-import graft.Q
+import graft.{Q, Query}
 import graft.sources.Tables
 
 /** Event-time windowing over the events table, batch mode. The same
@@ -40,22 +40,17 @@ object TimeWindows {
       .orderBy("user_id", "session_start")
   }
 
-  val defs: Map[String, Q] = Map(
-    "q80_window_tumbling" -> q80Tumbling,
-    "q81_window_sliding" -> q81Sliding,
-    "q82_window_session" -> q82Session)
-
-  val oracles: Map[String, String] = Map(
-    "q80_window_tumbling" ->
+  val queries: Seq[Query] = Seq(
+    Query("q80_window_tumbling", q80Tumbling,
       """SELECT date_trunc('day', ts) AS day, event_type, count(*) AS n, sum(value) AS sum_v
-        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin,
-    "q81_window_sliding" ->
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
+    Query("q81_window_sliding", q81Sliding,
       """WITH t AS (SELECT unnest([date_trunc('day', ts) - INTERVAL 1 DAY,
         |    date_trunc('day', ts)]) AS w_start, value
         |  FROM events)
         |SELECT w_start, count(*) AS n, sum(value) AS sum_v
-        |FROM t GROUP BY w_start ORDER BY w_start""".stripMargin,
-    "q82_window_session" ->
+        |FROM t GROUP BY w_start ORDER BY w_start""".stripMargin),
+    Query("q82_window_session", q82Session,
       """WITH m AS (SELECT user_id, ts, value,
         |    CASE WHEN lag(ts) OVER w IS NULL
         |      OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END newf
@@ -65,5 +60,5 @@ object TimeWindows {
         |      ROWS UNBOUNDED PRECEDING) sid
         |  FROM m)
         |SELECT user_id, min(ts) AS session_start, count(*) AS n_events, sum(value) AS sum_v
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin)
+        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin))
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.GraftFunctions._
-import graft.functions.GraftRegistry
 
 /** The reference's flagship Criteo/DLRM dense-feature pipeline
   * (/root/reference/axolotls/demo/criteo.py:4-51) on the literal
@@ -78,7 +77,6 @@ class CriteoPipelineSpec extends SparkSpec {
   }
 
   test("logit(1/(x+3)) chain incl. native expression parity") {
-    GraftRegistry.register(spark)
     val out = denseFrame
       .select(
         logit(lit(1.0) / (fillNull(col("dense3"), 0L).cast(DoubleType) + lit(3.0))).as("composed"),

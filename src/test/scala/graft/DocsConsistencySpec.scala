@@ -29,10 +29,13 @@ class DocsConsistencySpec extends org.scalatest.funsuite.AnyFunSuite {
       s"README.md says '${m.get.matched}' but SparkEntry.queries has $n — update the README")
   }
 
-  test("every query has an oracle, every oracle has a query") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((o -- q).isEmpty, s"oracles without queries: ${(o -- q).toSeq.sorted.take(5)}")
-    assert((q -- o).isEmpty, s"queries without oracles: ${(q -- o).toSeq.sorted.take(5)}")
+  test("a query name declared twice fails the registry, by name") {
+    val plan: Q = (s, _) => s.emptyDataFrame
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.registry(Seq(Query("q_a", plan, "SELECT 1"), Query("q_b", plan, "SELECT 2"),
+        Query("q_a", plan, "SELECT 3")))
+    }
+    assert(e.getMessage.contains("q_a") && !e.getMessage.contains("q_b"), e.getMessage)
+    assert(SparkEntry.registry(Seq(Query("q_a", plan, "SELECT 1"))).keySet == Set("q_a"))
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftRegistry
 import graft.operators.{Multimodal, Similarity}
 
 class ExpressionsSpec extends SparkSpec {
@@ -25,7 +24,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("LogitExpr: torch edge semantics (NaN/Inf, not NULL) and interior parity") {
-    GraftRegistry.register(spark)
     import spark.implicits._
     val out = Seq(0.2, 0.5, 0.9, 0.0, 1.0, -0.5).toDF("p")
       .selectExpr("graft_logit(p) as l").collect().map(_.getDouble(0))
@@ -38,7 +36,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("GeoMean UDAF matches exp(mean(ln)) and splits across partitions") {
-    GraftRegistry.register(spark)
     import spark.implicits._
     val xs = Seq(1.0, 2.0, 4.0, 8.0)
     val got = xs.toDF("x").repartition(3)
@@ -63,7 +60,6 @@ class ExpressionsSpec extends SparkSpec {
   test("DotExpr matches the unrolled formulation bit-for-bit; null array -> null") {
     import graft.functions.GraftFunctions.{dotNative, dotUnrolled}
     import spark.implicits._
-    GraftRegistry.register(spark)
     val vecs = (1 to 200).map { i =>
       (i.toLong, (1 to 64).map(j => (i * 31 + j) * 0.001 - 1.0),
         (1 to 64).map(j => (j * 17 - i) * 0.002))
@@ -202,7 +198,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("LuhnCheckExpr: ISO 7812 vectors, codegen + interpreted parity, non-digit -> NULL") {
-    GraftRegistry.register(spark)
     import spark.implicits._
     // classic test vectors: 79927398713 valid; each single-digit change invalid
     val cases = Seq(
@@ -230,7 +225,6 @@ class ExpressionsSpec extends SparkSpec {
   }
 
   test("JaroWinklerExpr: textbook vectors, codegen + interpreted parity, DuckDB edges") {
-    GraftRegistry.register(spark)
     import spark.implicits._
     // Winkler's canonical pairs + the DuckDB edge semantics the oracle
     // relies on (both-empty -> 0.0, one-empty -> 0.0)

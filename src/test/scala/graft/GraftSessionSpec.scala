@@ -21,6 +21,16 @@ class GraftSessionSpec extends SparkSpec {
     assert(shingles.toSeq == Seq("a b", "b c", "c d"))
   }
 
+  test("a fresh session resolves the three UDAFs too") {
+    val agg = spark.newSession().sql(
+      """SELECT graft_geomean(x) AS gm, graft_cm_sketch(k) AS cm, graft_mg(k) AS mg
+        |FROM VALUES (1D, 'a'), (4D, 'a'), (16D, 'b') AS t(x, k)""".stripMargin).head()
+    assert(math.abs(agg.getDouble(0) - 4.0) < 1e-12)
+    assert(agg.getSeq[Long](1).size == functions.CountMinAgg.depth * functions.CountMinAgg.width)
+    assert(agg.getSeq[Long](1).sum == 3 * functions.CountMinAgg.depth)
+    assert(agg.getSeq[String](2).head == "a")
+  }
+
   test("the session carries the harness confs") {
     val conf = spark.conf
     assert(conf.get("spark.sql.shuffle.partitions") == "4")

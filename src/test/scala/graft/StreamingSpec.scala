@@ -21,7 +21,6 @@ class StreamingSpec extends SparkSpec {
   test("count-min sketch aggregates under streaming state: incremental == batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftRegistry.register(spark)
     val input = MemoryStream[String]
     // complete-mode global agg: state carries the sketch buffer across
     // micro-batches, merged via CountMinAgg.merge — the mergeable-

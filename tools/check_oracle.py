@@ -98,7 +98,7 @@ def main():
     # total (this hid a broken q125 behind "134 pass, 0 fail")
     for name in sorted(set(oracles) - set(names)):
         print(f"FAIL {name}: no result written (query threw in Verify "
-              "— grep the Verify log for '[verify] {name} failed')")
+              f"— grep the Verify log for '[verify] {name} failed')")
         n_fail += 1
     for name in names:
         spark_df = con.sql(
