@@ -14,9 +14,7 @@ object Bench {
     // Phase wall-clock breakdown on stderr: the driver runs this main
     // under a fixed wall-clock window (round 10's 32-cpu run was
     // timeout-killed mid-pass-2), so knowing where the wall goes —
-    // bucketing vs measured passes vs adjudication — is part of the
-    // bench's own health. stderr only; the stdout contract line is
-    // unchanged.
+    // bucketing vs measured passes — is part of the bench's own health.
     val wall0 = System.nanoTime()
     def phase(name: String): Unit =
       System.err.println(f"[bench] phase $name done at ${(System.nanoTime() - wall0) / 1e9}%.1f s wall")
@@ -40,17 +38,18 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] bucketing prewarm: ${e.getMessage}") }
     }
     phase("bucketing")
-    def timeOne(name: String, fn: Q): Double = {
+    val metrics = graft.metrics.QueryMetrics.install(spark.sparkContext)
+    def timeOne(name: String, fn: Q, pass: Int): Double = {
       val t0 = System.nanoTime()
-      // label the query's jobs (guide §1.5) so event-log stages map back
-      // to queries in attribution runs; thread-local, cleared after
-      spark.sparkContext.setJobDescription(name)
+      // label the query's jobs so the per-query records attribute them;
+      // thread-local, cleared after
+      metrics.label(name, pass)
       // a failed query records -1 and the run continues — one regression
       // must not zero the whole round's bench
       val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); false }
-      spark.sparkContext.setJobDescription(null)
+      metrics.label(null, pass)
       if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }
     val sorted = SparkEntry.selected(sys.env.get("SPARK_GRAFT_BENCH_FILTER"))
@@ -63,7 +62,7 @@ object Bench {
     // both runs out of the artifact. SPARK_GRAFT_PASSES overrides.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt.max(1)
     val runs = (1 to passes).map { i =>
-      val r = sorted.map { case (name, fn) => name -> timeOne(name, fn) }.toMap
+      val r = sorted.map { case (name, fn) => name -> timeOne(name, fn, i) }.toMap
       phase(s"pass$i")
       r
     }
@@ -72,26 +71,24 @@ object Bench {
       val ok = ts.filter(_ >= 0)
       name -> (if (ok.isEmpty) -1.0 else ok.min)
     }
-    val fns = sorted.toMap
-    val hostFactor = warnRegressions(results.toMap, (n: String) => fns.get(n).map(timeOne(n, _)))
-    phase("adjudication")
-    printJson(results.toMap, sfDir, hostFactor)
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
+    // one JSON line per (query, pass), for tools/bench_compare.py
+    val records = out.stripSuffix(".json") + ".metrics.jsonl"
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(records), metrics.records(
+      for ((r, i) <- runs.zipWithIndex; (q, t) <- r.toSeq.sortBy(_._1)) yield (q, i + 1, t)).map(_.json + "\n").mkString)
+    catch { case e: Throwable => System.err.println(s"[bench] metrics write failed: ${e.getMessage}") }
+    printJson(results.toMap, sfDir, out)
     spark.stop()
   }
 
-  private def printJson(qs: Map[String, Double], sf: String, hostFactor: Double): Unit = {
+  private def printJson(qs: Map[String, Double], sf: String, out: String): Unit = {
     def obj(m: Map[String, Double]) = m.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
     val total = qs.values.filter(_ >= 0).sum
-    // Host identity stamp: build hosts vary ~2x in speed between
-    // provisions, so naively dividing raw artifacts across rounds reads
-    // host variance as regression. host_factor is this run's median
-    // per-query ratio vs the best-prior anchors (tools/bench_best.json)
-    // — divide by it before comparing rounds. hostname/cpus identify
-    // the provision; -1.0 factor means no anchors were readable.
+    // hostname/cpus identify the provision: build hosts vary ~2x in
+    // speed, so compare times across runs of one host only
     val hostName = try java.net.InetAddress.getLocalHost.getHostName catch { case _: Throwable => "unknown" }
-    val hostPart =
-      f""","host":{"name":"$hostName","cpus":${GraftSession.cpus},"factor_vs_best":$hostFactor%.3f}"""
+    val hostPart = s""","host":{"name":"$hostName","cpus":${GraftSession.cpus}}"""
     // Self-contained artifact FIRST: the full per-query map at this
     // query count (>400) overflows the driver's fixed-size stdout
     // capture, so it lives in a file, never on stdout (BENCH_r06–r09
@@ -99,7 +96,6 @@ object Bench {
     // away). The file is the authoritative per-query record.
     val fullLine =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":${obj(qs)}$hostPart,"sf":"$sf","see":"BENCH_full.json"}"""
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), fullLine + "\n")
     catch { case e: Throwable => System.err.println(s"[bench] artifact write failed: ${e.getMessage}") }
     // The stdout contract line prints LAST and stays under the driver's
@@ -111,77 +107,5 @@ object Bench {
     val line =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${qs.size},"queries":$queriesPart$hostPart,"sf":"$sf","see":"BENCH_full.json"}"""
     println(line)
-  }
-
-  /** Commit-time regression tripwire, host-speed normalized. Anchors
-    * are per-query best-prior times (tools/bench_best.json), but build
-    * hosts vary ~2x in speed between provisions, so absolute ratios
-    * flag the whole suite on a slow host. Instead: every query's
-    * ratio-to-best is divided by the run's MEDIAN ratio (the host-speed
-    * factor); a query is flagged only when it is >1.5x slower than the
-    * rest of the suite moved — the check that catches q63/q56-style
-    * single-query regressions on any host without drowning them in
-    * host noise.
-    */
-  /** Returns the host-speed factor (median ratio vs anchors) for the
-    * artifact stamp; -1.0 when no anchors are readable.
-    */
-  private def warnRegressions(qs: Map[String, Double],
-                              rerun: String => Option[Double]): Double = {
-    val path = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BEST", "tools/bench_best.json"))
-    if (!java.nio.file.Files.isReadable(path)) return -1.0
-    val txt = java.nio.file.Files.readString(path)
-    val entry = """"(q\w+)":\s*(-?[0-9.]+)""".r
-    val best = entry.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    val ratios = qs.toSeq.flatMap { case (name, t) =>
-      best.get(name).collect { case b if t > 0 && b > 0 => name -> (t / b) }
-    }
-    if (ratios.isEmpty) return -1.0
-    val sortedR = ratios.map(_._2).sorted
-    val hostFactor = sortedR(sortedR.size / 2)
-    val allSuspects = ratios.collect {
-      case (name, r) if qs(name) > 0.3 && r > hostFactor * 1.5 => name
-    }
-    // Bound the adjudication pass: a slow/noisy provision can flag 40+
-    // queries (round-11 baseline: 45 flags, 126 s of isolated reruns
-    // inside the bench's wall-clock window). Rerun the 15 largest-absolute
-    // suspects only — they carry the regression signal; the rest are
-    // listed unadjudicated.
-    val suspects = allSuspects.sortBy(n => -qs(n)).take(15).sorted
-    if (allSuspects.size > suspects.size)
-      System.err.println(s"[bench] ${allSuspects.size - suspects.size} further spikes " +
-        s"not adjudicated (smallest-absolute): " +
-        allSuspects.filterNot(suspects.contains).sorted.mkString(","))
-    System.err.println(f"[bench] host-speed factor vs best-prior anchors: $hostFactor%.2fx (median ratio)")
-    // The relative check absorbs a UNIFORM suite slowdown into the host
-    // factor by construction — surface one loudly so a global codegen /
-    // conf regression isn't silently normalized away (the hosts really
-    // do vary ~2x; beyond 2.5x is no longer plausible provision noise).
-    if (hostFactor > 2.5)
-      System.err.println(f"[bench] WARNING: host factor $hostFactor%.2fx exceeds the 2.5x provision-variance " +
-        "bound — the WHOLE suite slowed vs best-prior; suspect a global conf/codegen regression, not the host")
-    // Single-query spikes are usually suite-mode noise (JIT code-cache
-    // pressure from 300+ compiled plans, CPU-steal windows). Adjudicate
-    // each suspect with one isolated rerun before crying REGRESSION —
-    // the r7 q27 spike (1.84x in-suite, 1.0x isolated) is the motivating
-    // case.
-    val flagged = suspects.flatMap { name =>
-      val t2 = rerun(name).filter(_ > 0).fold(qs(name))(math.min(qs(name), _))
-      val r2 = t2 / best(name)
-      if (r2 > hostFactor * 1.5)
-        Some(f"[bench] REGRESSION $name: $t2%.2fs vs best-prior ${best(name)}%.2fs " +
-          f"(${r2}%.1fx raw, ${r2 / hostFactor}%.1fx host-normalized; survived isolated rerun)")
-      else {
-        System.err.println(f"[bench] spike $name adjudicated as noise: suite ${qs(name)}%.2fs, " +
-          f"isolated rerun $t2%.2fs (${r2 / hostFactor}%.1fx host-normalized)")
-        None
-      }
-    }
-    flagged.foreach(System.err.println)
-    if (flagged.nonEmpty)
-      System.err.println(s"[bench] ${flagged.size} queries exceed 1.5x the suite's own movement " +
-        "even after an isolated rerun")
-    hostFactor
   }
 }

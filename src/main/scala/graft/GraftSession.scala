@@ -18,11 +18,6 @@ object GraftSession {
     * (see [[Tuning]]).
     */
   def local(cpus: Int, dataDir: String): SparkSession = {
-    // optional event-log capture for scale attribution (per-stage
-    // shuffle records + spill, the q363/q368 protocol)
-    val eventLog = sys.env.get("SPARK_GRAFT_EVENTLOG_DIR").toSeq.flatMap(dir => Seq(
-      "spark.eventLog.enabled" -> "true", "spark.eventLog.dir" -> dir,
-      "spark.eventLog.compress" -> "false", "spark.eventLog.rolling.enabled" -> "false"))
     val confs = Seq(
       "spark.sql.extensions" -> classOf[GraftExtensions].getName,
       "spark.sql.shuffle.partitions" -> Tuning.shuffleConf(dataDir, cpus),
@@ -38,7 +33,7 @@ object GraftSession {
       "spark.sql.codegen.cache.maxEntries" -> Tuning.codegenCacheConf
     ) ++
       // bucketed-layout planner flags (sort-aware scans, no auto-disable)
-      graft.sources.Bucketing.sessionConfs ++ eventLog
+      graft.sources.Bucketing.sessionConfs
     val spark = confs.foldLeft(SparkSession.builder().master(s"local[$cpus]")) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()

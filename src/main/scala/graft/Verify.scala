@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s.JsonAST.{JObject, JString}
+import org.json4s.jackson.JsonMethods.compact
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,11 +22,9 @@ object Verify {
         // A failed query must leave a marker row in the artifact, not a
         // silent gap: round 5's 54 runtime failures were absent from
         // CORRECTNESS (reading as green) because this branch only logged.
-        // For oracle-backed queries (all of them today) the one-row
-        // sentinel frame forces a schema/hash mismatch; a hypothetical
-        // oracle-less query would fall to the weaker rows-only check,
-        // where tools/check_oracle.py additionally flags any result
-        // carrying a __graft_error column as FAIL outright.
+        // The one-row sentinel frame forces a schema/hash mismatch against
+        // the query's oracle, and tools/check_oracle.py reports any result
+        // carrying a __graft_error column as FAIL with this message.
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         try {
           import spark.implicits._
@@ -36,20 +36,10 @@ object Verify {
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // json4s escapes quotes, backslashes and every control char: a tab or
+    // CR in builder-authored SQL would otherwise make the driver's
+    // json.load fail and silently zero the round's correctness.
+    val json = compact(JObject(SparkEntry.oracleSql.toList.map { case (k, v) => k -> JString(v) }))
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Pins the hand-written docs to the runtime registry so counts can't
   * drift (r9 verdict: COVERAGE.md said 410 while the suite was 422).
   * The query count has exactly one source of truth —
@@ -27,6 +29,16 @@ class DocsConsistencySpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(m.isDefined, "README.md must state the oracle tally as 'NNN/NNN'")
     assert(m.get.group(1).toInt == n && m.get.group(2).toInt == n,
       s"README.md says '${m.get.matched}' but SparkEntry.queries has $n — update the README")
+  }
+
+  test("README's Settings table lists exactly the SPARK_GRAFT_* variables src/main reads") {
+    val settings = read("README.md").split("\n## ").find(_.startsWith("Settings")).get
+    val documented = """(?m)^\| `(SPARK_GRAFT_\w+)`""".r.findAllMatchIn(settings).map(_.group(1)).toSet
+    val inCode = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(p => """"(SPARK_GRAFT_\w+)"""".r.findAllMatchIn(read(p.toString)).map(_.group(1))).toSet
+    assert(inCode.nonEmpty && documented == inCode,
+      s"README Settings rows only: ${documented -- inCode}; read in src/main only: ${inCode -- documented}")
   }
 
   test("a query name declared twice fails the registry, by name") {

@@ -1,58 +1,51 @@
 #!/usr/bin/env python3
-"""Per-query bench regression check between two BENCH_r{N}.json files.
+"""Per-query regression check between two graft.Bench runs of one host.
 
-Usage: python3 tools/bench_compare.py <baseline.json> <current.json> [ratio]
+Usage: python3 tools/bench_compare.py <base BENCH_full.json> <new BENCH_full.json> [ratio]
 
-Flags queries whose time grew more than `ratio` (default 1.5×) over the
-baseline, ignoring sub-0.3 s queries where scheduler jitter dominates.
-Host noise can spike a single query ~10× transiently — rerun before
-believing a regression. Exit code 1 if any flagged.
+Reads the records Bench writes next to each file (`X.json` ->
+`X.metrics.jsonl`, one line per query and pass) and flags a query when
+  RECORDS  its (jobs, stages, shuffle records written) changed in every
+           pass: no pass of the new run repeats a base pass's counts.
+           A few queries' counts differ between passes of unchanged
+           code, so one pass's change alone is not a signal;
+  CPU      its executor CPU (fastest pass) grew more than `ratio` (1.5)
+           times the run's median per-query CPU ratio, which absorbs a
+           uniformly faster or slower host; queries under 0.3 s of CPU
+           in both runs are skipped.
+Nothing is rerun. Exit code 1 if any query is flagged.
 """
-import sys, json, re
+import json, statistics, sys
 
-def load(path):
-    """Accept either the raw Bench JSON line or the driver's BENCH_r{N}
-    wrapper, whose 'tail' holds the (possibly head-truncated) stdout —
-    per-query times are regex-recovered from it."""
-    d = json.load(open(path))
-    if "queries" in d:
-        return d
-    tail = d.get("tail", "")
-    qs = {m.group(1): float(m.group(2))
-          for m in re.finditer(r'"(q\w+)":([0-9.]+)', tail)}
-    m = re.search(r'"metric":"total","value":([0-9.]+)', tail)
-    return {"queries": qs, "value": float(m.group(1)) if m else None}
+
+def load(bench_out):
+    """Query name -> its records, one per pass."""
+    recs = {}
+    for line in open(bench_out.removesuffix(".json") + ".metrics.jsonl"):
+        r = json.loads(line)
+        recs.setdefault(r["query"], []).append(r)
+    return recs
+
 
 def main():
-    base_p, cur_p = sys.argv[1], sys.argv[2]
+    base, cur = load(sys.argv[1]), load(sys.argv[2])
     ratio = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
-    base = load(base_p)
-    cur = load(cur_p)
-    bq, cq = base.get("queries", {}), cur.get("queries", {})
-    flagged, improved = [], []
-    for name in sorted(cq):
-        if name not in bq:
-            print(f"NEW  {name}: {cq[name]:.2f}s (no baseline)")
-            continue
-        b, c = bq[name], cq[name]
-        if b < 0.3 and c < 0.3:
-            continue
-        r = c / b if b > 0 else float("inf")
-        if r > ratio:
-            flagged.append((name, b, c, r))
-        elif r < 1 / ratio:
-            improved.append((name, b, c, r))
-    for name in sorted(set(bq) - set(cq)):
-        print(f"GONE {name}: was {bq[name]:.2f}s, missing from current")
-    for name, b, c, r in improved:
-        print(f"FASTER {name}: {b:.2f}s -> {c:.2f}s ({r:.2f}x)")
-    for name, b, c, r in flagged:
-        print(f"REGRESSION {name}: {b:.2f}s -> {c:.2f}s ({r:.2f}x)")
-    tb, tc = base.get("value"), cur.get("value")
-    if tb and tc:
-        print(f"\ntotal: {tb:.1f}s -> {tc:.1f}s ({tc/tb:.2f}x), "
-              f"{len(flagged)} regression(s) > {ratio}x")
-    sys.exit(1 if flagged else 0)
+    both = sorted(base.keys() & cur.keys())
+    shape = lambda rs: {(r["jobs"], r["stages"], r["shuffle_write_records"]) for r in rs}
+    flags = [f"RECORDS {q}: (jobs, stages, shuffle records) {sorted(shape(base[q]))} -> {sorted(shape(cur[q]))}"
+             for q in both if shape(base[q]).isdisjoint(shape(cur[q]))]
+    cpu = {q: [min(r["cpu_ns"] for r in recs[q]) / 1e9 for recs in (base, cur)] for q in both}
+    ratios = {q: c / b for q, (b, c) in cpu.items() if max(b, c) >= 0.3 and b > 0}
+    host = statistics.median(ratios.values()) if ratios else 1.0
+    flags += [f"CPU {q}: {cpu[q][0]:.2f}s -> {cpu[q][1]:.2f}s ({r:.2f}x, {r / host:.2f}x the run's median)"
+              for q, r in sorted(ratios.items()) if r / host > ratio]
+    for q in sorted(base.keys() ^ cur.keys()):
+        print(f"{'GONE' if q in base else 'NEW '} {q}: in one run only")
+    for f in flags:
+        print(f)
+    print(f"\nmedian CPU ratio {host:.2f}x over {len(ratios)} queries; {len(flags)} flag(s)")
+    sys.exit(1 if flags else 0)
+
 
 if __name__ == "__main__":
     main()

@@ -101,19 +101,20 @@ def main():
               f"— grep the Verify log for '[verify] {name} failed')")
         n_fail += 1
     for name in names:
+        # every registered query carries its oracle, so a result dir
+        # without one is a stale or renamed query: it cannot be checked
+        if name not in oracles:
+            print(f"FAIL {name}: no oracle entry")
+            n_fail += 1
+            continue
         spark_df = con.sql(
             f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
-        # an error-marker frame (Verify's failure sentinel) is a FAIL no
-        # matter what: without this, an oracle-LESS query that threw
-        # would read as a benign 1-row ROWSONLY result
+        # an error-marker frame (Verify's failure sentinel) fails with the
+        # query's own error message, not as a column mismatch
         if "__graft_error" in spark_df.columns:
             msg = spark_df["__graft_error"].iloc[0] if len(spark_df) else "?"
             print(f"FAIL {name}: query threw in Verify: {msg}")
             n_fail += 1
-            continue
-        if name not in oracles:
-            print(f"ROWSONLY {name}: rows={len(spark_df)}"
-                  + ("  (EMPTY!)" if len(spark_df) == 0 else ""))
             continue
         try:
             ref_df = con.sql(oracles[name]).df()

@@ -20,7 +20,6 @@ for q in "$@"; do
     SPARK_GRAFT_BENCH_FILTER="$q" \
     SPARK_GRAFT_PASSES=1 \
     SPARK_GRAFT_SKIP_BUCKETING=1 \
-    SPARK_GRAFT_BENCH_BEST=/nonexistent \
     SPARK_GRAFT_BENCH_OUT="$f" \
     "$ROOT/tools/run_bench.sh" graft.Bench >/dev/null 2>"$OUT/${q}_${tag}.log"
     [ -s "$f" ] || echo "[paired] FAILED $q @ $tag — see $OUT/${q}_${tag}.log"
