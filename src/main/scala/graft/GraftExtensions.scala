@@ -7,9 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.GraftRegistry
 
 /** Injects graft's SQL functions (every entry of
-  * GraftRegistry.expressions) and optimizer rules into every session
-  * when configured with `spark.sql.extensions=graft.GraftExtensions`,
-  * as GraftSession does. It is the one install point.
+  * GraftRegistry.expressions), optimizer rules, planner strategy and
+  * AQE runtime optimizer rule into every session when configured with
+  * `spark.sql.extensions=graft.GraftExtensions`, as GraftSession does.
+  * It is the one install point.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -24,5 +25,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL surface for it: rewrite `row_number() OVER (...) <= k` filters
     // into the native operator (see plans.WindowTopKRule)
     ext.injectOptimizerRule(graft.plans.WindowTopKRule)
+    // AQE re-optimization: a global sort over measured-small input sorts
+    // in one partition, no range exchange (see plans.SmallSortRule)
+    ext.injectRuntimeOptimizerRule(graft.plans.SmallSortRule)
   }
 }

@@ -799,9 +799,15 @@ object Dedup {
     * walk's value bit for bit. At t = 0.8 most candidate pairs exit
     * after a handful of mismatches instead of walking both arrays.
     */
-  private[graft] def jaccardSorted(ha: Array[Long], hb: Array[Long], thr: Double): Double = {
+  private[graft] def jaccardSorted(ha: Array[Long], hb: Array[Long], thr: Double): Double =
+    jaccardSorted(ha, hb, minQualifyingCount(ha.length, hb.length, thr))
+
+  /** [[jaccardSorted]] with the exit count `cMin =
+    * minQualifyingCount(ha.length, hb.length, thr)` given, for callers
+    * that score many pairs of the same sizes.
+    */
+  private def jaccardSorted(ha: Array[Long], hb: Array[Long], cMin: Int): Double = {
     val na = ha.length; val nb = hb.length
-    val cMin = minQualifyingCount(na, nb, thr)
     var i = 0; var j = 0; var cnt = 0
     while (i < na && j < nb) {
       if (cnt + math.min(na - i, nb - j) < cMin) return Double.NegativeInfinity
@@ -1029,22 +1035,39 @@ object Dedup {
           it: Iterator[(String, Int, Int, Int, Long, Array[Long])]) =>
         val (_, ti, tj) = key
         val rows = it.toArray
-        val left = rows.collect { case (_, _, _, tt, id, h) if tt == ti => (id, h) }.sortBy(_._1)
-        val right = if (ti == tj) left
-          else rows.collect { case (_, _, _, tt, id, h) if tt == tj => (id, h) }.sortBy(_._1)
+        // each side unpacked once into id and hash arrays (id order), so
+        // the pair loop reads primitives instead of unboxing tuples
+        def side(tile: Int): (Array[Long], Array[Array[Long]]) = {
+          val s = rows.filter(_._4 == tile).sortBy(_._5)
+          (s.map(_._5), s.map(_._6))
+        }
+        val (idsA, hsA) = side(ti)
+        val (idsB, hsB) = if (ti == tj) (idsA, hsA) else side(tj)
+        // minQualifyingCount depends only on (na, nb): cMinOf(nb) holds
+        // it for the na in cMinNa(nb), so a run of equal-size left docs
+        // computes it once per right size
+        val maxNb = hsB.foldLeft(0)((m, h) => math.max(m, h.length))
+        val cMinOf = new Array[Int](maxNb + 1)
+        val cMinNa = Array.fill(maxNb + 1)(-1)
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
         var ai = 0
-        while (ai < left.length) {
-          val (ida, ha) = left(ai)
+        while (ai < idsA.length) {
+          val ida = idsA(ai); val ha = hsA(ai)
           val na = ha.length
           var k = if (ti == tj) ai + 1 else 0
-          while (k < right.length) {
-            val (idb, hb) = right(k)
+          while (k < idsB.length) {
+            val hb = hsB(k)
             val nb = hb.length
             if (math.min(na, nb).toDouble >= threshold * math.max(na, nb).toDouble) {
-              val jac = jaccardSorted(ha, hb, threshold)
-              if (jac >= threshold)
+              if (cMinNa(nb) != na) {
+                cMinOf(nb) = minQualifyingCount(na, nb, threshold)
+                cMinNa(nb) = na
+              }
+              val jac = jaccardSorted(ha, hb, cMinOf(nb))
+              if (jac >= threshold) {
+                val idb = idsB(k)
                 out += (if (ida < idb) (ida, idb, jac) else (idb, ida, jac))
+              }
             }
             k += 1
           }

@@ -27,7 +27,7 @@ object Curation28 {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
-    val qmod = graft.operators.Similarity.fixedCountModulus(e.count())
+    val qmod = graft.operators.Similarity.fixedCountModulus(Tables.rowCount(s, d, "embeddings"))
     val q = e.filter(col("vec_id") % qmod === 0)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"), col("v").as("qv"))
     val sims = q.join(e, col("vec_id") =!= col("qid"))

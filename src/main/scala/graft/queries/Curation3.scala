@@ -192,7 +192,7 @@ object Curation3 {
     val docs = Tables.documents(s, d)
     val z = (col("n_chars").cast(DoubleType) - lit(300.0)) / lit(200.0)
     val p = lit(0.5) + z / (lit(2.0) * (lit(1.0) + abs(z)))
-    val total = docs.count().toDouble
+    val total = Tables.rowCount(s, d, "documents").toDouble
     docs.select((col("lang") === "en").cast("int").as("y"), p.as("p"))
       .withColumn("bin", least(floor(col("p") * 10).cast("int"), lit(9)))
       .groupBy("bin")

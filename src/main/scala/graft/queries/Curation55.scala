@@ -33,7 +33,7 @@ object Curation55 {
     // fixed %25 made |Q| linear in n, so both the exact baseline and
     // the Hamming sweep were O(n^2/25) — measured 178 s / 47.7x at the
     // sf1 paired decade (the q437 disease, same fixedCountModulus cure)
-    val qm = Similarity.fixedCountModulus(e.count())
+    val qm = Similarity.fixedCountModulus(Tables.rowCount(s, d, "embeddings"))
     val q = e.filter(col("vec_id") % qm === 0)
     val exact = Similarity.bruteForceTopK(e, q, "vec_id", "embedding", k = 5)
       .select(col("qid"), col("nid"))

@@ -73,7 +73,7 @@ object Curation57 {
     */
   private val q437IvfProbeCurve: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
-    val nVec = e.count()
+    val nVec = Tables.rowCount(s, d, "embeddings")
     // corpus-capped query sample (~<=256 queries at any scale): a fixed
     // %25 made |Q| linear in n and the exact baseline O(n^2/25) —
     // measured 524 s / 89.5x at the sf10 paired decade

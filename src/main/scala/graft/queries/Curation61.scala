@@ -51,7 +51,7 @@ object Curation61 {
     */
   private val q456FilteredAnn: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
-    val qm = Similarity.fixedCountModulus(e.count())
+    val qm = Similarity.fixedCountModulus(Tables.rowCount(s, d, "embeddings"))
     val q = e.filter(col("vec_id") % qm === 0)
     // ground truth: filter-then-rank inside the query's own label
     val exact = Similarity

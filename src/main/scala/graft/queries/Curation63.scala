@@ -147,7 +147,7 @@ object Curation63 {
     */
   private val q464FellegiSunter: Q = (s, d) => {
     val c = Tables.customer(s, d)
-    val nC = c.count()
+    val nC = Tables.rowCount(s, d, "customer")
     val blockMod = Similarity.fixedCountModulus(nC, target = 8L)
     val orig = c.select(col("c_custkey").as("id"), col("c_name").as("nm"),
       col("c_nationkey").as("nat"), col("c_mktsegment").as("seg"))

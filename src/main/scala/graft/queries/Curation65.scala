@@ -143,7 +143,7 @@ object Curation65 {
     */
   private val q472ApproxPercentileAudit: Q = (s, d) => {
     val li = Tables.lineitem(s, d).select(col("l_extendedprice").as("x"))
-    val n = li.count()
+    val n = Tables.rowCount(s, d, "lineitem")
     val spark = s
     import spark.implicits._
     val tgt = Seq(0.5, 0.95, 0.99).toDF("p")

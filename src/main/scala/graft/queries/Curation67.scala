@@ -27,7 +27,7 @@ object Curation67 {
     */
   private val q477JwLinkage: Q = (s, d) => {
     val c = Tables.customer(s, d)
-    val nC = c.count()
+    val nC = Tables.rowCount(s, d, "customer")
     val blockMod = Similarity.fixedCountModulus(nC, target = 8L)
     val orig = c.select(col("c_custkey").as("id"), col("c_name").as("nm"))
     val corrupted = orig

@@ -80,7 +80,7 @@ object DedupSim {
 
   private val q75SimilarityTopK: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
-    val qm = Similarity.fixedCountModulus(e.count())
+    val qm = Similarity.fixedCountModulus(Tables.rowCount(s, d, "embeddings"))
     Similarity.bruteForceTopK(e, e.filter(col("vec_id") % qm === 0),
         "vec_id", "embedding", k = 5)
       .select("qid", "rank", "nid", "cos")
@@ -93,7 +93,7 @@ object DedupSim {
     */
   private val q77SimilarityIvf: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
-    val n = e.count()
+    val n = Tables.rowCount(s, d, "embeddings")
     val m = Similarity.sqrtModulus(n)
     val qm = Similarity.fixedCountModulus(n)
     Similarity.ivfTopK(
@@ -161,7 +161,7 @@ object DedupSim {
     */
   private val q100KmeansStep: Q = (s, d) => {
     val e = Tables.embeddings(s, d)
-    val m = Similarity.sqrtModulus(e.count())
+    val m = Similarity.sqrtModulus(Tables.rowCount(s, d, "embeddings"))
     Similarity.kmeansStep(e, e.filter(col("vec_id") % m === 0), "vec_id", "embedding")
       .orderBy("cid", "pos")
   }
@@ -220,7 +220,7 @@ object DedupSim {
     * 0.998), so recall here matches the brute-force q74 pair set.
     */
   private val q112Semdedup: Q = (s, d) => {
-    val m = Similarity.sqrtModulus(Tables.embeddings(s, d).count())
+    val m = Similarity.sqrtModulus(Tables.rowCount(s, d, "embeddings"))
     val cent = Tables.embeddings(s, d).filter(col("vec_id") % m === 0)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast(DoubleType)).as("e"))
     Similarity.semanticDedupPairs(nearDupVectors(s, d), cent, "vec_id", "e",
@@ -244,7 +244,7 @@ object DedupSim {
     // build-once contract (buildIvfIndex doc): a completed write leaves
     // parquet's _SUCCESS marker — rebuild only when it's absent, so
     // the query (and the bench) times the pruned probe, not the build
-    val n = e.count()
+    val n = Tables.rowCount(s, d, "embeddings")
     val m = Similarity.sqrtModulus(n)
     val qm = Similarity.fixedCountModulus(n)
     if (!new java.io.File(dir, "_SUCCESS").isFile)

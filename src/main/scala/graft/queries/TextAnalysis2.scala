@@ -96,7 +96,7 @@ object TextAnalysis2 {
     */
   private val q88TfidfTopTerms: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    val nDocs = docs.count()
+    val nDocs = Tables.rowCount(s, d, "documents")
     val tokens = docs.select(col("doc_id"), explode(words(col("text"))).as("word"))
     val tf = tokens.groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
     val docLen = tokens.groupBy("doc_id").agg(count(lit(1)).as("len"))

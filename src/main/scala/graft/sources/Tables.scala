@@ -56,6 +56,45 @@ object Tables {
     }
   }
 
+  /** JVM-wide (path → row count) memo, validated like the schema memo. */
+  private final case class CountEntry(mtime: Long, size: Long, rows: Long)
+  private val countCache =
+    new java.util.concurrent.ConcurrentHashMap[String, CountEntry]()
+
+  /** Row count of table `name` under `dir`: the sum of the parquet
+    * footers' row counts (the file itself, or every data file of a
+    * directory written by Spark). Equal to `table(...).count()` without
+    * planning or running a job; memoized and re-read when the path's
+    * (mtime, size) changes.
+    */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
+    val path = s"$dir/$name.parquet"
+    val (m, sz) = statLocal(path)
+    val cached = countCache.get(path)
+    if (cached != null && cached.mtime == m && cached.size == sz) cached.rows
+    else {
+      import org.apache.hadoop.fs.Path
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      val hconf = spark.sessionState.newHadoopConf()
+      val p = new Path(path)
+      val fs = p.getFileSystem(hconf)
+      val st = fs.getFileStatus(p)
+      val files =
+        if (st.isDirectory) fs.listStatus(p).toSeq.filter { f =>
+          val n = f.getPath.getName
+          f.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }
+        else Seq(st)
+      val rows = files.map { f =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hconf))
+        try r.getRecordCount finally r.close()
+      }.sum
+      countCache.put(path, CountEntry(m, sz, rows))
+      rows
+    }
+  }
+
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame  = table(s, d, "customer")

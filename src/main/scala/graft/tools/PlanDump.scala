@@ -5,9 +5,12 @@ import java.nio.file.{Files, Paths}
 import graft.{GraftSession, SparkEntry}
 
 /** Dump `.explain("formatted")` for named queries to files — the
-  * round-10 optimization evidence trail (plans/r10/<q>_before.txt /
+  * optimization evidence trail (plans/r10/<q>_before.txt /
   * _after.txt). Same session bootstrap as Bench (GraftSession) so the
-  * captured plan is the one the bench executes.
+  * captured plan is the one the bench executes. Each query is run once
+  * first (its rows discarded), so the dump shows AQE's final plan
+  * (`isFinalPlan=true`, with runtime rewrites such as
+  * [[graft.plans.SmallSortRule]]) above the initial one.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>
   * Names match EXACTLY, except a name ending in '_' which is a prefix
@@ -30,6 +33,7 @@ object PlanDump {
       .foreach { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
+          df.queryExecution.toRdd.foreach(_ => ())
           val txt = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), txt)

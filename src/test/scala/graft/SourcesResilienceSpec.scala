@@ -56,6 +56,48 @@ class SourcesResilienceSpec extends SparkSpec {
     assert(second.count() == 5)
   }
 
+  test("rowCount reads parquet footers: equals count() for every fixture table") {
+    val dir = freshDir()
+    copyFixtures(dir, Tables.names)
+    for (t <- Tables.names) {
+      val df = if (t == "events") Tables.events(spark, dir) else Tables.table(spark, dir, t)
+      assert(Tables.rowCount(spark, dir, t) == df.count(), t)
+    }
+  }
+
+  test("rowCount is re-read when the file's size or mtime changes") {
+    // one single-file parquet of `rows` copies of one constant: 200 and
+    // 201 rows encode to files of the same size
+    def constFile(rows: Int): java.nio.file.Path = {
+      val out = freshDir() + "/t"
+      spark.range(rows).select(lit(7).as("x")).coalesce(1).write.parquet(out)
+      Files.list(Paths.get(out)).filter(_.toString.endsWith(".parquet")).findFirst().get
+    }
+    val dir = freshDir()
+    val target = Paths.get(s"$dir/t.parquet")
+    val (f200, f201) = (constFile(200), constFile(201))
+    Files.copy(f200, target)
+    assert(Tables.rowCount(spark, dir, "t") == 200)
+    // size change: a distinct-valued column of 1000 rows; as written by
+    // Spark (a directory of 2 part files) it counts the same
+    spark.range(1000).repartition(2).write.mode("overwrite").parquet(s"$dir/big.parquet")
+    assert(Tables.rowCount(spark, dir, "big") == 1000)
+    spark.range(1000).coalesce(1).write.mode("overwrite").parquet(s"$dir/big")
+    val big = Files.list(Paths.get(s"$dir/big")).filter(_.toString.endsWith(".parquet")).findFirst().get
+    val mtime = Files.getLastModifiedTime(target)
+    Files.copy(big, target, StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(target, mtime)
+    assert(Tables.rowCount(spark, dir, "t") == 1000)
+    // mtime change only: same size, different footer
+    assert(Files.size(f200) == Files.size(f201), "fixture files differ in size")
+    Files.copy(f200, target, StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(target, java.nio.file.attribute.FileTime.fromMillis(1000000L))
+    assert(Tables.rowCount(spark, dir, "t") == 200)
+    Files.copy(f201, target, StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(target, java.nio.file.attribute.FileTime.fromMillis(2000000L))
+    assert(Tables.rowCount(spark, dir, "t") == 201)
+  }
+
   test("registerAll isolates a poisoned table: other views stay queryable") {
     val dir = freshDir()
     copyFixtures(dir, Seq("region", "nation", "customer", "supplier", "part",
