@@ -25,6 +25,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL surface for it: rewrite `row_number() OVER (...) <= k` filters
     // into the native operator (see plans.WindowTopKRule)
     ext.injectOptimizerRule(graft.plans.WindowTopKRule)
+    // a plan whose scans are all small runs its joins, aggregates,
+    // windows and sorts in one partition (see plans.SmallInputRule)
+    ext.injectOptimizerRule(graft.plans.SmallInputRule)
     // AQE re-optimization: a global sort over measured-small input sorts
     // in one partition, no range exchange (see plans.SmallSortRule)
     ext.injectRuntimeOptimizerRule(graft.plans.SmallSortRule)

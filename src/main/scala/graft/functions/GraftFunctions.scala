@@ -94,10 +94,6 @@ object GraftFunctions {
   def normSq(a: Column): Column =
     aggregate(a, lit(0.0), (acc, x) => acc + x.cast(DoubleType) * x.cast(DoubleType))
 
-  /** Cosine similarity between two array<numeric> columns. */
-  def cosineSimilarity(a: Column, b: Column): Column =
-    dotProduct(a, b) / sqrt(normSq(a) * normSq(b))
-
   /** Unrolled dot product for a known dimension: a straight-line
     * left-associated sum of element_at products. Higher-order functions
     * (aggregate/zip_with) are CodegenFallback — interpreted per element —
@@ -107,10 +103,6 @@ object GraftFunctions {
     */
   def dotUnrolled(a: Column, b: Column, dim: Int): Column =
     (1 to dim).map(j => element_at(a, j) * element_at(b, j)).reduceLeft(_ + _)
-
-  /** Unrolled squared L2 norm (see [[dotUnrolled]]). */
-  def normSqUnrolled(a: Column, dim: Int): Column =
-    (1 to dim).map { j => val x = element_at(a, j); x * x }.reduceLeft(_ + _)
 
   /** Native codegen'd dot product ([[graft.functions.DotExpr]]): one
     * tight loop over the array data, same element-order accumulation as

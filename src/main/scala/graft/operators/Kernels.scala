@@ -27,9 +27,6 @@ import org.apache.spark.sql.DataFrame
   * corpus the estimate is huge, the clamp hits default parallelism,
   * and inputs already at least that parallel pass through untouched —
   * no exchange is added.
-  *
-  * `spark.graft.kernel.minPartitions` overrides the computed target
-  * when set (0 disables fan-out entirely); unset = size-aware.
   */
 private[graft] object Kernels {
 
@@ -46,20 +43,13 @@ private[graft] object Kernels {
 
   def fanOut(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val target = spark.conf.getOption("spark.graft.kernel.minPartitions") match {
-      case Some(s) => s.toIntOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"spark.graft.kernel.minPartitions must be an integer, got '$s'"))
-      case None =>
-        // Catalyst's size estimate for the projected subtree (file size
-        // scaled by column pruning); planning it runs no job
-        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        val byWork = (bytes + BytesPerTask - 1) / BytesPerTask
-        byWork.min(spark.sparkContext.defaultParallelism).max(1).toInt
-    }
-    if (target <= 0) df
+    // Catalyst's size estimate for the projected subtree (file size
+    // scaled by column pruning); planning it runs no job
+    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val byWork = (bytes + BytesPerTask - 1) / BytesPerTask
+    val target = byWork.min(spark.sparkContext.defaultParallelism).max(1).toInt
     // reading the planned subtree's partition count is cheap; no job runs
-    else if (df.rdd.getNumPartitions >= target) df
+    if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target)
   }
 }

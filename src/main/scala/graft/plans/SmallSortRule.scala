@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.adaptive.{LogicalQueryStage, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ENSURE_REQUIREMENTS
-import org.apache.spark.sql.internal.SQLConf
 
 /** AQE runtime rule: a global sort whose input AQE has already measured
   * as small sorts in one partition instead of through a range exchange.
@@ -32,10 +31,8 @@ import org.apache.spark.sql.internal.SQLConf
   *  - (b) the stages' summed runtime bytes (a shuffle's map-output
   *    bytes, the figure `CoalesceShufflePartitions` packs) are at or
   *    below the size at which `CoalesceShufflePartitions` reads them as
-  *    one partition anyway: `coalescePartitions.minPartitionSize` when
-  *    `coalescePartitions.parallelismFirst` is true, else
-  *    `advisoryPartitionSizeInBytes`. With coalescing off the rule is
-  *    off. Spark's own confs set the bound; there is no graft knob;
+  *    one partition anyway ([[OnePartition.bytes]]). With coalescing off
+  *    the rule is off;
   *  - (c) every input shuffle was planned by Spark
   *    (`ENSURE_REQUIREMENTS`), never one whose partition count the
   *    program asked for (`repartition(n)`, `repartition(col)`,
@@ -53,15 +50,6 @@ import org.apache.spark.sql.internal.SQLConf
   * left alone, so repeated re-optimization adds one `Coalesce 1` at most.
   */
 case class SmallSortRule(spark: SparkSession) extends Rule[LogicalPlan] {
-
-  /** Bytes at or below which `CoalesceShufflePartitions` reads a shuffle
-    * as one partition; `None` when it does not coalesce at all.
-    */
-  private def onePartitionBytes: Option[Long] =
-    if (!conf.coalesceShufflePartitionsEnabled) None
-    else if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
-      Some(conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
-    else Some(conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
 
   /** Measured bytes of one materialized input stage; `None` when it is
     * not materialized, its partition count was asked for, or it is a
@@ -90,7 +78,7 @@ case class SmallSortRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (parts.forall(_.isDefined)) Some(parts.flatten.sum) else None
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = onePartitionBytes match {
+  override def apply(plan: LogicalPlan): LogicalPlan = OnePartition.bytes(conf) match {
     case None => plan
     case Some(bound) => plan.transform {
       case s @ Sort(_, true, child, _)

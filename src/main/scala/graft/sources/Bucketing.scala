@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Bucketed-table materialization: the shuffle-elimination layout for
   * repeated large-to-large joins.
@@ -40,19 +44,6 @@ object Bucketing {
     f.getName.replaceAll("[^A-Za-z0-9]", "_") + "_" + h
   }
 
-  /** Dirs whose tables are currently materialized (JVM-wide; the
-    * catalog entries live in the SparkContext-shared external catalog,
-    * so a marker alone is insufficient after a context restart —
-    * [[ensure]] re-checks `tableExists`).
-    */
-  @volatile private var builtFor: Set[String] = Set.empty
-
-  /** Materialize the bucketed orders/lineitem tables for `dir`,
-    * bucketed+sorted by order key, if not already present. Idempotent
-    * per (JVM, dir); `saveAsTable` goes to the session catalog's
-    * warehouse (the managed path — CTAS with `bucketBy` requires a
-    * table, not a bare path).
-    */
   /** The two planner flags the bucketed layout relies on, applied at
     * SESSION BUILD time (Bench/Verify/SparkSpec), not mutated here —
     * materializing a layout must not silently change planner behavior
@@ -61,7 +52,7 @@ object Bucketing {
     * - sort-aware bucketed scans are behind a default-off flag since
     *   Spark 3.1 (the planner otherwise re-sorts pre-sorted buckets);
     *   safe for this writer because it guarantees exactly one sorted
-    *   file per bucket (see repartition note in [[ensure]])
+    *   file per bucket (see the repartition note in `layout`)
     * - DisableUnnecessaryBucketedScan would turn the bucketed scan off
     *   for non-join queries, forfeiting bucket-filter pruning (point
     *   lookups reading 1/numBuckets of the files)
@@ -74,33 +65,61 @@ object Bucketing {
     "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true",
     "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
 
+  /** Source stamp each table was last built or registered from in this
+    * JVM, so a repeated [[ensure]] costs a catalog probe and a stat.
+    */
+  @volatile private var known: Map[String, String] = Map.empty
+
+  /** Materialize the bucketed orders/lineitem tables for `dir`,
+    * bucketed+sorted by order key, unless they are already current.
+    *
+    * Each table's files sit at `<warehouse>/<table>`, with the source
+    * file's (mtime, size) and the bucket count stamped next to them in
+    * `<warehouse>/<table>.source`, written after the data. A fresh JVM
+    * whose stamp matches re-registers the files in its (empty)
+    * in-memory catalog instead of deleting and rewriting them, so two
+    * JVMs at one SF (a Bench next to a Verify) never remove the files
+    * the other is reading. A missing or stale stamp (a new source
+    * file, a half-written layout) rebuilds the table.
+    */
   def ensure(spark: SparkSession, dir: String): Unit = synchronized {
-    val (ot, lt) = (ordersTable(dir), lineitemTable(dir))
-    val present = builtFor.contains(dir) &&
-      spark.catalog.tableExists(ot) && spark.catalog.tableExists(lt)
-    if (!present) {
-      // a previous JVM's managed-table dirs survive in the warehouse
-      // while the in-memory catalog starts empty — clear stale paths
-      // or CTAS fails with LOCATION_ALREADY_EXISTS
-      val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    layout(spark, ordersTable(dir), s"$dir/orders.parquet", "o_orderkey", Tables.orders(spark, dir))
+    layout(spark, lineitemTable(dir), s"$dir/lineitem.parquet", "l_orderkey", Tables.lineitem(spark, dir))
+  }
+
+  private def layout(spark: SparkSession, table: String, source: String, key: String,
+      df: => DataFrame): Unit = {
+    val src = new java.io.File(source)
+    val stamp = s"${src.lastModified} ${src.length} $Buckets"
+    val registered = spark.catalog.tableExists(table)
+    if (!registered || !known.get(table).contains(stamp)) {
+      val wh = new Path(spark.conf.get("spark.sql.warehouse.dir"))
       val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq(ot, lt).foreach { t =>
-        if (!spark.catalog.tableExists(t))
-          fs.delete(new org.apache.hadoop.fs.Path(wh, t), true)
+      val (loc, stampFile) = (new Path(wh, table), new Path(wh, s"$table.source"))
+      val current = fs.exists(stampFile) && {
+        val in = fs.open(stampFile)
+        try new String(in.readAllBytes(), UTF_8) == stamp finally in.close()
       }
-      // repartition on the bucket key first: repartition's hash ==
-      // the bucket-id hash, so every write task holds exactly one
-      // bucket and emits ONE file per bucket — the single-file-per-
-      // bucket layout is what lets the scan expose its sort order and
-      // the join skip the Sort as well as the Exchange
-      import org.apache.spark.sql.functions.col
-      Tables.orders(spark, dir).repartition(Buckets, col("o_orderkey")).write
-        .bucketBy(Buckets, "o_orderkey").sortBy("o_orderkey")
-        .mode("overwrite").format("parquet").saveAsTable(ot)
-      Tables.lineitem(spark, dir).repartition(Buckets, col("l_orderkey")).write
-        .bucketBy(Buckets, "l_orderkey").sortBy("l_orderkey")
-        .mode("overwrite").format("parquet").saveAsTable(lt)
-      builtFor += dir
+      if (!current) {
+        // an external table: dropping it leaves the files, removed here
+        if (registered) spark.sql(s"DROP TABLE $table")
+        fs.delete(stampFile, false)
+        fs.delete(loc, true)
+        // repartition on the bucket key first: repartition's hash ==
+        // the bucket-id hash, so every write task holds exactly one
+        // bucket and emits ONE file per bucket — the single-file-per-
+        // bucket layout is what lets the scan expose its sort order and
+        // the join skip the Sort as well as the Exchange
+        df.repartition(Buckets, col(key)).write
+          .bucketBy(Buckets, key).sortBy(key)
+          .mode("overwrite").format("parquet").option("path", loc.toString).saveAsTable(table)
+        val out = fs.create(stampFile, true)
+        try out.write(stamp.getBytes(UTF_8)) finally out.close()
+      } else if (!registered) {
+        spark.sql(s"CREATE TABLE $table (${df.schema.toDDL}) USING parquet " +
+          s"CLUSTERED BY ($key) SORTED BY ($key) INTO $Buckets BUCKETS LOCATION '$loc'")
+      }
+      known += table -> stamp
     }
   }
 }

@@ -15,6 +15,14 @@ class PlanQualitySpec extends SparkSpec {
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan.toString
 
+  /** A pin of an at-scale plan shape (a broadcast dimension join, a
+    * bucketed sort-merge join), run with `SmallInputRule` excluded: the
+    * sf0.001 fixtures fall under its bound, where every join is a
+    * shuffled hash join over one partition.
+    */
+  private def atScaleTest(name: String)(body: => Any): Unit =
+    test(name)(withConf("spark.sql.optimizer.excludedRules" -> "graft.plans.SmallInputRule")(body))
+
   test("predicate pushdown: q50's filters reach the parquet scan") {
     val p = plan("q50_filter_predicates")
     // plan strings truncate long filter lists — check the head of the
@@ -367,7 +375,7 @@ class PlanQualitySpec extends SparkSpec {
       s"batch x corpus must join on (band, key):\n$p")
   }
 
-  test("q152 bucketed join: co-partitioned, co-sorted scans — no Exchange, no Sort") {
+  atScaleTest("q152 bucketed join: co-partitioned, co-sorted scans — no Exchange, no Sort") {
     import org.apache.spark.sql.functions.col
     graft.sources.Bucketing.ensure(spark, sf)
     val j = spark.table(graft.sources.Bucketing.ordersTable(sf)).hint("merge")
@@ -638,7 +646,7 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
-  test("q308 conformal: train means and qhat broadcast back to the event scan") {
+  atScaleTest("q308 conformal: train means and qhat broadcast back to the event scan") {
     val p = plan("q308_conformal")
     assert(p.linesIterator.count(_.contains("BroadcastHashJoin")) >= 2,
       s"mu and qhat joins must broadcast:\n$p")
@@ -953,7 +961,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"grid joins stay keyed:\n$p")
   }
 
-  test("q446 AIPW: propensity/outcome models broadcast back to the rows") {
+  atScaleTest("q446 AIPW: propensity/outcome models broadcast back to the rows") {
     val p = plan("q446_aipw_ate")
     assert(p.contains("BroadcastHashJoin"),
       s"the bounded per-bucket model frames must broadcast:\n$p")
@@ -987,7 +995,7 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"no shuffled products:\n$p")
   }
 
-  test("q451 newsvendor: part dim broadcasts, demand windows brand-keyed") {
+  atScaleTest("q451 newsvendor: part dim broadcasts, demand windows brand-keyed") {
     val p = plan("q451_newsvendor")
     assert(p.contains("BroadcastHashJoin"), s"part dim must broadcast:\n$p")
     p.linesIterator.filter(_.trim.startsWith("Window")).foreach { l =>

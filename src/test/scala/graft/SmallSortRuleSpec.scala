@@ -1,12 +1,6 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** [[graft.plans.SmallSortRule]]: a global sort over input AQE measured
@@ -14,67 +8,9 @@ import org.apache.spark.sql.functions._
   * above the bound, with coalescing off, or over a repartition the
   * program asked for, the range sort stays.
   */
-class SmallSortRuleSpec extends SparkSpec {
+class SmallSortRuleSpec extends JobFence {
 
-  private val TagKey = "graft.test.tag"
   private val Rule = "graft.plans.SmallSortRule"
-
-  /** Jobs `body` submits and the task counts of the stages they ran,
-    * fenced by a sentinel job as in MaterializeSpec: the listener bus
-    * delivers events in order, so once the sentinel's start is seen
-    * every earlier job and stage has been recorded.
-    */
-  private def run[T](body: => T): (T, Int, Seq[Int]) = {
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val stageTasks = new ConcurrentLinkedQueue[Int]()
-    def tag(p: java.util.Properties) = Option(p).flatMap(x => Option(x.getProperty(TagKey))).getOrElse("")
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.add(tag(js.properties))
-      override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
-        if (tag(ss.properties) == "body") stageTasks.add(ss.stageInfo.numTasks)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(TagKey, "body")
-      val out = body
-      sc.setLocalProperty(TagKey, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobs.contains("sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains("sentinel"), "sentinel job never reached the listener")
-      (out, jobs.asScala.count(_ == "body"), stageTasks.asScala.toSeq)
-    } finally {
-      sc.setLocalProperty(TagKey, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** The plan AQE ended with (its tree string alone, without the
-    * initial plan AdaptiveSparkPlanExec also prints).
-    */
-  private def finalPlan(d: DataFrame): String =
-    d.queryExecution.executedPlan.asInstanceOf[AdaptiveSparkPlanExec].executedPlan.toString
-
-  /** Collect `df` and return its rows, job count and final plan. */
-  private def collected(df: => DataFrame): (Array[Row], Int, String) = {
-    val ((rows, plan), jobs, _) = run {
-      val d = df
-      val r = d.collect()
-      (r, finalPlan(d))
-    }
-    (rows, jobs, plan)
-  }
 
   /** 50 groups whose sums are all distinct: no ties on the sort key. */
   private def smallAgg: DataFrame =

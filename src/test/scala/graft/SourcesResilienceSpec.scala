@@ -142,4 +142,44 @@ class SourcesResilienceSpec extends SparkSpec {
     val embLine = lines.find(_.contains("embeddings")).get
     assert(embLine.startsWith("FAIL") && embLine.contains("ragged"), embLine)
   }
+
+  test("Bucketing.ensure re-registers current bucketed tables instead of rewriting them") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import graft.sources.Bucketing
+    val dir = freshDir()
+    copyFixtures(dir, Seq("orders", "lineitem"))
+    val tables = Seq(Bucketing.ordersTable(dir), Bucketing.lineitemTable(dir))
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")).toUri.getPath
+    def files(t: String): Map[String, Long] =
+      Files.list(Paths.get(wh, t)).iterator().asScala
+        .map(f => f.getFileName.toString -> Files.getLastModifiedTime(f).toMillis).toMap
+    try {
+      Bucketing.ensure(spark, dir)
+      val first = tables.map(files)
+      assert(first.forall(_.nonEmpty))
+      // a fresh JVM: its in-memory catalog starts without the tables
+      // (they are external, so dropping them leaves their files)
+      tables.foreach(t => spark.sql(s"DROP TABLE $t"))
+      Bucketing.ensure(spark, dir)
+      Bucketing.ensure(spark, dir)
+      assert(tables.map(files) == first, "a second ensure rewrote current tables")
+      for (t <- tables) {
+        val spec = spark.sessionState.catalog.getTableMetadata(TableIdentifier(t)).bucketSpec
+        assert(spec.exists(_.numBuckets == Bucketing.Buckets), s"$t: $spec")
+      }
+      assert(spark.table(tables.head).count() == Tables.orders(spark, dir).count())
+      // a new orders source file rebuilds that table only
+      val src = Paths.get(s"$dir/orders.parquet")
+      Files.setLastModifiedTime(src, java.nio.file.attribute.FileTime.fromMillis(
+        Files.getLastModifiedTime(src).toMillis + 10000))
+      Bucketing.ensure(spark, dir)
+      assert(files(tables.head) != first.head && files(tables(1)) == first(1))
+      assert(spark.table(tables.head).count() == Tables.orders(spark, dir).count())
+    } finally tables.foreach { t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      for (p <- Seq(t, s"$t.source", s".$t.source.crc"))
+        org.apache.commons.io.FileUtils.deleteQuietly(Paths.get(wh, p).toFile)
+    }
+  }
 }

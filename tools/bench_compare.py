@@ -4,7 +4,12 @@
 Usage: python3 tools/bench_compare.py <base BENCH_full.json> <new BENCH_full.json> [ratio]
 
 Reads the records Bench writes next to each file (`X.json` ->
-`X.metrics.jsonl`, one line per query and pass) and flags a query when
+`X.metrics.jsonl`, one line per query and pass) and flags
+  FAILED   each failed pass (`wall_s` < 0) of either run, as
+           `FAILED <query> pass <n> (base|new)`. A failed pass is kept
+           out of the RECORDS and CPU rules below: the jobs it ran
+           before failing are no sign of the query's shape;
+and flags a query when
   RECORDS  its (jobs, stages, shuffle records written) changed in every
            pass: no pass of the new run repeats a base pass's counts.
            A few queries' counts differ between passes of unchanged
@@ -22,12 +27,15 @@ import json, statistics, sys
 
 
 def load(bench_out):
-    """Query name -> its records, one per pass."""
-    recs = {}
+    """(query name -> its completed passes' records, failed records)."""
+    recs, failed = {}, []
     for line in open(bench_out.removesuffix(".json") + ".metrics.jsonl"):
         r = json.loads(line)
-        recs.setdefault(r["query"], []).append(r)
-    return recs
+        if r["wall_s"] < 0:
+            failed.append(r)
+        else:
+            recs.setdefault(r["query"], []).append(r)
+    return recs, failed
 
 
 def records_tally(base, cur, moved):
@@ -47,12 +55,14 @@ def records_tally(base, cur, moved):
 
 
 def main():
-    base, cur = load(sys.argv[1]), load(sys.argv[2])
+    (base, base_failed), (cur, cur_failed) = load(sys.argv[1]), load(sys.argv[2])
     ratio = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
     both = sorted(base.keys() & cur.keys())
     shape = lambda rs: {(r["jobs"], r["stages"], r["shuffle_write_records"]) for r in rs}
     moved = [q for q in both if shape(base[q]).isdisjoint(shape(cur[q]))]
-    flags = [f"RECORDS {q}: (jobs, stages, shuffle records) {sorted(shape(base[q]))} -> {sorted(shape(cur[q]))}"
+    flags = [f"FAILED {r['query']} pass {r['pass']} ({run})"
+             for run, failed in (("base", base_failed), ("new", cur_failed)) for r in failed]
+    flags += [f"RECORDS {q}: (jobs, stages, shuffle records) {sorted(shape(base[q]))} -> {sorted(shape(cur[q]))}"
              for q in moved]
     cpu = {q: [min(r["cpu_ns"] for r in recs[q]) / 1e9 for recs in (base, cur)] for q in both}
     ratios = {q: c / b for q, (b, c) in cpu.items() if max(b, c) >= 0.3 and b > 0}
@@ -60,7 +70,7 @@ def main():
     flags += [f"CPU {q}: {cpu[q][0]:.2f}s -> {cpu[q][1]:.2f}s ({r:.2f}x, {r / host:.2f}x the run's median)"
               for q, r in sorted(ratios.items()) if r / host > ratio]
     for q in sorted(base.keys() ^ cur.keys()):
-        print(f"{'GONE' if q in base else 'NEW '} {q}: in one run only")
+        print(f"{'GONE' if q in base else 'NEW '} {q}: completed in one run only")
     for f in flags:
         print(f)
     for direction, qs in records_tally(base, cur, moved).items():
