@@ -90,35 +90,4 @@ object Tuning {
     * cluster driver running a many-query workload.
     */
   def codegenCacheConf: String = "8192"
-
-  /** Spread a scan across the session's shuffle width before a CPU-
-    * heavy per-row kernel. The harness parquet files are written as a
-    * SINGLE row group per table, and parquet row-group boundaries bound
-    * scan parallelism — so every scan stage runs as ONE task no matter
-    * the core count, and a per-row kernel (bigram explode, regex
-    * passes, per-char histograms) serializes behind it (round-11
-    * event logs: q355's three >2 s stages all had tasks=1). One
-    * round-robin exchange of the (small) source rows costs a few MB of
-    * local shuffle and lets the kernel run at full width; consumers of
-    * the same spread frame share the exchange via ReusedExchange, so
-    * the scan also runs once. Apply ONLY where the shuffled payload is
-    * small relative to the kernel (guide §2.5 input-skew rule: "one
-    * huge unsplittable file — repartition immediately after the
-    * read"); a wide-at-scale input that already splits into many row
-    * groups does not need it and should not pay the extra exchange.
-    */
-  def spread(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    // Scale guard: only pay the exchange while the source is in the
-    // single-row-group regime. Past ~256 MB (column-pruned plan
-    // estimate) a parquet scan splits across row groups on its own and
-    // the repartition would be a pure extra shuffle of a wide input.
-    val bytes =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case _: Throwable => BigInt(Long.MaxValue) }
-    if (bytes > (256L << 20)) df
-    else {
-      val w = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-      df.repartition(w)
-    }
-  }
 }

@@ -80,16 +80,6 @@ object GraftFunctions {
   /** Reference fill_null (numeric_column.py:56-73): coalesce to scalar. */
   def fillNull(c: Column, v: Any): Column = coalesce(c, lit(v))
 
-  /** Dot product of two numeric array columns, accumulated in double in
-    * element order (deterministic across engines). Stays codegen'd via
-    * the higher-order `zip_with` + `aggregate`.
-    */
-  def dotProduct(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0),
-      (acc, x) => acc + x)
-
   /** Squared L2 norm, double accumulation in element order. */
   def normSq(a: Column): Column =
     aggregate(a, lit(0.0), (acc, x) => acc + x.cast(DoubleType) * x.cast(DoubleType))

@@ -2,31 +2,36 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Parallelism guard for CPU-heavy per-row kernels.
+/** Parallelism guard for CPU-heavy per-row kernels: the one place the
+  * program asks for partitions ahead of a kernel.
   *
   * Scan parallelism is decided by file layout (file count, row-group
   * boundaries): a corpus that arrives as a few large single-row-group
   * files is scanned as a few tasks, and any expensive kernel fused
   * into that scan stage (MinHash signatures: |shingles|·numHashes
-  * md5 + min loops per doc) inherits that — one straggler task doing
-  * all the CPU work while the rest of the cluster idles. The fix is
-  * the standard one for compute-bound stages behind coarse inputs:
-  * one explicit round-robin repartition of the (slim, pre-projected)
-  * kernel input, decoupling kernel parallelism from input layout.
+  * md5 + min loops per doc; bigram explodes, regex passes, per-char
+  * histograms) inherits that — one straggler task doing all the CPU
+  * work while the rest of the cluster idles. Every harness table is a
+  * single parquet row group, so its scan is one task that reads rows
+  * however many splits Spark plans for the file (sf0.1 lineitem plans
+  * 3 splits; two of those tasks read nothing). The fix is the standard
+  * one for compute-bound stages behind coarse inputs: one explicit
+  * round-robin repartition of the (slim, pre-projected) kernel input,
+  * decoupling kernel parallelism from input layout. Consumers of one
+  * fanned-out frame share its exchange (ReusedExchange), so the scan
+  * also runs once.
   *
-  * The target is SIZE-AWARE, not a flat cluster-width: ceil(estimated
-  * input bytes / [[BytesPerTask]] = 64 KiB of compressed columnar
-  * estimate per task — see the constant's rationale), clamped to
-  * [1, default parallelism].
+  * The decision reads the plan estimate alone, before any job runs:
+  *  - the width is ceil(estimated input bytes / [[BytesPerTask]]),
+  *    clamped to [1, default parallelism]; a width of 1 adds nothing
+  *    and passes the input through;
+  *  - above [[MaxBytes]] (256 MB) the input passes through.
   * Flat cluster-width fan-out (rounds 3–5) made every kernel stage 32
   * tasks regardless of input size, and on the bench's ~7 MB corpora
   * the per-task scheduling overhead dominated the kernel itself
   * (measured: SimHash 0.58 s → 0.37 s, MinHash 1.28 s → 0.92 s at the
   * size-derived width; a single serial partition is in turn ~20%
-  * worse than the sweet spot for MinHash). On a well-laid-out 100 TB
-  * corpus the estimate is huge, the clamp hits default parallelism,
-  * and inputs already at least that parallel pass through untouched —
-  * no exchange is added.
+  * worse than the sweet spot for MinHash).
   */
 private[graft] object Kernels {
 
@@ -41,15 +46,19 @@ private[graft] object Kernels {
     */
   private val BytesPerTask = 1L << 16
 
+  /** Column-pruned estimate past which an input is taken to be out of
+    * the single-row-group regime: its scan already splits across row
+    * groups or files, and a repartition would be a pure extra shuffle.
+    */
+  private val MaxBytes = BigInt(256L << 20)
+
   def fanOut(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
     // Catalyst's size estimate for the projected subtree (file size
-    // scaled by column pruning); planning it runs no job
+    // scaled by column pruning); computing it runs no job
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val byWork = (bytes + BytesPerTask - 1) / BytesPerTask
-    val target = byWork.min(spark.sparkContext.defaultParallelism).max(1).toInt
-    // reading the planned subtree's partition count is cheap; no job runs
-    if (df.rdd.getNumPartitions >= target) df
+    val target = ((bytes + BytesPerTask - 1) / BytesPerTask)
+      .min(df.sparkSession.sparkContext.defaultParallelism).toInt
+    if (bytes > MaxBytes || target <= 1) df
     else df.repartition(target)
   }
 }

@@ -5,11 +5,12 @@ import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference,
 import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.IntegerType
 
-import graft.plans.{TopKPerGroupPlan, TopKPerGroupStrategy}
+import graft.plans.TopKPerGroupPlan
 
 /** Public API for the native per-group top-k operator (see
   * [[graft.plans.TopKPerGroupPlan]] for the execution design and why it
-  * beats the window-function formulation at scale).
+  * beats the window-function formulation at scale). The session plans
+  * it through the strategy `GraftExtensions` injects.
   */
 object TopK {
 
@@ -25,10 +26,6 @@ object TopK {
       k: Int, rankName: String = "rank"): DataFrame = {
     require(groupCols.nonEmpty || orderSpecs.nonEmpty, "need group or order columns")
     val spark = df.sparkSession
-    // per-session lazy install (the cluster path is GraftExtensions)
-    if (!PlanBridge.hasStrategy(spark, classOf[TopKPerGroupStrategy]))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerGroupStrategy(spark)
     val child = df.queryExecution.analyzed
     def attr(name: String) = child.output.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(

@@ -45,8 +45,7 @@ import org.apache.spark.sql.internal.SQLConf
   *    and `Repartition(1, shuffle = false)`. So there is
   *    no `Generate`, no object or Python operator, no keyless join, no
   *    graft operator, and no repartition or rebalance the program asked
-  *    for: `Tuning.spread`'s and `Kernels.fanOut`'s fan-out keep their
-  *    tasks;
+  *    for: `Kernels.fanOut`'s fan-out keeps its tasks;
   *  - (f) each join's sides are estimated at or below
   *    `spark.sql.maxSinglePartitionBytes`: `EnsureRequirements`
   *    re-shuffles one-partition join sides above it, and Catalyst

@@ -36,7 +36,7 @@ import org.apache.spark.sql.execution.exchange.ENSURE_REQUIREMENTS
   *  - (c) every input shuffle was planned by Spark
   *    (`ENSURE_REQUIREMENTS`), never one whose partition count the
   *    program asked for (`repartition(n)`, `repartition(col)`,
-  *    rebalance), so `Tuning.spread`'s fan-out and the Dedup tile
+  *    rebalance), so `Kernels.fanOut`'s fan-out and the Dedup tile
   *    groups keep their tasks. Nor is it range-partitioned: that is the
   *    sort's own exchange, which has already run when it is an input.
   *

@@ -50,9 +50,7 @@ case class TopKPerGroupPlan(
 }
 
 /** Plans [[TopKPerGroupPlan]] as partial-then-final [[TopKPerGroupExec]];
-  * injected via `GraftExtensions` (cluster install) or
-  * `spark.experimental.extraStrategies` (per-session, done lazily by
-  * `graft.operators.TopK`).
+  * injected into every session by `GraftExtensions`.
   */
 case class TopKPerGroupStrategy(session: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {

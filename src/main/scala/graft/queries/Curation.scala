@@ -313,8 +313,8 @@ object Curation {
   private val q148QuantileSketch: Q = (s, d) =>
     // spread the single-row-group scan: the exact-percentile partial
     // aggregation otherwise buffers all 600k values in ONE map task
-    // (2.5 s); at width the partials merge per flag (Tuning.spread)
-    graft.Tuning.spread(
+    // (2.5 s); at width the partials merge per flag (Kernels.fanOut)
+    graft.operators.Kernels.fanOut(
       Tables.lineitem(s, d).select(col("l_returnflag"), col("l_extendedprice")))
       .groupBy("l_returnflag")
       .agg(

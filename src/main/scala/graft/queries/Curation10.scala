@@ -146,7 +146,7 @@ object Curation10 {
         .select(lit("v2").as("ver"), (col("doc_id") + 100000L).as("doc_id"),
           concat(col("text"), lit(" new")).as("text")))
     val chunks = Curation4.cdcChunkTable(
-      graft.Tuning.spread( // single-task CDC chunk kernel otherwise
+      graft.operators.Kernels.fanOut( // single-task CDC chunk kernel otherwise
         v1.unionByName(v2).select(col("ver"), col("doc_id"), words(col("text")).as("w"))),
       Seq("ver", "doc_id"))
     chunks.rollup("ver")

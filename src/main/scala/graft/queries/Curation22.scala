@@ -72,8 +72,8 @@ object Curation22 {
   private val q291StatsProfile: Q = (s, d) => {
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
     // spread the single-row-group scan: the 4-way multi-distinct agg
-    // Expands every row ×5 and ran it all in one map task (Tuning.spread)
-    val li = graft.Tuning.spread(Tables.lineitem(s, d).select(cols.map(col): _*))
+    // Expands every row ×5 and ran it all in one map task (Kernels.fanOut)
+    val li = graft.operators.Kernels.fanOut(Tables.lineitem(s, d).select(cols.map(col): _*))
     val agg = li.agg(count(lit(1)).as("n"),
       cols.flatMap(c => Seq(
         countDistinct(col(c)).as(s"d_$c"),

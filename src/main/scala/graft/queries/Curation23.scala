@@ -47,7 +47,7 @@ object Curation23 {
   private val q293EquidepthBins: Q = (s, d) => {
     // spread the single-row-group scan: both the exact-percentile
     // buffer build and the bucket-assign pass ran as one task each
-    val li = graft.Tuning.spread(
+    val li = graft.operators.Kernels.fanOut(
       Tables.lineitem(s, d).select(col("l_extendedprice").as("x")))
     val qs = (1 to 7).map(_ / 8.0)
     val bnds = li.agg(percentile(col("x"),

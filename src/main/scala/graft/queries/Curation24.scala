@@ -67,7 +67,7 @@ object Curation24 {
     * throughout, no interpolation ambiguity.
     */
   private val q298WeightedMedian: Q = (s, d) => {
-    val wv = graft.Tuning.spread( // single-task map side otherwise
+    val wv = graft.operators.Kernels.fanOut( // single-task map side otherwise
         Tables.lineitem(s, d)
           .select(col("l_returnflag"), col("l_extendedprice"), col("l_quantity")))
       .groupBy(col("l_returnflag"), col("l_extendedprice").as("x"))

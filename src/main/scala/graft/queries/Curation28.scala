@@ -52,15 +52,13 @@ object Curation28 {
 
   /** q315: blocked entity-resolution scoring (Fellegi-Sunter shape with
     * fixed log-weights — the EM fit is a separate concern) with
-    * TARGET-SIZE blocking (the `SCALE.md` production knob, r7 verdict
-    * item 3): candidates are same-(nation, balance-kilobucket) pairs at
-    * most B apart in the (balance, id) rank order, where B =
-    * `spark.graft.er.targetBlockSize` (default 50; <= 0 restores the
-    * unbounded legacy block join). Within a block, ranks are contiguous
-    * under the (nat, kb, bal, id) total order, so whenever every block
-    * holds <= B rows — true at the sf0.01 oracle gate, max block 12 —
-    * the window covers every in-block pair and the result is provably
-    * identical to the legacy all-pairs-in-block contract. When blocks
+    * TARGET-SIZE blocking (`SCALE.md`, r7 verdict item 3): candidates
+    * are same-(nation, balance-kilobucket) pairs at most B = 50 apart
+    * in the (balance, id) rank order. Within a block, ranks are
+    * contiguous under the (nat, kb, bal, id) total order, so whenever
+    * every block holds <= B rows — true at the sf0.01 oracle gate, max
+    * block 12 — the window covers every in-block pair and the result is
+    * provably identical to the all-pairs-in-block contract. When blocks
     * outgrow B the candidate set is the bounded sorted-neighborhood
     * window (the same bounded-population discipline as q284's deletion
     * neighborhoods). Physically: distributed global rank
@@ -69,16 +67,27 @@ object Curation28 {
     * its predecessor chunk — join-key population is capped at 2B per
     * key regardless of corpus size, never all pairs. Scoring stays
     * in-row (the score is symmetric in the pair, so least/greatest id
-    * normalization after the rank-ordered join preserves the legacy
+    * normalization after the rank-ordered join preserves the pair
     * orientation); top-30 under a total order.
     */
   private val q315EntityResolution: Q = (s, d) => {
-    val B = s.conf.get("spark.graft.er.targetBlockSize", "50").toInt
+    val B = 50
     val c = Tables.customer(s, d).select(col("c_custkey").as("id"),
       col("c_name").as("nm"), col("c_nationkey").as("nat"),
       col("c_acctbal").as("bal"), col("c_mktsegment").as("seg"),
       floor(col("c_acctbal") / 1000).cast(LongType).as("kb"))
-    def scored(df: org.apache.spark.sql.DataFrame) = df
+    val ranked = graft.operators.Ranking.globalRank(c, "grk",
+      col("nat"), col("kb"), col("bal"), col("id"))
+      .withColumn("ck", expr(s"(grk - 1) div $B"))
+    val a = ranked.select(col("nat"), col("kb"), col("ck"),
+      col("id").as("id_x"), col("nm").as("nm_x"), col("bal").as("bal_x"),
+      col("seg").as("seg_x"), col("grk").as("rk_x"))
+    val b = ranked.select(col("nat"), col("kb"),
+      explode(array(col("ck"), col("ck") - 1)).as("ck"),
+      col("id").as("id_y"), col("nm").as("nm_y"), col("bal").as("bal_y"),
+      col("seg").as("seg_y"), col("grk").as("rk_y"))
+    a.join(b, Seq("nat", "kb", "ck"))
+      .filter((col("rk_y") - col("rk_x")).between(1, B))
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"),
         (when(col("seg_x") === col("seg_y"), 1.099).otherwise(-0.511) +
@@ -88,26 +97,6 @@ object Curation28 {
       .select(col("id_a"), col("id_b"), round(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("id_a"), col("id_b"))
       .limit(30)
-    if (B <= 0) {
-      val a = c.select(col("id").as("id_x"), col("nm").as("nm_x"), col("nat"),
-        col("bal").as("bal_x"), col("seg").as("seg_x"), col("kb"))
-      val b = c.select(col("id").as("id_y"), col("nm").as("nm_y"), col("nat"),
-        col("bal").as("bal_y"), col("seg").as("seg_y"), col("kb"))
-      scored(a.join(b, Seq("nat", "kb")).filter(col("id_x") < col("id_y")))
-    } else {
-      val ranked = graft.operators.Ranking.globalRank(c, "grk",
-        col("nat"), col("kb"), col("bal"), col("id"))
-        .withColumn("ck", expr(s"(grk - 1) div $B"))
-      val a = ranked.select(col("nat"), col("kb"), col("ck"),
-        col("id").as("id_x"), col("nm").as("nm_x"), col("bal").as("bal_x"),
-        col("seg").as("seg_x"), col("grk").as("rk_x"))
-      val b = ranked.select(col("nat"), col("kb"),
-        explode(array(col("ck"), col("ck") - 1)).as("ck"),
-        col("id").as("id_y"), col("nm").as("nm_y"), col("bal").as("bal_y"),
-        col("seg").as("seg_y"), col("grk").as("rk_y"))
-      scored(a.join(b, Seq("nat", "kb", "ck"))
-        .filter((col("rk_y") - col("rk_x")).between(1, B)))
-    }
   }
 
   /** q316: inverse-propensity off-policy evaluation — logged actions

@@ -199,8 +199,8 @@ object Curation32 {
   private val q333CkaLinear: Q = (s, d) => {
     val dims = 16
     // spread the single-row-group embedding scan: the in-row 768-product
-    // Gram expansion otherwise runs as one task (Tuning.spread)
-    val e = graft.Tuning.spread(Tables.embeddings(s, d).select(col("vec_id"),
+    // Gram expansion otherwise runs as one task (Kernels.fanOut)
+    val e = graft.operators.Kernels.fanOut(Tables.embeddings(s, d).select(col("vec_id"),
       slice(col("embedding").cast("array<double>"), 1, dims).as("v")))
     val withY = e.withColumn("yv", transform(sequence(lit(0), lit(dims - 1)),
       j => when(j % 3 === 0, lit(-1.0)).otherwise(lit(1.0)) *

@@ -22,7 +22,7 @@ object Curation37 {
     */
   private def copurchaseEdges(s: org.apache.spark.sql.SparkSession, d: String,
       includeSelf: Boolean = false): DataFrame = {
-    val pairs = graft.Tuning.spread( // single-task map side otherwise
+    val pairs = graft.operators.Kernels.fanOut( // single-task map side otherwise
         Tables.lineitem(s, d)
           .select(col("l_orderkey").as("o"), col("l_partkey").as("p")))
       .groupBy("o").agg(collect_set(col("p")).as("ps"))

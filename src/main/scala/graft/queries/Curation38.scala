@@ -167,8 +167,8 @@ object Curation38 {
     */
   private val q355BigramSurprisal: Q = (s, d) => {
     // spread the single-row-group doc scan before the per-char bigram
-    // kernels (three >2 s single-task stages otherwise — Tuning.spread)
-    val docs = graft.Tuning.spread(
+    // kernels (three >2 s single-task stages otherwise — Kernels.fanOut)
+    val docs = graft.operators.Kernels.fanOut(
       Tables.documents(s, d).select(col("doc_id"), col("text")))
     val bigrams = docs
       .filter(length(col("text")) >= 2) // sequence(1, 0) would descend

@@ -377,8 +377,8 @@ object Curation4 {
       when(p >= 1, mdHash(concat_ws("|", lit("sc"), col("doc_id"), p)) % 20 === 0)
         .otherwise(lit(false))
     // spread the single-row-group doc scan so the tokenize+explode map
-    // side runs at session width instead of one task (Tuning.spread)
-    val toks = graft.Tuning.spread(Tables.documents(s, d).select(col("doc_id"), col("text")))
+    // side runs at the fan-out width instead of one task (Kernels.fanOut)
+    val toks = graft.operators.Kernels.fanOut(Tables.documents(s, d).select(col("doc_id"), col("text")))
       .select(col("doc_id"), posexplode(words(col("text"))).as(Seq("pos0", "tok")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("tok"))
       .withColumn("m", hcond(col("pos")) || hcond(col("pos") - 1) || hcond(col("pos") - 2))

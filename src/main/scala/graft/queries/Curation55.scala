@@ -27,8 +27,8 @@ object Curation55 {
   private val q428BinaryQuantRecall: Q = (s, d) => {
     // spread the single-row-group embedding scan: both the exact
     // baseline and the sign-bit sweep are per-row dot kernels that
-    // otherwise run single-task (Tuning.spread)
-    val e = graft.Tuning.spread(Tables.embeddings(s, d))
+    // otherwise run single-task (Kernels.fanOut)
+    val e = graft.operators.Kernels.fanOut(Tables.embeddings(s, d))
     // corpus-capped query sample (~<=256 queries at any scale): the
     // fixed %25 made |Q| linear in n, so both the exact baseline and
     // the Hamming sweep were O(n^2/25) — measured 178 s / 47.7x at the

@@ -61,8 +61,8 @@ object Curation62 {
     // spread once: the three advise() branches and their three count()
     // scans all consume the SAME round-robin exchange (ReusedExchange),
     // so the single-row-group scan runs once and every per-key groupBy
-    // maps at session width
-    val li = graft.Tuning.spread(Tables.lineitem(s, d)
+    // maps at the fan-out width
+    val li = graft.operators.Kernels.fanOut(Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey")))
     def advise(key: String) = {
       val counts = li.groupBy(col(key).as("k")).agg(count(lit(1)).as("c"))

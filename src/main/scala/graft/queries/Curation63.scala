@@ -28,7 +28,7 @@ object Curation63 {
     // spread the single-row-group doc scan, then SPILL the bigram table
     // once: its four consumers (bigram counts, prefix counts, vocab,
     // the scored join) each re-ran the full tokenize+explode otherwise
-    val docs = graft.Tuning.spread(Tables.documents(s, d)
+    val docs = graft.operators.Kernels.fanOut(Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("text")))
       .select(col("doc_id"), col("source"), words(col("text")).as("w"))
       .filter(size(col("w")) >= 2)
@@ -95,7 +95,7 @@ object Curation63 {
     // consumers (kept, added, and the base join side) each re-ran the
     // scan+md5 otherwise
     val base = graft.operators.Materialize.spillRelease(
-      graft.Tuning.spread(Tables.lineitem(s, d)
+      graft.operators.Kernels.fanOut(Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_partkey"), col("l_suppkey"), col("l_quantity")))
       .select(

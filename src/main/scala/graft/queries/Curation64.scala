@@ -212,8 +212,8 @@ object Curation64 {
     val nxt = map(lit("F"), lit("O"), lit("O"), lit("P"), lit("P"), lit("F"))
     val prv = map(lit("F"), lit("P"), lit("O"), lit("F"), lit("P"), lit("O"))
     // spread the single-row-group orders scan: the md5-prob kernel
-    // otherwise runs as three 1-2 s single-task stages (Tuning.spread)
-    val base0 = graft.Tuning.spread(Tables.orders(s, d)
+    // otherwise runs as three 1-2 s single-task stages (Kernels.fanOut)
+    val base0 = graft.operators.Kernels.fanOut(Tables.orders(s, d)
       .select(col("o_orderkey").as("id"), col("o_orderstatus").as("t")))
       .withColumn("h", mdHash(lit("cl1"), col("id")) % 20)
       .withColumn("noisy",

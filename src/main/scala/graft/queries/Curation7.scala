@@ -89,8 +89,8 @@ object Curation7 {
     */
   private val q193MaxsimSearch: Q = (s, d) => {
     // spread the single-row-group embedding scan: the crossJoin + 8-dim
-    // dot kernel otherwise runs as one 2.2 s task (Tuning.spread)
-    val e = graft.Tuning.spread(Tables.embeddings(s, d)
+    // dot kernel otherwise runs as one 2.2 s task (Kernels.fanOut)
+    val e = graft.operators.Kernels.fanOut(Tables.embeddings(s, d)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast(DoubleType)).as("e")))
     val sub = e
       .select(col("vec_id"), explode(sequence(lit(0), lit(7))).as("s"), col("e"))

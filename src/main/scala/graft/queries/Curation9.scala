@@ -113,7 +113,7 @@ object Curation9 {
     // the sketch pass, the count pass and the re-count pass were three
     // full explodes of the corpus; the total rides the candidate frame
     // so two passes remain.
-    val toks = graft.Tuning.spread(Tables.documents(s, d).select(col("text")))
+    val toks = graft.operators.Kernels.fanOut(Tables.documents(s, d).select(col("text")))
       .select(explode(split(translate(col("text"), " ", ""), "")).as("w"))
       .filter(col("w") =!= "")
     val cand = toks.agg(expr("graft_mg(w)").as("cs"),
@@ -206,7 +206,7 @@ object Curation9 {
   private val q207SkipgramPairs: Q = (s, d) => {
     // spread the single-row-group doc scan before the ±3-window in-row
     // pair explode (≈7× token fan-out in one task otherwise)
-    graft.Tuning.spread(Tables.documents(s, d).select(col("text")))
+    graft.operators.Kernels.fanOut(Tables.documents(s, d).select(col("text")))
       .select(words(col("text")).as("w")).filter(size(col("w")) >= 2)
       .select(explode(expr(
         """flatten(transform(sequence(1, size(w)), i ->

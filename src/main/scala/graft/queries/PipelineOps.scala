@@ -112,7 +112,7 @@ object PipelineOps {
     import org.apache.spark.sql.expressions.Window
     // spread the single-row-group events scan: the per-row JSON parse
     // otherwise runs in one task ahead of the window exchange
-    val ev = graft.Tuning.spread(Tables.events(s, d)
+    val ev = graft.operators.Kernels.fanOut(Tables.events(s, d)
       .select(col("user_id"), col("props"), col("ts"), col("event_id")))
       .select(col("user_id"),
         get_json_object(col("props"), "$.k").cast("long").as("page"),

@@ -16,7 +16,7 @@ object Tables {
 
   /** JVM-wide (path → schema) memo: parquet schema inference reads
     * file footers and runs once per (session, table) — a fresh session
-    * (Bench isolation mode, a new SQL client) re-paid it for all 10
+    * (`SparkSession.newSession()`, a new SQL client) re-paid it for all 10
     * tables before its first query could plan, the bulk of the
     * measured cold-session tax. Later sessions read with an explicit
     * schema: zero inference I/O. Bounded driver state: one entry per
@@ -183,13 +183,5 @@ object Tables {
       }
       spark.conf.set(RegisteredDirKey, dir)
     }
-  }
-
-  /** Drop the registered views and clear the marker — for callers that
-    * deliberately reset session state (e.g. Bench isolation mode).
-    */
-  def unregisterAll(spark: SparkSession): Unit = {
-    names.foreach(n => spark.catalog.dropTempView(n))
-    spark.conf.unset(RegisteredDirKey)
   }
 }

@@ -18,11 +18,4 @@ object PlanBridge {
     */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Whether the session's planner already carries a strategy of the
-    * given class (via extensions or experimental methods).
-    */
-  def hasStrategy(spark: SparkSession, cls: Class[_]): Boolean =
-    spark.asInstanceOf[classic.SparkSession]
-      .sessionState.planner.strategies.exists(cls.isInstance)
 }

@@ -31,12 +31,26 @@ class DocsConsistencySpec extends org.scalatest.funsuite.AnyFunSuite {
       s"README.md says '${m.get.matched}' but SparkEntry.queries has $n — update the README")
   }
 
-  test("README's Settings table lists exactly the SPARK_GRAFT_* variables src/main reads") {
+  /** (names in README "Settings" table rows, names quoted as string
+    * literals in src/main), both matching `name`.
+    */
+  private def settingsVsCode(name: String): (Set[String], Set[String]) = {
     val settings = read("README.md").split("\n## ").find(_.startsWith("Settings")).get
-    val documented = """(?m)^\| `(SPARK_GRAFT_\w+)`""".r.findAllMatchIn(settings).map(_.group(1)).toSet
+    val documented = ("(?m)^\\| `(" + name + ")`").r.findAllMatchIn(settings).map(_.group(1)).toSet
     val inCode = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .flatMap(p => """"(SPARK_GRAFT_\w+)"""".r.findAllMatchIn(read(p.toString)).map(_.group(1))).toSet
+      .flatMap(p => ("\"(" + name + ")\"").r.findAllMatchIn(read(p.toString)).map(_.group(1))).toSet
+    (documented, inCode)
+  }
+
+  test("README's Settings table lists exactly the SPARK_GRAFT_* variables src/main reads") {
+    val (documented, inCode) = settingsVsCode("""SPARK_GRAFT_\w+""")
+    assert(inCode.nonEmpty && documented == inCode,
+      s"README Settings rows only: ${documented -- inCode}; read in src/main only: ${inCode -- documented}")
+  }
+
+  test("README's Settings table lists exactly the spark.graft.* confs src/main reads") {
+    val (documented, inCode) = settingsVsCode("""spark\.graft\.[\w.]+""")
     assert(inCode.nonEmpty && documented == inCode,
       s"README Settings rows only: ${documented -- inCode}; read in src/main only: ${inCode -- documented}")
   }

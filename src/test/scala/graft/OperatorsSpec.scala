@@ -250,21 +250,20 @@ class OperatorsSpec extends SparkSpec {
         (900001L, "tiny", "en"), (900002L, "tiny", "en"),
         (900003L, "a b c d e f g h i j", "en"),
         (900004L, "a b c d e f g h i x", "en")).toDF("doc_id", "text", "lang"))
+    import graft.operators.Dedup
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     for (t <- Seq(0.5, 0.8)) {
-      def pairs(mode: String) = {
-        spark.conf.set("spark.graft.jaccard.prefixFilter", mode)
-        try graft.operators.Dedup.ngramJaccardPairs(docs, "doc_id", "text", "lang",
-            n = 3, threshold = t)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        finally spark.conf.unset("spark.graft.jaccard.prefixFilter")
-      }
-      // auto picks a path by corpus size (crossover heuristic) — all
-      // three modes must return the identical pair set, so the
-      // heuristic can only ever change the plan, never the answer
-      val (p, a, auto) = (pairs("true"), pairs("false"), pairs("auto"))
+      // ngramJaccardPairs picks a path by corpus size (crossover
+      // heuristic) — all three must return the identical pair set, so
+      // the heuristic can only ever change the plan, never the answer
+      val p = pairs(Dedup.ngramJaccardPairsPrefix(docs, "doc_id", "text", "lang", 3, t))
+      val a = pairs(Dedup.ngramJaccardPairsTiled(docs, "doc_id", "text", "lang", 3, t))
+      val auto = pairs(Dedup.ngramJaccardPairs(docs, "doc_id", "text", "lang",
+        n = 3, threshold = t))
       assert(p.nonEmpty, s"t=$t produced no pairs — test corpus lost its near-dups")
       assert(p == a, s"t=$t: prefix ${p.size} pairs vs all-pairs ${a.size}")
-      assert(p == auto, s"t=$t: auto path diverged from prefix")
+      assert(p == auto, s"t=$t: size-picked path diverged from prefix")
     }
   }
 
@@ -331,7 +330,7 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("jaccard auto mode crossover: tiled below the doc threshold, prefix above") {
-    // the conf-documented heuristic (Dedup.PrefixCrossoverDocs): a
+    // the size heuristic (Dedup.PrefixCrossoverDocs): a
     // corpus under the crossover must NOT pay the prefix path's linear
     // constant. Pin by plan shape: the prefix path distinct()s
     // candidates (an extra aggregate over (id_a, id_b)), the tiled
@@ -342,15 +341,12 @@ class OperatorsSpec extends SparkSpec {
     assert(2L < graft.operators.Dedup.PrefixCrossoverDocs)
     // plan markers: the tiled path is a live MapPartitions kernel; the
     // prefix path (materialize=true) returns a scan of its spill file
-    def planOf(mode: Option[String]) = {
-      mode.foreach(m => spark.conf.set("spark.graft.jaccard.prefixFilter", m))
-      try graft.operators.Dedup.ngramJaccardPairs(tiny, "doc_id", "text", "lang",
-          n = 1, threshold = 0.5).queryExecution.analyzed.toString
-      finally if (mode.isDefined) spark.conf.unset("spark.graft.jaccard.prefixFilter")
-    }
-    assert(planOf(None).contains("MapPartitions"),
+    def planOf(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed.toString
+    assert(planOf(graft.operators.Dedup.ngramJaccardPairs(tiny, "doc_id", "text", "lang",
+        n = 1, threshold = 0.5)).contains("MapPartitions"),
       "auto under the crossover must take the tiled (live kernel) plan")
-    assert(!planOf(Some("true")).contains("MapPartitions"),
+    assert(!planOf(graft.operators.Dedup.ngramJaccardPairsPrefix(tiny, "doc_id", "text", "lang",
+        1, 0.5)).contains("MapPartitions"),
       "prefix path must not be the tiled kernel (it materializes to a spill scan)")
   }
 

@@ -104,14 +104,13 @@ class PlanQualitySpec extends SparkSpec {
       s"candidates must come from the prefix equi-join:\n$p")
   }
 
-  test("q73 ngram-jaccard (tiled path, conf off): block shuffle, no driver broadcast") {
-    spark.conf.set("spark.graft.jaccard.prefixFilter", "false")
-    try {
-      val p = plan("q73_dedup_ngram_jaccard")
-      assert(p.contains("Exchange hashpartitioning"),
-        s"expected shuffle on the block key:\n$p")
-      assert(!p.contains("Broadcast"), s"no driver-side broadcast allowed:\n$p")
-    } finally spark.conf.unset("spark.graft.jaccard.prefixFilter")
+  test("q73 ngram-jaccard (tiled path): block shuffle, no driver broadcast") {
+    val p = graft.operators.Dedup
+      .ngramJaccardPairsTiled(Tables.documents(spark, sf), "doc_id", "text", "lang", 3, 0.8)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("Exchange hashpartitioning"),
+      s"expected shuffle on the block key:\n$p")
+    assert(!p.contains("Broadcast"), s"no driver-side broadcast allowed:\n$p")
   }
 
   test("q74 cosine pairs: tile-pair shuffle in executors, no driver broadcast") {

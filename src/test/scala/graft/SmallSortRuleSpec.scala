@@ -47,10 +47,10 @@ class SmallSortRuleSpec extends JobFence {
     assert(rows.length == 200000)
   }
 
-  test("a repartition(n) input (Tuning.spread) keeps its n tasks") {
+  test("a repartition(n) input keeps its n tasks") {
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val ((rows, plan), _, tasks) = run {
-      val d = Tuning.spread(spark.range(0, 1000, 1, 1).toDF("id"))
+      val d = spark.range(0, 1000, 1, 1).toDF("id").repartition(n)
         .select(col("id"), (col("id") * 7 % 1000).as("x"))
         .orderBy("x")
       (d.collect(), finalPlan(d))

@@ -67,4 +67,15 @@ class TopKSpec extends SparkSpec {
       s"expected survivor shuffle on the group key:\n$plan")
     assert(!plan.contains("Window"), s"must not fall back to WindowExec:\n$plan")
   }
+
+  test("a newSession plans TopKPerGroupExec from the injected strategy alone") {
+    val fresh = spark.newSession()
+    val q = TopK.perGroup(fresh.range(100).select((col("id") % 4).as("g"), col("id")),
+      Seq("g"), Seq(("id", true)), k = 2)
+    val rows = q.collect()
+    val plan = q.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert(plan.contains("TopKPerGroup"), s"expected the native top-k exec:\n$plan")
+    assert(rows.map(_.getLong(1)).toSet == Set(96L, 97L, 98L, 99L, 92L, 93L, 94L, 95L))
+    assert(fresh.experimental.extraStrategies.isEmpty)
+  }
 }
