@@ -1,63 +1,84 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Byte-pair-encoding merge learning — distributed tokenizer training.
+/** Byte-pair-encoding merge learning — tokenizer training.
   *
   * Classic BPE (Sennrich et al. 2016) over the corpus word-frequency
   * table: start from character symbols, repeatedly (1) count adjacent
   * symbol pairs corpus-wide, (2) take the most frequent pair, (3) merge
   * every occurrence. The learned merge list IS the tokenizer.
   *
-  * Scale shape: the corpus touches the cluster exactly once (one
-  * word-count shuffle). Every round after that runs on the *vocabulary*
-  * table (|V| rows, ~10⁵-10⁶ at web scale — independent of corpus
-  * size): pair counting is an in-row generator + one |V|-sized shuffle
-  * agg, the argmax is a single collected row (bounded driver state,
-  * like k-means centroids), and applying the merge is a scan-parallel
-  * literal string rewrite. No round ever re-reads the corpus.
+  * Scale shape: the corpus touches the cluster exactly once, in the
+  * caller's word-count reduce, which stays as parallel as the caller
+  * planned it. Its (word, freq) rows then cross one shuffle into a
+  * single task (`repartition(1)`, an exchange, never a narrow coalesce
+  * that would pull the reduce into that task too), and that task learns
+  * all merges with the incremental learner of Sennrich et al.: a
+  * pair → (weight, words holding it) table and a ranked set of pairs,
+  * where a merge recounts only the words that hold the merged pair.
+  * Memory is bounded by the vocabulary (|V| rows, ~10⁵-10⁶ at web
+  * scale, independent of corpus size), and the plan is lazy: building
+  * it runs no job, and running it runs the word-count's jobs plus one
+  * stage for the learner, whatever the round count (a loop of Spark
+  * jobs would cost O(R) jobs and O(R·|V|) row rewrites).
   *
-  * Merge application uses space-anchored non-overlapping replace on a
-  * TWO-space-separated symbol string: pattern `" a  b "` → `" ab "`.
-  * Double separators make this exactly greedy left-to-right pair
-  * merging — each match consumes only the inner space of each
-  * separator, so the occurrence scan (which resumes after a match)
-  * still sees the leading space of an immediately adjacent pair
-  * (`a b a b` → `ab ab`, `aaaa` → `aa aa`; a single-space encoding
-  * would skip every second site). Engine-portable: `replace` has
-  * identical continue-after-match semantics in Spark and the DuckDB
-  * oracle, and the anchoring spaces prevent matches inside multi-char
-  * symbols.
+  * Semantics, those of the oracle's unrolled SQL rounds (OperatorsSpec
+  * also checks them against a recount-every-round reference):
+  *  - the starting symbols are the Spark-computed split of
+  *    `"  " + regexp_replace(word, "(.)", "$1  ")` on two spaces, so
+  *    regex `.` decides what a character is (code points; a line
+  *    terminator stays glued to the symbol before it);
+  *  - a pair's weight is the sum of `freq` over every adjacent
+  *    occurrence, overlapping ones included (`aaa` counts (a,a) twice);
+  *  - the round's pair is the first by weight descending, then lhs,
+  *    then rhs, strings compared by UTF-8 bytes (Spark's string order,
+  *    not `String.compareTo`'s UTF-16 order);
+  *  - a merge applies greedily left to right without overlap
+  *    (`aaaa` → `aa aa`, `aaa` → `aa a`), which is what the oracle's
+  *    space-anchored `replace(" a  b ", " ab ")` on the two-space
+  *    encoding does for symbols without spaces (`words` splits on
+  *    spaces);
+  *  - learning stops early when no pair is left.
   */
 object Bpe {
 
   /** Learn `rounds` merges from a (word, freq) vocabulary.
     *
     * @param vocab columns (`word` string, `freq` long)
-    * @param maxBatch upper bound on merges applied per Spark round
-    *   (1 = classic one-merge-per-round; the default batches — see
-    *   [[run]] for why the result is bit-identical either way)
     * @return one row per merge: (round, lhs, rhs, merged, weight)
     */
-  def learnMerges(spark: SparkSession, vocab: DataFrame, rounds: Int,
-      maxBatch: Int = 16): DataFrame =
-    run(spark, vocab, rounds, maxBatch)._1
+  def learnMerges(spark: SparkSession, vocab: DataFrame, rounds: Int): DataFrame = {
+    import spark.implicits._
+    learned(vocab, rounds)(_.merges.iterator)
+      .toDF("round", "lhs", "rhs", "merged", "weight")
+  }
 
   /** The encode side: the vocabulary after `rounds` learned merges —
-    * (word, freq, tokens array). Applying a FIXED merge list to new
-    * text is the same per-row replace chain (map-only, broadcastable
-    * merges); here the list is learned and applied in one pass.
+    * (word, freq, tokens array), the learner's final segmentation.
+    * Applying a FIXED merge list to new text is [[applyMerges]].
     */
-  def encodeVocab(spark: SparkSession, vocab: DataFrame, rounds: Int): DataFrame =
-    run(spark, vocab, rounds)._2
-      .select(col("word"), col("freq"), split(trim(col("repr")), "  ").as("tokens"))
+  def encodeVocab(spark: SparkSession, vocab: DataFrame, rounds: Int): DataFrame = {
+    import spark.implicits._
+    learned(vocab, rounds)(_.segmentation)
+      .toDF("word", "freq", "tokens")
+  }
 
   /** Encode arbitrary text with a FIXED learned merge list — the
     * production tokenize path: train once (learnMerges), ship the
     * R-row merge table everywhere, apply as a scan-parallel chain of R
     * replaces per word (map-only; the merge list is driver-held like a
     * broadcast model, bounded by vocabulary size not corpus size).
+    *
+    * Uses the two-space symbol encoding: `" l  r "` → `" lr "` with
+    * `replace`'s continue-after-match scan is exactly greedy
+    * left-to-right pair merging, because each match consumes only the
+    * inner space of each separator (`a b a b` → `ab ab`).
     *
     * @param merges (lhs, rhs) pairs IN LEARNED ORDER
     * @return `df` with `outCol` = array of subword tokens per row
@@ -68,8 +89,7 @@ object Bpe {
     // per word: "  c  h  a  r  s  " then the ordered replace chain,
     // all inside one in-row lambda — map-only, no explode/regroup
     def encodeWord(w: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-      val init = concat(lit("  "), regexp_replace(w, "(.)", "$1  "))
-      val merged = merges.foldLeft(init) { case (acc, (l, r)) =>
+      val merged = merges.foldLeft(spaced(w)) { case (acc, (l, r)) =>
         f.replace(acc, lit(s" $l  $r "), lit(s" $l$r "))
       }
       split(trim(merged), "  ")
@@ -79,122 +99,123 @@ object Bpe {
         (w: org.apache.spark.sql.Column) => encodeWord(w))))
   }
 
-  private def run(spark: SparkSession, vocab: DataFrame, rounds: Int,
-      maxBatch: Int = 16): (DataFrame, DataFrame) = {
+  /** `"  k  e  y  "`: each regex character of `w` followed by two spaces. */
+  private def spaced(w: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    concat(lit("  "), regexp_replace(w, "(.)", "$1  "))
+
+  /** The vocabulary, gathered through one exchange into one task that
+    * runs the learner for `rounds` merges and emits `out` of it.
+    */
+  private def learned[T: Encoder](vocab: DataFrame, rounds: Int)(
+      out: Learner => Iterator[T]): Dataset[T] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    require(maxBatch >= 1, s"maxBatch must be >= 1, got $maxBatch")
-    // "  k  e  y  " — two-space separators (see class doc).
-    //
-    // Each Spark round: rewrite the |V|-row repr table and spill it to
-    // run-scoped parquet (Materialize.spillRelease), then collect a
-    // small top-k candidate block to the driver and bake the accepted
-    // merges into the next round as literals. The spill makes every
-    // round's lineage GENUINELY flat — a bare parquet scan — which is
-    // what bounds memory for real vocab training: a withColumn/persist
-    // chain keeps each round's logical plan nested inside the next
-    // (execution stays incremental through the cache, but
-    // analysis/optimizer state grows with every round — measured OOM
-    // before round 20 on a 4 GiB driver), and a lazy
-    // crossJoin(broadcast(limit-1)) chain was worse still (fresh
-    // sessions re-derived all earlier rounds inside each broadcast
-    // job: 24 s isolated vs 4 s warm at sf0.1). The driver holds
-    // exactly `rounds` merge rows — bounded model state, the same
-    // contract as collected k-means centroids.
-    //
-    // BATCHED ROUNDS, bit-identical to classic one-merge-per-round
-    // greedy BPE: per round, take the maximal PREFIX of the
-    // (weight desc, lhs, rhs)-sorted pair list whose extended symbol
-    // sets {lhs, rhs, lhs+rhs} are pairwise disjoint, truncated to
-    // pairs STRICTLY heavier than the first candidate left out. Why
-    // that equals the sequential result:
-    //  - disjoint merges can't change each other's pair counts (a
-    //    (c,d) adjacency survives any (a,b) merge with
-    //    {a,b,ab} ∩ {c,d,cd} = ∅), so the accepted pairs keep their
-    //    exact weights and relative order through the batch;
-    //  - every pair a merge CREATES (x,ab) or grows comes from a
-    //    pre-existing adjacency (x,a) that SHARES a symbol with the
-    //    merge, so its weight is bounded by a non-accepted pair's
-    //    weight ≤ the floor — strictly below every accepted pair —
-    //    and cannot out-rank them in any intermediate round;
-    //  - the head of the prefix is literally the classic argmax.
-    // So sequential greedy would pick exactly these pairs, in this
-    // order, over the next |batch| rounds, with an unchanged merge
-    // list (OperatorsSpec pins batched ≡ classic). Honesty note on
-    // batch width: natural-language pair weights are tie-dense (the
-    // Zipf tail), so on the harness corpora the strict floor usually
-    // truncates the batch to 1 — batching engages where weights
-    // decouple (early high-count merges, multi-corpus weight mixes).
-    // The measured 2× for long trainings comes from the spill cadence
-    // below; the batching is the semantics-preserving fast path on
-    // top, never a different algorithm.
-    var repr = Materialize.spillRelease(
-      vocab.select(col("word"), col("freq"),
-        concat(lit("  "), regexp_replace(col("word"), "(.)", "$1  ")).as("repr")))
-    val mergeRows = Seq.newBuilder[(Int, String, String, String, Long)]
-    var learned = 0
-    var exhausted = false
-    // spill cadence: chain up to this many lazy rewrite rounds on top
-    // of the last spilled table before re-spilling — re-evaluating a
-    // few replace projections inside the next pair count is far
-    // cheaper than a parquet round-trip per round, while the bounded
-    // chain depth keeps analyzer/optimizer state flat
-    val spillEvery = 8
-    var sinceSpill = 0
-    while (learned < rounds && !exhausted) {
-      val toks = repr.select(col("freq"), split(trim(col("repr")), "  ").as("t"))
-        .filter(size(col("t")) >= 2) // sequence(2,1) would run backwards
-      val pairs = toks.select(col("freq"),
-          explode(expr("transform(sequence(2, size(t)), i -> struct(t[i-2] as lhs, t[i-1] as rhs))")).as("p"))
-        .select(col("p.lhs"), col("p.rhs"), col("freq"))
-      val budget = math.min(maxBatch, rounds - learned)
-      // lookahead past the budget so the first rejected candidate's
-      // weight (the safety floor) is always visible in the block
-      val k = budget + math.max(budget, 8)
-      val cand = pairs.groupBy("lhs", "rhs").agg(sum("freq").as("weight"))
-        .orderBy(col("weight").desc, col("lhs"), col("rhs")).limit(k)
-        .collect()
-      if (cand.isEmpty) exhausted = true // nothing left to merge — stop
+    val spark = vocab.sparkSession
+    import spark.implicits._
+    vocab.select(col("word"), col("freq").cast("long"),
+        split(trim(spaced(col("word"))), "  ").as("symbols"))
+      .repartition(1)
+      .as[(String, Long, Array[String])]
+      .mapPartitions { rows =>
+        val learner = new Learner(rows.toArray)
+        learner.learn(rounds)
+        out(learner)
+      }
+  }
+
+  /** An adjacent symbol pair; UTF-8 bytes kept for Spark's string order. */
+  private final case class Pair(lhs: String, rhs: String) {
+    val lhsBytes: Array[Byte] = lhs.getBytes(UTF_8)
+    val rhsBytes: Array[Byte] = rhs.getBytes(UTF_8)
+  }
+
+  /** Rank order: weight descending, then lhs, then rhs by UTF-8 bytes. */
+  private object Rank extends Ordering[(Long, Pair)] {
+    def compare(a: (Long, Pair), b: (Long, Pair)): Int = {
+      val byWeight = java.lang.Long.compare(b._1, a._1)
+      if (byWeight != 0) byWeight
       else {
-        val accepted = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var used = Set.empty[String]
-        var floor = -1L // weight of the first candidate NOT accepted
-        var stopped = false
-        for (row <- cand if !stopped) {
-          val (l, rr, w) = (row.getString(0), row.getString(1), row.getLong(2))
-          val syms = Set(l, rr, l + rr)
-          if (accepted.size >= budget || used.exists(syms)) {
-            floor = w; stopped = true
-          } else { accepted += ((l, rr, w)); used ++= syms }
-        }
-        // the head IS the classic argmax — always safe; later accepts
-        // only while strictly above the floor (ties could let a freshly
-        // created pair win the canonical tie-break instead)
-        val batch = accepted.head +: accepted.tail.takeWhile(_._3 > floor).toSeq
-        batch.foreach { case (l, rr, w) =>
-          learned += 1
-          mergeRows += ((learned, l, rr, l + rr, w))
-        }
-        repr = repr.withColumn("repr",
-          batch.foldLeft(col("repr")) { case (acc, (l, rr, _)) =>
-            org.apache.spark.sql.functions.replace(acc,
-              lit(s" $l  $rr "), lit(s" $l$rr "))
-          })
-        sinceSpill += 1
-        if (sinceSpill >= spillEvery) {
-          repr = Materialize.spillRelease(repr)
-          sinceSpill = 0
-        }
+        val byLhs = java.util.Arrays.compareUnsigned(a._2.lhsBytes, b._2.lhsBytes)
+        if (byLhs != 0) byLhs
+        else java.util.Arrays.compareUnsigned(a._2.rhsBytes, b._2.rhsBytes)
       }
     }
-    // the returned repr is at most spillEvery-1 replace projections over
-    // the last spilled table; CollapseProject folds them into one
-    // projection of the encode plan, so spilling them too would only
-    // add a write job and a read-back to every encodeVocab call
-    val sq = spark
-    import sq.implicits._
-    val merges = mergeRows.result()
-      .toDF("round", "lhs", "rhs", "merged", "weight")
-    // repr is spill-backed — nothing cached to release on either path
-    (merges, repr)
+  }
+
+  /** A pair's corpus weight, its occurrence count, and every word that
+    * holds it — plus, possibly, words a merge has since taken it from,
+    * whose recount changes nothing.
+    */
+  private final class Stat {
+    var weight = 0L
+    var occurrences = 0L
+    val holders = mutable.HashSet.empty[Int]
+  }
+
+  /** Sequential greedy BPE over an in-memory (word, freq, symbols)
+    * vocabulary, updating pair counts incrementally.
+    */
+  private final class Learner(vocab: Array[(String, Long, Array[String])]) {
+    private val segs = vocab.map(_._3)
+    private val stats = mutable.HashMap.empty[Pair, Stat]
+    private val ranked = mutable.TreeSet.empty[(Long, Pair)](Rank)
+    // pairs whose weight changed since the last rerank, out of `ranked`
+    private val touched = mutable.HashSet.empty[Pair]
+    val merges = mutable.ArrayBuffer.empty[(Int, String, String, String, Long)]
+
+    def segmentation: Iterator[(String, Long, Array[String])] =
+      vocab.indices.iterator.map(w => (vocab(w)._1, vocab(w)._2, segs(w)))
+
+    def learn(rounds: Int): Unit = {
+      segs.indices.foreach(w => if (segs(w) != null) count(w, 1))
+      rerank()
+      while (merges.size < rounds && ranked.nonEmpty) {
+        val (weight, best) = ranked.head
+        merges += ((merges.size + 1, best.lhs, best.rhs, best.lhs + best.rhs, weight))
+        // a greedy merge leaves no (lhs, rhs) adjacency behind, so
+        // `best` drops out of `stats` by the end of this loop
+        stats(best).holders.toArray.foreach { w =>
+          count(w, -1)
+          segs(w) = merge(segs(w), best)
+          count(w, 1)
+        }
+        rerank()
+      }
+    }
+
+    /** Add (`sign` 1) or remove (-1) word `w`'s adjacencies. */
+    private def count(w: Int, sign: Int): Unit = {
+      val s = segs(w)
+      var i = 1
+      while (i < s.length) {
+        val p = Pair(s(i - 1), s(i))
+        val st = stats.getOrElseUpdate(p, new Stat)
+        if (touched.add(p) && st.occurrences > 0) ranked -= ((st.weight, p))
+        st.weight += sign * vocab(w)._2
+        st.occurrences += sign
+        if (sign > 0) st.holders += w
+        else if (st.occurrences == 0) stats -= p
+        i += 1
+      }
+    }
+
+    private def rerank(): Unit = {
+      touched.foreach(p => stats.get(p).foreach(st => ranked += ((st.weight, p))))
+      touched.clear()
+    }
+
+    private def merge(s: Array[String], p: Pair): Array[String] = {
+      val out = mutable.ArrayBuilder.make[String]
+      var i = 0
+      while (i < s.length) {
+        if (i + 1 < s.length && s(i) == p.lhs && s(i + 1) == p.rhs) {
+          out += p.lhs + p.rhs
+          i += 2
+        } else {
+          out += s(i)
+          i += 1
+        }
+      }
+      out.result()
+    }
   }
 }

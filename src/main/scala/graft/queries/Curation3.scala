@@ -51,8 +51,9 @@ object Curation3 {
 
   /** BPE tokenizer training: 6 merges learned from the corpus
     * word-frequency vocabulary (see [[graft.operators.Bpe]] for the
-    * scale argument — rounds run on |V| rows, never re-touching the
-    * corpus). Oracle unrolls the same 6 rounds in SQL.
+    * scale argument — the word count is the only corpus pass, and one
+    * task learns every merge from its |V| rows). A lazy plan: building
+    * it runs no job. Oracle unrolls the same 6 rounds in SQL.
     */
   private val q153BpeMerges: Q = (s, d) => {
     val vocab = Tables.documents(s, d)

@@ -139,8 +139,12 @@ object Curation4 {
 
   /** BPE encode: the corpus re-tokenized with the 6 learned merges
     * (the apply half of q153's learn) — top-20 subword tokens by
-    * corpus frequency. Token stats ride the vocabulary table (|V|
-    * rows × freq weights), never re-touching the corpus.
+    * corpus frequency. The learner's one task emits each vocabulary
+    * word's final tokens, and the token stats ride that table (|V|
+    * rows × freq weights), never re-touching the corpus. A lazy plan:
+    * building it runs no job, and running it runs 3 (the word count's
+    * two stages, then the learner's stage, which also aggregates the
+    * tokens).
     */
   private val q165BpeEncode: Q = (s, d) => {
     val vocab = Tables.documents(s, d)

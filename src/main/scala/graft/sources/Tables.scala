@@ -1,6 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the harness parquet tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -14,13 +17,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** JVM-wide (path → schema) memo: parquet schema inference reads
-    * file footers and runs once per (session, table) — a fresh session
-    * (`SparkSession.newSession()`, a new SQL client) re-paid it for all 10
-    * tables before its first query could plan, the bulk of the
-    * measured cold-session tax. Later sessions read with an explicit
-    * schema: zero inference I/O. Bounded driver state: one entry per
-    * table path.
+  /** JVM-wide (path → schema) memo of [[footerSchema]]: every read
+    * passes an explicit schema, so no read of a table runs Spark's
+    * schema inference (a footer-merge job per table and session; a fresh
+    * session re-paid it for all 10 tables before its first query could
+    * plan, the bulk of the measured cold-session tax). Bounded driver
+    * state: one entry per table path.
     *
     * Entries are validated against the file's (mtime, size) on every
     * lookup — a harness data regen mid-JVM (observed: round 5, where a
@@ -30,8 +32,7 @@ object Tables {
     * win. Paths that aren't local files (hdfs://, s3://) skip
     * validation and can be evicted explicitly via [[invalidate]].
     */
-  private final case class SchemaEntry(mtime: Long, size: Long,
-      schema: org.apache.spark.sql.types.StructType)
+  private final case class SchemaEntry(mtime: Long, size: Long, schema: StructType)
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, SchemaEntry]()
 
@@ -47,13 +48,55 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val (m, sz) = statLocal(path)
     val cached = schemaCache.get(path)
-    if (cached != null && cached.mtime == m && cached.size == sz)
-      spark.read.schema(cached.schema).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaCache.put(path, SchemaEntry(m, sz, df.schema))
-      df
+    val schema =
+      if (cached != null && cached.mtime == m && cached.size == sz) cached.schema
+      else {
+        val s = footerSchema(spark, path)
+        schemaCache.put(path, SchemaEntry(m, sz, s))
+        s
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver
+    * without a job: the footer of the file Spark's inference touches
+    * (the file itself, or a directory's first data file by path),
+    * converted by Spark's own footer-to-schema reader with the
+    * session's parquet confs (`nanosAsLong`, binary-as-string, INT96,
+    * NTZ inference), which prefers the Spark schema stored in the
+    * footer when there is one.
+    */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val hconf = spark.sessionState.newHadoopConf()
+    val file = dataFiles(hconf, path).minBy(_.getPath.toString)
+    val footer = new Footer(file.getPath, readFooter(hconf, file)(_.getFooter))
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The parquet data files at `path`: the file itself, or every data
+    * file of a directory written by Spark.
+    */
+  private def dataFiles(hconf: Configuration, path: String): Seq[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(hconf)
+    val st = fs.getFileStatus(p)
+    if (st.isDirectory) fs.listStatus(p).toSeq.filter { f =>
+      val n = f.getPath.getName
+      f.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
+    else Seq(st)
+  }
+
+  private def readFooter[T](hconf: Configuration, f: FileStatus)(
+      read: org.apache.parquet.hadoop.ParquetFileReader => T): T = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hconf))
+    try read(r) finally r.close()
   }
 
   /** JVM-wide (path → row count) memo, validated like the schema memo. */
@@ -73,23 +116,8 @@ object Tables {
     val cached = countCache.get(path)
     if (cached != null && cached.mtime == m && cached.size == sz) cached.rows
     else {
-      import org.apache.hadoop.fs.Path
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
       val hconf = spark.sessionState.newHadoopConf()
-      val p = new Path(path)
-      val fs = p.getFileSystem(hconf)
-      val st = fs.getFileStatus(p)
-      val files =
-        if (st.isDirectory) fs.listStatus(p).toSeq.filter { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-        else Seq(st)
-      val rows = files.map { f =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hconf))
-        try r.getRecordCount finally r.close()
-      }.sum
+      val rows = dataFiles(hconf, path).map(readFooter(hconf, _)(_.getRecordCount)).sum
       countCache.put(path, CountEntry(m, sz, rows))
       rows
     }
@@ -148,10 +176,10 @@ object Tables {
   /** Register all tables as temp views (for SQL-surface queries).
     *
     * Idempotent per (session, dir): re-registering replaces all 10 temp
-    * views (invalidating any cached plans on them) and re-triggers parquet
-    * schema inference — ~1s warm / ~4s cold — so every SQL-surface query
-    * paying that per call was the dominant suite-wide SQL overhead. A
-    * repeat call for the same dir is now a conf read + one catalog probe.
+    * views (invalidating any cached plans on them); paid per call, with
+    * schema inference (~1s warm / ~4s cold), it was the dominant
+    * suite-wide SQL overhead. A repeat call for the same dir is a conf
+    * read + one catalog probe.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     val fresh = spark.conf.getOption(RegisteredDirKey).contains(dir) &&

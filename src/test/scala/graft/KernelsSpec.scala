@@ -57,8 +57,6 @@ class KernelsSpec extends JobFence {
   }
 
   test("deciding runs no job") {
-    // built outside the fence: a first read of a fixture infers its
-    // schema in a job of its own
     val ins = Seq(Tables.customer(spark, sf), Tables.embeddings(spark, sf),
       Tables.documents(spark, sf).select("doc_id", "text"))
     val (outs, jobs, _) = run(ins.map(Kernels.fanOut))

@@ -7,7 +7,7 @@ import graft.operators.Joins
 /** Scale-machinery semantics: salted joins, partitioned writes,
   * union-by-name schema evolution, approx-distinct error bound.
   */
-class OperatorsSpec extends SparkSpec {
+class OperatorsSpec extends JobFence {
 
   test("salted equi-join is row-identical to the plain join") {
     import spark.implicits._
@@ -511,7 +511,7 @@ class OperatorsSpec extends SparkSpec {
       .orderBy("round").collect()
     assert(m.map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq ==
       Seq((1, "a", "a", "aa", 6L), (2, "a", "b", "ab", 5L)))
-    // spillRelease ending: no round cache outlives the call
+    // no round cache outlives the call
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cachedBefore
     assert(leaked.isEmpty, s"BPE leaked cached RDDs: $leaked")
   }
@@ -553,23 +553,93 @@ class OperatorsSpec extends SparkSpec {
     assert(!bad.ok, "undecodable payload must quarantine, not throw")
   }
 
-  test("BPE batched rounds are bit-identical to classic one-merge-per-round") {
+  /** Greedy BPE that recounts every pair each round, on the two-space
+    * string encoding (`"  a  b  "`, merge = `replace(" l  r ", " lr ")`):
+    * the reference the incremental learner must equal. Symbols start as
+    * code points, which is what regex `.` splits for words without line
+    * terminators. Returns the merges and each word's final tokens.
+    */
+  private def recountMerges(vocab: Seq[(String, Long)], rounds: Int)
+      : (Seq[(Int, String, String, String, Long)], Map[String, Seq[String]]) = {
+    def codePoints(s: String): Seq[Int] = s.codePoints.toArray.toSeq
+    val utf8 = Ordering.Implicits.seqOrdering[Seq, Int]
+    var reprs = vocab.map { case (w, f) =>
+      ("  " + codePoints(w).map(cp => new String(Character.toChars(cp)) + "  ").mkString, f)
+    }
+    def tokens(repr: String): Seq[String] = repr.substring(2, repr.length - 2).split("  ").toSeq
+    val merges = Seq.newBuilder[(Int, String, String, String, Long)]
+    var round = 0
+    var exhausted = false
+    while (round < rounds && !exhausted) {
+      val weights = reprs.flatMap { case (r, f) =>
+        tokens(r).sliding(2).collect { case Seq(l, rr) => (l, rr) -> f }
+      }.groupMapReduce(_._1)(_._2)(_ + _)
+      if (weights.isEmpty) exhausted = true
+      else {
+        val ((l, rr), w) = weights.toSeq.min(Ordering.fromLessThan[((String, String), Long)] {
+          case (((l1, r1), w1), ((l2, r2), w2)) =>
+            if (w1 != w2) w1 > w2
+            else if (l1 != l2) utf8.lt(codePoints(l1), codePoints(l2))
+            else utf8.lt(codePoints(r1), codePoints(r2))
+        })
+        round += 1
+        merges += ((round, l, rr, l + rr, w))
+        reprs = reprs.map { case (r, f) => (r.replace(s" $l  $rr ", s" $l$rr "), f) }
+      }
+    }
+    (merges.result(), vocab.map(_._1).zip(reprs.map(r => tokens(r._1))).toMap)
+  }
+
+  test("BPE learner equals the recount-every-round reference, before and past exhaustion") {
     import spark.implicits._
     // a real-text vocabulary with ties, overlapping candidates, and
-    // chainable merges — the shapes the batch safety rules exist for
+    // chainable merges
     val corpus = "the quick brown fox jumps over the lazy dog " +
       "the quicker foxes jumped over lazy dogs then the dog ran"
     val vocab = Seq(corpus).toDF("text")
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
-    def learned(maxBatch: Int) =
-      graft.operators.Bpe.learnMerges(spark, vocab, rounds = 12, maxBatch)
+    val local = vocab.collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+    for (rounds <- Seq(12, 500)) {
+      val learned = graft.operators.Bpe.learnMerges(spark, vocab, rounds)
         .orderBy("round").collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(4))).toSeq
-    val classic = learned(maxBatch = 1)
-    val batched = learned(maxBatch = 8)
-    assert(batched == classic,
-      s"batched merges diverged from classic greedy:\n$batched\nvs\n$classic")
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
+      val (reference, segs) = recountMerges(local, rounds)
+      assert(learned == reference,
+        s"rounds=$rounds: learner diverged from the recount reference:\n$learned\nvs\n$reference")
+      val encoded = graft.operators.Bpe.encodeVocab(spark, vocab, rounds)
+        .collect().map(r => r.getString(0) -> r.getSeq[String](2)).toMap
+      assert(encoded == segs, s"rounds=$rounds: final segmentation $encoded vs $segs")
+      // 500 rounds run past exhaustion: every word ends as one token
+      if (rounds == 500)
+        assert(reference.size < 500 && segs.values.forall(_.size == 1), s"${reference.size} merges, $segs")
+    }
+  }
+
+  test("BPE ties break by UTF-8 byte order, Spark's string order, not UTF-16") {
+    import spark.implicits._
+    // U+FF21 sorts before U+1F600 in UTF-8 (EF.. < F0..) but after it
+    // in UTF-16 (FF21 > D83D)
+    val (fullA, grin) = ("\uFF21", "\uD83D\uDE00")
+    assert(fullA.compareTo(grin) > 0)
+    assert(Seq(grin, fullA).toDF("s").orderBy("s").as[String].collect().toSeq == Seq(fullA, grin))
+    val vocab = Seq((grin + "x", 1L), (fullA + "x", 1L)).toDF("word", "freq")
+    val m = graft.operators.Bpe.learnMerges(spark, vocab, rounds = 2)
+      .orderBy("round").collect().map(r => (r.getString(1), r.getString(2), r.getLong(4))).toSeq
+    assert(m == Seq((fullA, "x", 1L), (grin, "x", 1L)), s"$m")
+  }
+
+  test("BPE plans are lazy: building runs no job; q165 runs at most 4 jobs") {
+    import spark.implicits._
+    val vocab = Seq(("lower", 2L), ("lowest", 1L)).toDF("word", "freq")
+    val (_, learnJobs, _) = run(graft.operators.Bpe.learnMerges(spark, vocab, rounds = 6))
+    val (_, encodeJobs, _) = run(graft.operators.Bpe.encodeVocab(spark, vocab, rounds = 6))
+    assert(learnJobs == 0 && encodeJobs == 0, s"build jobs: learn $learnJobs, encode $encodeJobs")
+    val sf = "/root/testdata/sf0.001"
+    val (q165, buildJobs, _) = run(SparkEntry.queries("q165_bpe_encode")(spark, sf))
+    assert(buildJobs == 0, s"building q165 ran $buildJobs jobs")
+    val (rows, jobs, _) = run(q165.collect())
+    assert(rows.nonEmpty && jobs <= 4, s"q165's action ran $jobs jobs")
   }
 
   test("BPE applyMerges agrees with encodeVocab and tokenizes unseen text") {

@@ -39,8 +39,6 @@ class SmallInputRuleSpec extends JobFence {
     ops.filter(o => o.contains("Exchange") || o.contains("Broadcast"))
 
   test("small filter + join + groupBy + orderBy runs one job: no Exchange, no Broadcast, same rows") {
-    // built outside the fence: a first read of a fixture infers its
-    // schema in a job of its own
     val (d, dOff) = (smallJoin, smallJoin)
     val (rows, jobs, plan) = collected(d)
     val (rowsOff, jobsOff, planOff) = withConf(Excluded)(collected(dOff))

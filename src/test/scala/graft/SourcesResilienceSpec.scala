@@ -10,7 +10,7 @@ import graft.sources.Tables
   * mid-JVM, a stale schema cache serving the old vintage, and one bad
   * table poisoning view registration for all the others.
   */
-class SourcesResilienceSpec extends SparkSpec {
+class SourcesResilienceSpec extends JobFence {
 
   private def freshDir(): String =
     Files.createTempDirectory("graft_resilience").toString
@@ -54,6 +54,19 @@ class SourcesResilienceSpec extends SparkSpec {
     assert(second.schema.fieldNames.contains("r_extra"),
       s"stale cached schema served after rewrite: ${second.schema.treeString}")
     assert(second.count() == 5)
+  }
+
+  test("a first read of each table runs no job and gets the schema Spark would infer") {
+    val sf = "/root/testdata/sf0.001"
+    for (t <- Tables.names) {
+      val path = s"$sf/$t.parquet"
+      Tables.invalidate(path)
+      val (df, jobs, _) = run(if (t == "events") Tables.events(spark, sf) else Tables.table(spark, sf, t))
+      assert(jobs == 0, s"first read of $t ran $jobs jobs")
+      val inferred = spark.read.parquet(path)
+      val expected = if (t == "events") Tables.normalizeEventTs(inferred) else inferred
+      assert(df.schema == expected.schema, s"$t: ${df.schema.treeString} vs ${expected.schema.treeString}")
+    }
   }
 
   test("rowCount reads parquet footers: equals count() for every fixture table") {
