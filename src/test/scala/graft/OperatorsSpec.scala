@@ -616,6 +616,46 @@ class OperatorsSpec extends JobFence {
     }
   }
 
+  test("BPE batched rounds are bit-identical to classic one-merge-per-round") {
+    import spark.implicits._
+    // the learner runs every round in one task; classic BPE runs one
+    // Spark round per merge — count pairs with a group-by, take the
+    // argmax with Spark's own sort, apply it with the space-anchored
+    // replace — on the same real-text vocabulary with ties
+    val corpus = "the quick brown fox jumps over the lazy dog " +
+      "the quicker foxes jumped over lazy dogs then the dog ran"
+    val vocab = Seq(corpus).toDF("text")
+      .select(explode(split(col("text"), " ")).as("word"))
+      .groupBy("word").agg(count(lit(1)).as("freq"))
+    val rounds = 12
+    var repr = vocab.select(col("freq"),
+      concat(lit("  "), regexp_replace(col("word"), "(.)", "$1  ")).as("repr"))
+    val classic = Seq.newBuilder[(Int, String, String, String, Long)]
+    var round = 0
+    var exhausted = false
+    while (round < rounds && !exhausted) {
+      val best = repr.select(col("freq"), split(trim(col("repr")), "  ").as("t"))
+        .filter(size(col("t")) >= 2)
+        .select(col("freq"),
+          explode(expr("transform(sequence(2, size(t)), i -> struct(t[i-2] as lhs, t[i-1] as rhs))")).as("p"))
+        .groupBy(col("p.lhs").as("lhs"), col("p.rhs").as("rhs")).agg(sum("freq").as("weight"))
+        .orderBy(col("weight").desc, col("lhs"), col("rhs")).limit(1).collect()
+      if (best.isEmpty) exhausted = true
+      else {
+        val (l, rr, w) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+        round += 1
+        classic += ((round, l, rr, l + rr, w))
+        repr = repr.withColumn("repr",
+          org.apache.spark.sql.functions.replace(col("repr"), lit(s" $l  $rr "), lit(s" $l$rr ")))
+      }
+    }
+    val batched = graft.operators.Bpe.learnMerges(spark, vocab, rounds)
+      .orderBy("round").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
+    assert(batched.size == rounds && batched == classic.result(),
+      s"one-task merges diverged from classic greedy:\n$batched\nvs\n${classic.result()}")
+  }
+
   test("BPE ties break by UTF-8 byte order, Spark's string order, not UTF-16") {
     import spark.implicits._
     // U+FF21 sorts before U+1F600 in UTF-8 (EF.. < F0..) but after it
