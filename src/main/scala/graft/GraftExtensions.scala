@@ -17,9 +17,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftRegistry.expressions.foreach { case (name, cls, builder) =>
       ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
     }
-    // automatic range-join binning, opt-in via
-    // spark.graft.rangeJoin.binWidth (see plans.RangeBinJoinRule)
-    ext.injectOptimizerRule(graft.plans.RangeBinJoinRule)
     // native per-group top-k physical operator (see plans.TopKPerGroup)
     ext.injectPlannerStrategy(graft.plans.TopKPerGroupStrategy)
     // SQL surface for it: rewrite `row_number() OVER (...) <= k` filters

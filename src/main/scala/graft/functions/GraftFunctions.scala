@@ -80,10 +80,6 @@ object GraftFunctions {
   /** Reference fill_null (numeric_column.py:56-73): coalesce to scalar. */
   def fillNull(c: Column, v: Any): Column = coalesce(c, lit(v))
 
-  /** Squared L2 norm, double accumulation in element order. */
-  def normSq(a: Column): Column =
-    aggregate(a, lit(0.0), (acc, x) => acc + x.cast(DoubleType) * x.cast(DoubleType))
-
   /** Unrolled dot product for a known dimension: a straight-line
     * left-associated sum of element_at products. Higher-order functions
     * (aggregate/zip_with) are CodegenFallback — interpreted per element —

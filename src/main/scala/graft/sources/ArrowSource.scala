@@ -11,14 +11,12 @@ import org.apache.arrow.vector.types.pojo.{Field, FieldType, Schema => ArrowSche
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for Arrow IPC *stream* files — the
   * cluster-scale half of the reference's `to_arrow`/`from_arrow`
@@ -35,13 +33,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * output file per write task, so parallelism on both paths equals the
   * file/partition count. Column pruning is pushed into the reader
   * (`SupportsPushDownRequiredColumns`): only required vectors are
-  * converted to rows. All I/O goes through the Hadoop FileSystem API,
-  * so `file://`, `hdfs://`, etc. work alike. Types: the reference
-  * column set (bool/int/long/float/double/string), null masks
-  * preserved. Writes are two-phase: tasks write under `_temporary/`
-  * and the driver's job commit renames to final names — task retries,
-  * speculation, and failures never leave a partial file visible (see
-  * [[ArrowWriteBuilder]]).
+  * handed to Spark, as columnar batches. All I/O goes through the
+  * Hadoop FileSystem API, so `file://`, `hdfs://`, etc. work alike.
+  * Types: the reference column set (bool/int/long/float/double/string),
+  * null masks preserved. Writes are two-phase: tasks write under
+  * `_temporary/` and the driver's job commit renames to final names —
+  * task retries, speculation, and failures never leave a partial file
+  * visible (see [[ArrowWriteBuilder]]).
   */
 class ArrowSource extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true
@@ -134,13 +132,14 @@ private[sources] class ArrowScan(path: String, required: StructType)
   override def createReaderFactory(): PartitionReaderFactory = {
     val req = required
     new PartitionReaderFactory {
-      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-        new ArrowFileReader(partition.asInstanceOf[ArrowFilePartition].file, req)
       // Arrow batches ARE Spark columnar batches (ArrowColumnVector is
       // public API) — hand them over whole; Spark inserts the
       // codegen'd ColumnarToRow, exactly like the vectorized parquet
-      // reader
+      // reader. Every partition reads columnar, so Spark never asks
+      // for a row reader.
       override def supportColumnarReads(partition: InputPartition): Boolean = true
+      override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+        throw new UnsupportedOperationException("ArrowScan reads columnar batches only")
       override def createColumnarReader(partition: InputPartition)
           : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
         new ArrowColumnarFileReader(partition.asInstanceOf[ArrowFilePartition].file, req)
@@ -148,60 +147,7 @@ private[sources] class ArrowScan(path: String, required: StructType)
   }
 }
 
-/** Streams one IPC file batch-by-batch, converting only the required
-  * columns. Fresh output row per `get()` (no buffer reuse hazards).
-  */
-private[sources] class ArrowFileReader(file: String, required: StructType)
-    extends PartitionReader[InternalRow] {
-  private val fsPath = new Path(file)
-  private val allocator = new RootAllocator(Long.MaxValue)
-  private val reader = new ArrowStreamReader(
-    FileSystem.get(fsPath.toUri, new Configuration()).open(fsPath), allocator)
-  private val root = reader.getVectorSchemaRoot
-  // required-name → vector ordinal in the file schema
-  private val ordinals: Array[Int] = required.fieldNames.map { n =>
-    val i = root.getSchema.getFields.asScala.indexWhere(_.getName == n)
-    require(i >= 0, s"column '$n' not in arrow file $file")
-    i
-  }
-  private var rowIdx = -1
-  private var batchRows = 0
-
-  override def next(): Boolean = {
-    rowIdx += 1
-    while (rowIdx >= batchRows) {
-      if (!reader.loadNextBatch()) return false
-      batchRows = root.getRowCount
-      rowIdx = 0
-    }
-    true
-  }
-
-  override def get(): InternalRow = {
-    val out = new GenericInternalRow(ordinals.length)
-    var c = 0
-    while (c < ordinals.length) {
-      val vec = root.getVector(ordinals(c))
-      val v: Any =
-        if (vec.isNull(rowIdx)) null
-        else vec match {
-          case v: BitVector     => v.get(rowIdx) == 1
-          case v: IntVector     => v.get(rowIdx)
-          case v: BigIntVector  => v.get(rowIdx)
-          case v: Float4Vector  => v.get(rowIdx)
-          case v: Float8Vector  => v.get(rowIdx)
-          case v: VarCharVector => UTF8String.fromBytes(v.get(rowIdx))
-        }
-      out.update(c, v)
-      c += 1
-    }
-    out
-  }
-
-  override def close(): Unit = { reader.close(); allocator.close() }
-}
-
-/** Columnar twin of [[ArrowFileReader]]: each IPC record batch becomes
+/** Streams one IPC file batch-by-batch: each IPC record batch becomes
   * one ColumnarBatch of ArrowColumnVector wrappers — zero per-row
   * conversion in the source; row materialization happens in Spark's
   * codegen'd ColumnarToRow. The vectors alias the reader's root, valid

@@ -56,14 +56,32 @@ class OperatorsSpec extends JobFence {
 
   test("binnedRangeJoin matches the naive inequality join row set") {
     import spark.implicits._
-    val points = (1 to 200).map(i => (i.toLong, i * 3.7 % 100)).toDF("pk", "p")
-    val ivs = (1 to 50).map(i => (i.toLong, i * 1.9 % 90, i * 1.9 % 90 + 7.5))
-      .toDF("ik", "lo", "hi")
+    // edge rows (ids > 1000) at width 5: points on lo and on hi, bounds
+    // on multiples of the width, negative values (where floor and a
+    // truncating cast pick different bins), null bounds and a null point
+    val edgePoints = Seq(1001L -> Some(10.0), 1002L -> Some(15.0), 1003L -> Some(17.5),
+      1004L -> Some(-3.0), 1005L -> Some(-5.0), 1006L -> Some(-8.0), 1007L -> Some(-10.0),
+      1008L -> None)
+    val points = ((1 to 200).map(i => (i.toLong, Option(i * 3.7 % 100))) ++ edgePoints)
+      .toDF("pk", "p")
+    val edgeIvs = Seq(
+      (1001L, Some(10.0), Some(15.0)),   // multiples of the width
+      (1002L, Some(12.5), Some(17.5)),
+      (1003L, Some(-10.0), Some(-5.0)),  // negative multiples
+      (1004L, Some(-9.5), Some(-6.0)),   // negative, inside one bin
+      (1005L, Some(-3.0), Some(2.0)),    // straddles zero
+      (1006L, None, Some(20.0)),
+      (1007L, Some(-20.0), None))
+    val ivs = ((1 to 50).map(i => (i.toLong, Option(i * 1.9 % 90), Option(i * 1.9 % 90 + 7.5)))
+        ++ edgeIvs).toDF("ik", "lo", "hi")
     val binned = graft.operators.Joins.binnedRangeJoin(points, "p", ivs, "lo", "hi", 5.0)
       .select("pk", "ik").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     val naive = points.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
       .select("pk", "ik").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(binned == naive && binned.nonEmpty)
+    assert(binned == naive)
+    assert(binned.filter { case (pk, ik) => pk > 1000 && ik > 1000 }.toSet == Set(
+      (1001L, 1001L), (1002L, 1001L), (1002L, 1002L), (1003L, 1002L), (1004L, 1005L),
+      (1005L, 1003L), (1006L, 1003L), (1006L, 1004L), (1007L, 1003L)))
   }
 
   test("approx_count_distinct is within 3x rsd of exact") {

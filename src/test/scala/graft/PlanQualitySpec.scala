@@ -194,42 +194,6 @@ class PlanQualitySpec extends SparkSpec {
       s"expected an equi join on the bin id:\n$p")
   }
 
-  test("RangeBinJoinRule: naive inequality join auto-binned, row-identical to control") {
-    import org.apache.spark.sql.functions._
-    val key = "spark.graft.rangeJoin.binWidth"
-    // uncapped: known-bounded intervals -> pure binned plan, no
-    // fallback branch (the hybrid shape has its own test below)
-    spark.conf.set("spark.graft.rangeJoin.maxBins", "0")
-    val o = Tables.orders(spark, sf)
-    def joined = {
-      val points = o.filter(col("o_orderkey") % 11 === 0)
-        .select(col("o_orderkey").as("pk"), col("o_totalprice").as("price"))
-      val bands = o.filter(col("o_orderkey") % 13 === 0)
-        .select(col("o_orderkey").as("bk"),
-          (col("o_totalprice") - 1000.0).as("lo"),
-          (col("o_totalprice") + 1000.0).as("hi"))
-      // the naive formulation a user writes — no manual binning
-      points.join(bands, col("price") >= col("lo") && col("price") <= col("hi"))
-    }
-    spark.conf.set(key, "1000.0")
-    try {
-      val fast = joined
-      val fp = fast.queryExecution.executedPlan.toString
-      assert(!fp.contains("BroadcastNestedLoopJoin"), s"rule did not fire:\n$fp")
-      val fastRows = fast.collect().map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
-      spark.conf.set(key, "0")
-      val naive = joined
-      val np = naive.queryExecution.executedPlan.toString
-      assert(np.contains("BroadcastNestedLoopJoin"), s"control should nested-loop:\n$np")
-      val naiveRows = naive.collect().map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
-      assert(fastRows == naiveRows, "binned join must be row-identical to the naive join")
-      assert(fastRows.nonEmpty)
-    } finally {
-      spark.conf.unset(key)
-      spark.conf.unset("spark.graft.rangeJoin.maxBins")
-    }
-  }
-
   test("q101 span stats: partial aggregation on both levels, no nested loop") {
     val p = plan("q101_cross_doc_spans")
     assert(p.contains("partial_min") || p.contains("partial_count") || p.contains("HashAggregate"),
@@ -280,50 +244,6 @@ class PlanQualitySpec extends SparkSpec {
     val pp = res.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(pp.contains("TopKPerGroup") && !pp.contains("Window"), s"expected rewrite:\n$pp")
     assert(res.collect().map(_.getInt(0)).toSeq == Seq(1))
-  }
-
-  test("RangeBinJoinRule: outlier-wide intervals route through the fallback branch, rows intact") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val wKey = "spark.graft.rangeJoin.binWidth"
-    val mKey = "spark.graft.rangeJoin.maxBins"
-    val points = (1 to 500).map(i => (i.toLong, i.toDouble)).toDF("pk", "p")
-    // interval 99 spans 10000 bins at width 1.0 — far over maxBins=8;
-    // without the fallback branch Sequence would materialize 10k bins/row
-    val ivs = Seq((1L, 10.0, 12.5), (2L, 400.5, 402.0), (99L, -4000.0, 6000.0))
-      .toDF("ik", "lo", "hi")
-    def joined = points.join(ivs, col("p") >= col("lo") && col("p") <= col("hi"))
-    spark.conf.set(wKey, "1.0")
-    spark.conf.set(mKey, "8")
-    try {
-      val hybrid = joined
-      val hp = hybrid.queryExecution.executedPlan.toString
-      assert(hp.contains("Union"), s"expected hybrid binned+fallback plan:\n$hp")
-      val got = hybrid.select("pk", "ik").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      spark.conf.unset(wKey)
-      val want = joined.select("pk", "ik").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-      assert(got == want && got.count(_._2 == 99L) == 500)
-    } finally { spark.conf.unset(wKey); spark.conf.unset(mKey) }
-  }
-
-  test("RangeBinJoinRule: malformed binWidth raises a clear error") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val wKey = "spark.graft.rangeJoin.binWidth"
-    spark.conf.set(wKey, "fast")
-    try {
-      val points = Seq((1L, 5.0)).toDF("pk", "p")
-      val ivs = Seq((1L, 0.0, 10.0)).toDF("ik", "lo", "hi")
-      val e = intercept[Exception] {
-        points.join(ivs, col("p") >= col("lo") && col("p") <= col("hi")).collect()
-      }
-      def messages(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-      assert(messages(e).exists(m => m.contains(wKey) && m.contains("fast")),
-        s"error must name the conf key and value: ${messages(e)}")
-    } finally spark.conf.unset(wKey)
   }
 
   test("q135 chunking: generator expansion is map-only (no hash shuffle before the sort)") {

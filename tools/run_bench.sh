@@ -38,7 +38,6 @@ exec java \
   --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
   --add-opens java.base/sun.security.action=ALL-UNNAMED \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   ${GRAFT_JAVA_OPTS:-} \
   -Xmx${SPARK_DRIVER_MEM:-16g} \
   -XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing \
